@@ -4365,8 +4365,8 @@ def _q_text_quality_lr_train(spark, sf):
     """IN-ENGINE classifier training (round-11 ask #4): learn the
     quality LR from a rule-derived labeled seed (y = quality_score ≥
     0.5 — replayable closed-form) by 8 fixed full-batch GD iterations,
-    each ONE map-side-combined sufficient-statistics aggregate +
-    driver update + broadcast-literal weights back — the FineWeb
+    each per-task sufficient-statistics partials + driver fold +
+    weights back in the next round's closure — the FineWeb
     labeled-seed → corpus-filter workflow with no model server. Output
     is the learned parameter vector plus the last iteration's loss,
     rounded to 6 (absorbs cross-engine sum-order and exp ulps). The
@@ -4396,12 +4396,12 @@ def _q_text_quality_lr_train(spark, sf):
 def _q_pipeline_quality_lr_filter(spark, sf):
     """The trained classifier APPLIED — train→filter in one pipeline
     (the full FineWeb workflow): learn the LR from the rule-derived
-    seed (8 GD iterations, sufficient-statistics aggregates), then
+    seed (8 GD iterations, sufficient-statistics partials), then
     score every document with the LEARNED weights as a pure codegen
     scan projection (quality_classifier_score with the literal weights
     swapped for the learned ones; untrained features enter as exact
     +0.0 terms so the non-zero addition order matches training's z).
-    At 100 TB: 8 tiny aggregates + one filter scan — no model server,
+    At 100 TB: 8 tiny partial/fold rounds + one filter scan — no model server,
     no UDF. Oracle: the unrolled training chain + per-doc scoring."""
     from kusto_pre_forge_spark.operators import textstats as ts
     from kusto_pre_forge_spark.pinning import pin
@@ -5443,18 +5443,25 @@ def _q_ann_recall_pq(spark, sf):
     exact = similarity.cosine_topk(emb, q, k=10).select("query_id", "neighbor_id")
 
     # The two trainings are independent driver loops of small sequential
-    # jobs (6 for PQ codebooks, 9 for k-means); overlap them so one
+    # jobs (a seed job, then one job per iteration on a multi-partition
+    # corpus, or one in-task loop on a single partition); overlap them so one
     # loop's job tail back-fills the other's idle executors (guide
     # §2.6). Each training's internal arithmetic (seeds, fold order,
-    # iteration count) is untouched — results are bit-identical.
+    # iteration count) is untouched — results are bit-identical. Each
+    # submission is wrapped on its own (one local-property copy per
+    # thread) so the pool's jobs carry the caller's job group and tags.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         cb_f = pool.submit(
-            similarity.pq_train_codebooks, emb, m=32, ks=16, n_iters=5
+            inheritable_thread_target(spark)(similarity.pq_train_codebooks),
+            emb, m=32, ks=16, n_iters=5,
         )
         km_f = pool.submit(
-            similarity.ivf_kmeans_centroids, emb, n_cells=16, n_iters=8, seed=13
+            inheritable_thread_target(spark)(similarity.ivf_kmeans_centroids),
+            emb, n_cells=16, n_iters=8, seed=13,
         )
         cb, km = cb_f.result(), km_f.result()
     raw = similarity.pq_topk(emb, q, k=10, codebooks=cb).select(
@@ -7842,8 +7849,8 @@ def _q_text_fasttext_quality(spark, sf):
     """The fastText-linear corpus classifier end-to-end IN-ENGINE:
     hashed unigram+bigram features (md5 hashing trick, dim 64), fixed-
     iteration full-batch logistic regression (4 iters — per iteration
-    ONE ≤dim-row map-side-combined gradient aggregate + one scalar
-    bias/loss aggregate over the lineage-pinned feature frame), then
+    each task folds its rows to ≤dim+2 gradient/bias/loss sums over the
+    lineage-pinned feature frame), then
     corpus-wide scoring as a pure codegen scan projection. Class
     markers planted by parity make the separator learnable; the oracle
     unrolls ALL four iterations as CTE pairs (the graph_pagerank /

@@ -807,9 +807,7 @@ def embedding_dup_pairs(
 # transitive-closure join blows up.
 
 
-_CC_SINGLE_TASK_EDGES = int(
-    __import__("os").environ.get("KPF_CC_SINGLE_TASK_EDGES", "2000000")
-)
+_CC_SINGLE_TASK_EDGES = 2_000_000
 
 
 def connected_components(
@@ -856,9 +854,9 @@ def connected_components(
     # algorithm by the data's actual shape): duplicate-pair sets are a
     # vanishing fraction of the corpus, and component labels are a pure
     # INTEGER graph property — any algorithm produces the same min-id
-    # labels. When the deduped edge list is bounded (default 2M edges,
-    # ~32 MB of id pairs; env KPF_CC_SINGLE_TASK_EDGES), one union-find
-    # task over the checkpointed edges replaces the alternating-star
+    # labels. When the deduped edge list is bounded (2M edges, ~32 MB
+    # of id pairs), one union-find task over the checkpointed edges
+    # replaces the alternating-star
     # loop's ~(4-6 shuffles + 1 job) per round — measured ~25 sequential
     # scheduler-bound jobs on dedup_clusters at bench scale. Edge sets
     # past the bound (a truly duplicate-heavy 100 TB corpus) keep the

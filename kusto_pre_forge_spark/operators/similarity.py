@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kusto_pre_forge_spark.operators.iterate import iterate
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ as a left-to-right fold (deterministic order, double math)."""
@@ -458,6 +460,35 @@ def _train_sample(
     return corpus.filter(unit < F.lit(float(sample_frac)))
 
 
+def _unit_rows(pdf: pd.DataFrame) -> np.ndarray | None:
+    """One Arrow batch of ``_v`` as L2-normalized float64 rows (``None``
+    for an empty batch) — the ``load`` step of the k-means trainers."""
+    V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
+    if V.size == 0:
+        return None
+    return V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
+
+
+def _accumulate(sums: dict, counts: dict, key, v: np.ndarray, n: int) -> None:
+    if key in sums:
+        sums[key] += v
+        counts[key] += n
+    else:
+        sums[key] = v.copy()
+        counts[key] = int(n)
+
+
+def _merge_partials(partials) -> tuple[dict, dict]:
+    """Sum per-task (sums, counts) partials key by key, in the given
+    (partition-id) order."""
+    sums: dict = {}
+    counts: dict = {}
+    for ps, pc in partials:
+        for key, v in ps.items():
+            _accumulate(sums, counts, key, v, pc[key])
+    return sums, counts
+
+
 def ivf_kmeans_centroids(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -473,23 +504,23 @@ def ivf_kmeans_centroids(
 
     Spherical variant because the index metric is cosine: vectors are
     L2-normalized, assignment is argmax dot, the cell update is the mean
-    of assigned unit vectors re-normalized. Every step is distributed:
+    of assigned unit vectors re-normalized. Iterations run through
+    :func:`~kusto_pre_forge_spark.operators.iterate.iterate`:
 
-    - assignment + partial sums — ONE ``mapInPandas`` pass per
-      iteration (centroid matrix rides the closure: n_cells × dim
-      doubles); each task emits only its (cell, count, Σ unit-vector)
-      partials — ≤ n_cells tiny rows per task, no shuffle stage at all
-      (an earlier ``applyInPandas`` combine cost a full second Python
-      exchange per iteration and dominated wall-clock at bench scale);
-    - update — the driver folds the bounded partials (tasks × n_cells ×
-      dim doubles — MBs at 1000 tasks, never corpus-sized) in sorted
-      (cell, partition_id) order and re-normalizes.
+    - partial — each task assigns its vectors and keeps only its
+      per-cell (count, Σ unit-vector) — ≤ n_cells × dim doubles per
+      task, no shuffle stage at all (an earlier ``applyInPandas``
+      combine cost a full second Python exchange per iteration);
+    - fold — the partials sum in partition-id order (tasks × n_cells ×
+      dim doubles — MBs at 1000 tasks, never corpus-sized), then every
+      non-empty cell takes its mean and re-normalizes.
 
     Determinism: seeds are the ``n_cells`` corpus rows with the smallest
     md5(seed ‖ id); iterations are a fixed count (no convergence test →
-    no data-dependent control flow); the driver fold's (cell, pid) sort
-    fixes the FP accumulation order (parquet partitioning is
-    deterministic). Empty cells keep their previous centroid.
+    no data-dependent control flow); batch-order partials and the
+    partition-id-ordered fold fix the FP accumulation order (parquet
+    partitioning is deterministic). Empty cells keep their previous
+    centroid.
 
     ``sample_frac`` trains on a deterministic md5-threshold slice (the
     FAISS convention — centroids need statistics, not the full corpus;
@@ -511,114 +542,25 @@ def ivf_kmeans_centroids(
     )  # (cells, dim)
     C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
 
-    vecs = corpus.select(F.col(vec_col).alias("_v"))
-    # Single-partition fast path (guide §2.6 — the scheduler-latency
-    # driver-loop family): when the (possibly sampled) training frame is
-    # ONE partition, a lone task already sees every vector, so the whole
-    # fixed-iteration loop runs inside one mapInPandas call instead of
-    # n_iters sequential jobs. Arithmetic is bit-identical: with a
-    # single pid the driver's sorted (cell, pid) fold degenerates to
-    # batch-emission order, which the in-task loop replays exactly
-    # (batches outer, cells inner), and the per-iteration re-normalize
-    # of V yields the same array every time, so it is hoisted. Multi-
-    # partition inputs (any real corpus at scale) keep the distributed
-    # per-iteration partial/fold path below.
-    if vecs.rdd.getNumPartitions() == 1:
-        C0 = C.copy()
-        iters = int(n_iters)
-
-        def _all_iters(it):
-            batches = []
-            for pdf in it:
-                V = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-                )
-                if V.size == 0:
-                    continue
-                V = V / np.maximum(
-                    np.linalg.norm(V, axis=1, keepdims=True), 1e-12
-                )
-                batches.append(V)
-            Cl = C0.copy()
-            for _ in range(iters):
-                Cb = Cl.copy()
-                sums: dict[int, np.ndarray] = {}
-                counts: dict[int, int] = {}
-                for V in batches:
-                    cells = np.argmax(V @ Cb.T, axis=1)
-                    for j in np.unique(cells):
-                        sel = V[cells == j]
-                        key = int(j)
-                        v = sel.sum(axis=0)
-                        if key in sums:
-                            sums[key] += v
-                            counts[key] += int(sel.shape[0])
-                        else:
-                            sums[key] = v.copy()
-                            counts[key] = int(sel.shape[0])
-                for j, v in sums.items():
-                    Cl[j] = v / counts[j]
-                Cl /= np.maximum(
-                    np.linalg.norm(Cl, axis=1, keepdims=True), 1e-12
-                )
-            yield pd.DataFrame(
-                {"cell": list(range(Cl.shape[0])), "c": list(Cl)}
-            )
-
-        rows = vecs.mapInPandas(
-            _all_iters, "cell int, c array<double>"
-        ).collect()
-        C = np.array(
-            [
-                np.asarray(r["c"], dtype=np.float64)
-                for r in sorted(rows, key=lambda r: r["cell"])
-            ]
-        )
-        return [[float(x) for x in row] for row in C]
-
-    # the same (possibly sampled) vectors are scanned n_iters times —
-    # persist once, release after the loop
-    vecs = vecs.persist()
-    part_schema = "pid int, cell int, cnt long, vsum array<double>"
-    for _ in range(n_iters):
-        Cb = C.copy()
-
-        def _partials(it):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            for pdf in it:
-                V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-                if V.size == 0:
-                    continue
-                V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-                cells = np.argmax(V @ Cb.T, axis=1)
-                rows = {"pid": [], "cell": [], "cnt": [], "vsum": []}
-                for j in np.unique(cells):
-                    sel = V[cells == j]
-                    rows["pid"].append(pid)
-                    rows["cell"].append(int(j))
-                    rows["cnt"].append(int(sel.shape[0]))
-                    rows["vsum"].append(sel.sum(axis=0))
-                yield pd.DataFrame(rows)
-
-        partials = vecs.mapInPandas(_partials, part_schema).collect()
+    def partial(batches, C):
         sums: dict[int, np.ndarray] = {}
         counts: dict[int, int] = {}
-        for r in sorted(partials, key=lambda r: (r["cell"], r["pid"])):
-            j = r["cell"]
-            v = np.asarray(r["vsum"], dtype=np.float64)
-            if j in sums:
-                sums[j] += v
-                counts[j] += r["cnt"]
-            else:
-                sums[j] = v.copy()
-                counts[j] = int(r["cnt"])
+        for V in batches:
+            cells = np.argmax(V @ C.T, axis=1)
+            for j in np.unique(cells):
+                sel = V[cells == j]
+                _accumulate(sums, counts, int(j), sel.sum(axis=0), sel.shape[0])
+        return sums, counts
+
+    def fold(partials, C):
+        sums, counts = _merge_partials(partials)
+        C = C.copy()
         for j, v in sums.items():
             C[j] = v / counts[j]
-        C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    vecs.unpersist()
-    return [[float(x) for x in row] for row in C]
+        return C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+
+    vecs = corpus.select(F.col(vec_col).alias("_v"))
+    return iterate(vecs, C, n_iters, _unit_rows, partial, fold).tolist()
 
 
 def _prep_centroids(
@@ -1022,17 +964,16 @@ def pq_train_codebooks(
 ) -> list[list[list[float]]]:
     """Per-subspace k-means codebooks over L2-NORMALIZED vectors: dim
     splits into ``m`` contiguous subvectors; each subspace learns ``ks``
-    codewords. Every iteration is ONE distributed pass:
+    codewords. Iterations run through
+    :func:`~kusto_pre_forge_spark.operators.iterate.iterate`:
 
-    - assignment + partial sums run inside ``mapInPandas`` (numpy argmin
-      per subspace over the batch) — vectors never leave their
+    - partial — numpy argmin per subspace over each batch, keeping only
+      the task's (sub, code) → (count, sum) — vectors never leave their
       partitions;
-    - each task emits only its (sub, code) → (count, sum) partials
-      (≤ m × ks tiny rows per task); the driver folds them in sorted
-      (sub, code, partition_id) order — tasks × m × ks × dsub doubles,
-      MBs at 1000 tasks, never corpus-sized. (An earlier
-      ``applyInPandas`` combine cost a second full Python exchange per
-      iteration and dominated wall-clock at bench scale.)
+    - fold — the partials sum in partition-id order (tasks × m × ks ×
+      dsub doubles, MBs at 1000 tasks, never corpus-sized) and every
+      non-empty code takes its mean. (An earlier ``applyInPandas``
+      combine cost a second full Python exchange per iteration.)
 
     Determinism mirrors :func:`ivf_kmeans_centroids`: seeds are the
     ``ks`` corpus rows with smallest md5(seed ‖ id), iteration count is
@@ -1060,115 +1001,32 @@ def pq_train_codebooks(
     # C[s]: (ks, dsub)
     C = [V0[:, s * dsub : (s + 1) * dsub].copy() for s in range(m)]
 
-    vecs = corpus.select(F.col(vec_col).alias("_v"))
-    # Single-partition fast path — same contract as the one in
-    # :func:`ivf_kmeans_centroids`: one task sees every training vector,
-    # so the whole fixed-iteration loop runs in ONE mapInPandas call
-    # (n_iters+1 sequential jobs → 1); the in-task fold replays the
-    # driver's sorted (sub, code, pid) accumulation batch-by-batch.
-    if vecs.rdd.getNumPartitions() == 1:
-        C0 = [c.copy() for c in C]
-        iters = int(n_iters)
-
-        def _all_iters(it):
-            batches = []
-            for pdf in it:
-                V = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-                )
-                if V.size == 0:
-                    continue
-                V = V / np.maximum(
-                    np.linalg.norm(V, axis=1, keepdims=True), 1e-12
-                )
-                batches.append(V)
-            Cl = [c.copy() for c in C0]
-            for _ in range(iters):
-                Cb = [c.copy() for c in Cl]
-                sums: dict[tuple[int, int], np.ndarray] = {}
-                counts: dict[tuple[int, int], int] = {}
-                for V in batches:
-                    for s in range(m):
-                        Vs = V[:, s * dsub : (s + 1) * dsub]
-                        scores = (
-                            Vs @ Cb[s].T
-                            - 0.5 * (Cb[s] ** 2).sum(axis=1)[None, :]
-                        )
-                        codes = np.argmax(scores, axis=1)
-                        for j in np.unique(codes):
-                            sel = Vs[codes == j]
-                            key = (s, int(j))
-                            v = sel.sum(axis=0)
-                            if key in sums:
-                                sums[key] += v
-                                counts[key] += int(sel.shape[0])
-                            else:
-                                sums[key] = v.copy()
-                                counts[key] = int(sel.shape[0])
-                for (s, j), v in sums.items():
-                    if counts[(s, j)] > 0:
-                        Cl[s][j] = v / counts[(s, j)]
-            flat = []
-            for s in range(m):
-                for j in range(Cl[s].shape[0]):
-                    flat.append(
-                        {"sub": s, "code": j, "c": Cl[s][j]}
-                    )
-            yield pd.DataFrame(flat)
-
-        rows = vecs.mapInPandas(
-            _all_iters, "sub int, code int, c array<double>"
-        ).collect()
-        for r in rows:
-            C[r["sub"]][r["code"]] = np.asarray(r["c"], dtype=np.float64)
-        return [[[float(x) for x in row] for row in c] for c in C]
-
-    vecs = vecs.persist()
-    part_schema = "pid int, sub int, code int, cnt long, vsum array<double>"
-    for _ in range(n_iters):
-        Cb = [c.copy() for c in C]
-
-        def partials(it):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            for pdf in it:
-                V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-                if V.size == 0:
-                    continue
-                V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-                rows = {"pid": [], "sub": [], "code": [], "cnt": [], "vsum": []}
-                for s in range(m):
-                    Vs = V[:, s * dsub : (s + 1) * dsub]  # (n, dsub)
-                    # ||v - c||² argmin == argmax (v·c - ||c||²/2)
-                    scores = Vs @ Cb[s].T - 0.5 * (Cb[s] ** 2).sum(axis=1)[None, :]
-                    codes = np.argmax(scores, axis=1)
-                    for j in np.unique(codes):
-                        sel = Vs[codes == j]
-                        rows["pid"].append(pid)
-                        rows["sub"].append(s)
-                        rows["code"].append(int(j))
-                        rows["cnt"].append(int(sel.shape[0]))
-                        rows["vsum"].append(sel.sum(axis=0))
-                yield pd.DataFrame(rows)
-
-        collected = vecs.mapInPandas(partials, part_schema).collect()
+    def partial(batches, C):
         sums: dict[tuple[int, int], np.ndarray] = {}
         counts: dict[tuple[int, int], int] = {}
-        for r in sorted(collected, key=lambda r: (r["sub"], r["code"], r["pid"])):
-            key = (r["sub"], r["code"])
-            v = np.asarray(r["vsum"], dtype=np.float64)
-            if key in sums:
-                sums[key] += v
-                counts[key] += r["cnt"]
-            else:
-                sums[key] = v.copy()
-                counts[key] = int(r["cnt"])
+        for V in batches:
+            for s in range(m):
+                Vs = V[:, s * dsub : (s + 1) * dsub]  # (n, dsub)
+                # ||v - c||² argmin == argmax (v·c - ||c||²/2)
+                scores = Vs @ C[s].T - 0.5 * (C[s] ** 2).sum(axis=1)[None, :]
+                codes = np.argmax(scores, axis=1)
+                for j in np.unique(codes):
+                    sel = Vs[codes == j]
+                    _accumulate(
+                        sums, counts, (s, int(j)), sel.sum(axis=0), sel.shape[0]
+                    )
+        return sums, counts
+
+    def fold(partials, C):
+        sums, counts = _merge_partials(partials)
+        C = [c.copy() for c in C]
         for (s, j), v in sums.items():
-            if counts[(s, j)] > 0:
-                C[s][j] = v / counts[(s, j)]
-    vecs.unpersist()
-    return [[[float(x) for x in row] for row in c] for c in C]
+            C[s][j] = v / counts[(s, j)]
+        return C
+
+    vecs = corpus.select(F.col(vec_col).alias("_v"))
+    C = iterate(vecs, C, n_iters, _unit_rows, partial, fold)
+    return [c.tolist() for c in C]
 
 
 def pq_encode(

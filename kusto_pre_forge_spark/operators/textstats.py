@@ -11,8 +11,12 @@ md5-derived so the DuckDB oracle can replay it.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from kusto_pre_forge_spark.operators.iterate import iterate
 
 TOKEN_RE = r"\s+"
 #: BPE-ish word/number/punctuation splitter (GPT-2-style coarse classes):
@@ -1149,6 +1153,11 @@ def quality_classifier_score(
     )
 
 
+def _missing(v) -> bool:
+    """A null or NaN cell (pandas decodes a null double as NaN)."""
+    return v is None or (isinstance(v, float) and math.isnan(v))
+
+
 def train_quality_lr(
     df: DataFrame,
     label_col: str,
@@ -1169,16 +1178,17 @@ def train_quality_lr(
     infers with, by fixed-iteration full-batch gradient descent over the
     :func:`quality_features` columns.
 
-    Scale shape — per iteration exactly ONE map-side-combined aggregate
-    collapses the whole corpus to a feature-dim-bounded sufficient-
-    statistics row (∂loss/∂w_f = avg((σ(z)−y)·f), ∂/∂b = avg(σ(z)−y),
-    plus the mean log-loss in its overflow-free algebraic form
-    ln(1+e^{−z}) + (1−y)·z); the weight update happens on the driver and
-    goes back as broadcast literals in the next iteration's expressions.
-    Driver traffic: ``n_iters`` rows of ``len(features)+2`` doubles —
-    independent of corpus size. The feature projection is computed once
-    and lineage-pinned (eager localCheckpoint) so iterations re-scan the
-    materialized (label, features) frame, not the raw text.
+    Scale shape — iterations run through
+    :func:`~kusto_pre_forge_spark.operators.iterate.iterate`: each task's
+    partial collapses its rows to a feature-dim-bounded sufficient-
+    statistics tuple (Σ(σ(z)−y)·f per feature, Σ(σ(z)−y), the log-loss
+    sum in its overflow-free algebraic form ln(1+e^{−z}) + (1−y)·z, and
+    the fitted-row count); the fold sums them, divides once and takes
+    the gradient step. Driver traffic per iteration: one
+    ``len(features)+3``-number partial per task — independent of corpus
+    size. The feature projection is computed once and lineage-pinned
+    (eager localCheckpoint) so iterations re-scan the materialized
+    (label, features) frame, not the raw text.
 
     Deterministic and oracle-replayable: zero-initialized weights,
     fixed iteration count, no RNG, no standardization pass — the DuckDB
@@ -1201,118 +1211,55 @@ def train_quality_lr(
         )
         .localCheckpoint(eager=True)
     )
-    w = {f: 0.0 for f in feature_cols}
-    b = 0.0
-    losses: list[float] = []
-    # Single-partition fast path (guide §2.6, the same contract as the
-    # fused PQ/k-means trainings in similarity.py): when the
-    # checkpointed feature frame is ONE partition, a lone task sees
-    # every row, so all n_iters gradient steps run inside one
-    # mapInPandas call instead of n_iters sequential aggregate jobs.
-    # The in-task arithmetic replays Spark's exactly: z folds
-    # left-to-right in feature order, sums accumulate row by row in
-    # partition order (plain Python floats — no pairwise/numpy
-    # reordering), avg divides once at the end, and rows where the
-    # label or any feature is null are skipped (a null poisons every
-    # aggregate term). Verified output-identical against the
-    # per-iteration path on all test SFs. Multi-partition frames (real
-    # corpora at scale) keep the distributed loop below.
-    if feats.rdd.getNumPartitions() == 1:
-        iters, lr = int(n_iters), float(learn_rate)
-        cols = list(feature_cols)
+    cols = list(feature_cols)
 
-        def _fused(it):
-            import math
+    def load(pdf):
+        return list(pdf[["_y", *cols]].itertuples(index=False, name=None))
 
-            import pandas as pd
+    def partial(batches, state):
+        # z folds left-to-right in feature order and the sums accumulate
+        # row by row (plain Python floats); a null label or feature
+        # poisons every term, so such rows are skipped
+        wl, bl, _ = state
+        s = [0.0] * len(cols)
+        sb = sl = 0.0
+        c = 0
+        for rows in batches:
+            for y_, *fv in rows:
+                if _missing(y_) or any(_missing(v) for v in fv):
+                    continue
+                z = bl
+                for wj, vj in zip(wl, fv):
+                    z = z + wj * vj
+                ez = math.exp(-z)
+                r = 1.0 / (1.0 + ez) - y_
+                for j, vj in enumerate(fv):
+                    s[j] += r * vj
+                sb += r
+                sl += math.log(1.0 + ez) + (1.0 - y_) * z
+                c += 1
+        return s, sb, sl, c
 
-            rows = []
-            for pdf in it:
-                for tup in pdf[["_y", *cols]].itertuples(
-                    index=False, name=None
-                ):
-                    rows.append(tup)
-            wl = [0.0] * len(cols)
-            bl = 0.0
-            ls: list[float] = []
-            stopped = False
-            for _ in range(iters):
-                s = [0.0] * len(cols)
-                sb = 0.0
-                sl = 0.0
-                c = 0
-                for tup in rows:
-                    y_ = tup[0]
-                    if y_ is None or (
-                        isinstance(y_, float) and math.isnan(y_)
-                    ):
-                        continue
-                    fv = tup[1:]
-                    if any(
-                        v is None or (isinstance(v, float) and math.isnan(v))
-                        for v in fv
-                    ):
-                        continue
-                    z = bl
-                    for wj, vj in zip(wl, fv):
-                        z = z + wj * vj
-                    ez = math.exp(-z)
-                    p = 1.0 / (1.0 + ez)
-                    r = p - y_
-                    for j, vj in enumerate(fv):
-                        s[j] += r * vj
-                    sb += r
-                    sl += math.log(1.0 + ez) + (1.0 - y_) * z
-                    c += 1
-                if c == 0:
-                    stopped = True
-                    break
-                ls.append(sl / c)
-                for j in range(len(cols)):
-                    wl[j] -= lr * (s[j] / c)
-                bl -= lr * (sb / c)
-            yield pd.DataFrame(
-                {
-                    "w": [wl],
-                    "b": [bl],
-                    "losses": [ls],
-                    "stopped": [stopped],
-                }
-            )
+    def fold(partials, state):
+        wl, bl, ls = state
+        s = [0.0] * len(cols)
+        sb = sl = 0.0
+        c = 0
+        for ps, psb, psl, pc in partials:
+            s = [a + x for a, x in zip(s, ps)]
+            sb, sl, c = sb + psb, sl + psl, c + pc
+        if c == 0:  # empty corpus: nothing to fit
+            return None
+        return (
+            [wj - learn_rate * (sj / c) for wj, sj in zip(wl, s)],
+            bl - learn_rate * (sb / c),
+            [*ls, sl / c],
+        )
 
-        out = feats.mapInPandas(
-            _fused,
-            "w array<double>, b double, losses array<double>, "
-            "stopped boolean",
-        ).collect()[0]
-        return {
-            "weights": {
-                f: float(v) for f, v in zip(cols, out["w"])
-            },
-            "bias": float(out["b"]),
-            "losses": [float(x) for x in out["losses"]],
-        }
-
-    y = F.col("_y")
-    for _ in range(int(n_iters)):
-        z = F.lit(float(b))
-        for f in feature_cols:
-            z = z + F.lit(float(w[f])) * F.col(f)
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        row = feats.agg(
-            *[F.avg((p - y) * F.col(f)).alias(f"g_{f}") for f in feature_cols],
-            F.avg(p - y).alias("g_bias"),
-            F.avg(F.log(F.lit(1.0) + F.exp(-z)) + (F.lit(1.0) - y) * z).alias(
-                "loss"
-            ),
-        ).collect()[0]
-        if row["loss"] is None:  # empty corpus: nothing to fit
-            break
-        losses.append(float(row["loss"]))
-        for f in feature_cols:
-            w[f] -= learn_rate * float(row[f"g_{f}"])
-        b -= learn_rate * float(row["g_bias"])
-    return {"weights": w, "bias": b, "losses": losses}
+    w, b, losses = iterate(
+        feats, ([0.0] * len(cols), 0.0, []), n_iters, load, partial, fold
+    )
+    return {"weights": dict(zip(cols, w)), "bias": b, "losses": losses}
 
 
 #: Gopher quality-rule stop words (Rae et al. 2021, "Scaling Language
@@ -1869,133 +1816,79 @@ def train_hashed_text_lr(
     filters), trained fully in-engine with no model server.
 
     Scale shape: the feature frame (label, gram indices, n) materializes
-    ONCE and is lineage-pinned; each iteration runs (a) one pure-codegen
-    scan computing per-doc residuals under broadcast-literal weights and
-    ONE map-side-combined groupBy(idx) aggregate whose output is ≤ dim
-    rows (partial aggregation collapses every partition to ≤ dim rows
-    BEFORE the exchange — shuffle traffic is partitions×dim, independent
-    of corpus size), and (b) one scalar aggregate for the bias gradient
-    + mean log-loss (overflow-free algebraic form). Driver traffic per
-    iteration: dim+2 doubles. Zero RNG, zero-init weights — the DuckDB
-    oracle unrolls the identical iterations as CTEs.
+    ONCE and is lineage-pinned; iterations run through
+    :func:`~kusto_pre_forge_spark.operators.iterate.iterate`, whose
+    per-task partial collapses the task's rows to ≤ dim+2 gradient sums
+    (per gram index, bias, mean log-loss in its overflow-free algebraic
+    form) plus a row count — traffic per iteration is tasks × (dim+2)
+    doubles, independent of corpus size. Rows whose label is null or
+    NaN count in the mean's denominator but add no gradient. Zero RNG,
+    zero-init weights — the DuckDB oracle unrolls the identical
+    iterations as CTEs.
 
     Returns {"weights": list[dim], "bias", "losses"}."""
     feats = (
         hashed_text_features(df, text_col, label_col, dim, salt)
-        .select("_y", "_idxs", "_n")
+        .select("_y", "_idxs")
         .localCheckpoint(eager=True)
     )
-    n_docs = feats.count()
-    w = [0.0] * int(dim)
-    b = 0.0
-    losses: list[float] = []
-    if n_docs == 0:
-        return {"weights": w, "bias": b, "losses": losses}
-    # Single-partition fast path — same contract as train_quality_lr's:
-    # one task sees every feature row, so all n_iters gradient steps run
-    # in ONE mapInPandas job instead of n_iters sequential
-    # explode+groupBy jobs. In-task arithmetic replays the distributed
-    # path's exactly: z folds the gram weights left-to-right in _idxs
-    # order, per-key gradient sums accumulate in exploded row order
-    # (plain Python floats), and the update divides by the same n_docs.
-    # Verified output-identical on all test SFs.
-    if feats.rdd.getNumPartitions() == 1:
-        iters, lr, nd = int(n_iters), float(learn_rate), int(n_docs)
-        dim_i = int(dim)
 
-        def _fused(it):
-            import math
+    def load(pdf):
+        return [
+            (y_, None if idxs_ is None else [int(i) for i in idxs_])
+            for y_, idxs_ in zip(pdf["_y"], pdf["_idxs"])
+        ]
 
-            import pandas as pd
-
-            rows = []
-            for pdf in it:
-                for y_, idxs_, n_ in zip(
-                    pdf["_y"], pdf["_idxs"], pdf["_n"]
-                ):
-                    rows.append(
-                        (float(y_), [int(i) for i in idxs_], int(n_))
-                    )
-            wl = [0.0] * dim_i
-            bl = 0.0
-            ls: list[float] = []
-            for _ in range(iters):
-                sums: dict[int, float] = {}
-                for y_, idxs_, n_ in rows:
-                    acc = 0.0
+    def partial(batches, state):
+        # z folds the gram weights left-to-right in _idxs order and the
+        # per-key sums accumulate row by row (plain Python floats); -1
+        # keys the bias gradient, -2 the log-loss. Every row counts in
+        # the n_docs denominator, but a row without a label (or without
+        # text) contributes no term.
+        wl, bl, _ = state
+        sums: dict[int, float] = {}
+        n_docs = 0
+        for rows in batches:
+            for y_, idxs_ in rows:
+                n_docs += 1
+                if _missing(y_) or idxs_ is None:
+                    continue
+                n_ = len(idxs_)
+                acc = 0.0
+                for i in idxs_:
+                    acc += wl[i]
+                z = bl + (acc / float(n_) if n_ > 0 else 0.0)
+                ez = math.exp(-z)
+                r = 1.0 / (1.0 + ez) - y_
+                if n_ > 0:
+                    gn = r / float(n_)
                     for i in idxs_:
-                        acc += wl[i]
-                    z = bl + (acc / float(n_) if n_ > 0 else 0.0)
-                    ez = math.exp(-z)
-                    p = 1.0 / (1.0 + ez)
-                    r = p - y_
-                    if n_ > 0:
-                        gn = r / float(n_)
-                        for i in idxs_:
-                            sums[i] = sums.get(i, 0.0) + gn
-                    sums[-1] = sums.get(-1, 0.0) + r
-                    sums[-2] = sums.get(-2, 0.0) + (
-                        math.log(1.0 + ez) + (1.0 - y_) * z
-                    )
-                ls.append(sums[-2] / nd)
-                for i, g in sums.items():
-                    if i >= 0:
-                        wl[i] -= lr * g / nd
-                bl -= lr * sums[-1] / nd
-            yield pd.DataFrame(
-                {"w": [wl], "b": [bl], "losses": [ls]}
-            )
+                        sums[i] = sums.get(i, 0.0) + gn
+                sums[-1] = sums.get(-1, 0.0) + r
+                sums[-2] = sums.get(-2, 0.0) + (
+                    math.log(1.0 + ez) + (1.0 - y_) * z
+                )
+        return sums, n_docs
 
-        out = feats.mapInPandas(
-            _fused, "w array<double>, b double, losses array<double>"
-        ).collect()[0]
-        return {
-            "weights": [float(x) for x in out["w"]],
-            "bias": float(out["b"]),
-            "losses": [float(x) for x in out["losses"]],
-        }
-
-    y = F.col("_y")
-    for _ in range(int(n_iters)):
-        z = _hashed_z(w, b)
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        scored = feats.select(
-            "_idxs", "_n", (p - y).alias("_r"),
-            (F.log(F.lit(1.0) + F.exp(-z)) + (F.lit(1.0) - y) * z).alias(
-                "_l"
-            ),
-        )
-        # ONE job per iteration: per-occurrence gradient contributions
-        # plus two sentinel rows per doc (-1 = bias gradient, -2 = loss)
-        # fold through the same map-side-combined groupBy — sums only,
-        # so partial aggregation stays algebraic
-        occ = F.transform(
-            F.col("_idxs"),
-            lambda i: F.struct(
-                i.alias("i"),
-                (F.col("_r") / F.col("_n").cast("double")).alias("g"),
-            ),
-        )
-        sent = F.array(
-            F.struct(
-                F.lit(-1).cast("long").alias("i"), F.col("_r").alias("g")
-            ),
-            F.struct(
-                F.lit(-2).cast("long").alias("i"), F.col("_l").alias("g")
-            ),
-        )
-        rows = (
-            scored.select(F.explode(F.concat(occ, sent)).alias("x"))
-            .groupBy("x.i")
-            .agg(F.sum("x.g").alias("g"))
-            .collect()
-        )
-        sums = {int(r["i"]): float(r["g"]) for r in rows}
-        losses.append(sums[-2] / n_docs)
+    def fold(partials, state):
+        wl, bl, ls = state
+        sums: dict[int, float] = {}
+        nd = 0
+        for ps, pn in partials:
+            nd += pn
+            for i, g in ps.items():
+                sums[i] = sums.get(i, 0.0) + g
+        if -2 not in sums:  # no labeled row: nothing to fit
+            return None
+        wl = list(wl)
         for i, g in sums.items():
             if i >= 0:
-                w[i] -= learn_rate * g / n_docs
-        b -= learn_rate * sums[-1] / n_docs
+                wl[i] -= learn_rate * g / nd
+        return wl, bl - learn_rate * sums[-1] / nd, [*ls, sums[-2] / nd]
+
+    w, b, losses = iterate(
+        feats, ([0.0] * int(dim), 0.0, []), n_iters, load, partial, fold
+    )
     return {"weights": w, "bias": b, "losses": losses}
 
 

@@ -1085,12 +1085,28 @@ def _native_aes_cbc(key: bytes, iv: bytes, data: bytes, decrypt: bool) -> bytes:
     return op.update(data) + op.finalize()
 
 
+def _probe_native_arc4() -> bool:
+    """Whether an ARC4 encryptor can actually be built. OpenSSL 3 builds
+    without the legacy provider (FIPS images among them) import ARC4 fine
+    but refuse to instantiate it."""
+    if not _HAVE_NATIVE_CRYPTO:
+        return False
+    try:
+        _NCipher(_NARC4(bytes(16)), mode=None).encryptor()
+    except Exception:
+        return False
+    return True
+
+
+_HAVE_NATIVE_ARC4 = _probe_native_arc4()
+
+
 def _rc4(key: bytes, data: bytes) -> bytes:
     """RC4 stream cipher (the §7.6.2 'RC4 function'). Dispatches to the
-    native kernel when available and the key length is one OpenSSL
+    native kernel when it is usable and the key length is one OpenSSL
     accepts (PDF keys are md5-derived 5/10/16 bytes — all accepted;
     the known-vector tests use shorter ones → pure path)."""
-    if _HAVE_NATIVE_CRYPTO and len(key) in (5, 7, 8, 10, 16, 20, 24, 32):
+    if _HAVE_NATIVE_ARC4 and len(key) in (5, 7, 8, 10, 16, 20, 24, 32):
         enc = _NCipher(_NARC4(key), mode=None).encryptor()
         return enc.update(data) + enc.finalize()
     return _rc4_py(key, data)

@@ -136,7 +136,17 @@ def test_ngram_max_doc_freq_prunes_but_keeps_near_dups(spark):
         assert r.jaccard <= exact_j[(r.id_a, r.id_b)] + 1e-12
 
 
-def test_connected_components_labels_min_id(spark):
+@pytest.fixture(params=["union_find", "alternating_star"])
+def cc_branch(request, monkeypatch):
+    """Run a component test on both sides of the single-task bound: the
+    union-find task, and (bound below every edge count, the empty list
+    included) the alternating-star loop."""
+    if request.param == "alternating_star":
+        monkeypatch.setattr(dedup, "_CC_SINGLE_TASK_EDGES", -1)
+    return request.param
+
+
+def test_connected_components_labels_min_id(spark, cc_branch):
     """Chain, star, and pair components all label with the component min."""
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (4, 2), (10, 11), (20, 21), (20, 22)],
@@ -152,7 +162,7 @@ def test_connected_components_labels_min_id(spark):
     }
 
 
-def test_connected_components_long_chain_converges(spark):
+def test_connected_components_long_chain_converges(spark, cc_branch):
     """Worst-case diameter (a path graph) still collapses to one root
     within the iteration cap — the O(log n) star-contraction property."""
     n = 64
@@ -164,7 +174,7 @@ def test_connected_components_long_chain_converges(spark):
     assert labels.filter(F.col("cluster_id") != 0).count() == 0
 
 
-def test_connected_components_empty_pairs(spark):
+def test_connected_components_empty_pairs(spark, cc_branch):
     empty = spark.createDataFrame([], "id_a long, id_b long")
     assert dedup.connected_components(empty).count() == 0
 

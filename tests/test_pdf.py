@@ -557,6 +557,23 @@ def test_rc4_known_vector():
     assert P._rc4(b"Wiki", b"pedia").hex() == "1021bf0420"
 
 
+def test_rc4_without_native_arc4_uses_pure_fallback(monkeypatch):
+    """An OpenSSL build without the legacy provider: the import-time probe
+    reports ARC4 unusable and every key length — the 16-byte PDF key
+    size included — goes through the pure kernel."""
+
+    def _refuse(*args, **kwargs):
+        raise AssertionError("native ARC4 must not be called")
+
+    monkeypatch.setattr(P, "_HAVE_NATIVE_ARC4", False)
+    monkeypatch.setattr(P, "_NCipher", _refuse, raising=False)
+    assert P._rc4(b"Key", b"Plaintext").hex() == "bbf316e8d940af0ad3"
+    assert P._rc4(b"Wiki", b"pedia").hex() == "1021bf0420"
+    # RFC 6229, 128-bit key 0x0102…10, keystream bytes 0-15
+    key = bytes(range(1, 17))
+    assert P._rc4(key, bytes(16)).hex() == "9ac7cc9a609d1ef7b2932899cde41b97"
+
+
 def test_aes128_core_fips_vector_and_cbc():
     """FIPS-197 Appendix C.1 — the independent ground truth for the
     AES-128 cipher core (encryptor and decryptor check each other AND

@@ -296,6 +296,41 @@ def test_sampled_training_deterministic_and_valid(spark, emb):
         similarity.ivf_kmeans_centroids(emb, sample_frac=1.5)
 
 
+@pytest.mark.parametrize("trainer", ["kmeans", "pq"])
+def test_trainers_one_vs_n_partitions(emb, trainer):
+    """One arithmetic, two schedules: a one-partition corpus trains in a
+    single task, a four-partition one in per-iteration jobs folded on
+    the driver — outputs agree to FP reassociation."""
+    def train(df):
+        if trainer == "kmeans":
+            return similarity.ivf_kmeans_centroids(df, n_cells=8, n_iters=3)
+        return similarity.pq_train_codebooks(df, m=32, ks=16, n_iters=3)
+
+    one, four = emb.coalesce(1), emb.repartition(4)
+    assert one.rdd.getNumPartitions() == 1
+    assert four.rdd.getNumPartitions() == 4
+    a, b = np.asarray(train(one)), np.asarray(train(four))
+    assert a.shape == b.shape
+    assert np.max(np.abs(a - b)) <= 1e-9
+
+
+def test_ann_recall_pq_pooled_trainings_keep_job_group(spark, sf_smoke):
+    """ann_recall_pq trains PQ and k-means on pool threads; their jobs
+    still carry the caller's job group (none lands ungrouped)."""
+    import __spark_entry__ as entry
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("kpf-pooled-training", "ann_recall_pq")
+    try:
+        entry.queries()["ann_recall_pq"](spark, sf_smoke).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert tracker.getJobIdsForGroup("kpf-pooled-training")
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
 def test_hard_negatives_wrong_label_only(spark):
     """Mined negatives never share the query's label; ranks are dense by
     descending cosine; min_cosine floors the mined set."""

@@ -648,6 +648,60 @@ def test_hashed_lr_empty_corpus(spark):
     assert m["losses"] == []
 
 
+def _flat_model(m):
+    w = m["weights"]
+    return [*(w.values() if isinstance(w, dict) else w), m["bias"], *m["losses"]]
+
+
+@pytest.mark.parametrize("trainer", ["quality", "hashed"])
+def test_lr_trainers_one_vs_n_partitions(spark, sf_smoke, trainer):
+    """One arithmetic, two schedules: a one-partition frame trains in a
+    single task, a four-partition one in per-iteration jobs folded on
+    the driver — weights, bias and losses agree to FP reassociation."""
+    from kusto_pre_forge_spark.operators import textstats as TS
+
+    if trainer == "quality":
+        df = TS.quality_features(
+            spark.read.parquet(f"{sf_smoke}/documents.parquet"), "text"
+        ).withColumn("y", (F.col("quality_score") >= 0.5).cast("double"))
+
+        def train(d):
+            return TS.train_quality_lr(
+                d, "y", n_iters=3, learn_rate=0.5, features_ready=True
+            )
+    else:
+        df = _ft_frame(spark)
+
+        def train(d):
+            return TS.train_hashed_text_lr(d, "y", dim=64, n_iters=3, learn_rate=4.0)
+
+    one, four = train(df.coalesce(1)), train(df.repartition(4))
+    assert len(one["losses"]) == len(four["losses"]) == 3
+    a, b = _flat_model(one), _flat_model(four)
+    assert len(a) == len(b)
+    assert max(abs(x - y) for x, y in zip(a, b)) <= 1e-9
+
+
+def test_hashed_lr_null_label_skipped(spark):
+    """A null label adds no gradient term but still counts in the mean's
+    denominator — on one partition exactly as on four."""
+    import math
+
+    from kusto_pre_forge_spark.operators import textstats as TS
+
+    df = _ft_frame(spark, n=60)
+    first = df.agg(F.min("doc_id")).first()[0]
+    df = df.withColumn(
+        "y", F.when(F.col("doc_id") == first, F.lit(None)).otherwise(F.col("y"))
+    )
+    assert df.filter(F.col("y").isNull()).count() == 1
+    m1 = TS.train_hashed_text_lr(df.coalesce(1), "y", dim=32, n_iters=3)
+    m4 = TS.train_hashed_text_lr(df.repartition(4), "y", dim=32, n_iters=3)
+    a, b = _flat_model(m1), _flat_model(m4)
+    assert all(math.isfinite(x) for x in a + b)
+    assert max(abs(x - y) for x, y in zip(a, b)) <= 1e-9
+
+
 def test_hashed_features_shape(spark):
     from pyspark.sql import functions as F
 
