@@ -3548,9 +3548,9 @@ def _q_corpus_epoch_upsample(spark, sf):
 
 
 def _q_text_bpe(spark, sf):
-    """Distributed mini-BPE: train 6 merge rules on the corpus (driver
-    loop of bounded 1-row collects, vocab stays distributed), then apply
-    them as chained codegen regexp passes. Fully oracled: the DuckDB
+    """Mini-BPE: train 6 merge rules on the corpus (one word-histogram
+    collect, then the merge loop in the driver), then apply them as
+    chained codegen regexp passes. Fully oracled: the DuckDB
     oracle replays BOTH the 6 training iterations (unrolled CTE chain,
     same argmax + tie-break) and the apply pass (double-space replace ==
     the greedy lookaround merge) — see _bpe_oracle_sql. The merge

@@ -31,7 +31,7 @@ import random
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -835,6 +835,8 @@ def connected_components(
     for a bounded O(log n)-round job, unlike the long-lived pipelines
     where ``pinning.pin`` keeps lineage on purpose.
     """
+    # the checkpoint job below fills this: the size gate costs no job
+    edge_count = Observation("cc_edges")
     edges = (
         pairs.select(
             F.col(src_col).cast("long").alias("u"),
@@ -842,6 +844,7 @@ def connected_components(
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
+        .observe(edge_count, F.count(F.lit(1)).alias("n"))
         # Materialize the input ONCE before iterating: round 0 references
         # the edge frame ~4× (symmetrize + two self-joins), and `pairs` is
         # typically an expensive pipeline (banded LSH + exact verify) —
@@ -861,8 +864,7 @@ def connected_components(
     # scheduler-bound jobs on dedup_clusters at bench scale. Edge sets
     # past the bound (a truly duplicate-heavy 100 TB corpus) keep the
     # O(log n)-round distributed loop below.
-    n_edges = edges.count()
-    if n_edges <= _CC_SINGLE_TASK_EDGES:
+    if edge_count.get["n"] <= _CC_SINGLE_TASK_EDGES:
 
         def _union_find(it):
             parent: dict = {}

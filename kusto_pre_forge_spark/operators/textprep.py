@@ -12,6 +12,7 @@ path is pure codegen, which matters when "documents" is 100 TB of crawl.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -237,7 +238,7 @@ def doc_tfidf_top_terms(
 
 
 # ---------------------------------------------------------------------------
-# Distributed mini-BPE: train merge rules on the corpus, apply them
+# BPE: train merge rules from a corpus word histogram, apply them in Spark
 # ---------------------------------------------------------------------------
 
 
@@ -369,6 +370,40 @@ def bpe_token_count(
     )
 
 
+def _word_histogram(
+    df: DataFrame,
+    words: Column,
+    cap: int,
+    sample_frac: float | None,
+    sample_id_col: str | None,
+    sample_salt: str,
+) -> list[tuple[str, int]]:
+    """The one distributed step of the in-driver tokenizer trainers: the
+    top-``cap`` (word, count) histogram of the ``words`` array column,
+    count desc then word asc (fully deterministic), in one collect.
+    ``sample_frac`` first keeps a deterministic md5-threshold sample keyed
+    on ``sample_id_col`` (the corpus-assembly sampler — no RNG, replayable
+    anywhere)."""
+    if sample_frac is not None:
+        if sample_id_col is None:
+            raise ValueError("sample_frac requires sample_id_col")
+        from kusto_pre_forge_spark.operators.corpus import _hash_unit
+
+        df = df.filter(
+            _hash_unit(F.col(sample_id_col).cast("string"), sample_salt)
+            < F.lit(float(sample_frac))
+        )
+    rows = (
+        df.select(F.explode(words).alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .orderBy(F.col("cnt").desc(), F.col("w").asc())
+        .limit(cap)
+        .collect()
+    )
+    return [(r["w"], int(r["cnt"])) for r in rows]
+
+
 def _train_bpe_driver(
     word_counts: list[tuple[str, int]],
     n_merges: int,
@@ -380,9 +415,9 @@ def _train_bpe_driver(
     ``learn_bpe.py`` (ACL'16): a pair→{word_idx: occurrences} index
     means each merge touches only the words containing the pair, so 32k
     merges over a 1M-word histogram run in minutes of pure Python with
-    NO per-merge jobs. Semantics identical to the distributed loop:
-    greedy left-to-right non-overlapping merge, (count desc, pair asc)
-    tie-break, stop under ``min_pair_count``. ``to_symbols`` overrides
+    NO per-merge jobs. Semantics: greedy left-to-right non-overlapping
+    merge (the chained-regex semantics of :func:`apply_bpe`), (count desc,
+    pair asc) tie-break, stop under ``min_pair_count``. ``to_symbols`` overrides
     the initial word→symbols split (default Sennrich characters +
     ``</w>``; the byte-level path passes the GPT-2 byte alphabet and
     no end marker)."""
@@ -449,57 +484,32 @@ def train_bpe(
     sample_frac: float | None = None,
     sample_id_col: str | None = None,
     sample_salt: str = "kpf-bpe",
-    batch_top_k: int = 64,
     driver_vocab_cap: int | None = None,
     byte_level: bool = False,
     special_tokens: list[str] | None = None,
 ) -> list[tuple[str, str]]:
     """Learn byte-pair-encoding merge rules from the corpus — the standard
-    Sennrich et al. procedure, run Spark-first: the vocabulary is a
-    DISTRIBUTED (symbol-string, word_count) table, never a driver dict.
+    Sennrich et al. procedure, split the way real tokenizer trainers split
+    it: the distributed job is the word-count scan (the only part that
+    touches 100 TB), and the merge loop runs over the top-``cap`` (count
+    desc, word asc — fully deterministic) word histogram IN THE DRIVER
+    with Sennrich's incremental pair-index algorithm
+    (:func:`_train_bpe_driver`). Training is one histogram collect
+    whatever ``n_merges`` is: zero Spark jobs per merge, 32k merges in
+    minutes, driver traffic = one bounded histogram (1M words ≈ tens of
+    MB). Returns the merge list for :func:`apply_bpe`.
 
-    Per ROUND (driver loop, bounded like ``connected_components``): one
-    map-side-combined aggregate counts adjacent symbol pairs weighted by
-    word frequency, ``limit(batch_top_k)`` brings back the head of the
-    ranking (count desc, then lexicographic — the deterministic
-    tie-break), and a greedy prefix of MUTUALLY NON-INTERACTING pairs is
-    accepted and applied together as chained regexp_replace passes in a
-    single projection (greedy left-to-right non-overlapping per merge,
-    the reference semantics). Lineage is truncated each round (lazy
-    localCheckpoint) so the logical plan stays flat.
-
-    The batch selection is EXACTLY equivalent to one-merge-at-a-time
-    training, not an approximation: merging (a, b) only changes the
-    counts of pairs that contain a, b, or the new symbol a+b, so the
-    accepted set is the contiguous ranked prefix up to the first pair
-    that shares a symbol (or equals a concatenation) with an earlier
-    accepted pair, pruned to counts STRICTLY greater than that stop
-    count — every count a newly created pair could reach is bounded by
-    the stop count, so the sequential argmax provably picks the accepted
-    pairs in exactly this order. If pruning empties the batch, the
-    single top pair is taken (always exact). This collapses a 32k-merge
-    training from 32k sequential jobs to a few hundred rounds — the
-    production-vocab path; equality with sequential training is pinned
-    in tests against an independent in-driver reference implementation.
-
-    At 100 TB the vocab table is |distinct words| rows — millions, not
-    trillions — so each round is a small aggregate over it; driver
-    traffic is ``batch_top_k`` tiny rows per round. For huge corpora,
-    ``sample_frac`` (deterministic md5-threshold keep on
-    ``sample_id_col``, the corpus-assembly sampler — no RNG, replayable
-    anywhere) trains on a sample: pair statistics concentrate fast.
-
-    ``driver_vocab_cap`` is the PRODUCTION 32k-merge path and mirrors
-    how real tokenizer trainers work: the distributed job is the
-    word-count scan (the only part that touches 100 TB); the merge loop
-    itself runs over the top-``cap`` (count desc, word asc — fully
-    deterministic) word histogram IN THE DRIVER with Sennrich's
-    incremental pair-index algorithm — zero Spark jobs per merge, 32k
-    merges in minutes, driver traffic = one bounded histogram (1M words
-    ≈ tens of MB). When the cap exceeds the distinct-word count the
-    result is EXACTLY the sequential/distributed result (pinned in
-    tests); a tight cap drops only rare words' pair mass, the standard
-    trainer trade. Returns the merge list for :func:`apply_bpe`.
+    ``driver_vocab_cap`` defaults to 1M words. When the distinct-word
+    count is within the cap the merges are EXACTLY those of
+    one-merge-at-a-time training (greedy left-to-right non-overlapping
+    merge, (count desc, pair asc) tie-break, stop under
+    ``min_pair_count`` — pinned in tests against an independent
+    sequential reference). A larger vocabulary gets the same trade-off
+    as :func:`train_unigram` and :func:`train_wordpiece`: the rarest
+    words' pair mass is dropped. For huge corpora, ``sample_frac``
+    (deterministic md5-threshold keep on ``sample_id_col``, the
+    corpus-assembly sampler — no RNG, replayable anywhere) trains on a
+    sample: pair statistics concentrate fast.
 
     ``byte_level=True`` is the GPT-2 lineage (public gpt-2/src/
     encoder.py): pre-tokens come from :data:`GPT2_SPLIT_RE` (case
@@ -507,125 +517,29 @@ def train_bpe(
     pre-token's UTF-8 BYTES remapped through ``bytes_to_unicode`` form
     the initial symbols, and there is no end-of-word marker — so a
     trained vocab has the exact shape production byte-level tokenizers
-    ship, and every possible input is coverable (no OOV). The merge
-    loop always runs on the driver histogram in this mode (the
-    production path; ``driver_vocab_cap`` defaults to 1M). Pre-tokens
+    ship, and every possible input is coverable (no OOV). Pre-tokens
     equal to a ``special_tokens`` entry are excluded from training —
-    specials are atomic by fiat, never merged into.
+    specials are atomic by fiat, never merged into. Otherwise words are
+    the lower-cased whitespace tokens, split into characters plus a
+    ``</w>`` end marker.
     """
-    if sample_frac is not None:
-        if sample_id_col is None:
-            raise ValueError("sample_frac requires sample_id_col")
-        from kusto_pre_forge_spark.operators.corpus import _hash_unit
-
-        df = df.filter(
-            _hash_unit(F.col(sample_id_col).cast("string"), sample_salt)
-            < F.lit(float(sample_frac))
-        )
-    if batch_top_k < 1:
-        raise ValueError("batch_top_k must be >= 1")
     if byte_level:
-        cap = driver_vocab_cap if driver_vocab_cap is not None else 1_000_000
+        words = byte_pretokens(F.col(text_col), special_tokens)
         specials = set(special_tokens or ())
-        hist = (
-            df.select(
-                F.explode(
-                    byte_pretokens(F.col(text_col), special_tokens)
-                ).alias("w")
-            )
-            .groupBy("w")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("w").asc())
-            .limit(cap)
-            .collect()
-        )
         b2u = _bytes_to_unicode()
-        return _train_bpe_driver(
-            [(r["w"], r["cnt"]) for r in hist if r["w"] not in specials],
-            n_merges,
-            min_pair_count,
-            to_symbols=lambda w: tuple(b2u[b] for b in w.encode("utf-8")),
-        )
-    words = (
-        df.select(F.explode(_words(F.lower(F.col(text_col)))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        to_symbols = lambda w: tuple(b2u[b] for b in w.encode("utf-8"))  # noqa: E731
+    else:
+        words = _words(F.lower(F.col(text_col)))
+        specials = set()
+        to_symbols = None
+    cap = driver_vocab_cap if driver_vocab_cap is not None else 1_000_000
+    hist = _word_histogram(df, words, cap, sample_frac, sample_id_col, sample_salt)
+    return _train_bpe_driver(
+        [(w, c) for w, c in hist if w not in specials],
+        n_merges,
+        min_pair_count,
+        to_symbols=to_symbols,
     )
-    if driver_vocab_cap is not None:
-        hist = (
-            words.orderBy(F.col("cnt").desc(), F.col("w").asc())
-            .limit(driver_vocab_cap)
-            .collect()
-        )
-        return _train_bpe_driver(
-            [(r["w"], r["cnt"]) for r in hist], n_merges, min_pair_count
-        )
-    # symbol string: characters space-joined + end-of-word marker
-    syms = F.concat(
-        F.array_join(F.filter(F.split(F.col("w"), ""), lambda c: c != ""), " "),
-        F.lit(" </w>"),
-    )
-    vocab = words.select(syms.alias("s"), "cnt").localCheckpoint(eager=True)
-    merges: list[tuple[str, str]] = []
-    while len(merges) < n_merges:
-        toks = F.split(F.col("s"), " ")
-        pairs = vocab.select(
-            F.explode(
-                F.when(
-                    F.size(toks) >= 2,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(toks) - 1),
-                        lambda i: F.struct(
-                            F.element_at(toks, i).alias("a"),
-                            F.element_at(toks, i + 1).alias("b"),
-                        ),
-                    ),
-                ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-            ).alias("p"),
-            "cnt",
-        )
-        head = (
-            pairs.groupBy("p")
-            .agg(F.sum("cnt").alias("n"))
-            .orderBy(F.col("n").desc(), F.col("p.a").asc(), F.col("p.b").asc())
-            .limit(batch_top_k)
-            .collect()
-        )
-        if not head or head[0]["n"] < min_pair_count:
-            break
-        # greedy non-interacting prefix: stop at the first pair touching
-        # an accepted symbol (or an accepted pair's concatenation — two
-        # distinct symbols may share a string form)
-        accepted: list[tuple[str, str, int]] = []
-        used: set[str] = set()
-        stop_n: int | None = None
-        for r in head:
-            a, b = r["p"]["a"], r["p"]["b"]
-            if a in used or b in used:
-                stop_n = r["n"]
-                break
-            accepted.append((a, b, r["n"]))
-            used.update((a, b, a + b))
-        if stop_n is None:
-            # no conflict in the fetched head: unseen pairs may tie with
-            # the last fetched count — unless the head was exhaustive
-            stop_n = head[-1]["n"] if len(head) == batch_top_k else min_pair_count - 1
-        batch = [
-            (a, b)
-            for a, b, n in accepted
-            if n > stop_n and n >= min_pair_count
-        ]
-        if not batch:
-            # ties right at the top: fall back to the plain argmax, which
-            # is always exact
-            batch = [(head[0]["p"]["a"], head[0]["p"]["b"])]
-        batch = batch[: n_merges - len(merges)]
-        merges.extend(batch)
-        s = F.col("s")
-        for a, b in batch:
-            s = F.regexp_replace(s, _merge_pattern(a, b), _repl_q(a + b))
-        vocab = vocab.withColumn("s", s).localCheckpoint(eager=False)
-    return merges
 
 
 def _bpe_tokenize_udf(
@@ -641,14 +555,12 @@ def _bpe_tokenize_udf(
     Within-batch memoization collapses repeated words. ``byte_level``
     starts from GPT-2 byte-remapped symbols (no ``</w>``); special
     tokens pass through as one symbol, never split or merged."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.pandas.functions import PandasUDFType
 
     merge_list = list(merges)
     b2u = _bytes_to_unicode() if byte_level else None
 
-    def tokenize_batch(words: pd.Series):
+    def tokenize_batch(words: pd.Series) -> pd.DataFrame:
         memo: dict[str, tuple[int, str]] = {}
 
         def tok(w: str) -> tuple[int, str]:
@@ -691,7 +603,7 @@ def _bpe_tokenize_udf(
             {"n": pairs.map(lambda p: p[0]), "joined": pairs.map(lambda p: p[1])}
         )
 
-    return pandas_udf(tokenize_batch, "n int, joined string", PandasUDFType.SCALAR)
+    return pandas_udf(tokenize_batch, "n int, joined string")
 
 
 def bpe_vocab_ids(merges: list[tuple[str, str]]) -> dict[str, int]:
@@ -734,15 +646,13 @@ def _bpe_encode_udf(merges: list[tuple[str, str]]):
     _bpe_tokenize_udf, then symbols map through the bpe_vocab_ids table
     to the integer ids a trainer consumes. Byte-level has no UNK — every
     byte is id 0..255 by construction."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.pandas.functions import PandasUDFType
 
     merge_list = list(merges)
     b2u = _bytes_to_unicode()
     vocab = bpe_vocab_ids(merge_list)
 
-    def encode_batch(words: pd.Series):
+    def encode_batch(words: pd.Series) -> pd.Series:
         memo: dict[str, list[int]] = {}
 
         def enc(w: str) -> list[int]:
@@ -772,7 +682,7 @@ def _bpe_encode_udf(merges: list[tuple[str, str]]):
 
         return words.map(enc)
 
-    return pandas_udf(encode_batch, "array<int>", PandasUDFType.SCALAR)
+    return pandas_udf(encode_batch, "array<int>")
 
 
 def _bpe_encode_doc_udf(merges: list[tuple[str, str]], vocab_ids=None):
@@ -783,15 +693,13 @@ def _bpe_encode_doc_udf(merges: list[tuple[str, str]], vocab_ids=None):
     table — the imported-tokenizer path, where vocab.json is
     AUTHORITATIVE for ids (the HF/GPT-2 contract) and merges.txt only
     ranks the merges."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.pandas.functions import PandasUDFType
 
     merge_list = list(merges)
     b2u = _bytes_to_unicode()
     vocab = dict(vocab_ids) if vocab_ids is not None else bpe_vocab_ids(merge_list)
 
-    def encode_batch(docs: pd.Series):
+    def encode_batch(docs: pd.Series) -> pd.Series:
         memo: dict[str, list[int]] = {}
 
         def enc(w: str) -> list[int]:
@@ -823,7 +731,7 @@ def _bpe_encode_doc_udf(merges: list[tuple[str, str]], vocab_ids=None):
             lambda ws: [i for w in (ws if ws is not None else []) for i in enc(w)]
         )
 
-    return pandas_udf(encode_batch, "array<int>", PandasUDFType.SCALAR)
+    return pandas_udf(encode_batch, "array<int>")
 
 
 def _bpe_encode_segments_udf(
@@ -838,9 +746,7 @@ def _bpe_encode_segments_udf(
     ``segment_sizes`` carries the per-segment token counts (turn
     boundaries for packing / trainer bookkeeping). One Arrow
     projection; zero joins."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.pandas.functions import PandasUDFType
 
     merge_list = list(merges)
     b2u = _bytes_to_unicode()
@@ -848,7 +754,7 @@ def _bpe_encode_segments_udf(
         dict(vocab_ids) if vocab_ids is not None else bpe_vocab_ids(merge_list)
     )
 
-    def encode_batch(rows: pd.Series):
+    def encode_batch(rows: pd.Series) -> pd.DataFrame:
         memo: dict[str, list[int]] = {}
 
         def enc(w: str) -> list[int]:
@@ -903,7 +809,6 @@ def _bpe_encode_segments_udf(
         encode_batch,
         "struct<input_ids:array<int>, loss_mask:array<int>, "
         "segment_sizes:array<int>>",
-        PandasUDFType.SCALAR,
     )
 
 
@@ -1064,13 +969,12 @@ def apply_bpe(
 
 def _text_udf(fn, name: str):
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.pandas.functions import PandasUDFType
 
-    def wrapped(s):
+    def wrapped(s: pd.Series) -> pd.Series:
         return s.map(lambda v: None if v is None else fn(v))
 
     wrapped.__name__ = name
-    return pandas_udf(wrapped, "string", PandasUDFType.SCALAR)
+    return pandas_udf(wrapped, "string")
 
 
 def normalize_unicode(col: Column | str, form: str = "NFC") -> Column:
@@ -1314,24 +1218,14 @@ def train_unigram(
     are always in the vocabulary, so any of its words reconstructs
     exactly (unseen characters fall back per-char at apply time).
     """
-    if sample_frac is not None:
-        if sample_id_col is None:
-            raise ValueError("sample_frac requires sample_id_col")
-        from kusto_pre_forge_spark.operators.corpus import _hash_unit
-
-        df = df.filter(
-            _hash_unit(F.col(sample_id_col).cast("string"), sample_salt)
-            < F.lit(float(sample_frac))
-        )
-    hist_rows = (
-        df.select(F.explode(_words(F.lower(F.col(text_col)))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("w").asc())
-        .limit(driver_word_cap)
-        .collect()
+    hist = _word_histogram(
+        df,
+        _words(F.lower(F.col(text_col))),
+        driver_word_cap,
+        sample_frac,
+        sample_id_col,
+        sample_salt,
     )
-    hist = [(r["w"], int(r["cnt"])) for r in hist_rows]
     if not hist:
         return []
     return _train_unigram_driver(
@@ -1351,16 +1245,14 @@ def _unigram_tokenize_udf(vocab: list[tuple[str, float]]):
     always rebuilds the word. Ties resolve to the FIRST accepted length
     (shortest piece — lengths scan ascending, strict improvement
     required), making the path deterministic."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.pandas.functions import PandasUDFType
 
     table = dict(vocab)
     max_len = max((len(p) for p in table), default=1)
     unk = (min(table.values(), default=0.0)) - 10.0
     NEG = float("-inf")
 
-    def tokenize_batch(words: pd.Series):
+    def tokenize_batch(words: pd.Series) -> pd.DataFrame:
         memo: dict[str, tuple[int, str]] = {}
 
         def tok(w: str) -> tuple[int, str]:
@@ -1401,7 +1293,7 @@ def _unigram_tokenize_udf(vocab: list[tuple[str, float]]):
             {"n": pairs.map(lambda p: p[0]), "joined": pairs.map(lambda p: p[1])}
         )
 
-    return pandas_udf(tokenize_batch, "n int, joined string", PandasUDFType.SCALAR)
+    return pandas_udf(tokenize_batch, "n int, joined string")
 
 
 def apply_unigram(
@@ -1565,26 +1457,15 @@ def train_wordpiece(
     only stage that touches 100 TB); the likelihood-scored merge loop
     runs in-driver over the capped histogram — the BERT trainer shape.
     Returns the sorted piece vocabulary for :func:`apply_wordpiece`."""
-    if sample_frac is not None:
-        if sample_id_col is None:
-            raise ValueError("sample_frac requires sample_id_col")
-        from kusto_pre_forge_spark.operators.corpus import _hash_unit
-
-        df = df.filter(
-            _hash_unit(F.col(sample_id_col).cast("string"), sample_salt)
-            < F.lit(float(sample_frac))
-        )
-    hist_rows = (
-        df.select(F.explode(_words(F.lower(F.col(text_col)))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("w").asc())
-        .limit(driver_word_cap)
-        .collect()
+    hist = _word_histogram(
+        df,
+        _words(F.lower(F.col(text_col))),
+        driver_word_cap,
+        sample_frac,
+        sample_id_col,
+        sample_salt,
     )
-    return _train_wordpiece_driver(
-        [(r["w"], int(r["cnt"])) for r in hist_rows], n_merges, min_pair_count
-    )
+    return _train_wordpiece_driver(hist, n_merges, min_pair_count)
 
 
 def _wordpiece_tokenize_udf(pieces: list[str]):
@@ -1592,14 +1473,12 @@ def _wordpiece_tokenize_udf(pieces: list[str]):
     apply rule — NOT merge-order replay): at each position take the
     longest vocab piece matching the remaining prefix; unseen characters
     fall back to themselves, so pieces always partition the word."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.pandas.functions import PandasUDFType
 
     table = set(pieces)
     max_len = max((len(p) for p in table), default=1)
 
-    def tokenize_batch(words: pd.Series):
+    def tokenize_batch(words: pd.Series) -> pd.DataFrame:
         memo: dict[str, tuple[int, str]] = {}
 
         def tok(w: str) -> tuple[int, str]:
@@ -1626,7 +1505,7 @@ def _wordpiece_tokenize_udf(pieces: list[str]):
             {"n": pairs.map(lambda p: p[0]), "joined": pairs.map(lambda p: p[1])}
         )
 
-    return pandas_udf(tokenize_batch, "n int, joined string", PandasUDFType.SCALAR)
+    return pandas_udf(tokenize_batch, "n int, joined string")
 
 
 def apply_wordpiece(

@@ -20,6 +20,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# the directory that holds the kusto_pre_forge_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_session(
     app_name: str = "kusto_pre_forge_spark",
@@ -112,7 +115,13 @@ def get_session(
         )
     )
     if master or not SparkSession.getActiveSession():
-        builder = builder.master(master or f"local[{cpus}]")
+        master = master or f"local[{cpus}]"
+        builder = builder.master(master)
+        if master.startswith("local"):
+            # Python workers get the driver's environment, not its
+            # sys.path: without the package root on their PYTHONPATH a UDF
+            # that imports the package fails unless the cwd is the repo.
+            builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

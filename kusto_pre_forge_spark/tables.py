@@ -2,6 +2,8 @@
 
 Tables: region nation customer supplier part orders lineitem events
 documents embeddings — one parquet file each under an sf directory.
+Each table's inferred schema is cached per process (``_read_parquet``),
+so building a query frame issues no footer-read job after the first load.
 
 Timestamp normalization — the reference model is "schema comes from the
 destination, normalized at load" (reference: code/KustoPreForgeLib/
@@ -24,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -87,6 +90,41 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     return df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
 
 
+# Confs that change the schema Spark infers from a parquet footer.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+# path -> ((file length, modification time, schema confs), inferred schema)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the footer job after the first
+    read: schema inference runs a Spark job on every call, so the inferred
+    schema is kept per path, the way the reference fetches table metadata
+    once at startup. An entry is reused only while the file's length and
+    modification time (Hadoop ``FileSystem`` status, so any URI scheme
+    works) and the inference confs are unchanged; otherwise the footer is
+    read again and the entry replaced."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    status = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(jpath)
+    key = (
+        status.getLen(),
+        status.getModificationTime(),
+        tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS),
+    )
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _driver_proof(spark)
     if name == "events":
@@ -99,7 +137,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Belt and suspenders: inferTimestampNTZ=false should already yield

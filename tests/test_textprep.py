@@ -250,18 +250,35 @@ def _bpe_fixture_text():
 
 
 def test_train_bpe_batched_512_equals_sequential(spark):
-    """>=512 merges: the batched distributed trainer must produce EXACTLY
-    the sequential merge list (the batch rule is provably exact, not an
-    approximation) — checked against an independent pure-Python
-    sequential reference."""
+    """>=512 merges with the default cap: the trainer must produce EXACTLY
+    the sequential merge list — checked against an independent
+    pure-Python sequential reference."""
     from kusto_pre_forge_spark.operators.textprep import train_bpe
 
     text = _bpe_fixture_text()
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    got = train_bpe(df, n_merges=512, batch_top_k=64)
+    got = train_bpe(df, n_merges=512)
     want = _ref_bpe_train([text], 512)
     assert len(got) == 512
     assert got == want
+
+
+def test_train_bpe_jobs_independent_of_merge_count(spark):
+    """Training is one histogram collect: 60 merges issue no more Spark
+    jobs than 6."""
+    from kusto_pre_forge_spark.operators.textprep import train_bpe
+
+    df = spark.createDataFrame(
+        [(1, _bpe_fixture_text())], "doc_id long, text string"
+    )
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(n_merges):
+        j0 = sched.nextJobId()
+        assert len(train_bpe(df, n_merges=n_merges)) == n_merges
+        return sched.nextJobId() - j0
+
+    assert jobs(6) == jobs(60)
 
 
 def test_train_bpe_driver_histogram_equals_sequential(spark):

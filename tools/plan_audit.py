@@ -61,7 +61,7 @@ AUDITED = [
     ("activity_active_users", "distinct pairs → contribute explode → two map-side-combined aggregates"),
     ("skew_salted_agg", "two-phase aggregation: hot keys spread over salt buckets before the combine"),
     ("kql_graph_var", "union of independent hash-join chains, one per path length"),
-    ("text_bpe", "per-iteration: one pair-count aggregate + 1-row collect; vocab stays distributed"),
+    ("text_bpe", "one word-histogram collect trains every merge in the driver; apply is chained codegen regexps"),
     ("dedup_clusters", "banded LSH pairs feed O(log n) CC rounds; pair input checkpointed once, docs never all-pair"),
     ("dedup_cluster_sizes", "rides the same pair set as dedup_clusters; size histogram is one extra aggregate"),
     ("kql_series_forecast", "per-series folds over packed arrays — one exchange to pack, no per-element shuffle"),
