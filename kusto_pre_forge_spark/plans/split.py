@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kusto_pre_forge_spark.config import RunSettings
+from kusto_pre_forge_spark.sinks.manifest import replay_safe_writer
 
 SOURCE_COL = "_kpf_source"
 SHARD_COL = "_kpf_shard_id"
@@ -374,18 +375,15 @@ def run_split(
     # shards "{destName}-{shardId}" next to the destination prefix,
     # TextBlobSink.cs:29-34); full URIs stay in the manifest's ingest_by key.
     src_name = F.element_at(F.split(F.col(SOURCE_COL), "/"), -1).alias("_kpf_src_name")
-    writer = (
+    # a re-run replaces exactly its own (source, shard) directories, never
+    # other sources' output
+    writer = replay_safe_writer(
         sharded.withColumn("_kpf_src_name", src_name)
         .repartition(F.col("_kpf_src_name"), F.col(SHARD_COL))
         .sortWithinPartitions("_kpf_src_name", SHARD_COL, ORDER_COL)
-        .select("Text", "_kpf_src_name", SHARD_COL)
-        .write.mode("overwrite")
-        # dynamic as a per-write option: a re-run replaces exactly its own
-        # (source, shard) directories, never other sources' output — and it
-        # holds under foreachBatch's cloned session where a runtime
-        # spark.conf.set on the outer session is invisible
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_kpf_src_name", SHARD_COL)
+        .select("Text", "_kpf_src_name", SHARD_COL),
+        "_kpf_src_name",
+        SHARD_COL,
     )
     if settings.output_compression == Compression.GZIP:
         writer = writer.option("compression", "gzip")

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -37,6 +37,23 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("committed_at", T.TimestampType(), True),
     ]
 )
+
+
+def replay_safe_writer(df: DataFrame, *cols: str) -> DataFrameWriter:
+    """``df``'s writer, partitioned by ``cols`` under dynamic partition
+    overwrite: a re-run (replayed micro-batch, re-delivered blob) replaces
+    exactly the partition directories it writes and leaves every other
+    key's output alone — the file-level form of the ingest-by no-op
+    (TextKustoSink.cs:50-51).
+
+    The overwrite mode is a per-write option, not session conf:
+    ``foreachBatch`` runs in a CLONED SparkSession whose conf snapshot
+    predates any runtime ``spark.conf.set`` on the outer session."""
+    return (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*cols)
+    )
 
 
 class IngestManifest:
@@ -198,16 +215,9 @@ def ingest_idempotent(
     if not new_meta.isEmpty():
         new_keys = new_meta.select("ingest_by")
         new_data = with_key.join(F.broadcast(new_keys), "ingest_by", "left_semi")
-        (
-            new_data.drop(source_col, last_col, shard_col)
-            .write.mode("overwrite")
-            # per-write option: works under foreachBatch's cloned session
-            # too, where a runtime spark.conf.set would not be seen
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_by")
-            .format(fmt)
-            .save(dest_path)
-        )
+        replay_safe_writer(
+            new_data.drop(source_col, last_col, shard_col), "ingest_by"
+        ).format(fmt).save(dest_path)
         manifest.commit(new_meta)
     return new_meta
 

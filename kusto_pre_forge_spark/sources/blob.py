@@ -29,6 +29,12 @@ from kusto_pre_forge_spark.config import DataFormat, RunSettings
 
 _DELIMITERS = {DataFormat.CSV: ",", DataFormat.TSV: "\t", DataFormat.PSV: "|"}
 
+# RFC-4180, as the reference's parse state machine (CsvParseTransform.cs:64-82):
+# "" escapes a quote inside a quoted field, and a quoted field may hold
+# newlines. One dialect for the batch (read_landing) and streaming
+# (StreamingEtl) readers.
+CSV_DIALECT = {"quote": '"', "escape": '"', "multiLine": "true"}
+
 
 def list_source(
     spark: SparkSession,
@@ -59,22 +65,19 @@ def list_source(
     return sorted(out)
 
 
-def read_zip_lines(
+def _read_archive_lines(
     spark: SparkSession,
     paths: list[str] | str,
-    drop_first_line: bool = False,
+    decompress,
+    drop_first_line: bool,
 ) -> DataFrame:
-    """Text lines from the FIRST entry of each zip archive.
-
-    ref: Text/TextSource.cs:80-108 — the reference opens the archive and
-    reads only ``Entries.First()``; same here. Zip is not a splittable
-    codec, so the unit of parallelism is the archive (one task each),
-    exactly the reference's per-blob model; the whole archive is
-    decompressed in that task's memory, bounded by
-    ``spark.sql.files.maxPartitionBytes`` admission on the binary read.
-    ``drop_first_line`` peels a header at the source (zip lines arrive in
-    order inside the task, so no window is needed).
-    """
+    """(Text, _kpf_source) lines of each archive blob, ``decompress(bytes)
+    -> str`` applied per blob. Archives are not splittable, so the unit of
+    parallelism is the blob (one task each), exactly the reference's
+    per-blob model; the whole blob is decompressed in that task's memory,
+    bounded by ``spark.sql.files.maxPartitionBytes`` admission on the
+    binary read. ``drop_first_line`` peels a header at the source (lines
+    arrive in order inside the task, so no window is needed)."""
     import pandas as pd
 
     if isinstance(paths, str):
@@ -82,15 +85,9 @@ def read_zip_lines(
     binary = spark.read.format("binaryFile").load(paths)
 
     def extract(it):
-        import io
-        import zipfile
-
         for pdf in it:
             for path, content in zip(pdf["path"], pdf["content"]):
-                with zipfile.ZipFile(io.BytesIO(bytes(content))) as z:
-                    names = z.namelist()
-                    text = z.read(names[0]).decode("utf-8") if names else ""
-                lines = text.splitlines()
+                lines = decompress(bytes(content)).splitlines()
                 if drop_first_line and lines:
                     lines = lines[1:]
                 yield pd.DataFrame(
@@ -100,6 +97,48 @@ def read_zip_lines(
     return binary.select("path", "content").mapInPandas(
         extract, "Text string, _kpf_source string"
     )
+
+
+def read_zip_lines(
+    spark: SparkSession,
+    paths: list[str] | str,
+    drop_first_line: bool = False,
+) -> DataFrame:
+    """Text lines from the FIRST entry of each zip archive (strict UTF-8).
+
+    ref: Text/TextSource.cs:80-108 — the reference opens the archive and
+    reads only ``Entries.First()``; same here.
+    """
+
+    def first_entry(content: bytes) -> str:
+        import io
+        import zipfile
+
+        with zipfile.ZipFile(io.BytesIO(content)) as z:
+            names = z.namelist()
+            return z.read(names[0]).decode("utf-8") if names else ""
+
+    return _read_archive_lines(spark, paths, first_entry, drop_first_line)
+
+
+def read_xz_lines(
+    spark: SparkSession,
+    paths: list[str] | str,
+    drop_first_line: bool = False,
+) -> DataFrame:
+    """Text lines from .xz blobs via stdlib ``lzma`` — stock Spark has
+    no Hadoop XZ codec, and a plain text read of an .xz file silently
+    yields the RAW COMPRESSED BYTES as 'lines' (verified), which is a
+    silent-corruption hazard this reader exists to close. Multi-stream
+    concatenation (the xz analogue of gzip members) decompresses
+    transparently; undecodable bytes become U+FFFD."""
+
+    def unxz(content: bytes) -> str:
+        import lzma
+
+        return lzma.decompress(content).decode("utf-8", "replace")
+
+    return _read_archive_lines(spark, paths, unxz, drop_first_line)
 
 
 def exact_path_slices(
@@ -180,44 +219,6 @@ def read_blobs_via_paths(
     return paths.mapInPandas(batches, "path string, content binary")
 
 
-def read_xz_lines(
-    spark: SparkSession,
-    paths: list[str] | str,
-    drop_first_line: bool = False,
-) -> DataFrame:
-    """Text lines from .xz blobs via stdlib ``lzma`` — stock Spark has
-    no Hadoop XZ codec, and a plain text read of an .xz file silently
-    yields the RAW COMPRESSED BYTES as 'lines' (verified), which is a
-    silent-corruption hazard this reader exists to close. Same per-blob
-    parallelism model as :func:`read_zip_lines` (xz is not splittable;
-    the archive is the task unit); multi-stream concatenation (the xz
-    analogue of gzip members) decompresses transparently."""
-    import pandas as pd
-
-    if isinstance(paths, str):
-        paths = [paths]
-    binary = spark.read.format("binaryFile").load(paths)
-
-    def extract(it):
-        import lzma
-
-        for pdf in it:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                text = lzma.decompress(bytes(content)).decode(
-                    "utf-8", "replace"
-                )
-                lines = text.splitlines()
-                if drop_first_line and lines:
-                    lines = lines[1:]
-                yield pd.DataFrame(
-                    {"Text": lines, "_kpf_source": [path] * len(lines)}
-                )
-
-    return binary.select("path", "content").mapInPandas(
-        extract, "Text string, _kpf_source string"
-    )
-
-
 def read_landing(
     spark: SparkSession,
     paths: list[str] | str,
@@ -250,54 +251,31 @@ def read_landing(
     if isinstance(paths, str):
         paths = [paths]
     fmt = settings.fmt
-    if settings.input_compression == Compression.XZ:
-        # no Hadoop XZ codec in stock Spark — same archive-reader route
-        # as zip, with the identical delimited-parse tail
+    read_archive = {Compression.XZ: read_xz_lines, Compression.ZIP: read_zip_lines}
+    if settings.input_compression in read_archive:
+        # gzip/zstd are transparent Hadoop codecs; zip (an archive) and xz
+        # (no codec in stock Spark) need the archive readers. txt: lines
+        # as-is. Delimited: parse the lines with from_csv against the
+        # caller's schema (required — there is no sampling pass over
+        # archive members).
+        codec = settings.input_compression.value.lower()
+        read_lines = read_archive[settings.input_compression]
         if fmt == DataFormat.TXT:
-            return read_xz_lines(spark, paths)
-        if fmt in _DELIMITERS:
-            if schema is None:
-                raise ValueError("xz-compressed delimited input requires a schema")
-            lines = read_xz_lines(
-                spark, paths, drop_first_line=settings.csv_headers
-            )
-            ddl = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-            )
-            parsed = F.from_csv(
-                F.col("Text"),
-                F.lit(ddl),
-                {"sep": _DELIMITERS[fmt], "quote": '"', "escape": '"'},
-            )
-            return lines.select(parsed.alias("_r"), "_kpf_source").select(
-                "_r.*", "_kpf_source"
-            )
-        raise NotImplementedError(f"xz input for format {fmt}")
-    if settings.input_compression == Compression.ZIP:
-        # gzip/zstd are transparent Hadoop codecs; zip needs the archive
-        # reader. txt: lines as-is. Delimited: parse the lines with
-        # from_csv against the caller's schema (required — there is no
-        # sampling pass over archive members).
-        if fmt == DataFormat.TXT:
-            return read_zip_lines(spark, paths)
-        if fmt in _DELIMITERS:
-            if schema is None:
-                raise ValueError("zip-compressed delimited input requires a schema")
-            lines = read_zip_lines(
-                spark, paths, drop_first_line=settings.csv_headers
-            )
-            ddl = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-            )
-            parsed = F.from_csv(
-                F.col("Text"),
-                F.lit(ddl),
-                {"sep": _DELIMITERS[fmt], "quote": '"', "escape": '"'},
-            )
-            return lines.select(parsed.alias("_r"), "_kpf_source").select(
-                "_r.*", "_kpf_source"
-            )
-        raise NotImplementedError(f"zip input for format {fmt}")
+            return read_lines(spark, paths)
+        if fmt not in _DELIMITERS:
+            raise NotImplementedError(f"{codec} input for format {fmt}")
+        if schema is None:
+            raise ValueError(f"{codec}-compressed delimited input requires a schema")
+        lines = read_lines(spark, paths, drop_first_line=settings.csv_headers)
+        ddl = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+        )
+        parsed = F.from_csv(
+            F.col("Text"), F.lit(ddl), {"sep": _DELIMITERS[fmt], **CSV_DIALECT}
+        )
+        return lines.select(parsed.alias("_r"), "_kpf_source").select(
+            "_r.*", "_kpf_source"
+        )
     if fmt == DataFormat.TXT:
         # landing table shape: one Text:string column (templates/script.kql:2)
         df = spark.read.text(paths).withColumnRenamed("value", "Text")
@@ -305,10 +283,7 @@ def read_landing(
         reader = spark.read.options(
             sep=_DELIMITERS[fmt],
             header=str(settings.csv_headers).lower(),
-            # RFC-4180 "" escapes, matching CsvParseTransform.cs:64-82
-            quote='"',
-            escape='"',
-            multiLine="true",  # quoted embedded newlines, ref state machine :64-82
+            **CSV_DIALECT,
         )
         use_schema = schema
         if corrupt_col is not None:

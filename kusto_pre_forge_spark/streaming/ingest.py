@@ -16,11 +16,27 @@ Spark-first mapping:
   stronger than the reference's at-least-once queue)
 - 1-min poll / flush interval   → ``trigger(processingTime="60 seconds")``
 - message completion            → checkpoint commit after each micro-batch
-- per-blob ETL + ingest-by tags → ``foreachBatch`` running the PrePartition
-  or Split plan with the idempotent manifest sink, so a replayed batch
-  (crash between write and checkpoint) is a no-op
+- per-blob ETL + ingest-by tags → ``foreachBatch`` running one per-batch
+  function whose write is replay-safe (dynamic partition overwrite keyed by
+  batch or source file, or the idempotent manifest sink), so a replayed
+  batch (crash between write and checkpoint) is a no-op
 - lock renewal                  → obsolete: no lease to keep alive
 - backlog catch-up              → ``Trigger.AvailableNow`` (SURVEY §2.6)
+
+One loop, :meth:`StreamingEtl.start`, runs any ``process(batch_df,
+batch_id)``. The reference's own ETLs have named entry points
+(``start_prepartition``, ``start_split``, ``start_idempotent_ingest``);
+every other mode is a ``*_batch`` method bound with ``functools.partial``:
+
+- admission into a batch-partitioned corpus store: ``dedup_ingest_batch``
+  (MinHash near-dup), ``exact_substr_ingest_batch`` (k-token windows),
+  ``semdedup_ingest_batch`` (embeddings), ``dsir_ingest_batch``
+  (importance), ``blocklist_ingest_batch`` (URL domain),
+  ``robots_ingest_batch`` (robots.txt), ``classifier_ingest_batch``
+  (quality model);
+- source-file-keyed outputs: ``corpus_stats_batch`` (vocabulary/IDF
+  deltas), ``ann_index_batch`` (IVF-PQ index), ``webdataset_ingest_batch``
+  (tar shards).
 
 Scale: each micro-batch is a normal batch plan over the newly arrived
 files; ``maxFilesPerTrigger`` bounds batch size (the reference's 100 MB
@@ -31,13 +47,56 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kusto_pre_forge_spark.catalog import PartitionPolicy
 from kusto_pre_forge_spark.plans.prepartition import PID_COL, prepartition
-from kusto_pre_forge_spark.sinks.manifest import IngestManifest
+from kusto_pre_forge_spark.sinks.manifest import IngestManifest, replay_safe_writer
+from kusto_pre_forge_spark.sources.autoextract import extract_text_blobs
+from kusto_pre_forge_spark.sources.blob import CSV_DIALECT
+from kusto_pre_forge_spark.sources.docx import parse_docx_blobs
+from kusto_pre_forge_spark.sources.pdf import parse_pdf_blobs
+from kusto_pre_forge_spark.sources.warc import parse_warc_blobs
+
+# binaryFile landings: fmt → (pathGlobFilter, parser). The record decode is
+# the same pure map stage the batch reader uses; rows have the parser's
+# fixed shape (lineage in _kpf_source), so the declared schema is ignored.
+# "auto" is a mixed dump: every blob is magic-byte sniffed and routed to
+# its extractor (PDF/DOCX/notebook/WARC/html/text).
+_BINARY_LANDINGS = {
+    "warc": ("*.warc*", parse_warc_blobs),
+    "pdf": ("*.pdf", parse_pdf_blobs),
+    "docx": ("*.docx", parse_docx_blobs),
+    "auto": ("*", extract_text_blobs),
+}
+
+
+def _by_file(batch_df: DataFrame, id_col: str) -> DataFrame:
+    """Key each row by its landing file (``_kpf_file`` = md5 of the path,
+    16 hex chars) and dedupe ids PER FILE. File keys are stable across ANY
+    replay — same checkpoint (crash) or a rebuilt one (lost state,
+    different file→batch packing) — while batch ids renumber when a
+    checkpoint is lost, so they never key anything here. The dedup is per
+    file, not per batch, so that a file's output is a pure function of that
+    file alone: a repacked replay (doc in two files, different file→batch
+    packing) rewrites identical partition content and never
+    double-counts."""
+    fkey = F.substring(F.md5(F.col("_kpf_source")), 1, 16)
+    return batch_df.withColumn("_kpf_file", fkey).dropDuplicates([id_col, "_kpf_file"])
+
+
+def _write_by_file(out: DataFrame, out_dir: str) -> int:
+    """Write ``out`` under one partition per ``_kpf_file``; returns its row
+    count (persisted so the count does not recompute the plan)."""
+    out.persist()
+    try:
+        replay_safe_writer(out, "_kpf_file").parquet(out_dir)
+        return out.count()
+    finally:
+        out.unpersist()
 
 
 class StreamingEtl:
@@ -66,102 +125,33 @@ class StreamingEtl:
     def _source(self) -> DataFrame:
         from pyspark.sql import types as T
 
-        if self.fmt == "warc":
-            # WARC landing blobs (crawler output dropped into the landing
-            # dir): binaryFile is a streaming-capable file source, and the
-            # record decode is the same pure map stage the batch reader
-            # uses — the declared self.schema is ignored (WARC rows have
-            # the fixed sources.warc.WARC_DDL shape, lineage included)
-            from kusto_pre_forge_spark.sources.warc import parse_warc_blobs
-
+        reader = self.spark.readStream
+        if self.max_files_per_trigger:
+            # admission control ≡ the reference's bounded memory budget
+            # (16 concurrent downloads, DownloadBlobTransform.cs:10)
+            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
+        if self.fmt in _BINARY_LANDINGS:
+            glob, parse = _BINARY_LANDINGS[self.fmt]
             # streaming file sources need an explicit schema — binaryFile's
             # is fixed by the format
             breader = (
-                self.spark.readStream.format("binaryFile")
+                reader.format("binaryFile")
                 .schema(
                     "path string, modificationTime timestamp, "
                     "length long, content binary"
                 )
-                .option("pathGlobFilter", "*.warc*")
+                .option("pathGlobFilter", glob)
             )
-            if self.max_files_per_trigger:
-                breader = breader.option(
-                    "maxFilesPerTrigger", self.max_files_per_trigger
-                )
-            return parse_warc_blobs(breader.load(self.landing_dir))
-
-        if self.fmt == "pdf":
-            # PDF landing blobs (a crawl yields PDFs next to HTML): same
-            # binaryFile streaming posture as WARC; rows have the fixed
-            # sources.pdf.PDF_DDL shape (one row per page, lineage in
-            # _kpf_source), so the declared self.schema is ignored
-            from kusto_pre_forge_spark.sources.pdf import parse_pdf_blobs
-
-            breader = (
-                self.spark.readStream.format("binaryFile")
-                .schema(
-                    "path string, modificationTime timestamp, "
-                    "length long, content binary"
-                )
-                .option("pathGlobFilter", "*.pdf")
-            )
-            if self.max_files_per_trigger:
-                breader = breader.option(
-                    "maxFilesPerTrigger", self.max_files_per_trigger
-                )
-            return parse_pdf_blobs(breader.load(self.landing_dir))
-
-        if self.fmt == "docx":
-            # DOCX landing blobs: same binaryFile posture; rows have the
-            # fixed sources.docx.DOCX_DDL shape (one row per document)
-            from kusto_pre_forge_spark.sources.docx import parse_docx_blobs
-
-            breader = (
-                self.spark.readStream.format("binaryFile")
-                .schema(
-                    "path string, modificationTime timestamp, "
-                    "length long, content binary"
-                )
-                .option("pathGlobFilter", "*.docx")
-            )
-            if self.max_files_per_trigger:
-                breader = breader.option(
-                    "maxFilesPerTrigger", self.max_files_per_trigger
-                )
-            return parse_docx_blobs(breader.load(self.landing_dir))
-
-        if self.fmt == "auto":
-            # mixed-dump landing: whatever blob arrives is magic-byte
-            # sniffed and routed to its extractor (PDF/DOCX/notebook/
-            # WARC/html/text) — rows have the fixed AUTOEXTRACT_DDL shape
-            from kusto_pre_forge_spark.sources.autoextract import (
-                extract_text_blobs,
-            )
-
-            breader = self.spark.readStream.format("binaryFile").schema(
-                "path string, modificationTime timestamp, "
-                "length long, content binary"
-            )
-            if self.max_files_per_trigger:
-                breader = breader.option(
-                    "maxFilesPerTrigger", self.max_files_per_trigger
-                )
-            return extract_text_blobs(breader.load(self.landing_dir))
+            return parse(breader.load(self.landing_dir))
 
         schema = self.schema
         if self.fmt == "text":
             # the text source has exactly one string column regardless of
             # the table schema the ETL will parse downstream
             schema = T.StructType([T.StructField("value", T.StringType())])
-        reader = self.spark.readStream.schema(schema)
-        if self.max_files_per_trigger:
-            # admission control ≡ the reference's bounded memory budget
-            # (16 concurrent downloads, DownloadBlobTransform.cs:10)
-            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
+        reader = reader.schema(schema)
         if self.fmt == "csv":
-            reader = reader.options(
-                header=str(self.csv_headers).lower(), quote='"', escape='"'
-            )
+            reader = reader.options(header=str(self.csv_headers).lower(), **CSV_DIALECT)
             df = reader.csv(self.landing_dir)
         elif self.fmt == "text":
             df = reader.text(self.landing_dir)
@@ -180,6 +170,37 @@ class StreamingEtl:
             raise NotImplementedError(f"streaming format {self.fmt}")
         return df.withColumn("_kpf_source", F.input_file_name())
 
+    def start(
+        self,
+        process: Callable[[DataFrame, int], object],
+        trigger_seconds: int | None = 60,
+        available_now: bool = False,
+    ) -> StreamingQuery:
+        """Run ``process(batch_df, batch_id)`` on every micro-batch of newly
+        landed blobs — the reference's one-ETL-per-queue-message loop
+        (ServiceBusServer.cs:26-39); the checkpoint commit after each batch
+        is the message completion.
+
+        ``trigger_seconds=60`` mirrors the reference's flush interval
+        (EtlRun.cs:136), ``None`` runs batches back to back;
+        ``available_now=True`` drains the backlog and stops (catch-up
+        mode). Any ``*_batch`` method is a ``process`` once its store
+        arguments are bound::
+
+            etl.start(partial(etl.dedup_ingest_batch, corpus_dir=d),
+                      available_now=True)
+        """
+        writer = (
+            self._source()
+            .writeStream.foreachBatch(process)
+            .option("checkpointLocation", self.checkpoint_dir)
+        )
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        elif trigger_seconds:
+            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+        return writer.start()
+
     def start_prepartition(
         self,
         policy: PartitionPolicy,
@@ -188,10 +209,6 @@ class StreamingEtl:
     ) -> StreamingQuery:
         """Continuous PrePartition: each micro-batch hash-partitions newly
         arrived blobs and appends them under pid directories.
-
-        ``trigger_seconds=60`` mirrors the reference's flush interval
-        (EtlRun.cs:136); ``available_now=True`` drains the backlog and
-        stops (catch-up mode).
 
         Replay safety: the checkpointed file log replays a crashed batch
         with the SAME batch id and the same input files, so the write is
@@ -207,18 +224,13 @@ class StreamingEtl:
             with_pid = prepartition(batch_df.drop("_kpf_source"), policy).withColumn(
                 "_kpf_batch", F.lit(batch_id)
             )
-            # per-write option, not session conf: foreachBatch runs in a
-            # CLONED SparkSession whose conf snapshot predates any runtime
-            # spark.conf.set on the outer session
-            (
-                with_pid.repartition(policy.max_partition_count, F.col(PID_COL))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(PID_COL, "_kpf_batch")
-                .parquet(self.output_dir)
-            )
+            replay_safe_writer(
+                with_pid.repartition(policy.max_partition_count, F.col(PID_COL)),
+                PID_COL,
+                "_kpf_batch",
+            ).parquet(self.output_dir)
 
-        return self._start(process, trigger_seconds, available_now)
+        return self.start(process, trigger_seconds, available_now)
 
     def start_split(
         self,
@@ -228,16 +240,14 @@ class StreamingEtl:
         available_now: bool = False,
     ) -> StreamingQuery:
         """Continuous Split: each micro-batch re-runs the batch Split plan
-        over the newly arrived blobs (the checkpointed file log supplies
-        exactly-once listing ≡ the reference's one-ETL-per-queue-message
-        loop, ServiceBusServer.cs:26-39).
+        over the newly arrived blobs.
 
         The batch DataFrame is used only to discover the arrived files —
         the Split plan re-reads them directly, so shard assignment sees
-        whole blobs regardless of micro-batch slicing. Outputs land under
-        per-(source, shard) partition dirs with dynamic partition
-        overwrite, so a replayed blob rewrites exactly its own shards
-        (idempotent by construction, ≡ ingest-by tags).
+        whole blobs regardless of micro-batch slicing. ``run_split``
+        writes per-(source, shard) partition dirs through
+        ``replay_safe_writer``, so a replayed blob rewrites exactly its own
+        shards (idempotent by construction, ≡ ingest-by tags).
         """
         from kusto_pre_forge_spark.config import Compression, RunSettings
         from kusto_pre_forge_spark.plans.split import run_split
@@ -251,12 +261,9 @@ class StreamingEtl:
             paths = [r[0] for r in batch_df.select("_kpf_source").distinct().collect()]
             if not paths:
                 return
-            # run_split's writer carries partitionOverwriteMode=dynamic as a
-            # per-write option, so a replayed blob rewrites exactly its own
-            # (source, shard) directories
             run_split(self.spark, paths, settings, self.output_dir, max_bytes_per_shard)
 
-        return self._start(process, trigger_seconds, available_now)
+        return self.start(process, trigger_seconds, available_now)
 
     def start_idempotent_ingest(
         self,
@@ -279,7 +286,52 @@ class StreamingEtl:
             )
             ingest_idempotent(sharded, manifest, self.output_dir)
 
-        return self._start(process, trigger_seconds, available_now)
+        return self.start(process, trigger_seconds, available_now)
+
+    def _history(self, store_dir: str, batch_id: int, schema) -> DataFrame:
+        """A batch-partitioned store MINUS this batch's own partition, or an
+        empty frame of ``schema`` while the store does not exist yet.
+
+        Excluding the own partition (``_kpf_batch != batch_id``) is what
+        makes admission replay-safe: on replay after a crash between write
+        and checkpoint commit, the batch's own half-written rows are
+        invisible to the decision, which therefore reproduces the original
+        accept set bit-for-bit instead of rejecting every row as a
+        duplicate of itself."""
+        try:
+            return (
+                self.spark.read.parquet(store_dir)
+                .filter(F.col("_kpf_batch") != batch_id)
+                .drop("_kpf_batch")
+            )
+        except AnalysisException:  # first batch: store not created yet
+            return self.spark.createDataFrame([], schema)
+
+    def _admit(
+        self,
+        batch_df: DataFrame,
+        batch_id: int,
+        store_dir: str,
+        id_col: str,
+        gate: Callable[[DataFrame], DataFrame],
+    ) -> int:
+        """The admission step every corpus-store mode shares: dedupe the
+        batch on ``id_col`` (lineage dropped), apply the mode's
+        ``gate(batch) -> accepted``, and write the accepted rows to the
+        store's ``_kpf_batch=<batch_id>`` partition — dynamic overwrite, so
+        a replayed batch replaces exactly its own partition. Returns the
+        number of rows the batch's partition holds (0 for an empty
+        batch)."""
+        batch = batch_df.drop("_kpf_source").dropDuplicates([id_col])
+        if not batch.head(1):
+            return 0
+        accepted = gate(batch).withColumn("_kpf_batch", F.lit(batch_id))
+        replay_safe_writer(accepted, "_kpf_batch").parquet(store_dir)
+        return (
+            self.spark.read.parquet(store_dir)
+            .filter(F.col("_kpf_batch") == batch_id)
+            .count()
+        )
 
     def dedup_ingest_batch(
         self,
@@ -290,87 +342,29 @@ class StreamingEtl:
         id_col: str = "doc_id",
         **dedup_kwargs,
     ) -> int:
-        """One micro-batch of continuous near-dup-controlled ingestion:
-        dedup the arrived docs against the persisted corpus (and each
-        other), append only the accepted ones. Factored out of
-        :meth:`start_dedup_ingest` so a crash-replay (same ``batch_id``,
-        same input) can be exercised directly in tests. Returns the
-        number of accepted docs.
-
-        Replay safety — two pieces working together:
-
-        - the corpus store is partitioned by ``_kpf_batch`` and written
-          with dynamic partition overwrite, so a replayed batch rewrites
-          exactly its own partition;
-        - the corpus read EXCLUDES the current batch's partition
-          (``_kpf_batch != batch_id``): on replay after a crash between
-          write and checkpoint-commit, the batch's own half-written docs
-          are invisible to the dedup decision, which therefore reproduces
-          the original accept set bit-for-bit instead of rejecting every
-          doc as a duplicate of itself.
-        """
-        from pyspark.errors import AnalysisException
-
-        from kusto_pre_forge_spark.operators.dedup import (
-            incremental_dedup_accept,
-        )
-
-        batch = batch_df.drop("_kpf_source").dropDuplicates([id_col])
-        if not batch.head(1):
-            return 0
-        try:
-            corpus = (
-                self.spark.read.parquet(corpus_dir)
-                .filter(F.col("_kpf_batch") != batch_id)
-                .drop("_kpf_batch")
-            )
-        except AnalysisException:  # first batch: store not created yet
-            corpus = self.spark.createDataFrame([], batch.schema)
-        accepted = incremental_dedup_accept(
-            corpus, batch, text_col, id_col, **dedup_kwargs
-        )
-        accepted = accepted.withColumn("_kpf_batch", F.lit(batch_id))
-        (
-            accepted.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_kpf_batch")
-            .parquet(corpus_dir)
-        )
-        return (
-            self.spark.read.parquet(corpus_dir)
-            .filter(F.col("_kpf_batch") == batch_id)
-            .count()
-        )
-
-    def start_dedup_ingest(
-        self,
-        corpus_dir: str,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        trigger_seconds: int | None = 60,
-        available_now: bool = False,
-        **dedup_kwargs,
-    ) -> StreamingQuery:
-        """Continuous near-dup-controlled corpus ingestion — the
+        """One micro-batch of near-dup-controlled corpus ingestion — the
         production shape the incremental MinHash pieces were built for:
-        every micro-batch of landed documents is deduplicated against
-        everything already accepted (``minhash_lsh_pairs_incremental`` —
-        cost scales with the batch, the corpus never re-pairs itself) and
-        only novel docs are appended to the corpus store. First-arrival
-        wins: once a doc is in the corpus, later near-dups are dropped;
-        within a batch the min-id (or highest-priority) copy survives.
+        the arrived docs are deduplicated against everything already
+        accepted (``minhash_lsh_pairs_incremental`` — cost scales with the
+        batch, the corpus never re-pairs itself) and only novel docs are
+        appended to the corpus store. First arrival wins: once a doc is in
+        the corpus, later near-dups are dropped; within a batch the min-id
+        (or highest-priority) copy survives. Returns the number of
+        accepted docs.
 
-        Effectively-once across crashes: see :meth:`dedup_ingest_batch`
-        (batch-partitioned store + own-partition-excluding corpus read),
-        checkpoint-committed per micro-batch like every other mode here.
-        """
+        Replay safety: the store is batch-partitioned with dynamic
+        overwrite and the corpus read excludes the current batch's
+        partition (:meth:`_history`), so a crash replay (same
+        ``batch_id``, same input) reproduces the original accept set."""
+        from kusto_pre_forge_spark.operators.dedup import incremental_dedup_accept
 
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            self.dedup_ingest_batch(
-                batch_df, batch_id, corpus_dir, text_col, id_col, **dedup_kwargs
+        def gate(batch: DataFrame) -> DataFrame:
+            corpus = self._history(corpus_dir, batch_id, batch.schema)
+            return incremental_dedup_accept(
+                corpus, batch, text_col, id_col, **dedup_kwargs
             )
 
-        return self._start(process, trigger_seconds, available_now)
+        return self._admit(batch_df, batch_id, corpus_dir, id_col, gate)
 
     def exact_substr_ingest_batch(
         self,
@@ -382,96 +376,51 @@ class StreamingEtl:
         window_tokens: int = 8,
         max_dup_windows: int = 0,
     ) -> int:
-        """One micro-batch of SPAN-granularity admission — the
-        ExactSubstr twin of :meth:`dedup_ingest_batch` (the one dedup
-        family member that had no streaming mode). Arriving docs' k-token
-        window hashes probe the corpus WINDOW STORE
-        (``{corpus_dir}/wins`` — persisted 16-byte keys, so the corpus
-        text is never re-tokenized per trigger); a doc with more than
-        ``max_dup_windows`` foreign windows (in-store, or owned by a
-        smaller-id batch doc) is dropped. Accepted docs land in
-        ``{corpus_dir}/docs`` and their windows extend the store.
+        """One micro-batch of SPAN-granularity admission: admit a document
+        only when its k-token windows are (mostly) unseen — the
+        span-granularity sibling of :meth:`dedup_ingest_batch` (Lee et al.,
+        ACL 2022: repeated SUBSTRINGS drive memorization, so the admission
+        key is windows, not whole-document similarity). Arriving docs'
+        window hashes probe the corpus WINDOW STORE (``{corpus_dir}/wins``
+        — persisted 16-byte keys, so the corpus text is never re-tokenized
+        per trigger); a doc with more than ``max_dup_windows`` foreign
+        windows (in-store, or owned by a smaller-id batch doc) is dropped.
+        Accepted docs land in ``{corpus_dir}/docs`` and their windows
+        extend the store.
 
         Replay safety is the family contract: BOTH stores are
         batch-partitioned with dynamic overwrite, and both reads exclude
         the current batch's partition, so a crash replay reproduces the
         original accept set bit-for-bit."""
-        from pyspark.errors import AnalysisException
-
         from kusto_pre_forge_spark.operators.dedup import (
             incremental_substr_accept,
             window_hash_frame,
         )
 
-        batch = batch_df.drop("_kpf_source").dropDuplicates([id_col])
-        if not batch.head(1):
-            return 0
         docs_dir, wins_dir = f"{corpus_dir}/docs", f"{corpus_dir}/wins"
-        try:
-            corpus_wins = (
-                self.spark.read.parquet(wins_dir)
-                .filter(F.col("_kpf_batch") != batch_id)
-                .select("h")
+
+        def gate(batch: DataFrame) -> DataFrame:
+            corpus_wins = self._history(wins_dir, batch_id, "h string").select("h")
+            return incremental_substr_accept(
+                corpus_wins,
+                batch,
+                text_col,
+                id_col,
+                window_tokens=window_tokens,
+                max_dup_windows=max_dup_windows,
             )
-        except AnalysisException:  # first batch: store not created yet
-            corpus_wins = self.spark.createDataFrame([], "h string")
-        accepted = incremental_substr_accept(
-            corpus_wins,
-            batch,
-            text_col,
-            id_col,
-            window_tokens=window_tokens,
-            max_dup_windows=max_dup_windows,
-        ).withColumn("_kpf_batch", F.lit(batch_id))
-        (
-            accepted.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_kpf_batch")
-            .parquet(docs_dir)
-        )
+
+        n = self._admit(batch_df, batch_id, docs_dir, id_col, gate)
+        if not n:
+            return 0
         new_wins = window_hash_frame(
-            self.spark.read.parquet(docs_dir).filter(
-                F.col("_kpf_batch") == batch_id
-            ),
+            self.spark.read.parquet(docs_dir).filter(F.col("_kpf_batch") == batch_id),
             text_col,
             id_col,
             window_tokens,
         ).select("h").distinct().withColumn("_kpf_batch", F.lit(batch_id))
-        (
-            new_wins.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_kpf_batch")
-            .parquet(wins_dir)
-        )
-        return (
-            self.spark.read.parquet(docs_dir)
-            .filter(F.col("_kpf_batch") == batch_id)
-            .count()
-        )
-
-    def start_exact_substr_ingest(
-        self,
-        corpus_dir: str,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        trigger_seconds: int | None = 60,
-        available_now: bool = False,
-        **substr_kwargs,
-    ) -> StreamingQuery:
-        """Continuous ExactSubstr-controlled ingestion: admit a document
-        only when its k-token windows are (mostly) unseen — the
-        span-granularity sibling of :meth:`start_dedup_ingest` (Lee et
-        al., ACL 2022: repeated SUBSTRINGS drive memorization, so the
-        admission key is windows, not whole-document similarity).
-        Checkpoint-committed per micro-batch like every other mode."""
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            self.exact_substr_ingest_batch(
-                batch_df, batch_id, corpus_dir, text_col, id_col,
-                **substr_kwargs,
-            )
-
-        return self._start(process, trigger_seconds, available_now)
+        replay_safe_writer(new_wins, "_kpf_batch").parquet(wins_dir)
+        return n
 
     def semdedup_ingest_batch(
         self,
@@ -483,87 +432,43 @@ class StreamingEtl:
         **sem_kwargs,
     ) -> int:
         """One micro-batch of embedding-space admission — the SemDeDup
-        twin of :meth:`dedup_ingest_batch`, same replay-safety contract
-        (batch-partitioned store with dynamic overwrite; the corpus read
-        excludes the current batch's partition so a crash replay
-        reproduces the original accept set bit-for-bit). Pass FROZEN
-        ``centroids`` in ``sem_kwargs`` for production (the streaming
-        ANN index's frozen-artifact rule); the lowest-id fallback shifts
-        as the corpus grows."""
-        from pyspark.errors import AnalysisException
-
-        from kusto_pre_forge_spark.operators.dedup import (
-            incremental_semdedup_accept,
-        )
-
+        twin of :meth:`dedup_ingest_batch`: arrived vectors are admitted
+        through ``incremental_semdedup_accept`` against the accepted
+        corpus; first arrival wins, cells are frozen geometry, cost scales
+        with the batch's touched cells. Same replay-safety contract
+        (batch-partitioned store, own-partition-excluding corpus read).
+        Pass FROZEN ``centroids`` in ``sem_kwargs`` for production (the
+        streaming ANN index's frozen-artifact rule); the lowest-id
+        fallback shifts as the corpus grows."""
+        from kusto_pre_forge_spark.operators.dedup import incremental_semdedup_accept
         from kusto_pre_forge_spark.operators.similarity import cell_assign
 
-        batch = batch_df.drop("_kpf_source").dropDuplicates([id_col])
-        if not batch.head(1):
-            return 0
         # with FROZEN centroids the store persists each row's cell, so
         # admission never re-scores the corpus (batch-shaped per-trigger
         # cost); without them geometry shifts per batch → no stored cells
         centroids = sem_kwargs.get("centroids")
-        store_schema = (
-            batch.schema
-            if centroids is None
-            else batch.withColumn("cell", F.lit(0)).schema
-        )
-        try:
-            corpus = (
-                self.spark.read.parquet(corpus_dir)
-                .filter(F.col("_kpf_batch") != batch_id)
-                .drop("_kpf_batch")
+
+        def gate(batch: DataFrame) -> DataFrame:
+            store_schema = (
+                batch.schema
+                if centroids is None
+                else batch.withColumn("cell", F.lit(0)).schema
             )
-        except AnalysisException:  # first batch: store not created yet
-            corpus = self.spark.createDataFrame([], store_schema)
-        accepted = incremental_semdedup_accept(
-            corpus, batch, vec_col, id_col, **sem_kwargs
-        )
-        if centroids is not None:
-            accepted = cell_assign(
+            corpus = self._history(corpus_dir, batch_id, store_schema)
+            accepted = incremental_semdedup_accept(
+                corpus, batch, vec_col, id_col, **sem_kwargs
+            )
+            if centroids is None:
+                return accepted
+            return cell_assign(
                 accepted,
                 id_col=id_col,
                 vec_col=vec_col,
                 n_cells=sem_kwargs.get("n_cells", 16),
                 centroids=centroids,
             ).drop("cell_score")
-        accepted = accepted.withColumn("_kpf_batch", F.lit(batch_id))
-        (
-            accepted.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_kpf_batch")
-            .parquet(corpus_dir)
-        )
-        return (
-            self.spark.read.parquet(corpus_dir)
-            .filter(F.col("_kpf_batch") == batch_id)
-            .count()
-        )
 
-    def start_semdedup_ingest(
-        self,
-        corpus_dir: str,
-        vec_col: str = "embedding",
-        id_col: str = "vec_id",
-        trigger_seconds: int | None = 60,
-        available_now: bool = False,
-        **sem_kwargs,
-    ) -> StreamingQuery:
-        """Continuous embedding-near-dup-controlled ingestion: every
-        micro-batch of landed vectors is admitted through
-        ``incremental_semdedup_accept`` against the accepted corpus —
-        first arrival wins, cells are frozen geometry, cost scales with
-        the batch's touched cells. Effectively-once across crashes via
-        :meth:`semdedup_ingest_batch`."""
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            self.semdedup_ingest_batch(
-                batch_df, batch_id, corpus_dir, vec_col, id_col, **sem_kwargs
-            )
-
-        return self._start(process, trigger_seconds, available_now)
+        return self._admit(batch_df, batch_id, corpus_dir, id_col, gate)
 
     def dsir_ingest_batch(
         self,
@@ -582,73 +487,27 @@ class StreamingEtl:
         (``logratio`` = :func:`~kusto_pre_forge_spark.operators.corpus.
         dsir_logratio` output, trained offline — the frozen-artifact rule
         the ANN index and SemDeDup paths follow) and admit documents with
-        ``dsir_logw >= threshold``.
+        ``dsir_logw >= threshold`` — the train-on-target, filter-at-ingest
+        recipe (Xie et al. 2023) as a streaming admission valve.
 
         Unlike the dedup admissions, the decision is a PURE function of
         the document and the frozen table — no corpus read at any batch,
         so replay after a crash reproduces the accept set bit-for-bit by
         construction; the store write is batch-partitioned dynamic
-        overwrite like the other admission paths (a replayed batch
-        replaces exactly its own partition)."""
+        overwrite like the other admission paths."""
         from kusto_pre_forge_spark.operators.corpus import dsir_weights
 
-        batch = batch_df.drop("_kpf_source").dropDuplicates([id_col])
-        if not batch.head(1):
-            return 0
-        scored = dsir_weights(
-            batch,
-            logratio,
-            text_col=text_col,
-            id_col=id_col,
-            n_buckets=n_buckets,
-            salt=salt,
-        )
-        accepted = scored.filter(
-            F.col("dsir_logw") >= float(threshold)
-        ).withColumn("_kpf_batch", F.lit(batch_id))
-        (
-            accepted.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_kpf_batch")
-            .parquet(corpus_dir)
-        )
-        return (
-            self.spark.read.parquet(corpus_dir)
-            .filter(F.col("_kpf_batch") == batch_id)
-            .count()
-        )
-
-    def start_dsir_ingest(
-        self,
-        corpus_dir: str,
-        logratio: DataFrame,
-        threshold: float,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        trigger_seconds: int | None = 60,
-        available_now: bool = False,
-        **dsir_kwargs,
-    ) -> StreamingQuery:
-        """Continuous importance-filtered ingestion: every micro-batch of
-        landed documents is scored against the frozen DSIR log-ratio and
-        only target-like documents enter the corpus store — the
-        train-on-target, filter-at-ingest recipe (Xie et al. 2023) as a
-        streaming admission valve. Effectively-once across crashes via
-        :meth:`dsir_ingest_batch`."""
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            self.dsir_ingest_batch(
-                batch_df,
-                batch_id,
-                corpus_dir,
+        def gate(batch: DataFrame) -> DataFrame:
+            return dsir_weights(
+                batch,
                 logratio,
-                threshold,
-                text_col,
-                id_col,
-                **dsir_kwargs,
-            )
+                text_col=text_col,
+                id_col=id_col,
+                n_buckets=n_buckets,
+                salt=salt,
+            ).filter(F.col("dsir_logw") >= float(threshold))
 
-        return self._start(process, trigger_seconds, available_now)
+        return self._admit(batch_df, batch_id, corpus_dir, id_col, gate)
 
     def blocklist_ingest_batch(
         self,
@@ -662,33 +521,20 @@ class StreamingEtl:
     ) -> int:
         """One micro-batch of URL-blocklist-gated ingestion: landed
         documents whose URL host matches a blocked domain at ANY label
-        depth are refused at the door (the crawl-hygiene gate C4/Gopher
-        apply before any text filter — cheapest first). Like the DSIR
-        admission, the decision is a PURE function of the document and
-        the FROZEN blocklist — no corpus read per batch, so crash replay
-        reproduces the accept set by construction; batch-partitioned
-        dynamic-overwrite store write like every admission path."""
-        from kusto_pre_forge_spark.operators.textprep import (
-            domain_blocklist_filter,
-        )
+        depth (suffix at a label boundary) are refused at the door (the
+        crawl-hygiene gate C4/Gopher apply before any text filter —
+        cheapest first). Like the DSIR admission, the decision is a PURE
+        function of the document and the FROZEN blocklist — no corpus read
+        per batch, so crash replay reproduces the accept set by
+        construction."""
+        from kusto_pre_forge_spark.operators.textprep import domain_blocklist_filter
 
-        batch = batch_df.drop("_kpf_source").dropDuplicates([id_col])
-        if not batch.head(1):
-            return 0
-        accepted = domain_blocklist_filter(
-            batch, url_col, blocklist, domain_col=domain_col
-        ).withColumn("_kpf_batch", F.lit(batch_id))
-        (
-            accepted.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_kpf_batch")
-            .parquet(corpus_dir)
-        )
-        return (
-            self.spark.read.parquet(corpus_dir)
-            .filter(F.col("_kpf_batch") == batch_id)
-            .count()
-        )
+        def gate(batch: DataFrame) -> DataFrame:
+            return domain_blocklist_filter(
+                batch, url_col, blocklist, domain_col=domain_col
+            )
+
+        return self._admit(batch_df, batch_id, corpus_dir, id_col, gate)
 
     def robots_ingest_batch(
         self,
@@ -707,50 +553,13 @@ class StreamingEtl:
         refused at the door. Like the blocklist gate, the decision is a
         pure function of the document and the frozen rules — no corpus
         read per batch, crash replay reproduces the accept set by
-        construction; batch-partitioned dynamic-overwrite store write
-        like every admission path."""
+        construction."""
         from kusto_pre_forge_spark.operators.robots import robots_gate
 
-        batch = batch_df.drop("_kpf_source").dropDuplicates([id_col])
-        if not batch.head(1):
-            return 0
-        accepted = robots_gate(
-            batch, rules, url_col=url_col, agent=agent
-        ).withColumn("_kpf_batch", F.lit(batch_id))
-        (
-            accepted.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_kpf_batch")
-            .parquet(corpus_dir)
-        )
-        return (
-            self.spark.read.parquet(corpus_dir)
-            .filter(F.col("_kpf_batch") == batch_id)
-            .count()
-        )
+        def gate(batch: DataFrame) -> DataFrame:
+            return robots_gate(batch, rules, url_col=url_col, agent=agent)
 
-    def start_robots_ingest(
-        self,
-        corpus_dir: str,
-        rules: DataFrame,
-        url_col: str = "url",
-        id_col: str = "doc_id",
-        agent: str = "*",
-        trigger_seconds: int | None = 60,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        """Continuous robots.txt admission: every micro-batch of landed
-        documents passes the RFC 9309 gate before entering the corpus
-        store. Effectively-once across crashes via
-        :meth:`robots_ingest_batch`."""
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            self.robots_ingest_batch(
-                batch_df, batch_id, corpus_dir, rules, url_col, id_col,
-                agent,
-            )
-
-        return self._start(process, trigger_seconds, available_now)
+        return self._admit(batch_df, batch_id, corpus_dir, id_col, gate)
 
     def classifier_ingest_batch(
         self,
@@ -770,82 +579,18 @@ class StreamingEtl:
         forever after) and only p ≥ threshold enters the corpus store.
         The score is a pure codegen projection of the document under
         frozen literals — no corpus read per batch, no model server —
-        so crash replay reproduces the accept set by construction;
-        batch-partitioned dynamic-overwrite store write like every
-        admission path."""
-        from kusto_pre_forge_spark.operators.textstats import (
-            score_hashed_text_lr,
-        )
+        so crash replay reproduces the accept set by construction."""
+        from kusto_pre_forge_spark.operators.textstats import score_hashed_text_lr
 
-        batch = batch_df.drop("_kpf_source").dropDuplicates([id_col])
-        if not batch.head(1):
-            return 0
-        scores = score_hashed_text_lr(
-            batch, weights, bias, text_col=text_col, id_col=id_col
-        ).select(id_col, "p_quality")
-        accepted = (
-            batch.join(scores, id_col)
-            .filter(F.col("p_quality") >= float(threshold))
-            .withColumn("_kpf_batch", F.lit(batch_id))
-        )
-        (
-            accepted.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_kpf_batch")
-            .parquet(corpus_dir)
-        )
-        return (
-            self.spark.read.parquet(corpus_dir)
-            .filter(F.col("_kpf_batch") == batch_id)
-            .count()
-        )
-
-    def start_classifier_ingest(
-        self,
-        corpus_dir: str,
-        weights: list,
-        bias: float,
-        threshold: float = 0.5,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        trigger_seconds: int | None = 60,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        """Continuous quality-classifier admission: every micro-batch of
-        landed documents scores under the frozen hashed n-gram model
-        before entering the corpus store. Effectively-once across
-        crashes via :meth:`classifier_ingest_batch`."""
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            self.classifier_ingest_batch(
-                batch_df, batch_id, corpus_dir, weights, bias,
-                threshold, text_col, id_col,
+        def gate(batch: DataFrame) -> DataFrame:
+            scores = score_hashed_text_lr(
+                batch, weights, bias, text_col=text_col, id_col=id_col
+            ).select(id_col, "p_quality")
+            return batch.join(scores, id_col).filter(
+                F.col("p_quality") >= float(threshold)
             )
 
-        return self._start(process, trigger_seconds, available_now)
-
-    def start_blocklist_ingest(
-        self,
-        corpus_dir: str,
-        blocklist: DataFrame,
-        url_col: str = "url",
-        id_col: str = "doc_id",
-        trigger_seconds: int | None = 60,
-        available_now: bool = False,
-        **kwargs,
-    ) -> StreamingQuery:
-        """Continuous URL-blocklist admission: every micro-batch of
-        landed documents passes the suffix-at-label-boundary domain gate
-        before entering the corpus store. Effectively-once across
-        crashes via :meth:`blocklist_ingest_batch`."""
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            self.blocklist_ingest_batch(
-                batch_df, batch_id, corpus_dir, blocklist, url_col,
-                id_col, **kwargs,
-            )
-
-        return self._start(process, trigger_seconds, available_now)
+        return self._admit(batch_df, batch_id, corpus_dir, id_col, gate)
 
     def webdataset_ingest_batch(
         self,
@@ -856,24 +601,20 @@ class StreamingEtl:
         id_col: str = "doc_id",
         max_members_per_shard: int = 512,
     ) -> int:
-        """One micro-batch of continuous WebDataset shard production:
-        each landed SOURCE FILE's documents write as tar shards under
-        ``out_dir/<md5(file)[:16]>/`` — a pure function of that file
-        alone, the :meth:`corpus_stats_batch` replay posture (batch ids
-        renumber when a checkpoint is lost; file keys never do), and
-        the sink's zeroed-metadata + atomic-rename write makes ANY
-        replay — same checkpoint or rebuilt, same packing or repacked —
-        overwrite each shard byte-identically. Consumers glob
-        ``out_dir/*/shard-*.tar`` (the archive front door reads them
-        back, member-streamed). Returns members written."""
+        """One micro-batch of continuous WebDataset shard production — the
+        streaming twin of ``sinks.webdataset.write_webdataset``: each
+        landed SOURCE FILE's documents write as tar shards under
+        ``out_dir/<_kpf_file>/`` (:func:`_by_file` keying, a pure function
+        of that file alone), and the sink's zeroed-metadata +
+        atomic-rename write makes ANY replay — same checkpoint or rebuilt,
+        same packing or repacked — overwrite each shard byte-identically.
+        Consumers glob ``out_dir/*/shard-*.tar`` (the archive front door
+        reads them back, member-streamed). Returns members written."""
         import os as _os
 
         from kusto_pre_forge_spark.sinks.webdataset import write_webdataset
 
-        fkey = F.substring(F.md5(F.col("_kpf_source")), 1, 16)
-        batch = batch_df.withColumn("_kpf_file", fkey).dropDuplicates(
-            [id_col, "_kpf_file"]
-        )
+        batch = _by_file(batch_df, id_col)
         files = [r["_kpf_file"] for r in batch.select("_kpf_file").distinct().collect()]
         total = 0
         for fk in sorted(files):
@@ -890,33 +631,6 @@ class StreamingEtl:
             total += int(man["n"] or 0)
         return total
 
-    def start_webdataset_ingest(
-        self,
-        out_dir: str,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        max_members_per_shard: int = 512,
-        trigger_seconds: int | None = 60,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        """Continuous training-shard production: landed documents roll
-        into WebDataset tar shards as they arrive — the streaming twin
-        of ``sinks.webdataset.write_webdataset``, replay-exact via
-        per-source-file shard directories (see
-        :meth:`webdataset_ingest_batch`)."""
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            self.webdataset_ingest_batch(
-                batch_df,
-                batch_id,
-                out_dir,
-                text_col,
-                id_col,
-                max_members_per_shard,
-            )
-
-        return self._start(process, trigger_seconds, available_now)
-
     def corpus_stats_batch(
         self,
         batch_df: DataFrame,
@@ -925,25 +639,16 @@ class StreamingEtl:
         text_col: str = "text",
         id_col: str = "doc_id",
     ) -> int:
-        """One micro-batch of incremental corpus-statistics maintenance:
-        the batch's per-word (occurrences, document-frequency) DELTAS
-        land in a store partitioned by SOURCE FILE (md5 of the landing
-        blob path) — the additive half of a continuously maintained
-        vocabulary/IDF table (consumers sum partitions via
-        :meth:`read_corpus_stats`). File keys are stable across ANY
-        replay — same checkpoint (crash) or a rebuilt one (lost state,
-        different file→batch packing) — so dynamic partition overwrite
-        rewrites each file's delta identically and counts can never
-        double; batch ids (which DO renumber on checkpoint loss) never
-        key anything. For the same reason the id dedup is PER FILE, not
-        per batch: a file's delta must be a pure function of that file
-        alone, or a repacked replay (doc in two files, different
-        file→batch packing) would rewrite different partition content
-        and double-count. Returns the number of delta rows written."""
-        fkey = F.substring(F.md5(F.col("_kpf_source")), 1, 16)
-        batch = batch_df.withColumn("_kpf_file", fkey).dropDuplicates(
-            [id_col, "_kpf_file"]
-        )
+        """One micro-batch of incremental corpus-statistics maintenance —
+        the streaming counterpart of the batch tf-idf/BM25 statistics
+        stages: the batch's per-word (occurrences, document-frequency)
+        DELTAS land in a store partitioned by SOURCE FILE
+        (:func:`_by_file`), the additive half of a continuously maintained
+        vocabulary/IDF table; the merged table is always one sum-by-word
+        away (:meth:`read_corpus_stats`). Dynamic partition overwrite
+        rewrites each file's delta identically on any replay, so counts
+        can never double. Returns the number of delta rows written."""
+        batch = _by_file(batch_df, id_col)
         if not batch.head(1):
             return 0
         toks = F.filter(
@@ -958,101 +663,38 @@ class StreamingEtl:
             F.count(F.lit(1)).alias("n_occurrences"),
             F.count_distinct("_id").alias("n_docs"),
         )
-        delta.persist()
-        try:
-            (
-                delta.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_kpf_file")
-                .parquet(stats_dir)
-            )
-            return delta.count()
-        finally:
-            delta.unpersist()
-
-    def start_corpus_stats(
-        self,
-        stats_dir: str,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        trigger_seconds: int | None = 60,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        """Continuous vocabulary/IDF maintenance over the landing stream:
-        each micro-batch appends its additive per-word deltas (see
-        :meth:`corpus_stats_batch`); the merged table is always one
-        sum-by-word away (:meth:`read_corpus_stats`) — the streaming
-        counterpart of the batch tf-idf/BM25 statistics stages."""
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            self.corpus_stats_batch(batch_df, batch_id, stats_dir, text_col, id_col)
-
-        return self._start(process, trigger_seconds, available_now)
+        return _write_by_file(delta, stats_dir)
 
     def ann_index_batch(
         self,
         batch_df: DataFrame,
+        batch_id: int,
         index_dir: str,
         centroids: list,
         codebooks: list,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> int:
-        """One micro-batch of incremental IVF-PQ index maintenance: the
-        arrived vectors encode to (id, cell, m codes) rows under frozen
-        centroids/codebooks (training artifacts — retraining is an
-        offline rebuild, as in every production ANN service) and land in
-        a SOURCE-FILE-keyed partition (md5 path — the same any-replay-
-        safe keying as :meth:`corpus_stats_batch`). Queries read the
-        union of partitions via :meth:`read_ann_index` +
-        ``pq_query_index``. Returns rows written."""
+        """One micro-batch of incremental IVF-PQ index maintenance — the
+        serving-side counterpart of the batch ANN tier: the arrived vectors
+        encode to (id, cell, m codes) rows under frozen centroids/codebooks
+        (training artifacts — retraining is an offline rebuild, as in
+        every production ANN service) and land in a SOURCE-FILE-keyed
+        partition (:func:`_by_file`), so vectors are searchable one trigger
+        after arrival, the stored index is ~32× smaller than the raw
+        vectors, and replays (crash or lost checkpoint) rewrite identical
+        partitions. Queries read the union of partitions via
+        :meth:`read_ann_index` + ``pq_query_index``. Returns rows
+        written."""
         from kusto_pre_forge_spark.operators.similarity import pq_build_index
 
-        # per-FILE id dedup: each file's partition must be a pure
-        # function of that file (see corpus_stats_batch's replay note)
-        fkey = F.substring(F.md5(F.col("_kpf_source")), 1, 16)
-        batch = batch_df.withColumn("_kpf_file", fkey).dropDuplicates(
-            [id_col, "_kpf_file"]
-        )
+        batch = _by_file(batch_df, id_col)
         if not batch.head(1):
             return 0
         idx = pq_build_index(
             batch, centroids, codebooks, id_col=id_col, vec_col=vec_col
         ).join(batch.select(id_col, "_kpf_file"), id_col)
-        idx.persist()
-        try:
-            (
-                idx.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_kpf_file")
-                .parquet(index_dir)
-            )
-            return idx.count()
-        finally:
-            idx.unpersist()
-
-    def start_ann_index(
-        self,
-        index_dir: str,
-        centroids: list,
-        codebooks: list,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        trigger_seconds: int | None = 60,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        """Continuous IVF-PQ index maintenance over the landing stream —
-        the serving-side counterpart of the batch ANN tier: vectors are
-        searchable one trigger after arrival, the stored index is ~32×
-        smaller than the raw vectors, and replays (crash or lost
-        checkpoint) rewrite identical file-keyed partitions."""
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            self.ann_index_batch(
-                batch_df, index_dir, centroids, codebooks, id_col, vec_col
-            )
-
-        return self._start(process, trigger_seconds, available_now)
+        return _write_by_file(idx, index_dir)
 
     @staticmethod
     def read_ann_index(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -1132,20 +774,3 @@ class StreamingEtl:
                 F.sum("n_docs").cast("long").alias("n_docs"),
             )
         )
-
-    def _start(
-        self,
-        process: Callable[[DataFrame, int], None],
-        trigger_seconds: int | None,
-        available_now: bool,
-    ) -> StreamingQuery:
-        writer = (
-            self._source()
-            .writeStream.foreachBatch(process)
-            .option("checkpointLocation", self.checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif trigger_seconds:
-            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        return writer.start()

@@ -1,4 +1,6 @@
+import csv
 import os
+import time
 
 import pytest
 
@@ -42,3 +44,16 @@ def sf_smoke():
 @pytest.fixture(scope="session")
 def sf_oracle():
     return SF_ORACLE
+
+
+def _land_waves(land, waves):
+    """Write each wave of rows as a header-less CSV blob
+    ``land/wave<i>.csv``. The streaming file source admits files
+    oldest-first under ``maxFilesPerTrigger``; spaced mtimes pin the
+    arrival order."""
+    now = time.time()
+    for i, wave in enumerate(waves):
+        p = land / f"wave{i}.csv"
+        with open(p, "w", newline="") as f:
+            csv.writer(f).writerows(wave)
+        os.utime(p, (now + i * 10, now + i * 10))

@@ -5,9 +5,10 @@ completion, idempotent sink ≡ ingest-by tags. Files are dropped into the
 landing dir in waves to simulate Event Grid arrivals (FIXTURES.md F5).
 """
 
-import time
+from functools import partial
 
 import pytest
+from conftest import _land_waves
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -192,6 +193,37 @@ def test_streaming_prepartition_replay_no_dup(spark, tmp_path, landing):
     assert n2 == n1, "replayed batch must not duplicate rows"
 
 
+def test_streaming_csv_quoted_newline_matches_read_landing(spark, tmp_path):
+    """A quoted field holding a newline is ONE record on the streaming
+    path, exactly as the batch reader parses it (one RFC-4180 dialect for
+    both readers)."""
+    from kusto_pre_forge_spark.config import DataFormat, RunSettings
+    from kusto_pre_forge_spark.sources.blob import read_landing
+
+    land = tmp_path / "quoted_landing"
+    land.mkdir()
+    (land / "blob.csv").write_text('k,v\n1,"line one\nline two"\n2,plain\n')
+    schema = T.StructType(
+        [T.StructField("k", T.StringType()), T.StructField("v", T.StringType())]
+    )
+    batch = read_landing(
+        spark, str(land / "blob.csv"), RunSettings(fmt=DataFormat.CSV), schema=schema
+    )
+    want = sorted(tuple(r) for r in batch.select("k", "v").collect())
+    assert want == [("1", "line one\nline two"), ("2", "plain")]
+
+    etl = StreamingEtl(
+        spark,
+        landing_dir=str(land),
+        checkpoint_dir=str(tmp_path / "ckpt_quoted"),
+        output_dir=str(tmp_path / "out_quoted"),
+        schema=schema,
+    )
+    _drain(etl.start_prepartition(PartitionPolicy("k", 4, 42), available_now=True))
+    out = spark.read.parquet(str(tmp_path / "out_quoted"))
+    assert sorted(tuple(r) for r in out.select("k", "v").collect()) == want
+
+
 DOC_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -229,19 +261,11 @@ def test_streaming_dedup_ingest_across_batches(spark, tmp_path):
         csv_headers=False,
         max_files_per_trigger=1,  # one wave per micro-batch
     )
-    import csv as _csv
-    import os as _os
-
-    now = time.time()
-    for i, wave in enumerate(waves):
-        p = land / f"wave{i}.csv"
-        with open(p, "w", newline="") as f:
-            _csv.writer(f).writerows(wave)
-        # the file source admits files oldest-first under
-        # maxFilesPerTrigger; spaced mtimes pin the arrival order
-        _os.utime(p, (now + i * 10, now + i * 10))
-    q = etl.start_dedup_ingest(
-        corpus_dir, trigger_seconds=None, available_now=True, shingle_n=4
+    _land_waves(land, waves)
+    q = etl.start(
+        partial(etl.dedup_ingest_batch, corpus_dir=corpus_dir, shingle_n=4),
+        trigger_seconds=None,
+        available_now=True,
     )
     _drain(q)
     got = {
@@ -386,13 +410,15 @@ def test_streaming_corpus_stats_accumulate_and_replay(spark, sf_smoke, tmp_path)
         )
 
     stats_dir = str(tmp_path / "stats")
-    q = make_etl("ck1").start_corpus_stats(stats_dir, available_now=True)
+    etl = make_etl("ck1")
+    q = etl.start(partial(etl.corpus_stats_batch, stats_dir=stats_dir), available_now=True)
     _drain(q)
     n1 = StreamingEtl.read_corpus_stats(spark, stats_dir).count()
     assert n1 > 0
 
     w2.coalesce(1).write.json(str(land / "wave1"))
-    q = make_etl("ck1").start_corpus_stats(stats_dir, available_now=True)
+    etl = make_etl("ck1")
+    q = etl.start(partial(etl.corpus_stats_batch, stats_dir=stats_dir), available_now=True)
     _drain(q)
 
     merged = StreamingEtl.read_corpus_stats(spark, stats_dir)
@@ -410,7 +436,8 @@ def test_streaming_corpus_stats_accumulate_and_replay(spark, sf_smoke, tmp_path)
 
     # lost checkpoint: every file replays with the same batch semantics —
     # partition overwrite keeps the merged counts identical
-    q = make_etl("ck2").start_corpus_stats(stats_dir, available_now=True)
+    etl = make_etl("ck2")
+    q = etl.start(partial(etl.corpus_stats_batch, stats_dir=stats_dir), available_now=True)
     _drain(q)
     again = StreamingEtl.read_corpus_stats(spark, stats_dir)
     assert again.exceptAll(expect).count() == 0
@@ -500,10 +527,22 @@ def test_streaming_ann_index_maintenance(spark, sf_smoke, tmp_path):
         )
 
     index_dir = str(tmp_path / "ann_index")
-    q = make_etl("cka1").start_ann_index(index_dir, km, cb, available_now=True)
+
+    def index_rows():
+        return sorted(
+            (r.vec_id, r._cell, tuple(r.codes))
+            for r in StreamingEtl.read_ann_index(spark, index_dir).collect()
+        )
+
+    etl = make_etl("cka1")
+    q = etl.start(
+        partial(etl.ann_index_batch, index_dir=index_dir, centroids=km, codebooks=cb),
+        available_now=True,
+    )
     _drain(q)
     idx = StreamingEtl.read_ann_index(spark, index_dir)
     assert idx.count() == emb.count()
+    rows_before = index_rows()
 
     queries = emb.filter(F.col("vec_id") < 5)
     from_stream = similarity.pq_query_index(
@@ -517,10 +556,15 @@ def test_streaming_ann_index_maintenance(spark, sf_smoke, tmp_path):
     assert from_batch.exceptAll(from_stream).count() == 0
 
     # lost checkpoint: full replay rewrites the same file-keyed partitions
-    q = make_etl("cka2").start_ann_index(index_dir, km, cb, available_now=True)
+    etl = make_etl("cka2")
+    q = etl.start(
+        partial(etl.ann_index_batch, index_dir=index_dir, centroids=km, codebooks=cb),
+        available_now=True,
+    )
     _drain(q)
     again = StreamingEtl.read_ann_index(spark, index_dir)
     assert again.count() == emb.count()
+    assert index_rows() == rows_before, "replay must rewrite identical rows"
 
 
 def test_corpus_stats_file_partitions_are_pure(spark, tmp_path):
@@ -601,13 +645,16 @@ def test_streaming_semdedup_ingest_across_batches(spark, tmp_path):
             for vid, vec in wave:
                 f.write(_json.dumps({"vec_id": vid, "embedding": vec}) + "\n")
         _os.utime(p, (now + i * 10, now + i * 10))
-    q = etl.start_semdedup_ingest(
-        corpus_dir,
+    q = etl.start(
+        partial(
+            etl.semdedup_ingest_batch,
+            corpus_dir=corpus_dir,
+            centroids=cents,
+            n_cells=4,
+            threshold=0.95,
+        ),
         trigger_seconds=None,
         available_now=True,
-        centroids=cents,
-        n_cells=4,
-        threshold=0.95,
     )
     _drain(q)
     got = {r.vec_id for r in spark.read.parquet(corpus_dir).collect()}
@@ -676,22 +723,17 @@ def test_streaming_dsir_ingest_filters_by_importance(spark, tmp_path):
         csv_headers=False,
         max_files_per_trigger=1,
     )
-    import csv as _csv
-    import os as _os
-
-    now = time.time()
-    for i, wave in enumerate(waves):
-        p = land / f"wave{i}.csv"
-        with open(p, "w", newline="") as f:
-            _csv.writer(f).writerows(wave)
-        _os.utime(p, (now + i * 10, now + i * 10))
-    q = etl.start_dsir_ingest(
-        corpus_dir,
-        lam_df,
-        thr,
+    _land_waves(land, waves)
+    q = etl.start(
+        partial(
+            etl.dsir_ingest_batch,
+            corpus_dir=corpus_dir,
+            logratio=lam_df,
+            threshold=thr,
+            n_buckets=512,
+        ),
         trigger_seconds=None,
         available_now=True,
-        n_buckets=512,
     )
     _drain(q)
     stored = spark.read.parquet(corpus_dir)
@@ -715,9 +757,6 @@ def test_streaming_blocklist_ingest(spark, tmp_path):
     """URL-blocklist admission at the door: docs whose URL host matches
     a frozen blocked domain at any subdomain depth are refused; batch
     replay is a bit-exact no-op (pure per-doc decision)."""
-    import csv as _csv
-    import os as _os
-
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -743,15 +782,12 @@ def test_streaming_blocklist_ingest(spark, tmp_path):
         csv_headers=False,
         max_files_per_trigger=1,
     )
-    now = time.time()
-    for i, wave in enumerate(waves):
-        p = land / f"wave{i}.csv"
-        with open(p, "w", newline="") as f:
-            _csv.writer(f).writerows(wave)
-        _os.utime(p, (now + i * 10, now + i * 10))
+    _land_waves(land, waves)
     bl = spark.createDataFrame([("spam.example.com",)], "domain string")
-    q = etl.start_blocklist_ingest(
-        corpus_dir, bl, trigger_seconds=None, available_now=True
+    q = etl.start(
+        partial(etl.blocklist_ingest_batch, corpus_dir=corpus_dir, blocklist=bl),
+        trigger_seconds=None,
+        available_now=True,
     )
     _drain(q)
     stored = spark.read.parquet(corpus_dir)
@@ -773,9 +809,6 @@ def test_streaming_exact_substr_ingest_across_batches(spark, tmp_path):
     8-token window of an accepted doc is dropped (first arrival wins),
     batch replay is a bit-exact no-op, and a single wave reproduces the
     batch-mode rule (corpus-empty + min-id ownership)."""
-    import csv as _csv
-    import os as _os
-
     base = "alpha bravo charlie delta echo foxtrot golf hotel"  # 8 tokens
     texts = {
         1: base + " india juliet kilo lima mike november oscar papa",
@@ -803,14 +836,11 @@ def test_streaming_exact_substr_ingest_across_batches(spark, tmp_path):
         csv_headers=False,
         max_files_per_trigger=1,
     )
-    now = time.time()
-    for i, wave in enumerate(waves):
-        p = land / f"wave{i}.csv"
-        with open(p, "w", newline="") as f:
-            _csv.writer(f).writerows(wave)
-        _os.utime(p, (now + i * 10, now + i * 10))
-    q = etl.start_exact_substr_ingest(
-        corpus_dir, trigger_seconds=None, available_now=True
+    _land_waves(land, waves)
+    q = etl.start(
+        partial(etl.exact_substr_ingest_batch, corpus_dir=corpus_dir),
+        trigger_seconds=None,
+        available_now=True,
     )
     _drain(q)
     docs = spark.read.parquet(f"{corpus_dir}/docs")
@@ -877,9 +907,6 @@ def test_streaming_classifier_ingest(spark, tmp_path):
     scoring >= threshold enter the corpus store, others are refused;
     batch replay is a bit-exact no-op (pure per-doc decision under a
     FROZEN model)."""
-    import csv as _csv
-    import os as _os
-
     from kusto_pre_forge_spark.operators import textstats as TS
 
     good = "solid fine prose goodsignal keeps flowing with care"
@@ -919,17 +946,15 @@ def test_streaming_classifier_ingest(spark, tmp_path):
         csv_headers=False,
         max_files_per_trigger=1,
     )
-    now = time.time()
-    for i, wave in enumerate(waves):
-        p = land / f"wave{i}.csv"
-        with open(p, "w", newline="") as f:
-            _csv.writer(f).writerows(wave)
-        _os.utime(p, (now + i * 10, now + i * 10))
-    q = etl.start_classifier_ingest(
-        corpus_dir,
-        model["weights"],
-        model["bias"],
-        thr,
+    _land_waves(land, waves)
+    q = etl.start(
+        partial(
+            etl.classifier_ingest_batch,
+            corpus_dir=corpus_dir,
+            weights=model["weights"],
+            bias=model["bias"],
+            threshold=thr,
+        ),
         trigger_seconds=None,
         available_now=True,
     )
@@ -956,9 +981,6 @@ def test_streaming_robots_ingest(spark, tmp_path):
     frozen rule table disallows for the crawler's agent are refused;
     longest-match precedence holds inside the stream; batch replay is a
     bit-exact no-op (pure per-doc decision against frozen rules)."""
-    import csv as _csv
-    import os as _os
-
     from pyspark.sql import types as T
 
     from kusto_pre_forge_spark.operators import robots as R
@@ -988,12 +1010,7 @@ def test_streaming_robots_ingest(spark, tmp_path):
         csv_headers=False,
         max_files_per_trigger=1,
     )
-    now = time.time()
-    for i, wave in enumerate(waves):
-        p = land / f"wave{i}.csv"
-        with open(p, "w", newline="") as f:
-            _csv.writer(f).writerows(wave)
-        _os.utime(p, (now + i * 10, now + i * 10))
+    _land_waves(land, waves)
     rules = R.robots_rules(
         spark.createDataFrame(
             [("closed.example",
@@ -1001,9 +1018,10 @@ def test_streaming_robots_ingest(spark, tmp_path):
             "domain string, robots_txt string",
         )
     )
-    q = etl.start_robots_ingest(
-        corpus_dir, rules, agent="kpfbot",
-        trigger_seconds=None, available_now=True,
+    q = etl.start(
+        partial(etl.robots_ingest_batch, corpus_dir=corpus_dir, rules=rules, agent="kpfbot"),
+        trigger_seconds=None,
+        available_now=True,
     )
     _drain(q)
     stored = spark.read.parquet(corpus_dir)

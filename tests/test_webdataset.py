@@ -4,7 +4,9 @@ through the archive front door."""
 
 import glob
 import tarfile
+from functools import partial
 
+from conftest import _land_waves
 from pyspark.sql import functions as F
 
 from kusto_pre_forge_spark.sinks.webdataset import write_webdataset
@@ -74,10 +76,6 @@ def test_streaming_webdataset_ingest(spark, tmp_path):
     per-source-file shard dirs; the full member set reads back through
     the archive front door; replaying a wave overwrites byte-identical
     shards (never duplicates)."""
-    import csv as _csv
-    import os as _os
-    import time as _time
-
     from pyspark.sql import types as T
 
     from kusto_pre_forge_spark.streaming.ingest import StreamingEtl
@@ -105,14 +103,11 @@ def test_streaming_webdataset_ingest(spark, tmp_path):
         csv_headers=False,
         max_files_per_trigger=1,
     )
-    now = _time.time()
-    for i, wave in enumerate(waves):
-        p = land / f"wave{i}.csv"
-        with open(p, "w", newline="") as f:
-            _csv.writer(f).writerows(wave)
-        _os.utime(p, (now + i * 10, now + i * 10))
-    q = etl.start_webdataset_ingest(
-        out, trigger_seconds=None, available_now=True
+    _land_waves(land, waves)
+    q = etl.start(
+        partial(etl.webdataset_ingest_batch, out_dir=out),
+        trigger_seconds=None,
+        available_now=True,
     )
     q.awaitTermination(300)
     shards = sorted(glob.glob(out + "/*/shard-*.tar"))
