@@ -3595,11 +3595,11 @@ def _q_text_bpe_byte(spark, sf):
 def _q_text_bpe_encode(spark, sf):
     """Documents encoded to the INTEGER token ids a trainer consumes
     (byte-level vocab: 0..255 raw bytes + 256+rank per merge — no UNK
-    possible by construction). Order preserved via posexplode +
-    array_sort reassembly; the oracle replays training, maps symbols
-    through the ordered-CASE vocab (first-rank-wins on merge-string
-    collisions, early-stopped merges NULLed), and flattens per doc in
-    pre-token order."""
+    possible by construction). One Arrow map encodes each document's
+    pre-tokens in order (bpe_encode_arrays), no join; the oracle
+    replays training, maps symbols through the ordered-CASE vocab
+    (first-rank-wins on merge-string collisions, early-stopped merges
+    NULLed), and flattens per doc in pre-token order."""
     from kusto_pre_forge_spark.operators import textprep
 
     from kusto_pre_forge_spark.operators.corpus import _widen_for_fanout

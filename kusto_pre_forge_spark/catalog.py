@@ -46,10 +46,6 @@ class TableDef:
             raise KeyError(f"column {name!r} not in table {self.name!r}") from None
 
 
-#: The reference's landing table: a single Text:string column
-#: (templates/script.kql:2, IntegrationTests/TestCaseConfiguration.cs:61-62).
-LANDING_SCHEMA = T.StructType([T.StructField("Text", T.StringType())])
-
 #: The reference's integration-test schema, from the KQL generator
 #: GenerateLogData (deployment/infra/schema.kql:1-23); FIXTURES.md F1.
 LOG_EVENTS_SCHEMA = T.StructType(
@@ -83,19 +79,3 @@ class Catalog:
         if policy is None:
             raise ValueError(f"table {name!r} has no partitioning policy")
         return policy
-
-
-def default_catalog() -> Catalog:
-    """Catalog pre-loaded with the reference's two table shapes."""
-    cat = Catalog()
-    cat.register(TableDef("landing", LANDING_SCHEMA))
-    cat.register(
-        TableDef(
-            "log_events",
-            LOG_EVENTS_SCHEMA,
-            # Node is a mid-row column (defect 2 in SURVEY §4.3 makes
-            # last-column keys buggy in the reference; any column is fine here).
-            PartitionPolicy(column_name="Node", max_partition_count=8, seed=42),
-        )
-    )
-    return cat

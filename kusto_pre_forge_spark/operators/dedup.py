@@ -75,39 +75,6 @@ def char_shingles(col: Column | str, n: int = 5, lowercase: bool = True) -> Colu
     return F.array_distinct(F.transform(idx, lambda i: F.substring(c, i, n)))
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram array."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.split(F.lower(F.trim(c)), r"\s+")
-    k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-    idx = F.sequence(F.lit(0), k - F.lit(1))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
-    )
-
-
-def _shingle_hash32(sh: Column) -> Column:
-    """Stable 32-bit shingle hash: first 8 hex chars of md5 → int.
-
-    md5-derived so the DuckDB oracle reproduces it exactly
-    (same construction in __spark_entry__ oracle SQL).
-    """
-    return F.conv(F.substring(F.md5(sh), 1, 8), 16, 10).cast("long")
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 64, seed: int = 7) -> Column:
-    """MinHash signature: for each hash fn j, min_j over shingles of
-    (a_j * h(s) + b_j) mod P. Pure array expression, no explode.
-
-    ⚠ evaluates the md5-based shingle hash once per (shingle, hash fn) —
-    prefer ``minhash_signature_from_hashes`` over a pre-hashed column when
-    computing many lanes (64× fewer md5 evaluations; the pipeline does).
-    """
-    return minhash_signature_from_hashes(
-        F.transform(shingles, _shingle_hash32), num_hashes, seed
-    )
-
-
 def _minhash_coeffs(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     rng = random.Random(seed)
     return [
@@ -119,8 +86,8 @@ def _minhash_coeffs(num_hashes: int, seed: int) -> list[tuple[int, int]]:
 def minhash_signature_udf(num_hashes: int = 64, seed: int = 7):
     """Vectorized numpy signature: for each doc's hash array h (n,), the
     signature is min over rows of (h[:,None] * A + B) % P — one C-level
-    matrix op per Arrow batch. Measured ~8× faster than the 64 interpreted
-    HOF min-folds (`minhash_signature_from_hashes`) at sf0.1; products stay
+    matrix op per Arrow batch. Measured ~8× faster than 64 interpreted
+    HOF min-folds (one per hash lane) at sf0.1; products stay
     under 2^63 (h < 2^32, a,b < P < 2^31) so int64 arithmetic is exact.
     """
     coeffs = _minhash_coeffs(num_hashes, seed)
@@ -139,25 +106,6 @@ def minhash_signature_udf(num_hashes: int = 64, seed: int = 7):
         )
 
     return sig
-
-
-def minhash_signature_from_hashes(
-    hashes: Column, num_hashes: int = 64, seed: int = 7
-) -> Column:
-    """Signature over an already-hashed shingle array (array<long>).
-
-    Pure-expression variant (no Python); the pipeline uses
-    ``minhash_signature_udf`` which computes identical values faster.
-    """
-    rng = random.Random(seed)
-    coeffs = [(rng.randrange(1, _MH_PRIME), rng.randrange(0, _MH_PRIME)) for _ in range(num_hashes)]
-
-    # NB: HOF lambdas must be unary — pyspark reads the arity to bind
-    # (element, index, ...) args, so coefficients are closed over via a factory.
-    def min_under(a: int, b: int) -> Column:
-        return F.array_min(F.transform(hashes, lambda h: (h * a + b) % _MH_PRIME))
-
-    return F.array(*[min_under(a, b) for a, b in coeffs])
 
 
 def _mh_signatures(

@@ -83,6 +83,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kusto_pre_forge_spark.operators import kql as K
+from kusto_pre_forge_spark.sources.blob import CSV_DIALECT
 
 __all__ = ["run_kql", "KqlSyntaxError"]
 
@@ -735,9 +736,12 @@ class _Parser:
         ddl = ", ".join(fields)
         if fmt in ("csv", "tsv", "psv", "txt"):
             sep = {"csv": ",", "tsv": "\t", "psv": "|", "txt": "\x01"}[fmt]
+            # delimited formats parse RFC-4180 fields the way read_landing
+            # does (quoted separators, doubled quotes, quoted newlines)
+            dialect = {} if fmt == "txt" else CSV_DIALECT
             return (
                 self.spark.read.schema(ddl)
-                .options(sep=sep, header=str(header).lower())
+                .options(sep=sep, header=str(header).lower(), **dialect)
                 .csv(paths)
             )
         if fmt in ("json", "multijson"):

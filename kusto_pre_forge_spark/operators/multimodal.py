@@ -108,19 +108,6 @@ def probe_media(
     return df.select(id_col, blob_col).mapInPandas(batches, MEDIA_PROBE_SCHEMA)
 
 
-def read_binary_dir(spark, path: str, glob: str | None = None) -> DataFrame:
-    """Ingest raw media files: Spark's binaryFile source.
-
-    Columns: path, modificationTime, length, content (binary). Pushdown:
-    ``pathGlobFilter`` prunes at listing time, like the reference's suffix
-    filter (BlobSources/ListBlobSource.cs:35).
-    """
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
 def attach_blob(df: DataFrame, src_col: str, blob_col: str = "blob") -> DataFrame:
     """Materialize a binary payload column (UTF-8 bytes of a string column,
     or pass-through if already binary) — used by tests to fabricate media

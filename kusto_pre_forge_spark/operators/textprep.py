@@ -261,6 +261,21 @@ def _merge_pattern(a: str, b: str) -> str:
     return f"(?:(?<=^)|(?<= )){_java_q(a)} {_java_q(b)}(?=$| )"
 
 
+#: :func:`apply_bpe` applies a merge list of up to this many merges as
+#: chained codegen ``regexp_replace`` passes, a longer one through the
+#: rank-dict Arrow encoder (expression depth independent of vocab size).
+_MAX_CHAINED_MERGES = 256
+
+
+def _chained_merges(s: Column, merges: list[tuple[str, str]]) -> Column:
+    """Apply ``merges`` in training order to a space-joined symbol string
+    column: one ``regexp_replace`` of :func:`_merge_pattern` per merge —
+    pure codegen; the expression tree grows with ``len(merges)``."""
+    for a, b in merges:
+        s = F.regexp_replace(s, _merge_pattern(a, b), _repl_q(a + b))
+    return s
+
+
 #: GPT-2's pre-tokenizer (public gpt-2/src/encoder.py `pat`): contractions,
 #: optionally-space-prefixed letter/number/punct runs, and whitespace runs
 #: that yield their final character to the following token (the
@@ -324,17 +339,17 @@ def bpe_token_count(
     :func:`byte_pretokens`, each pre-token's bytes remapped through a
     256-char literal LUT (one ``substr`` per byte — ``chr()`` can't
     reach the 256..323 remap range but indexing a literal can), the
-    merge list applied as chained ``regexp_replace`` passes, and the
+    merge list applied by :func:`_chained_merges`, and the
     final symbol counts folded with ``aggregate``. This is the count
     column :func:`corpus.sequence_pack` / ``budget_sample`` should see
     when the run uses a real tokenizer — whitespace counts misplace
     every packing offset the trainer will actually train on.
 
     Codegen path only: the expression tree grows with ``len(merges)``,
-    so cap at a few hundred merges (the ``apply_bpe`` ``max_chained``
-    regime). For production 32k-merge vocabs, precompute per-doc counts
-    once with ``apply_bpe(byte_level=True)`` and pass that column —
-    the packing math is count-agnostic."""
+    so cap at a few hundred merges (the :data:`_MAX_CHAINED_MERGES`
+    regime of :func:`apply_bpe`). For production 32k-merge vocabs,
+    precompute per-doc counts once with ``apply_bpe(byte_level=True)``
+    and pass that column — the packing math is count-agnostic."""
     b2u = _bytes_to_unicode()
     lut = "".join(b2u[v] for v in range(256))
     specials = list(special_tokens or ())
@@ -352,9 +367,7 @@ def bpe_token_count(
                 F.lit(1),
             ),
         )
-        s = F.array_join(syms, " ")
-        for a, b in merges:
-            s = F.regexp_replace(s, _merge_pattern(a, b), _repl_q(a + b))
+        s = _chained_merges(F.array_join(syms, " "), merges)
         n = F.size(F.split(s, " ")).cast("long")
         guarded = F.when(F.length(w) == 0, F.lit(0).cast("long")).otherwise(n)
         if specials:
@@ -404,76 +417,118 @@ def _word_histogram(
     return [(r["w"], int(r["cnt"])) for r in rows]
 
 
+def _merge_pair(syms, a: str, b: str) -> list[str]:
+    """Every adjacent ``(a, b)`` in ``syms`` fused into ``a + b``, greedy
+    left to right, non-overlapping — the one merge step of training and
+    encoding (the semantics :func:`_chained_merges` runs as a regex)."""
+    out: list[str] = []
+    i, n = 0, len(syms)
+    while i < n:
+        if i + 1 < n and syms[i] == a and syms[i + 1] == b:
+            out.append(a + b)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
+def _train_pair_merges(
+    words: list[tuple[list[str], int]],
+    n_merges: int,
+    min_pair_count: int,
+    score,
+) -> list[tuple[str, str]]:
+    """In-driver merge training over (initial symbols, count) words — the
+    incremental pair-statistics algorithm of Sennrich et al.'s public
+    ``learn_bpe.py`` (ACL'16): a pair→{word_idx: occurrences} index
+    means each merge touches only the words containing the pair, so 32k
+    merges over a 1M-word histogram run in minutes of pure Python with
+    NO per-merge jobs. Each round merges, by :func:`_merge_pair`, the
+    pair with the highest ``score((a, b), count_ab, unit_counts)`` among
+    pairs occurring at least ``min_pair_count`` times, tie-break
+    (score desc, pair asc), and stops when no pair qualifies. Symbol
+    (unit) counts update with every fusion. Returns the merges in
+    training order."""
+    from collections import defaultdict
+
+    vocab = list(words)
+    stats: dict[tuple[str, str], int] = defaultdict(int)
+    units: dict[str, int] = defaultdict(int)
+    indices: dict[tuple[str, str], dict[int, int]] = defaultdict(
+        lambda: defaultdict(int)
+    )
+
+    def add(wi: int, syms, c: int) -> None:
+        for p in zip(syms, syms[1:]):
+            stats[p] += c
+            indices[p][wi] += 1
+
+    def retract(wi: int, syms, c: int) -> None:
+        # emptied entries drop, so only live pairs compete
+        for p in zip(syms, syms[1:]):
+            stats[p] -= c
+            if stats[p] <= 0:
+                del stats[p]
+            d = indices[p]
+            d[wi] -= 1
+            if d[wi] <= 0:
+                del d[wi]
+
+    for wi, (syms, c) in enumerate(vocab):
+        add(wi, syms, c)
+        for s in syms:
+            units[s] += c
+    merges: list[tuple[str, str]] = []
+    for _ in range(n_merges):
+        best = min(
+            (
+                (-score(p, n, units), p)
+                for p, n in stats.items()
+                if n >= min_pair_count
+            ),
+            default=None,
+        )
+        if best is None:
+            break
+        a, b = best[1]
+        merges.append((a, b))
+        for wi in list(indices[(a, b)]):
+            syms, c = vocab[wi]
+            retract(wi, syms, c)
+            merged = _merge_pair(syms, a, b)
+            add(wi, merged, c)
+            vocab[wi] = (merged, c)
+            # each fusion turns one a and one b into one ab
+            k = (len(syms) - len(merged)) * c
+            units[a] -= k
+            units[b] -= k
+            units[a + b] += k
+    return merges
+
+
 def _train_bpe_driver(
     word_counts: list[tuple[str, int]],
     n_merges: int,
     min_pair_count: int,
     to_symbols=None,
 ) -> list[tuple[str, str]]:
-    """In-driver sequential BPE over a (word, count) histogram — the
-    incremental pair-statistics algorithm of Sennrich et al.'s public
-    ``learn_bpe.py`` (ACL'16): a pair→{word_idx: occurrences} index
-    means each merge touches only the words containing the pair, so 32k
-    merges over a 1M-word histogram run in minutes of pure Python with
-    NO per-merge jobs. Semantics: greedy left-to-right non-overlapping
-    merge (the chained-regex semantics of :func:`apply_bpe`), (count desc,
-    pair asc) tie-break, stop under ``min_pair_count``. ``to_symbols`` overrides
-    the initial word→symbols split (default Sennrich characters +
-    ``</w>``; the byte-level path passes the GPT-2 byte alphabet and
-    no end marker)."""
+    """In-driver sequential BPE over a (word, count) histogram:
+    :func:`_train_pair_merges` scored by raw pair count — (count desc,
+    pair asc) tie-break, stop under ``min_pair_count``; the greedy
+    left-to-right non-overlapping merge is the chained-regex semantics
+    of :func:`apply_bpe`. ``to_symbols`` overrides the initial
+    word→symbols split (default Sennrich characters + ``</w>``; the
+    byte-level path passes the GPT-2 byte alphabet and no end
+    marker)."""
     if to_symbols is None:
-        to_symbols = lambda w: tuple(list(w) + ["</w>"])  # noqa: E731
-    vocab: list[tuple[tuple[str, ...], int]] = [
-        (to_symbols(w), c) for w, c in word_counts
-    ]
-    from collections import Counter, defaultdict
-
-    stats: Counter = Counter()
-    indices: dict[tuple[str, str], dict[int, int]] = defaultdict(dict)
-    for wi, (syms, c) in enumerate(vocab):
-        for i in range(len(syms) - 1):
-            p = (syms[i], syms[i + 1])
-            stats[p] += c
-            indices[p][wi] = indices[p].get(wi, 0) + 1
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        if not stats:
-            break
-        best = min(stats.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1]))
-        if best[1] < min_pair_count:
-            break
-        a, b = best[0]
-        merges.append((a, b))
-        touched = list(indices[(a, b)].items())
-        for wi, _occ in touched:
-            syms, c = vocab[wi]
-            # retract this word's pair contributions
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                stats[p] -= c
-                if stats[p] <= 0:
-                    del stats[p]
-                d = indices[p]
-                d[wi] -= 1
-                if d[wi] <= 0:
-                    del d[wi]
-            out: list[str] = []
-            i = 0
-            n = len(syms)
-            while i < n:
-                if i + 1 < n and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            new_syms = tuple(out)
-            vocab[wi] = (new_syms, c)
-            for i in range(len(new_syms) - 1):
-                p = (new_syms[i], new_syms[i + 1])
-                stats[p] += c
-                indices[p][wi] = indices[p].get(wi, 0) + 1
-    return merges
+        to_symbols = lambda w: list(w) + ["</w>"]  # noqa: E731
+    return _train_pair_merges(
+        [(to_symbols(w), c) for w, c in word_counts],
+        n_merges,
+        min_pair_count,
+        score=lambda p, n_ab, units: n_ab,
+    )
 
 
 def train_bpe(
@@ -527,7 +582,7 @@ def train_bpe(
         words = byte_pretokens(F.col(text_col), special_tokens)
         specials = set(special_tokens or ())
         b2u = _bytes_to_unicode()
-        to_symbols = lambda w: tuple(b2u[b] for b in w.encode("utf-8"))  # noqa: E731
+        to_symbols = lambda w: [b2u[b] for b in w.encode("utf-8")]  # noqa: E731
     else:
         words = _words(F.lower(F.col(text_col)))
         specials = set()
@@ -542,68 +597,94 @@ def train_bpe(
     )
 
 
-def _bpe_tokenize_udf(
+def _bpe_word_encoder(
     merges: list[tuple[str, str]],
-    byte_level: bool = False,
+    byte_level: bool = True,
     special_tokens: frozenset[str] = frozenset(),
 ):
-    """Arrow-batched word tokenizer applying the merge list in TRAINING
-    ORDER, one greedy left-to-right pass per merge — the exact chained-
-    regex semantics, in a rank-dict loop: per word, each merge costs one
-    O(1) adjacent-pair set probe and only applying merges rebuild the
-    token list, so 32k merges are ~32k set probes per DISTINCT word.
-    Within-batch memoization collapses repeated words. ``byte_level``
-    starts from GPT-2 byte-remapped symbols (no ``</w>``); special
-    tokens pass through as one symbol, never split or merged."""
+    """word → its final BPE symbols, applying the merge list in TRAINING
+    ORDER with :func:`_merge_pair` — the exact chained-regex semantics
+    in a rank-dict loop: each merge costs one O(1) adjacent-pair set
+    probe and only applying merges rebuild the symbol list, so 32k
+    merges are ~32k set probes per word. Initial symbols are the GPT-2
+    byte-remapped UTF-8 bytes (``byte_level``) or the characters plus
+    ``</w>``; ``special_tokens`` stay one atomic symbol. Wrap it in
+    :func:`_batch_memo` per Arrow batch."""
+    merge_list = list(merges)
+    b2u = _bytes_to_unicode()
+
+    def encode(w: str) -> list[str]:
+        if w in special_tokens:
+            return [w]
+        if byte_level:
+            syms = [b2u[b] for b in w.encode("utf-8")]
+        else:
+            syms = list(w) + ["</w>"]
+        present = set(zip(syms, syms[1:]))
+        for a, b in merge_list:
+            if (a, b) in present:
+                syms = _merge_pair(syms, a, b)
+                present = set(zip(syms, syms[1:]))
+        return syms
+
+    return encode
+
+
+def _batch_memo(fn):
+    """``fn`` memoized for one Arrow batch — repeated words (Zipf makes
+    the hit rate high) run ``fn`` once; a fresh memo per batch keeps
+    worker memory bounded."""
+    memo: dict = {}
+
+    def call(w):
+        hit = memo.get(w)
+        if hit is None:
+            hit = memo[w] = fn(w)
+        return hit
+
+    return call
+
+
+def _pieces_udf(split):
+    """Arrow-batched word tokenizer around a per-word algorithm ``split``
+    (word → pieces): returns ``(n, joined)`` — the piece count and the
+    '|'-joined pieces. The separate count keeps words containing a
+    literal '|' honest (the joined string is a display probe, not the
+    token-count source)."""
     from pyspark.sql.functions import pandas_udf
 
-    merge_list = list(merges)
-    b2u = _bytes_to_unicode() if byte_level else None
+    def pieces(w: str) -> tuple[int, str]:
+        out = split(w)
+        return len(out), "|".join(out)
 
     def tokenize_batch(words: pd.Series) -> pd.DataFrame:
-        memo: dict[str, tuple[int, str]] = {}
-
-        def tok(w: str) -> tuple[int, str]:
-            hit = memo.get(w)
-            if hit is not None:
-                return hit
-            if w in special_tokens:
-                res = (1, w)
-                memo[w] = res
-                return res
-            if byte_level:
-                toks = [b2u[b] for b in w.encode("utf-8")]
-            else:
-                toks = [c for c in w] + ["</w>"]
-            present = set(zip(toks, toks[1:]))
-            for a, b in merge_list:
-                if (a, b) not in present:
-                    continue
-                out = []
-                i = 0
-                n = len(toks)
-                while i < n:
-                    if i + 1 < n and toks[i] == a and toks[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(toks[i])
-                        i += 1
-                toks = out
-                present = set(zip(toks, toks[1:]))
-            # the separate count keeps words containing a literal '|'
-            # honest (the joined string is a display probe, not the
-            # token-count source)
-            res = (len(toks), "|".join(toks))
-            memo[w] = res
-            return res
-
-        pairs = words.map(tok)
+        pairs = words.map(_batch_memo(pieces))
         return pd.DataFrame(
             {"n": pairs.map(lambda p: p[0]), "joined": pairs.map(lambda p: p[1])}
         )
 
     return pandas_udf(tokenize_batch, "n int, joined string")
+
+
+def _distinct_word_apply(
+    df: DataFrame, id_col: str, words: Column, tokenize
+) -> DataFrame:
+    """The apply plan every vocabulary-scale tokenizer shares: explode the
+    ``words`` array → per-(doc, word) repetition counts ``_reps`` →
+    DISTINCT words tokenize once through the :func:`_pieces_udf`
+    ``tokenize`` (``_tk``) → join back on the word. Expression depth
+    and per-row cost are independent of vocabulary size; the join keys
+    are (word, count) aggregates, far smaller than the exploded word
+    stream, and the tokenized side is |distinct words| rows — at 100 TB
+    the only shape that survives a production vocabulary."""
+    t = df.select(F.col(id_col), F.explode(words).alias("w"))
+    per_word = t.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("_reps"))
+    tokenized = (
+        per_word.select("w")
+        .distinct()
+        .select("w", tokenize(F.col("w")).alias("_tk"))
+    )
+    return per_word.join(tokenized, "w")
 
 
 def bpe_vocab_ids(merges: list[tuple[str, str]]) -> dict[str, int]:
@@ -641,92 +722,28 @@ def bpe_decode_ids(
     return bytes(u2b[ch] for ch in syms).decode("utf-8", "replace")
 
 
-def _bpe_encode_udf(merges: list[tuple[str, str]]):
-    """Arrow-batched byte-level word ENCODER: same merge application as
-    _bpe_tokenize_udf, then symbols map through the bpe_vocab_ids table
-    to the integer ids a trainer consumes. Byte-level has no UNK — every
-    byte is id 0..255 by construction."""
-    from pyspark.sql.functions import pandas_udf
-
-    merge_list = list(merges)
-    b2u = _bytes_to_unicode()
-    vocab = bpe_vocab_ids(merge_list)
-
-    def encode_batch(words: pd.Series) -> pd.Series:
-        memo: dict[str, list[int]] = {}
-
-        def enc(w: str) -> list[int]:
-            hit = memo.get(w)
-            if hit is not None:
-                return hit
-            toks = [b2u[b] for b in w.encode("utf-8")]
-            present = set(zip(toks, toks[1:]))
-            for a, b in merge_list:
-                if (a, b) not in present:
-                    continue
-                out = []
-                i = 0
-                n = len(toks)
-                while i < n:
-                    if i + 1 < n and toks[i] == a and toks[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(toks[i])
-                        i += 1
-                toks = out
-                present = set(zip(toks, toks[1:]))
-            res = [vocab[t] for t in toks]
-            memo[w] = res
-            return res
-
-        return words.map(enc)
-
-    return pandas_udf(encode_batch, "array<int>")
+def _bpe_id_encoder(merges: list[tuple[str, str]], vocab_ids=None):
+    """pre-token → integer ids: :func:`_bpe_word_encoder`'s byte-level
+    symbols mapped through the :func:`bpe_vocab_ids` table. Byte-level
+    has no UNK — every byte is id 0..255 by construction. ``vocab_ids``
+    overrides the derived table — the imported-tokenizer path, where
+    vocab.json is AUTHORITATIVE for ids (the HF/GPT-2 contract) and
+    merges.txt only ranks the merges."""
+    vocab = dict(vocab_ids) if vocab_ids is not None else bpe_vocab_ids(merges)
+    symbols = _bpe_word_encoder(merges)
+    return lambda w: [vocab[t] for t in symbols(w)]
 
 
 def _bpe_encode_doc_udf(merges: list[tuple[str, str]], vocab_ids=None):
     """Arrow-batched DOCUMENT encoder: array-of-pre-tokens in, flat id
-    array out. Per-batch memo over distinct pre-tokens (Zipf makes the
-    hit rate high), same merge-application inner loop as
-    :func:`_bpe_encode_udf`. ``vocab_ids`` overrides the derived id
-    table — the imported-tokenizer path, where vocab.json is
-    AUTHORITATIVE for ids (the HF/GPT-2 contract) and merges.txt only
-    ranks the merges."""
+    array out, through :func:`_bpe_id_encoder` with a per-batch memo
+    over distinct pre-tokens."""
     from pyspark.sql.functions import pandas_udf
 
-    merge_list = list(merges)
-    b2u = _bytes_to_unicode()
-    vocab = dict(vocab_ids) if vocab_ids is not None else bpe_vocab_ids(merge_list)
+    ids_of = _bpe_id_encoder(merges, vocab_ids)
 
     def encode_batch(docs: pd.Series) -> pd.Series:
-        memo: dict[str, list[int]] = {}
-
-        def enc(w: str) -> list[int]:
-            hit = memo.get(w)
-            if hit is not None:
-                return hit
-            toks = [b2u[b] for b in w.encode("utf-8")]
-            present = set(zip(toks, toks[1:]))
-            for a, b in merge_list:
-                if (a, b) not in present:
-                    continue
-                out = []
-                i = 0
-                n = len(toks)
-                while i < n:
-                    if i + 1 < n and toks[i] == a and toks[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(toks[i])
-                        i += 1
-                toks = out
-                present = set(zip(toks, toks[1:]))
-            res = [vocab[t] for t in toks]
-            memo[w] = res
-            return res
-
+        enc = _batch_memo(ids_of)
         return docs.map(
             lambda ws: [i for w in (ws if ws is not None else []) for i in enc(w)]
         )
@@ -740,7 +757,7 @@ def _bpe_encode_segments_udf(
     """Arrow-batched SEGMENTED encoder — :func:`_bpe_encode_doc_udf`
     generalized to a VARIABLE number of (pre-token-array, mask-flag)
     segments per row (multi-turn conversations): each segment encodes
-    separately through the same memoized merge loop, ids concatenate in
+    separately through the same memoized encoder, ids concatenate in
     segment order, and the mask repeats each segment's flag once per
     emitted token — loss masks BY CONSTRUCTION, no offset mapping.
     ``segment_sizes`` carries the per-segment token counts (turn
@@ -748,40 +765,10 @@ def _bpe_encode_segments_udf(
     projection; zero joins."""
     from pyspark.sql.functions import pandas_udf
 
-    merge_list = list(merges)
-    b2u = _bytes_to_unicode()
-    vocab = (
-        dict(vocab_ids) if vocab_ids is not None else bpe_vocab_ids(merge_list)
-    )
+    ids_of = _bpe_id_encoder(merges, vocab_ids)
 
     def encode_batch(rows: pd.Series) -> pd.DataFrame:
-        memo: dict[str, list[int]] = {}
-
-        def enc(w: str) -> list[int]:
-            hit = memo.get(w)
-            if hit is not None:
-                return hit
-            toks = [b2u[b] for b in w.encode("utf-8")]
-            present = set(zip(toks, toks[1:]))
-            for a, b in merge_list:
-                if (a, b) not in present:
-                    continue
-                out = []
-                i = 0
-                n = len(toks)
-                while i < n:
-                    if i + 1 < n and toks[i] == a and toks[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(toks[i])
-                        i += 1
-                toks = out
-                present = set(zip(toks, toks[1:]))
-            res = [vocab[t] for t in toks]
-            memo[w] = res
-            return res
-
+        enc = _batch_memo(ids_of)
         ids_col, mask_col, sizes_col = [], [], []
         for segs in rows:
             ids: list[int] = []
@@ -850,13 +837,10 @@ def bpe_encode(
     the first ``head`` ids comma-joined — the human-checkable (and
     oracle-hashable) probe; full id arrays stay distributed.
 
-    Plan: pre-tokens posexplode (order kept), DISTINCT pre-tokens
-    encode once through the rank-dict Arrow UDF, join back on the word
-    key, and one per-doc aggregate reassembles document order via
-    array_sort(collect_list(struct(pos, ids))) — the same
-    one-exchange-per-side shape as apply_bpe's rank-dict path, plus the
-    unavoidable reassembly exchange any order-preserving document
-    rebuild pays (cf. line_dedup)."""
+    Plan: the one Arrow map of :func:`bpe_encode_arrays` (codegen
+    pre-tokens, per-batch memoized document encoder, document order
+    kept by construction) plus a codegen projection — no exchange of
+    its own."""
     per_doc = bpe_encode_arrays(df, merges, text_col, id_col)
     return per_doc.select(
         F.col(id_col),
@@ -875,7 +859,6 @@ def apply_bpe(
     merges: list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_chained: int = 256,
     byte_level: bool = False,
     special_tokens: list[str] | None = None,
 ) -> DataFrame:
@@ -886,21 +869,16 @@ def apply_bpe(
     sequence (a human-checkable probe).
 
     Two physically different, semantically IDENTICAL paths (equivalence
-    pinned in tests):
+    pinned in tests), chosen from ``len(merges)``:
 
-    - ``len(merges) <= max_chained``: one chained ``regexp_replace`` per
-      merge over the space-joined symbol string — all codegen, no UDF,
-      no extra shuffle. Right for small vocabularies, but at 32k merges
+    - up to :data:`_MAX_CHAINED_MERGES` merges: :func:`_chained_merges`
+      over the space-joined symbol string — all codegen, no UDF, no
+      extra shuffle. Right for small vocabularies, but at 32k merges
       the expression tree itself (32k nested regex nodes) would sink
       Catalyst analysis/codegen long before data size matters.
-    - beyond ``max_chained``: a rank-dict Arrow ``pandas_udf`` applies
-      the merge list per DISTINCT word (each merge is an O(1) set probe)
-      and the results join back to the per-(doc, word) counts — the
-      plan's expression depth is then independent of vocabulary size.
-      The join keys are (word, count) aggregates, far smaller than the
-      exploded word stream, and the tokenized side is |distinct words|
-      rows — at 100 TB this is the only shape that survives a
-      production vocabulary.
+    - beyond it: :func:`_distinct_word_apply` with the rank-dict
+      :func:`_bpe_word_encoder` — the plan's expression depth is then
+      independent of vocabulary size.
 
     ``byte_level=True`` applies a GPT-2-lineage vocabulary (train with
     ``train_bpe(byte_level=True)``): GPT-2 regex pre-tokens (case
@@ -910,56 +888,25 @@ def apply_bpe(
     byte-level vocabs are 32k+ merges.
     """
     if byte_level:
-        t = df.select(
-            F.col(id_col),
-            F.explode(
-                byte_pretokens(F.col(text_col), special_tokens)
-            ).alias("w"),
-        )
-        per_word = t.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("_reps"))
-        tokenized = (
-            per_word.select("w")
-            .distinct()
-            .select(
-                "w",
-                _bpe_tokenize_udf(
-                    merges, byte_level=True,
-                    special_tokens=frozenset(special_tokens or ()),
-                )(F.col("w")).alias("_tk"),
-            )
-        )
-        joined = per_word.join(tokenized, "w")
-        return joined.groupBy(id_col).agg(
-            F.sum("_reps").cast("long").alias("n_words"),
-            F.sum(F.col("_reps") * F.col("_tk.n"))
-            .cast("long")
-            .alias("n_bpe_tokens"),
-            F.min("_tk.joined").alias("sample_tokens"),
-        )
-    w = F.explode(_words(F.lower(F.col(text_col))))
-    t = df.select(F.col(id_col), w.alias("w"))
-    if len(merges) <= max_chained:
+        words = byte_pretokens(F.col(text_col), special_tokens)
+    else:
+        words = _words(F.lower(F.col(text_col)))
+    if not byte_level and len(merges) <= _MAX_CHAINED_MERGES:
+        t = df.select(F.col(id_col), F.explode(words).alias("w"))
         s = F.concat(
             F.array_join(F.filter(F.split(F.col("w"), ""), lambda c: c != ""), " "),
             F.lit(" </w>"),
         )
-        for a, b in merges:
-            s = F.regexp_replace(s, _merge_pattern(a, b), _repl_q(a + b))
-        t = t.select(id_col, F.split(s, " ").alias("toks"))
+        t = t.select(id_col, F.split(_chained_merges(s, merges), " ").alias("toks"))
         return t.groupBy(id_col).agg(
             F.count(F.lit(1)).cast("long").alias("n_words"),
             F.sum(F.size("toks")).cast("long").alias("n_bpe_tokens"),
             F.min(F.array_join("toks", "|")).alias("sample_tokens"),
         )
-    # rank-dict path: tokenize each distinct word once, join back to the
-    # per-(doc, word) repetition counts
-    per_word = t.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("_reps"))
-    tokenized = (
-        per_word.select("w")
-        .distinct()
-        .select("w", _bpe_tokenize_udf(merges)(F.col("w")).alias("_tk"))
+    encode = _bpe_word_encoder(
+        merges, byte_level, frozenset(special_tokens or ())
     )
-    joined = per_word.join(tokenized, "w")
+    joined = _distinct_word_apply(df, id_col, words, _pieces_udf(encode))
     return joined.groupBy(id_col).agg(
         F.sum("_reps").cast("long").alias("n_words"),
         F.sum(F.col("_reps") * F.col("_tk.n")).cast("long").alias("n_bpe_tokens"),
@@ -1245,55 +1192,58 @@ def _unigram_tokenize_udf(vocab: list[tuple[str, float]]):
     always rebuilds the word. Ties resolve to the FIRST accepted length
     (shortest piece — lengths scan ascending, strict improvement
     required), making the path deterministic."""
-    from pyspark.sql.functions import pandas_udf
-
     table = dict(vocab)
     max_len = max((len(p) for p in table), default=1)
     unk = (min(table.values(), default=0.0)) - 10.0
     NEG = float("-inf")
 
-    def tokenize_batch(words: pd.Series) -> pd.DataFrame:
-        memo: dict[str, tuple[int, str]] = {}
-
-        def tok(w: str) -> tuple[int, str]:
-            hit = memo.get(w)
-            if hit is not None:
-                return hit
-            n = len(w)
-            best = [NEG] * (n + 1)
-            best[0] = 0.0
-            back = [0] * (n + 1)
-            for i in range(1, n + 1):
-                for l in range(1, min(max_len, i) + 1):
-                    piece = w[i - l : i]
-                    lp = table.get(piece)
-                    if lp is None:
-                        if l != 1:
-                            continue
-                        lp = unk
-                    if best[i - l] == NEG:
+    def viterbi(w: str) -> list[str]:
+        n = len(w)
+        best = [NEG] * (n + 1)
+        best[0] = 0.0
+        back = [0] * (n + 1)
+        for i in range(1, n + 1):
+            for l in range(1, min(max_len, i) + 1):
+                piece = w[i - l : i]
+                lp = table.get(piece)
+                if lp is None:
+                    if l != 1:
                         continue
-                    sc = best[i - l] + lp
-                    if sc > best[i]:
-                        best[i] = sc
-                        back[i] = i - l
-            out = []
-            i = n
-            while i > 0:
-                j = back[i]
-                out.append(w[j:i])
-                i = j
-            out.reverse()
-            res = (len(out), "|".join(out))
-            memo[w] = res
-            return res
+                    lp = unk
+                if best[i - l] == NEG:
+                    continue
+                sc = best[i - l] + lp
+                if sc > best[i]:
+                    best[i] = sc
+                    back[i] = i - l
+        out = []
+        i = n
+        while i > 0:
+            j = back[i]
+            out.append(w[j:i])
+            i = j
+        out.reverse()
+        return out
 
-        pairs = words.map(tok)
-        return pd.DataFrame(
-            {"n": pairs.map(lambda p: p[0]), "joined": pairs.map(lambda p: p[1])}
-        )
+    return _pieces_udf(viterbi)
 
-    return pandas_udf(tokenize_batch, "n int, joined string")
+
+def _piece_stats(joined: DataFrame, id_col: str) -> DataFrame:
+    """Per-doc (n_words, n_pieces, piece_chars, reconstruct_ok,
+    sample_pieces) over :func:`_distinct_word_apply` output — the
+    contract :func:`apply_unigram` and :func:`apply_wordpiece` share.
+    Piece-partition check without splitting on '|' (words may contain a
+    literal '|'): the join adds exactly n-1 separator chars, so
+    len(joined) - (n-1) == len(word) iff the pieces partition the
+    word."""
+    chars = F.length("_tk.joined") - (F.col("_tk.n") - F.lit(1))
+    return joined.withColumn("_ok", chars == F.length("w")).groupBy(id_col).agg(
+        F.sum("_reps").cast("long").alias("n_words"),
+        F.sum(F.col("_reps") * F.col("_tk.n")).cast("long").alias("n_pieces"),
+        F.sum(F.col("_reps") * chars).cast("long").alias("piece_chars"),
+        F.min("_ok").alias("reconstruct_ok"),
+        F.min("_tk.joined").alias("sample_pieces"),
+    )
 
 
 def apply_unigram(
@@ -1303,13 +1253,10 @@ def apply_unigram(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Tokenize with a trained unigram vocabulary: Viterbi
-    maximum-likelihood segmentation per word (Kudo 2018 §3.1). The plan
-    is the :func:`apply_bpe` rank-dict shape — the vocabulary rides the
-    closure, DISTINCT words tokenize once in an Arrow ``pandas_udf``,
-    results join back to per-(doc, word) counts — so expression depth
-    and per-row cost are independent of vocabulary size, and the
-    tokenized side is |distinct words| rows (the only shape that
-    survives 100 TB).
+    maximum-likelihood segmentation per word (Kudo 2018 §3.1) through
+    :func:`_distinct_word_apply` — the vocabulary rides the closure,
+    DISTINCT words tokenize once, results join back to per-(doc, word)
+    counts.
 
     Returns (id, n_words, n_pieces, piece_chars, reconstruct_ok,
     sample_pieces): ``piece_chars`` is Σ characters across pieces —
@@ -1318,37 +1265,9 @@ def apply_unigram(
     ``reconstruct_ok`` exactly predictable by an engine that never saw
     the vocabulary — the oracle hook. ``n_pieces`` is bounded by
     [n_words, piece_chars]."""
-    w = F.explode(_words(F.lower(F.col(text_col))))
-    t = df.select(F.col(id_col), w.alias("w"))
-    per_word = t.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("_reps"))
-    tokenized = (
-        per_word.select("w")
-        .distinct()
-        .select(
-            "w",
-            _unigram_tokenize_udf(vocab)(F.col("w")).alias("_tk"),
-        )
-    )
-    # piece-partition check without splitting on '|' (words may contain a
-    # literal '|'): the join adds exactly n-1 separator chars, so
-    # len(joined) - (n-1) == len(word) iff the pieces partition the word
-    joined = per_word.join(tokenized, "w").withColumn(
-        "_ok",
-        (F.length("_tk.joined") - (F.col("_tk.n") - F.lit(1)))
-        == F.length("w"),
-    )
-    return joined.groupBy(id_col).agg(
-        F.sum("_reps").cast("long").alias("n_words"),
-        F.sum(F.col("_reps") * F.col("_tk.n")).cast("long").alias("n_pieces"),
-        F.sum(
-            F.col("_reps")
-            * (F.length("_tk.joined") - (F.col("_tk.n") - F.lit(1)))
-        )
-        .cast("long")
-        .alias("piece_chars"),
-        F.min("_ok").alias("reconstruct_ok"),
-        F.min("_tk.joined").alias("sample_pieces"),
-    )
+    words = _words(F.lower(F.col(text_col)))
+    joined = _distinct_word_apply(df, id_col, words, _unigram_tokenize_udf(vocab))
+    return _piece_stats(joined, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1361,85 +1280,25 @@ def _train_wordpiece_driver(
     n_merges: int,
     min_pair_count: int = 2,
 ) -> list[str]:
-    """In-driver WordPiece training over a (word, count) histogram: the
-    same incremental pair-index loop as :func:`_train_bpe_driver`, but
-    pairs rank by the LIKELIHOOD score count(ab)/(count(a)·count(b)) —
-    merge the pair whose fusion most increases a unigram LM's corpus
-    likelihood (Schuster & Nakajima 2012 §4; BERT). Unit counts update
-    incrementally with the pair counts. Tie-break (score desc, pair asc);
-    pairs under ``min_pair_count`` raw occurrences never merge. Returns
-    the PIECE vocabulary (single chars + merge results) for the greedy
+    """In-driver WordPiece training over a (word, count) histogram:
+    :func:`_train_pair_merges` with pairs ranked by the LIKELIHOOD score
+    count(ab)/(count(a)·count(b)) — merge the pair whose fusion most
+    increases a unigram LM's corpus likelihood (Schuster & Nakajima 2012
+    §4; BERT). Tie-break (score desc, pair asc); pairs under
+    ``min_pair_count`` raw occurrences never merge. Returns the PIECE
+    vocabulary (single chars + merge results) for the greedy
     longest-match :func:`apply_wordpiece` — WordPiece apply consults the
     vocab, not the merge order. No end-of-word marker: pieces partition
     the raw word (the repo's oracle identity), isomorphic to BERT's
     ``##`` continuation convention."""
-    from collections import Counter, defaultdict
-
-    vocab: list[tuple[tuple[str, ...], int]] = [
-        (tuple(w), c) for w, c in word_counts if w
-    ]
-    stats: Counter = Counter()
-    units: Counter = Counter()
-    indices: dict[tuple[str, str], dict[int, int]] = defaultdict(dict)
-    for wi, (syms, c) in enumerate(vocab):
-        for s in syms:
-            units[s] += c
-        for i in range(len(syms) - 1):
-            p = (syms[i], syms[i + 1])
-            stats[p] += c
-            indices[p][wi] = indices[p].get(wi, 0) + 1
-    pieces = {s for s, _ in units.items()}
-    for _ in range(n_merges):
-        live = [
-            (p, c) for p, c in stats.items() if c >= min_pair_count
-        ]
-        if not live:
-            break
-        best = min(
-            live,
-            key=lambda kv: (
-                -(kv[1] / (units[kv[0][0]] * units[kv[0][1]])),
-                kv[0][0],
-                kv[0][1],
-            ),
-        )
-        a, b = best[0]
-        pieces.add(a + b)
-        touched = list(indices[(a, b)].items())
-        for wi, _occ in touched:
-            syms, c = vocab[wi]
-            for s in syms:
-                units[s] -= c
-                if units[s] <= 0:
-                    del units[s]
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                stats[p] -= c
-                if stats[p] <= 0:
-                    del stats[p]
-                d = indices[p]
-                d[wi] -= 1
-                if d[wi] <= 0:
-                    del d[wi]
-            out: list[str] = []
-            i = 0
-            n = len(syms)
-            while i < n:
-                if i + 1 < n and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            new_syms = tuple(out)
-            vocab[wi] = (new_syms, c)
-            for s in new_syms:
-                units[s] += c
-            for i in range(len(new_syms) - 1):
-                p = (new_syms[i], new_syms[i + 1])
-                stats[p] += c
-                indices[p][wi] = indices[p].get(wi, 0) + 1
-    return sorted(pieces)
+    words = [(list(w), c) for w, c in word_counts if w]
+    merges = _train_pair_merges(
+        words,
+        n_merges,
+        min_pair_count,
+        score=lambda p, n_ab, units: n_ab / (units[p[0]] * units[p[1]]),
+    )
+    return sorted({s for syms, _ in words for s in syms} | {a + b for a, b in merges})
 
 
 def train_wordpiece(
@@ -1473,39 +1332,24 @@ def _wordpiece_tokenize_udf(pieces: list[str]):
     apply rule — NOT merge-order replay): at each position take the
     longest vocab piece matching the remaining prefix; unseen characters
     fall back to themselves, so pieces always partition the word."""
-    from pyspark.sql.functions import pandas_udf
-
     table = set(pieces)
     max_len = max((len(p) for p in table), default=1)
 
-    def tokenize_batch(words: pd.Series) -> pd.DataFrame:
-        memo: dict[str, tuple[int, str]] = {}
+    def longest_match(w: str) -> list[str]:
+        out = []
+        i, n = 0, len(w)
+        while i < n:
+            piece = w[i : i + 1]
+            for l in range(min(max_len, n - i), 1, -1):
+                cand = w[i : i + l]
+                if cand in table:
+                    piece = cand
+                    break
+            out.append(piece)
+            i += len(piece)
+        return out
 
-        def tok(w: str) -> tuple[int, str]:
-            hit = memo.get(w)
-            if hit is not None:
-                return hit
-            out = []
-            i, n = 0, len(w)
-            while i < n:
-                piece = w[i : i + 1]
-                for l in range(min(max_len, n - i), 1, -1):
-                    cand = w[i : i + l]
-                    if cand in table:
-                        piece = cand
-                        break
-                out.append(piece)
-                i += len(piece)
-            res = (len(out), "|".join(out))
-            memo[w] = res
-            return res
-
-        pairs = words.map(tok)
-        return pd.DataFrame(
-            {"n": pairs.map(lambda p: p[0]), "joined": pairs.map(lambda p: p[1])}
-        )
-
-    return pandas_udf(tokenize_batch, "n int, joined string")
+    return _pieces_udf(longest_match)
 
 
 def apply_wordpiece(
@@ -1517,34 +1361,12 @@ def apply_wordpiece(
     """Tokenize with a WordPiece vocabulary: greedy longest-match-first
     per word. Same distributed shape as :func:`apply_unigram` (DISTINCT
     words tokenize once, join back to per-(doc, word) counts) and the
-    same (id, n_words, n_pieces, piece_chars, reconstruct_ok,
-    sample_pieces) contract — the piece-partition identity makes
-    ``piece_chars`` and the flags engine-independent oracle hooks."""
-    w = F.explode(_words(F.lower(F.col(text_col))))
-    t = df.select(F.col(id_col), w.alias("w"))
-    per_word = t.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("_reps"))
-    tokenized = (
-        per_word.select("w")
-        .distinct()
-        .select("w", _wordpiece_tokenize_udf(pieces)(F.col("w")).alias("_tk"))
-    )
-    joined = per_word.join(tokenized, "w").withColumn(
-        "_ok",
-        (F.length("_tk.joined") - (F.col("_tk.n") - F.lit(1)))
-        == F.length("w"),
-    )
-    return joined.groupBy(id_col).agg(
-        F.sum("_reps").cast("long").alias("n_words"),
-        F.sum(F.col("_reps") * F.col("_tk.n")).cast("long").alias("n_pieces"),
-        F.sum(
-            F.col("_reps")
-            * (F.length("_tk.joined") - (F.col("_tk.n") - F.lit(1)))
-        )
-        .cast("long")
-        .alias("piece_chars"),
-        F.min("_ok").alias("reconstruct_ok"),
-        F.min("_tk.joined").alias("sample_pieces"),
-    )
+    same :func:`_piece_stats` contract — the piece-partition identity
+    makes ``piece_chars`` and the flags engine-independent oracle
+    hooks."""
+    words = _words(F.lower(F.col(text_col)))
+    joined = _distinct_word_apply(df, id_col, words, _wordpiece_tokenize_udf(pieces))
+    return _piece_stats(joined, id_col)
 
 
 #: characters whose UTF-8 bytes, mis-decoded as cp1252, produce the classic

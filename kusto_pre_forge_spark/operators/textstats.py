@@ -397,15 +397,6 @@ def _validate_profiles() -> None:
 _validate_profiles()
 
 
-def _langid_norm(col: Column | str) -> Column:
-    """lowercase → non-letter runs to one space → trim → pad with one
-    space each side, so every word contributes its boundary trigrams.
-    All-symbol text normalizes to a single space (no trigram, → 'und')."""
-    c = F.col(col) if isinstance(col, str) else col
-    squashed = F.regexp_replace(F.lower(c), f"[^{LANGID_CHARCLASS}]+", " ")
-    return F.concat(F.lit(" "), F.trim(squashed), F.lit(" "))
-
-
 def char_ngrams(col: Column | str, n: int = 3) -> Column:
     """All overlapping character n-grams as an array — pure expressions
     (sequence + substr), no explode, no UDF."""
@@ -417,18 +408,6 @@ def char_ngrams(col: Column | str, n: int = 3) -> Column:
     return F.when(F.length(c) >= n, grams).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def _occurrence_count(norm: Column, gram: str) -> Column:
-    """Non-overlapping occurrence count of a literal n-gram: the
-    length-delta-of-replace trick — (len(t) − len(replace(t, g, ''))) /
-    len(g). One tight JVM string pass per gram; measured ~14× faster
-    than folding per-position lookups through a literal map (whose
-    GetMapValue is a linear scan per probe)."""
-    return (
-        (F.length(norm) - F.length(F.replace(norm, F.lit(gram), F.lit(""))))
-        / F.lit(len(gram))
-    ).cast("int")
 
 
 def _bind_once(value: Column, fn) -> Column:

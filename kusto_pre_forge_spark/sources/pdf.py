@@ -2033,29 +2033,6 @@ def extract_pdf_images(data: bytes, errors: str = "skip") -> list[dict]:
     return out
 
 
-def parse_pdf_images(blobs: DataFrame, errors: str = "skip") -> DataFrame:
-    """(path, content) blob rows → one row per embedded image — the
-    multimodal hand-off as a pure Arrow map stage (the
-    ``parse_pdf_blobs`` posture)."""
-    import pandas as pd
-
-    ddl = (
-        "page_no int, name string, width int, height int, bits int, "
-        "color_space string, codec string, data binary, _kpf_source string"
-    )
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for img in extract_pdf_images(content, errors=errors):
-                    rows.append({**img, "_kpf_source": p})
-            cols = [c.split()[0] for c in ddl.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return blobs.select("path", "content").mapInPandas(batches, ddl)
-
-
 def route_pdf_documents(
     parsed: DataFrame, blobs: DataFrame | None = None
 ) -> DataFrame:

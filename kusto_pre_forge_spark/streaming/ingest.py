@@ -47,7 +47,6 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -298,14 +297,15 @@ class StreamingEtl:
         invisible to the decision, which therefore reproduces the original
         accept set bit-for-bit instead of rejecting every row as a
         duplicate of itself."""
-        try:
-            return (
-                self.spark.read.parquet(store_dir)
-                .filter(F.col("_kpf_batch") != batch_id)
-                .drop("_kpf_batch")
-            )
-        except AnalysisException:  # first batch: store not created yet
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(store_dir)
+        conf = self.spark._jsc.hadoopConfiguration()
+        if not path.getFileSystem(conf).exists(path):  # first batch
             return self.spark.createDataFrame([], schema)
+        return (
+            self.spark.read.parquet(store_dir)
+            .filter(F.col("_kpf_batch") != batch_id)
+            .drop("_kpf_batch")
+        )
 
     def _admit(
         self,

@@ -144,9 +144,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # TIMESTAMP, but normalize in case the conf was rejected or the plan
     # was cached before it applied.
     return _normalize_ntz(df)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views (mirrors the driver's DuckDB setup)."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -549,7 +549,11 @@ def test_sequence_pack_token_counter_hook(spark):
     # prefix-sum invariant holds under either counter: starts are the
     # exclusive cumsum of counts in (hash, doc_id) order
     for res in (ws, bpe):
-        rows = sorted(res.values(), key=lambda r: r["token_start"])
+        # an empty doc shares its start with the next doc; ordering it
+        # first (n_tokens 0) is the order the exclusive cumsum implies
+        rows = sorted(
+            res.values(), key=lambda r: (r["token_start"], r["n_tokens"])
+        )
         acc = 0
         for r in rows:
             assert r["token_start"] == acc

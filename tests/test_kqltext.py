@@ -446,6 +446,31 @@ def test_externaldata(spark, t, tmp_path):
     assert out == [(2, "beta")]
 
 
+def test_externaldata_csv_quoted_fields_match_read_landing(spark, t, tmp_path):
+    """Quoted separators, doubled quotes and quoted newlines parse as one
+    field each, exactly as read_landing reads the same file."""
+    from kusto_pre_forge_spark.config import DataFormat, RunSettings
+    from kusto_pre_forge_spark.sources.blob import read_landing
+
+    p = tmp_path / "quoted.csv"
+    p.write_text('1,"a, ""quoted"" b"\n2,"line one\nline two"\n3,plain\n')
+    want = [(1, 'a, "quoted" b'), (2, "line one\nline two"), (3, "plain")]
+    out = _rows(
+        spark,
+        f"externaldata (id:long, s:string) ['{p}'] with (format='csv') "
+        "| sort by id asc",
+        t,
+    )
+    assert out == want
+    landed = read_landing(
+        spark,
+        [str(p)],
+        RunSettings(fmt=DataFormat.CSV, csv_headers=False),
+        schema="id long, s string",
+    )
+    assert sorted((r.id, r.s) for r in landed.collect()) == want
+
+
 def test_serialize_row_functions(spark, t):
     out = _rows(
         spark,

@@ -300,20 +300,81 @@ def test_train_bpe_driver_histogram_equals_sequential(spark):
     )
 
 
-def test_apply_bpe_udf_path_equals_chained(spark):
+def test_apply_bpe_udf_path_equals_chained(spark, monkeypatch):
     """The rank-dict Arrow path and the chained-regex path are the same
-    function: identical (n_words, n_bpe_tokens, sample_tokens) per doc."""
-    from kusto_pre_forge_spark.operators.textprep import apply_bpe, train_bpe
+    function: identical (n_words, n_bpe_tokens, sample_tokens) per doc.
+    Byte-level: the chained-regex count (bpe_token_count), the rank-dict
+    apply, the document encoder and the SFT segment encoder agree on
+    every doc's token count."""
+    from kusto_pre_forge_spark.operators.corpus import sft_tokenize_mask
+    from kusto_pre_forge_spark.operators.textprep import (
+        apply_bpe,
+        bpe_encode_arrays,
+        bpe_token_count,
+        train_bpe,
+    )
 
     text = _bpe_fixture_text()
     docs = [(1, text), (2, "reformed reforming substructure"),
-            (3, "unjection  misducted\ttransgression"), (4, "zzz qqq")]
+            (3, "unjection  misducted\ttransgression"), (4, "zzz qqq"),
+            # adversarial: empty doc, literal '|', multi-byte characters
+            (5, ""), (6, "pipe|word a|b || héllo wörld € 😀 naïve"),
+            (7, "x <|endoftext|> y<|endoftext|>z")]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     merges = train_bpe(df, n_merges=120, driver_vocab_cap=100_000)
     assert len(merges) == 120
-    chained = apply_bpe(df, merges, max_chained=10_000).orderBy("doc_id").collect()
-    arrow = apply_bpe(df, merges, max_chained=0).orderBy("doc_id").collect()
+    monkeypatch.setattr(textprep, "_MAX_CHAINED_MERGES", 10_000)
+    chained = apply_bpe(df, merges).orderBy("doc_id").collect()
+    monkeypatch.setattr(textprep, "_MAX_CHAINED_MERGES", 0)
+    arrow = apply_bpe(df, merges).orderBy("doc_id").collect()
     assert [r.asDict() for r in chained] == [r.asDict() for r in arrow]
+
+    special = ["<|endoftext|>"]
+    byte_merges = train_bpe(df, n_merges=120, byte_level=True)
+    assert len(byte_merges) == 120
+    counted = {
+        r.doc_id: r.n
+        for r in df.select(
+            "doc_id", bpe_token_count(F.col("text"), byte_merges).alias("n")
+        ).collect()
+    }
+    applied = {
+        r.doc_id: r.n_bpe_tokens
+        for r in apply_bpe(df, byte_merges, byte_level=True).collect()
+    }
+    encoded = {
+        r.doc_id: len(r.ids) for r in bpe_encode_arrays(df, byte_merges).collect()
+    }
+    sft = sft_tokenize_mask(
+        df.select("doc_id", F.col("text").alias("prompt"),
+                  F.col("text").alias("response")),
+        byte_merges,
+    )
+    ids = {d for d, _ in docs}
+    assert set(counted) == set(encoded) == ids
+    assert set(applied) == ids - {5}  # the empty doc has no pre-token
+    for r in sft.collect():
+        i = r.doc_id
+        assert counted[i] == applied.get(i, 0) == encoded[i], i
+        assert r.n_prompt_tokens == r.n_response_tokens == counted[i], i
+        assert len(r.input_ids) == 2 * counted[i], i
+    assert counted[5] == 0
+    # special tokens stay one atomic token in the count and in the apply
+    counted_sp = {
+        r.doc_id: r.n
+        for r in df.select(
+            "doc_id",
+            bpe_token_count(F.col("text"), byte_merges, special).alias("n"),
+        ).collect()
+    }
+    applied_sp = {
+        r.doc_id: r.n_bpe_tokens
+        for r in apply_bpe(
+            df, byte_merges, byte_level=True, special_tokens=special
+        ).collect()
+    }
+    assert counted_sp == {i: applied_sp.get(i, 0) for i in counted_sp}
+    assert counted_sp[7] < counted[7]
 
 
 def test_apply_bpe_large_vocab_plan_depth(spark):
@@ -327,7 +388,7 @@ def test_apply_bpe_large_vocab_plan_depth(spark):
     # train to exhaustion (the fixture supports ~1.3k merges)
     merges = train_bpe(df, n_merges=5000, driver_vocab_cap=100_000)
     assert len(merges) >= 1000
-    out = apply_bpe(df, merges)  # default max_chained=256 -> Arrow path
+    out = apply_bpe(df, merges)  # past _MAX_CHAINED_MERGES -> Arrow path
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "regexp_replace" not in plan
     assert "ArrowEvalPython" in plan or "Python" in plan
@@ -494,6 +555,65 @@ def test_wordpiece_likelihood_score_differs_from_bpe():
     assert "xy" in pieces and "ab" not in pieces
     bpe = textprep._train_bpe_driver(hist, n_merges=1, min_pair_count=2)
     assert bpe[0] != ("x", "y")  # BPE's raw count prefers an a/b pair
+
+
+def _ref_wordpiece_train(word_counts, n_merges, min_pair_count=2):
+    """Independent naive WordPiece reference: recount every pair and unit
+    on each merge; best = max count(ab)/(count(a)count(b)) over pairs with
+    count >= min_pair_count, ties to the smallest pair."""
+    from collections import Counter
+
+    vocab = {tuple(w): c for w, c in word_counts if w}
+    pieces = {s for syms in vocab for s in syms}
+    for _ in range(n_merges):
+        pairs, units = Counter(), Counter()
+        for syms, c in vocab.items():
+            for s in syms:
+                units[s] += c
+            for i in range(len(syms) - 1):
+                pairs[(syms[i], syms[i + 1])] += c
+        live = [(p, n) for p, n in pairs.items() if n >= min_pair_count]
+        if not live:
+            break
+        (a, b), _ = min(
+            live,
+            key=lambda kv: (
+                -(kv[1] / (units[kv[0][0]] * units[kv[0][1]])),
+                kv[0][0],
+                kv[0][1],
+            ),
+        )
+        pieces.add(a + b)
+        merged = Counter()
+        for syms, c in vocab.items():
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+                    out.append(a + b)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            merged[tuple(out)] += c
+        vocab = merged
+    return sorted(pieces)
+
+
+def test_train_wordpiece_driver_equals_naive_reference():
+    """The incremental pair-index WordPiece trainer equals a naive
+    recount-every-merge reference at 64 merges."""
+    import re
+    from collections import Counter
+
+    hist = sorted(
+        Counter(
+            w for w in re.split(r"\s+", _bpe_fixture_text().lower()) if w
+        ).items()
+    )
+    got = textprep._train_wordpiece_driver(hist, n_merges=64)
+    want = _ref_wordpiece_train(hist, 64)
+    assert got == want
+    assert len(got) == len({c for w, _ in hist for c in w}) + 64
 
 
 def test_wordpiece_greedy_longest_match(spark):

@@ -148,7 +148,7 @@ AUDITED = [
     ("pipeline_pdf_route", "forge + parse are pure map stages; routing is one map-side-combined per-source aggregate"),
     ("text_quality_lr_train", "per-iteration sufficient-statistics aggregate over the checkpointed feature frame; driver traffic is feature-dim-bounded"),
     ("pipeline_quality_lr_filter", "learned weights applied as a pure codegen scan projection — no UDF, no model server"),
-    ("text_bpe_encode", "distinct pre-tokens encode once; order-preserving reassembly pays the one unavoidable doc-key exchange"),
+    ("text_bpe_encode", "documents encode through one Arrow map (per-batch pre-token memo), order kept by construction; the one exchange is the fan-out re-split"),
     ("pipeline_pdf_images", "forge → image walk → PNG re-container → perceptual hash fused into ONE Arrow map stage (r14) above the widen re-split"),
     ("corpus_pack_nosplit", "per-bucket sequential next-fit over (id, count) pairs; global ids via the tiny per-bucket prefix broadcast"),
     ("corpus_webdataset_roundtrip", "shard write is one applyInPandas task per shard above the bucketed prefix sum; read-back is a pure map stage"),
