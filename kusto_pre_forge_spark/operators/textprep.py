@@ -599,7 +599,7 @@ def train_bpe(
 
 def _bpe_word_encoder(
     merges: list[tuple[str, str]],
-    byte_level: bool = True,
+    byte_level: bool,
     special_tokens: frozenset[str] = frozenset(),
 ):
     """word → its final BPE symbols, applying the merge list in TRAINING
@@ -730,7 +730,7 @@ def _bpe_id_encoder(merges: list[tuple[str, str]], vocab_ids=None):
     vocab.json is AUTHORITATIVE for ids (the HF/GPT-2 contract) and
     merges.txt only ranks the merges."""
     vocab = dict(vocab_ids) if vocab_ids is not None else bpe_vocab_ids(merges)
-    symbols = _bpe_word_encoder(merges)
+    symbols = _bpe_word_encoder(merges, byte_level=True)
     return lambda w: [vocab[t] for t in symbols(w)]
 
 

@@ -289,7 +289,11 @@ class StreamingEtl:
 
     def _history(self, store_dir: str, batch_id: int, schema) -> DataFrame:
         """A batch-partitioned store MINUS this batch's own partition, or an
-        empty frame of ``schema`` while the store does not exist yet.
+        empty frame of ``schema`` while the store holds no data file yet.
+        The probe globs for partition data files, not the directory: an
+        empty batch write leaves the directory with ``_SUCCESS`` only, and
+        a crash in the first write leaves only a hidden staging directory
+        — Spark cannot infer a schema from either.
 
         Excluding the own partition (``_kpf_batch != batch_id``) is what
         makes admission replay-safe: on replay after a crash between write
@@ -297,9 +301,11 @@ class StreamingEtl:
         invisible to the decision, which therefore reproduces the original
         accept set bit-for-bit instead of rejecting every row as a
         duplicate of itself."""
-        path = self.spark._jvm.org.apache.hadoop.fs.Path(store_dir)
+        files = self.spark._jvm.org.apache.hadoop.fs.Path(
+            f"{store_dir}/_kpf_batch=*/*.parquet"
+        )
         conf = self.spark._jsc.hadoopConfiguration()
-        if not path.getFileSystem(conf).exists(path):  # first batch
+        if not files.getFileSystem(conf).globStatus(files):  # no data yet
             return self.spark.createDataFrame([], schema)
         return (
             self.spark.read.parquet(store_dir)

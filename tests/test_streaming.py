@@ -874,6 +874,38 @@ def test_streaming_exact_substr_ingest_across_batches(spark, tmp_path):
     assert one == {1, 2, 4, 6}
 
 
+def test_streaming_store_without_data_files_reads_as_empty(spark, tmp_path):
+    """A store directory with no data file yet is empty history, not a
+    read failure: a first exact-substr batch of docs shorter than the
+    window leaves ``wins`` without a parquet file, and a crash in a first
+    write leaves only a hidden staging directory. The next batch admits."""
+    etl = StreamingEtl(
+        spark,
+        str(tmp_path / "land_unused"),
+        str(tmp_path / "ckpt_unused"),
+        str(tmp_path / "out_unused"),
+        DOC_SCHEMA,
+    )
+    corpus_dir = str(tmp_path / "short_first")
+    short = spark.createDataFrame([(1, "too short"), (2, "")], DOC_SCHEMA)
+    assert etl.exact_substr_ingest_batch(short, 0, corpus_dir) == 2
+    long = spark.createDataFrame(
+        [(3, "alpha bravo charlie delta echo foxtrot golf hotel india")],
+        DOC_SCHEMA,
+    )
+    assert etl.exact_substr_ingest_batch(long, 1, corpus_dir) == 1
+    again = spark.createDataFrame(
+        [(4, "xray alpha bravo charlie delta echo foxtrot golf hotel")],
+        DOC_SCHEMA,
+    )
+    assert etl.exact_substr_ingest_batch(again, 2, corpus_dir) == 0
+
+    crashed_dir = tmp_path / "crashed_first"
+    (crashed_dir / ".spark-staging-0" / "_kpf_batch=0").mkdir(parents=True)
+    docs = spark.createDataFrame([(1, "a b c"), (2, "d e f")], DOC_SCHEMA)
+    assert etl.dedup_ingest_batch(docs, 0, str(crashed_dir)) == 2
+
+
 def test_incremental_substr_accept_threshold(spark):
     """max_dup_windows tolerates that many foreign windows before
     rejecting — the knob between strict ExactSubstr (0) and quote-
