@@ -37,7 +37,7 @@ from __future__ import annotations
 import os
 from collections.abc import Mapping
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 WS_RE = r"\s+"
@@ -110,11 +110,10 @@ def corpus_shuffle(
        stream out of the sort in order; ``mid - (pid << 33)`` is the
        0-based index within the partition) — no second window, no second
        shuffle of the data;
-    3. per-partition row counts (tiny aggregate: one row per partition),
-       exclusive-prefix-summed by partition id — the only unpartitioned
-       window runs over those O(num_partitions) rows, the same legitimate
-       tiny-side window as ``plans/split.py:shard_assign``;
-    4. broadcast the base offsets back: ``position = base + intra``.
+    3. ``plans/split.py:prefix_bases`` over per-partition row counts
+       (one row per partition) gives each partition its base offset —
+       the only unpartitioned window runs over those O(num_partitions)
+       rows, and the bases broadcast back: ``position = base + intra``.
 
     The range exchange feeds both the counts and the join probe; AQE
     stage reuse dedupes them when the branches canonicalize equal, and
@@ -123,7 +122,7 @@ def corpus_shuffle(
     pass. For a file export, prefer writing the sorted frame with
     per-file ordering instead of materializing positions.
     """
-    from pyspark.sql import Window
+    from kusto_pre_forge_spark.plans.split import prefix_bases
 
     k = F.col(key) if isinstance(key, str) else key
     h = _hash_unit(k.cast("string"), salt)
@@ -141,14 +140,8 @@ def corpus_shuffle(
             F.monotonically_increasing_id() - F.shiftleft(F.col("_kpf_pid"), 33),
         )
     )
-    counts = t.groupBy("_kpf_pid").agg(F.count(F.lit(1)).alias("_kpf_n"))
-    w_prefix = Window.orderBy("_kpf_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_kpf_pid",
-        F.coalesce(F.sum("_kpf_n").over(w_prefix), F.lit(0)).alias("_kpf_base"),
-    )
     return (
-        t.join(F.broadcast(offsets), "_kpf_pid")
+        prefix_bases(t, "_kpf_pid", {"_kpf_base": F.count(F.lit(1))})
         .withColumn(position_col, F.col("_kpf_base") + F.col("_kpf_intra"))
         .drop("_kpf_pid", "_kpf_intra", "_kpf_base", "_kpf_h", "_kpf_k")
     )
@@ -212,9 +205,11 @@ def sequence_pack(
     Plan — the same distributed prefix sum as ``keyed_shard_assign``
     (plans/split.py): bucket by the leading hash digits (bucket boundaries
     respect the (hash, key) order by construction), per-bucket token
-    subtotals, exclusive prefix over the tiny subtotal table, broadcast
-    the base offsets back, within-bucket running sum. Never a
-    whole-corpus window; one hash exchange on the bucket key.
+    subtotals, one exclusive-prefix window over that subtotal table (one
+    row per bucket — the only single-partition exchange, and it sits
+    above an aggregate), broadcast the base offsets back, within-bucket
+    running sum. Never a whole-corpus window; one hash exchange on the
+    bucket key.
 
     ``token_counter`` makes the offsets tokenizer-TRUE: a callable
     mapping the text Column to a per-document token-count Column —
@@ -501,14 +496,16 @@ def sequence_pack_nosplit(
     :func:`sequence_pack`); the next-fit walk is inherently sequential
     so it runs PER BUCKET inside one ``applyInPandas`` (each bucket's
     docs sorted by (hash, id) — a few MB of (id, count) pairs per task,
-    never the text); per-bucket sequence counts then take the same tiny
-    exclusive-prefix broadcast as the keyed prefix sum, so sequence ids
-    are globally dense without any whole-corpus pass. Returns
+    never the text); per-bucket sequence counts then go through
+    ``plans/split.py:prefix_bases`` like the keyed prefix sum, so
+    sequence ids are globally dense without any whole-corpus pass. Returns
     (id, n_tokens, seq_id, overflow).
 
     ``token_counter`` as in :func:`sequence_pack` (tokenizer-true
     offsets)."""
     import pandas as pd
+
+    from kusto_pre_forge_spark.plans.split import prefix_bases
 
     k = F.col(id_col).cast("string")
     h = _hash_unit(k, salt)
@@ -551,24 +548,8 @@ def sequence_pack_nosplit(
         "_seq_local long, _bucket_seqs long",
     )
     packed = packed.localCheckpoint(eager=False)
-    counts = (
-        packed.groupBy("_bucket")
-        .agg(F.max("_bucket_seqs").alias("_n"))
-        .withColumn(
-            "_base",
-            F.coalesce(
-                F.sum("_n").over(
-                    Window.orderBy("_bucket").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("_bucket", "_base")
-    )
     return (
-        packed.join(F.broadcast(counts), "_bucket")
+        prefix_bases(packed, "_bucket", {"_base": F.max("_bucket_seqs")})
         .select(
             F.col(id_col),
             F.col("n_tokens"),

@@ -1458,13 +1458,13 @@ def scan_accumulate(
     unpartitioned window would serialize the corpus through one reducer;
     instead the global form is the classic two-phase distributed prefix
     sum (the split.py shard-assignment pattern): range-repartition by
-    the order keys (pins the global order across partitions), one
-    per-partition window for the three running totals (value, restart
-    flags, row count) in parallel, a TINY per-partition subtotal
-    aggregate whose exclusive prefix (a bounded single-partition window
-    over #partitions rows) broadcasts each partition its bases, then a
-    per-segment min-join rebases the running sum at each restart. Every
-    full-data exchange is range/hash — never SinglePartition. The
+    the order keys (pins the global order across partitions),
+    ``plans/split.py:prefix_bases`` over the three per-partition
+    subtotals (value, restart flags, row count — its single-partition
+    window sees #partitions rows) broadcasts each partition its bases,
+    one per-partition window adds the three running totals in parallel,
+    then a per-segment min-join rebases the running sum at each restart.
+    Every full-data exchange is range/hash — never SinglePartition. The
     repartitioned frame and the windowed frame are PINNED
     (:func:`materialize` — the fork convention): each has multiple
     consumers, and without the pin the scan + range exchange replay
@@ -1475,6 +1475,8 @@ def scan_accumulate(
     """
     cols = [_c(c) for c in order]
     if not by:
+        from kusto_pre_forge_spark.plans.split import prefix_bases
+
         t = df.repartitionByRange(*cols).withColumn(
             "_kpf_pid", F.spark_partition_id()
         )
@@ -1482,21 +1484,11 @@ def scan_accumulate(
             "_kpf_v": _c(value),
             "_kpf_f": F.when(restart, 1).otherwise(0),
         }))
-        part_sums = t.groupBy("_kpf_pid").agg(
-            F.sum("_kpf_v").alias("_kpf_sv"),
-            F.sum("_kpf_f").alias("_kpf_sf"),
-            F.count(F.lit(1)).alias("_kpf_sn"),
-        )
-        w_prev = Window.orderBy("_kpf_pid").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        bases = part_sums.select(
-            "_kpf_pid",
-            F.coalesce(F.sum("_kpf_sv").over(w_prev), F.lit(0)).alias("_kpf_bv"),
-            F.coalesce(F.sum("_kpf_sf").over(w_prev), F.lit(0)).alias("_kpf_bf"),
-            F.coalesce(F.sum("_kpf_sn").over(w_prev), F.lit(0)).alias("_kpf_bn"),
-        )
-        t = t.join(F.broadcast(bases), "_kpf_pid")
+        t = prefix_bases(t, "_kpf_pid", {
+            "_kpf_bv": F.sum("_kpf_v"),
+            "_kpf_bf": F.sum("_kpf_f"),
+            "_kpf_bn": F.count(F.lit(1)),
+        })
         w_in = Window.partitionBy("_kpf_pid").orderBy(*cols).rowsBetween(
             Window.unboundedPreceding, 0
         )
@@ -2908,8 +2900,7 @@ def autocluster(
     # Exchange SinglePartition, and the repo's plan-shape guard
     # (tests/test_planshape.py) stays strictest if no query needs an
     # allowlist. rank(x) = 1 + |{y : y sorts before x}| via a broadcast
-    # non-equi self-join over the tiny pattern set — the same shape as
-    # plans/split.py's super-bucket base resolution, O(p²) comparisons on
+    # non-equi self-join over the tiny pattern set, O(p²) comparisons on
     # O(p) aggregate rows.
     l, r = out.alias("l"), out.alias("r")
     lc, rc = (lambda c: F.col(f"l.{c}")), (lambda c: F.col(f"r.{c}"))
@@ -4212,25 +4203,29 @@ def ipv4_lookup(
 # per-row py4j). Malformed input → NULL, matching KQL's empty-on-error.
 
 
-def _b64_codec_udf(transform, name: str):
+def _null_safe_udf(transform, name: str, return_type: str = "string"):
+    """Series-to-Series pandas_udf applying ``transform`` to each non-null
+    value; a value ``transform`` raises on becomes NULL."""
+    import pandas as pd
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.pandas.functions import PandasUDFType
 
-    # explicit SCALAR eval type: `from __future__ import annotations`
-    # makes pd.Series hints unresolvable strings for the hint inspector
-    def codec(s):
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return transform(v)
-            except Exception:
-                return None
+    def one(v):
+        if v is None:
+            return None
+        try:
+            return transform(v)
+        except Exception:
+            return None
 
+    def batch(s):
         return s.map(one)
 
-    codec.__name__ = name
-    return pandas_udf(codec, "string", PandasUDFType.SCALAR)
+    batch.__name__ = name
+    # the hints as classes, not the strings `from __future__ import
+    # annotations` leaves: "pd.Series" would not resolve in this module's
+    # globals, where pandas is not imported
+    batch.__annotations__ = {"s": pd.Series, "return": pd.Series}
+    return pandas_udf(batch, return_type)
 
 
 def zlib_compress_to_base64_string(col: Column | str) -> Column:
@@ -4238,7 +4233,7 @@ def zlib_compress_to_base64_string(col: Column | str) -> Column:
     import base64
     import zlib
 
-    f = _b64_codec_udf(
+    f = _null_safe_udf(
         lambda v: base64.b64encode(zlib.compress(v.encode("utf-8"), 6)).decode(),
         "zlib_b64",
     )
@@ -4251,7 +4246,7 @@ def zlib_decompress_from_base64_string(col: Column | str) -> Column:
     import base64
     import zlib
 
-    f = _b64_codec_udf(
+    f = _null_safe_udf(
         lambda v: zlib.decompress(base64.b64decode(v, validate=True)).decode("utf-8"),
         "zlib_unb64",
     )
@@ -4272,7 +4267,7 @@ def gzip_compress_to_base64_string(col: Column | str) -> Column:
             g.write(v.encode("utf-8"))
         return base64.b64encode(buf.getvalue()).decode()
 
-    return _b64_codec_udf(enc, "gzip_b64")(_c(col))
+    return _null_safe_udf(enc, "gzip_b64")(_c(col))
 
 
 def gzip_decompress_from_base64_string(col: Column | str) -> Column:
@@ -4281,7 +4276,7 @@ def gzip_decompress_from_base64_string(col: Column | str) -> Column:
     import base64
     import gzip
 
-    f = _b64_codec_udf(
+    f = _null_safe_udf(
         lambda v: gzip.decompress(base64.b64decode(v, validate=True)).decode("utf-8"),
         "gzip_unb64",
     )
@@ -5084,44 +5079,16 @@ def gamma_kql(col: Column | str) -> Column:
     NULL (KQL renders NaN/inf)."""
     import math
 
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.pandas.functions import PandasUDFType
-
-    def f(s):
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return math.gamma(float(v))
-            except (ValueError, OverflowError):
-                return None
-
-        return s.map(one)
-
-    f.__name__ = "gamma_kql"
-    return pandas_udf(f, "double", PandasUDFType.SCALAR)(_c(col))
+    f = _null_safe_udf(lambda v: math.gamma(float(v)), "gamma_kql", "double")
+    return f(_c(col))
 
 
 def loggamma(col: Column | str) -> Column:
     """KQL ``loggamma(x)`` — ln|Γ(x)| via ``math.lgamma`` (Arrow batch)."""
     import math
 
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.pandas.functions import PandasUDFType
-
-    def f(s):
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return math.lgamma(float(v))
-            except (ValueError, OverflowError):
-                return None
-
-        return s.map(one)
-
-    f.__name__ = "loggamma"
-    return pandas_udf(f, "double", PandasUDFType.SCALAR)(_c(col))
+    f = _null_safe_udf(lambda v: math.lgamma(float(v)), "loggamma", "double")
+    return f(_c(col))
 
 
 def exp2(col: Column | str) -> Column:

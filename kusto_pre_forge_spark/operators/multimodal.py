@@ -659,6 +659,13 @@ def decode_audio_features(
 DHASH_SCHEMA = "doc_id long, dhash long, width int, height int"
 
 
+def _int64_col(rows: list[dict], key: str) -> pd.arrays.IntegerArray:
+    """Nullable Int64 built straight from the Python ints: via float64
+    (what pandas infers once a None sits in the column) a 64-bit hash
+    above 2^53 would lose its low bits."""
+    return pd.array([r[key] for r in rows], dtype="Int64")
+
+
 def image_dhash(
     df: DataFrame,
     blob_col: str = "blob",
@@ -726,7 +733,7 @@ def image_dhash(
                     }
                 )
             out = pd.DataFrame(rows, columns=["doc_id", "dhash", "width", "height"])
-            out["dhash"] = out["dhash"].astype("Int64")
+            out["dhash"] = _int64_col(rows, "dhash")
             yield out
 
     return df.select(F.col(id_col), F.col(blob_col)).mapInPandas(
@@ -832,7 +839,7 @@ def image_phash(
             out = pd.DataFrame(
                 rows, columns=["doc_id", "phash", "width", "height"]
             )
-            out["phash"] = out["phash"].astype("Int64")
+            out["phash"] = _int64_col(rows, "phash")
             yield out
 
     return df.select(F.col(id_col), F.col(blob_col)).mapInPandas(
@@ -910,7 +917,7 @@ def audio_fingerprint(
             out = pd.DataFrame(
                 rows, columns=["doc_id", "afp", "sample_rate", "n_samples"]
             )
-            out["afp"] = out["afp"].astype("Int64")
+            out["afp"] = _int64_col(rows, "afp")
             out["sample_rate"] = out["sample_rate"].astype("Int32")
             out["n_samples"] = out["n_samples"].astype("Int64")
             yield out

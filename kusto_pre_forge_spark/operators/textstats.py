@@ -1924,7 +1924,6 @@ def hashed_text_embedding(
     rounding needed for cross-engine replay."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.pandas.functions import PandasUDFType
 
     d = hashed_text_features(df, text_col, None, dim, salt)
     dim = int(dim)
@@ -1941,7 +1940,10 @@ def hashed_text_embedding(
             out.append((c / nrm).tolist() if nrm > 0 else c.tolist())
         return pd.Series(out)
 
-    _emb = pandas_udf(_emb_batch, "array<double>", PandasUDFType.SCALAR)
+    # hints as classes: under `from __future__ import annotations` the
+    # string "pd.Series" would not resolve, pandas being imported locally
+    _emb_batch.__annotations__ = {"idxs": pd.Series, "return": pd.Series}
+    _emb = pandas_udf(_emb_batch, "array<double>")
 
     return d.select(
         F.col(id_col),

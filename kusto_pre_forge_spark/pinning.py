@@ -5,8 +5,8 @@ consumers (both sides of a self-join, a sizes aggregate, a payload fetch).
 Catalyst's column pruning specializes each consumer's subtree, the subplans
 stop being identical, and ReuseExchange no longer collapses them — the
 executed plan recomputes the expensive upstream stage once PER CONSUMER
-(observed: 4 source scans + 4 Arrow round-trips in minhash_lsh_pairs, 14
-parquet scans in keyed_shard_assign before pinning).
+(observed: 4 source scans + 4 Arrow round-trips in minhash_lsh_pairs
+before pinning).
 
 The pin inserts an ``InMemoryRelation`` at that point in the plan, so every
 consumer reads the same cached frame and the upstream stage runs once.

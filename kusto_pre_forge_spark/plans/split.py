@@ -23,13 +23,14 @@ Scale: the cumulative byte count is a two-phase distributed prefix sum —
 per-file-split subtotals, an exclusive prefix over that tiny aggregate,
 then within-split running sums in parallel — so a single huge blob is
 sharded by ALL its splits' tasks, not serialized onto one reducer (see
-shard_assign). Across blobs it is embarrassingly parallel, and no window
-ever partitions on the bare source column. No driver-side iteration over
-rows.
+prefix_bases and shard_assign). Across blobs it is embarrassingly
+parallel, and no window ever partitions on the bare source column. No
+driver-side iteration over rows.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -91,6 +92,36 @@ def peel_header(lines: DataFrame) -> tuple[DataFrame, DataFrame]:
     return headers, body
 
 
+def prefix_bases(
+    t: DataFrame,
+    key: str,
+    subtotals: dict[str, Column],
+    by: Sequence[str] = (),
+) -> DataFrame:
+    """Join each row of ``t`` to the exclusive prefix of its group's subtotals.
+
+    The middle of every two-phase distributed prefix sum here: group ``t``
+    by ``(*by, key)`` into the named ``subtotals`` aggregates, sum each
+    one over the preceding ``key`` values within its ``by`` group (0 for
+    the first), and broadcast-join those bases back onto ``t`` under the
+    same names. The caller finishes with a running sum inside each
+    ``(*by, key)`` group.
+
+    The window runs over the subtotal table (one row per group), never
+    over data rows; with ``by=()`` it is a single-partition window fed by
+    an aggregate. Callers keep ``key`` bounded: input splits, hash buckets
+    or partition ids.
+    """
+    keys = [*by, key]
+    sums = t.groupBy(*keys).agg(*(c.alias(name) for name, c in subtotals.items()))
+    w = Window.partitionBy(*by).orderBy(key).rowsBetween(Window.unboundedPreceding, -1)
+    bases = sums.select(
+        *keys,
+        *(F.coalesce(F.sum(name).over(w), F.lit(0)).alias(name) for name in subtotals),
+    )
+    return t.join(F.broadcast(bases), keys)
+
+
 def shard_assign(
     body: DataFrame,
     max_bytes_per_shard: int,
@@ -118,13 +149,11 @@ def shard_assign(
     # Distributed prefix sum. A single window `partitionBy(source)
     # orderBy(order)` would gather EVERY row of a blob onto one reducer —
     # the per-source cumulative count would serialize a 1 TB blob onto a
-    # single task at 100 TB. Instead, the classic two-phase form:
-    #   1. per (source, input split) byte subtotals — a tiny aggregate,
-    #      one row per file split (O(data / maxPartitionBytes) rows);
-    #   2. exclusive prefix of the subtotals per source — a window over
-    #      the TINY aggregate, giving each split its base byte offset;
-    #   3. broadcast the offsets back; within-split running sum is a
-    #      window partitioned by (source, split) — parallel across splits.
+    # single task at 100 TB. Instead, the two-phase form: each (source,
+    # input split) gets its base byte offset from `prefix_bases` (one
+    # subtotal row per file split, O(data / maxPartitionBytes) rows), then
+    # the within-split running sum is a window partitioned by (source,
+    # split) — parallel across splits.
     # Cross-split order comes from the split's REAL in-file byte offset
     # (_metadata.file_block_start captured by read_lines) — robust to
     # FilePartition packing order, which sorts splits length-descending
@@ -137,30 +166,13 @@ def shard_assign(
         # physical partition id, valid when order_col's high bits encode it
         t = body.withColumn("_kpf_split", F.spark_partition_id())
 
-    split_sums = t.groupBy(SOURCE_COL, "_kpf_split").agg(
-        F.sum(rec_bytes).alias("_kpf_split_bytes")
+    t = prefix_bases(
+        t, "_kpf_split", {"_kpf_base": F.sum(rec_bytes)}, by=[SOURCE_COL]
     )
-    w_prefix = (
-        Window.partitionBy(SOURCE_COL)
-        .orderBy("_kpf_split")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = split_sums.select(
-        SOURCE_COL,
-        "_kpf_split",
-        F.coalesce(F.sum("_kpf_split_bytes").over(w_prefix), F.lit(0)).alias(
-            "_kpf_base"
-        ),
-    )
-
     w_in = Window.partitionBy(SOURCE_COL, "_kpf_split").orderBy(order_col)
     cum_before = F.col("_kpf_base") + F.sum(rec_bytes).over(w_in) - rec_bytes
     shard_num = F.floor(cum_before / F.lit(max_bytes_per_shard)).cast("int")
-    df = (
-        t.join(F.broadcast(offsets), [SOURCE_COL, "_kpf_split"])
-        .withColumn("_kpf_shard_num", shard_num)
-        .drop("_kpf_split", "_kpf_base")
-    )
+    df = t.withColumn("_kpf_shard_num", shard_num).drop("_kpf_split", "_kpf_base")
 
     # last-shard flag via a per-source max aggregate (broadcast back) —
     # same reasoning: never a whole-source window over data rows
@@ -193,96 +205,34 @@ def keyed_shard_assign(
     caller guarantees bucket boundaries respect ``order_cols`` order (every
     row of bucket i sorts before every row of bucket i+1); the result then
     equals the single global window ``floor(cum_bytes_before / cap)``
-    without ever gathering the table onto one reducer:
+    without ever gathering the table onto one reducer.
 
-      1. per-bucket byte subtotals — a tiny map-side-combinable aggregate;
-      2. exclusive prefix over the subtotals — a window over the TINY
-         aggregate (one row per bucket);
-      3. broadcast the base offsets back; the within-bucket running sum is
-         a window partitioned by bucket — parallel across buckets.
+    ``prefix_bases`` gives each bucket its base offset (one subtotal row
+    per bucket, so keep the bucket count bounded); the within-bucket
+    running sum is then a window partitioned by bucket — parallel across
+    buckets.
     """
     t = df.withColumn("_kpf_bucket", bucket).withColumn("_kpf_rec_bytes", rec_bytes)
     # One explicit hash exchange on the bucket key, reused by the subtotal
-    # aggregate, the offsets join, AND the within-bucket window (all need
-    # clustering on _kpf_bucket). The explicit count also defeats the AQE
-    # byte-based coalescer, which would funnel this small-bytes-per-row
+    # aggregate AND the within-bucket window (both need clustering on
+    # _kpf_bucket). The explicit count also defeats the AQE byte-based
+    # coalescer, which would funnel this small-bytes-per-row
     # shuffle into one task and serialize the sort.
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     t = t.repartition(n_parts, "_kpf_bucket")
-    bucket_sums = t.groupBy("_kpf_bucket").agg(
-        F.sum("_kpf_rec_bytes").alias("_kpf_bucket_bytes")
-    )
-    # Pin the subtotals: the prefix machinery below reuses bucket_sums in
-    # several branches (within-super window, super totals, the non-equi
-    # base join), and each reuse would otherwise recompute the FULL input
-    # scan + record-byte projection (observed: 14 parquet scans of the data
-    # for one shard assignment). The lazy persist pins the bucket-sized
-    # aggregate — O(#buckets) rows distributed across executors — so the
-    # raw data is read exactly twice: once for subtotals, once for the
-    # final row-level join. Lazy + lineage-keeping: no materialization job
-    # up front (round 2's eager localCheckpoint put a full extra pass on
-    # the one-shot critical path, +95% on shard_assign), and executor loss
-    # recomputes instead of failing.
-    from kusto_pre_forge_spark.pinning import pin
-
-    bucket_sums = pin(bucket_sums)
-    # Exclusive prefix over the bucket subtotals WITHOUT an unpartitioned
-    # window (Catalyst folds literal partition keys away, and a bare
-    # orderBy window funnels everything to one reducer): group buckets
-    # into super-buckets of SUPER, prefix within each super-bucket via a
-    # properly-partitioned window, and resolve cross-super bases with a
-    # broadcast non-equi self-join over the (tiny) super totals —
-    # O(#buckets) + O((#buckets/SUPER)²) work, all parallel.
-    SUPER = 1024
-    bs = bucket_sums.withColumn(
-        "_kpf_super", F.floor(F.col("_kpf_bucket") / F.lit(SUPER))
-    )
-    w_within = (
-        Window.partitionBy("_kpf_super")
-        .orderBy("_kpf_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    within = bs.withColumn(
-        "_kpf_wbase",
-        F.coalesce(F.sum("_kpf_bucket_bytes").over(w_within), F.lit(0)),
-    )
-    super_tot = bs.groupBy("_kpf_super").agg(
-        F.sum("_kpf_bucket_bytes").alias("_kpf_super_bytes")
-    )
-    sbase = (
-        super_tot.select("_kpf_super")
-        .join(
-            F.broadcast(
-                super_tot.select(
-                    F.col("_kpf_super").alias("_kpf_super_lt"), "_kpf_super_bytes"
-                )
-            ),
-            F.col("_kpf_super_lt") < F.col("_kpf_super"),
-            "left",
-        )
-        .groupBy("_kpf_super")
-        .agg(F.coalesce(F.sum("_kpf_super_bytes"), F.lit(0)).alias("_kpf_sbase"))
-    )
-    offsets = (
-        within.join(F.broadcast(sbase), "_kpf_super")
-        .select(
-            "_kpf_bucket",
-            (F.col("_kpf_wbase") + F.col("_kpf_sbase")).alias("_kpf_base"),
-        )
-    )
+    t = prefix_bases(t, "_kpf_bucket", {"_kpf_base": F.sum("_kpf_rec_bytes")})
     w_in = Window.partitionBy("_kpf_bucket").orderBy(*order_cols)
     cum_before = (
         F.col("_kpf_base")
         + F.sum("_kpf_rec_bytes").over(w_in)
         - F.col("_kpf_rec_bytes")
     )
-    out = t.join(F.broadcast(offsets), "_kpf_bucket")
     if start_col is not None:
         # expose the exclusive running total itself (`sequence_pack` needs
         # the token offset, not just the shard id)
-        out = out.withColumn(start_col, cum_before.cast("long"))
+        t = t.withColumn(start_col, cum_before.cast("long"))
         cum_before = F.col(start_col)
-    return out.withColumn(
+    return t.withColumn(
         shard_col, F.floor(cum_before / F.lit(max_bytes_per_shard)).cast("int")
     ).drop("_kpf_bucket", "_kpf_base", "_kpf_rec_bytes")
 

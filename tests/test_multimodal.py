@@ -256,6 +256,22 @@ def test_image_dhash_real_pixels(spark):
     assert (out[1].width, out[1].height) == (w, h)
 
 
+def test_image_dhash_keeps_low_bits_beside_null_hash(spark):
+    """A NULL hash in the same batch must not push a hash of magnitude
+    >= 2^53 through float64: gradients on the top and bottom rows set
+    bits 63-56 and 7-0, and bit 0 has to survive."""
+    from kusto_pre_forge_spark.operators import mediacodec, multimodal
+
+    w, h = 18, 8
+    grad, flat = bytes(x * 14 for x in range(w)), bytes([128]) * w
+    png = mediacodec.encode_png(w, h, grad + flat * (h - 2) + grad, 1)
+    df = spark.createDataFrame(
+        [(1, png), (2, b"not a png")], "doc_id long, blob binary"
+    ).coalesce(1)
+    out = {r.doc_id: r.dhash for r in multimodal.image_dhash(df).collect()}
+    assert out == {1: (0xFF << 56 | 0xFF) - (1 << 64), 2: None}
+
+
 def test_audio_fingerprint_real_wav(spark):
     from kusto_pre_forge_spark.operators import mediacodec, multimodal
 

@@ -139,9 +139,11 @@ def test_shard_assign_distributed_equals_single_window(spark, tmp_path):
         assert r[split_mod.LAST_SHARD_COL] == (r[split_mod.SHARD_COL] == mx)
 
 
-def test_keyed_shard_assign_equals_global_window(spark):
+@pytest.mark.parametrize("width", [100, 2])  # 50 buckets; 2,500 buckets
+def test_keyed_shard_assign_equals_global_window(spark, width):
     """The bucketed two-phase prefix sum must equal the naive global
-    cumulative-sum window, including non-contiguous and skewed buckets."""
+    cumulative-sum window, including non-contiguous and skewed buckets
+    and thousands of buckets."""
     from pyspark.sql import Window
 
     rows = [(i * 7 % 5000, i % 13, 10 + (i * 31 % 97)) for i in range(3000)]
@@ -150,7 +152,7 @@ def test_keyed_shard_assign_equals_global_window(spark):
         split_mod.keyed_shard_assign(
             df,
             order_cols=["k", "sub"],
-            bucket=F.floor(F.col("k") / F.lit(100)),
+            bucket=F.floor(F.col("k") / F.lit(width)),
             rec_bytes=F.col("nb"),
             max_bytes_per_shard=997,
         )

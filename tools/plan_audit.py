@@ -30,7 +30,7 @@ AUDITED = [
     ("q3_revenue_topk", "dimension sides broadcast; fact table never build-side"),
     ("q5_nation_revenue", "multi-join keeps small dims broadcast"),
     ("prepartition_events", "one hash exchange total (the scatter IS the shuffle)"),
-    ("shard_assign", "one explicit exchange reused by aggregate/join/window"),
+    ("shard_assign", "one explicit bucket exchange over data reused by the subtotal aggregate and the within-bucket window; SinglePartition only above the per-bucket subtotals (prefix_bases)"),
     ("dedup_minhash", "band join shuffles band keys, not documents; signature above the exchange"),
     ("similarity_topk", "BroadcastNestedLoopJoin by construction (queries broadcast)"),
     ("contamination_check", "benchmark n-gram side broadcast; corpus side never sort-merged"),
@@ -45,7 +45,7 @@ AUDITED = [
     ("dedup_embedding_clusters", "LSH candidate pairs feed CC; no all-pairs join, no whole-corpus window"),
     ("kql_partition_apply", "per-key apply stays one hash exchange on the partition key"),
     ("corpus_split", "zero exchanges — split assignment is a pure scan + projection"),
-    ("corpus_pack", "keyed prefix sum: one bucket exchange over data; windows stay bucket-partitioned"),
+    ("corpus_pack", "keyed prefix sum: one bucket exchange over data; the within-bucket window stays bucket-partitioned, the one prefix window runs over the per-bucket subtotals"),
     ("corpus_line_dedup", "df-aggregate + anti-join before the one reassembly exchange on the doc id"),
     ("kql_series_fit", "2-line scan is one window pass per series key, not an O(n²) fold"),
     ("sequence_detect", "per-step joins stay on the actor key; no window over the event stream"),
@@ -151,10 +151,10 @@ AUDITED = [
     ("text_bpe_encode", "documents encode through one Arrow map (per-batch pre-token memo), order kept by construction; the one exchange is the fan-out re-split"),
     ("pipeline_pdf_images", "forge → image walk → PNG re-container → perceptual hash fused into ONE Arrow map stage (r14) above the widen re-split"),
     ("corpus_pack_nosplit", "per-bucket sequential next-fit over (id, count) pairs; global ids via the tiny per-bucket prefix broadcast"),
-    ("corpus_webdataset_roundtrip", "shard write is one applyInPandas task per shard above the bucketed prefix sum; read-back is a pure map stage"),
+    ("corpus_webdataset_roundtrip", "shard write is one applyInPandas task per shard above the keyed prefix sum (one prefix window over per-bucket subtotals); read-back is a pure map stage"),
     ("pipeline_pdf_ocr", "forge → image walk → PNG → stub transcription fused into ONE Arrow map stage (r14); the recognition model is the only stubbed step"),
     ("layout_compact_roundtrip", "metadata-only sizing; the rewrite is one repartition + write; read-back scans ONE compacted file"),
-    ("corpus_pack_materialize", "docs explode to array SLICES per overlapped sequence (constant fan-out) above the keyed prefix sum; one per-sequence aggregate"),
+    ("corpus_pack_materialize", "docs explode to array SLICES per overlapped sequence (constant fan-out) above the keyed prefix sum (one prefix window over per-bucket subtotals, no pinned subtotals); one per-sequence aggregate"),
     ("corpus_version_diff", "both snapshots reduce to (id, md5) before the full-outer join — text never shuffles"),
     ("corpus_datacard", "one map-side-combined aggregate + the tiny digest aggregate; output is a single stats row"),
     ("epub_text_extract", "forge + OCF spine resolution are pure map stages above the widen re-split"),
