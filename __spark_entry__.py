@@ -3895,7 +3895,7 @@ def _q_corpus_webdataset_roundtrip(spark, sf):
     out = os.path.join(tempfile.gettempdir(), f"kpf-wds-{tag}")
     shutil.rmtree(out, ignore_errors=True)
     write_webdataset(d, out, max_members_per_shard=256).collect()
-    back = A.read_text_auto_stream(spark, out + "/*.tar")
+    back = A.read_text_auto(spark, out + "/*.tar")
     return back.select(
         F.regexp_extract("_kpf_source", r"!([0-9]+)\.txt$", 1)
         .cast("long")
@@ -9061,12 +9061,14 @@ def _warc_oracle_sql() -> str:
     record-forging code (probed once here — head bytes + body-length
     digit count + body bytes), and the fixture constants (status 200,
     the fixed WARC-Date)."""
+    import io
+
     from kusto_pre_forge_spark.sources.warc import (
-        iter_warc_records,
+        iter_warc_records_from,
         warc_record_bytes,
     )
 
-    hdrs, _ = next(iter_warc_records(warc_record_bytes("x", b"")))
+    hdrs, _ = next(iter_warc_records_from(io.BytesIO(warc_record_bytes("x", b""))))
     base0 = int(hdrs["content-length"])  # head with 'Content-Length: 0'
     return (
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, "

@@ -112,7 +112,7 @@ def write_webdataset(
         shard = int(pdf["_shard"].iloc[0])
         # executor-side too: on a multi-node cluster the driver's
         # makedirs touched a different machine (out_dir must be shared
-        # storage — the read_blobs_via_paths worker-fs contract)
+        # storage — the blob.worker_local_path worker-fs contract)
         os.makedirs(out_dir, exist_ok=True)
         path = os.path.join(out_dir, f"shard-{shard:06d}.tar")
         tmp = path + ".inprogress"

@@ -22,7 +22,7 @@ Kinds and routing:
 - ``mediawiki`` — a ``<mediawiki`` XML export root (Wikipedia dumps;
   bz2/gzip peel first) → page wikitexts joined with form feeds, RAW —
   chain ``textprep.wikitext_extract`` Spark-side; per-page rows via
-  ``sources.mediawiki.read_mediawiki`` / ``read_mediawiki_stream``
+  ``sources.mediawiki.read_mediawiki``
 - ``text``  — decodes as UTF-8 → passes through
 - ``binary``— everything else → NULL text (images/media route to the
   ``multimodal`` family instead)
@@ -33,15 +33,18 @@ Spark) inside one Arrow ``mapInPandas`` stage; nothing shuffles.
 
 from __future__ import annotations
 
-import bz2
-import gzip
 import io
-import lzma
 import tarfile
 import zipfile
-import zlib
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kusto_pre_forge_spark.sources.blob import (
+    DECODE_ERRORS,
+    map_blobs,
+    open_decompressed,
+    read_blobs,
+)
 
 AUTOEXTRACT_DDL = "kind string, text string, _kpf_source string"
 
@@ -53,16 +56,6 @@ PAGE_SEP = "\x0c"  # form feed between PDF pages / WARC records
 #: error and never a silent total drop.
 MAX_ARCHIVE_MEMBERS = 10_000
 MAX_ARCHIVE_BYTES = 1 << 30  # 1 GiB decompressed per archive
-
-#: whole-blob decompressors the peel step dispatches on (bz2 is what
-#: Wikimedia dumps actually ship; bz2.decompress raises ValueError on
-#: garbage, folded into the quarantine catch)
-_DECOMPRESS = {
-    "gzip": gzip.decompress,
-    "bz2": bz2.decompress,
-    "xz": lzma.decompress,
-}
-
 
 def py7zr_available() -> bool:
     """True when the ``py7zr`` wheel is importable — the zstd/pyav
@@ -158,9 +151,17 @@ def _zstd_decompress(data: bytes) -> bytes:
 
 def _peelable_kinds() -> tuple[str, ...]:
     if zstd_available():
-        _DECOMPRESS.setdefault("zstd", _zstd_decompress)
         return ("gzip", "bz2", "xz", "zstd")
     return ("gzip", "bz2", "xz")
+
+
+def _peel(kind: str, data: bytes) -> bytes:
+    """Whole-blob decompression of a blob sniffed as ``kind`` (one of
+    :func:`_peelable_kinds`): zstd behind its valve, the rest through
+    the shared ``blob.open_decompressed`` opener."""
+    if kind == "zstd":
+        return _zstd_decompress(data)
+    return open_decompressed(io.BytesIO(data)).read()
 
 
 def sniff_format(content: bytes) -> str:
@@ -257,7 +258,7 @@ def extract_auto(content: bytes) -> tuple[str, str | None]:
     from kusto_pre_forge_spark.sources.ipynb import notebook_cells, to_script
     from kusto_pre_forge_spark.sources.pdf import extract_pdf_pages
     from kusto_pre_forge_spark.sources.warc import (
-        iter_warc_records,
+        iter_warc_records_from,
         parse_http_response,
     )
 
@@ -266,8 +267,8 @@ def extract_auto(content: bytes) -> tuple[str, str | None]:
     peelable = _peelable_kinds()
     if kind in peelable:
         try:
-            data = _DECOMPRESS[kind](data)
-        except (OSError, EOFError, zlib.error, lzma.LZMAError, ValueError):
+            data = _peel(kind, data)
+        except DECODE_ERRORS:
             return "binary", None
         inner = sniff_format(data)
         kind = inner if inner not in peelable else "binary"
@@ -336,7 +337,7 @@ def extract_auto(content: bytes) -> tuple[str, str | None]:
         # text/plain with no HTTP message) both carry corpus text; a WET
         # blob must not extract empty
         payloads = []
-        for headers, block in iter_warc_records(data):
+        for headers, block in iter_warc_records_from(io.BytesIO(data)):
             wtype = headers.get("warc-type", "").lower()
             if wtype not in ("response", "conversion"):
                 continue
@@ -353,22 +354,31 @@ def extract_auto(content: bytes) -> tuple[str, str | None]:
 
 
 def iter_archive_members(
-    data: bytes,
+    f,
     kind: str,
     max_members: int = MAX_ARCHIVE_MEMBERS,
     max_total_bytes: int = MAX_ARCHIVE_BYTES,
 ):
-    """Yield ``(member_name, member_bytes)`` for a tar/zip bundle, then
-    ``(None, None)`` once IF the valves clipped it (zip-bomb posture:
-    fail open with a loud sentinel, never error, never drop silently).
+    """Yield ``(member_name, member_bytes)`` for a tar/zip/7z bundle open
+    as seekable binary file ``f``, then ``(None, None)`` once IF the
+    valves clipped it (zip-bomb posture: fail open with a loud sentinel,
+    never error, never drop silently). Tar reads sequentially through
+    ``tarfile``'s pipe mode (``r|*``: plain, gzip, bz2 or xz; zstd via
+    :class:`_ZstdTarPipe` where the wheel is present), holding ONE member
+    in memory at a time, so a 100 GB crawl bundle never materializes;
+    zip reads member at a time through its central directory (it lives
+    at the tail — forward streaming is not a ZIP-format possibility).
     Directories and zero-name members are skipped; declared sizes are
     checked BEFORE decompressing each member so a bomb can't expand
-    past the byte valve."""
+    past the byte valve. A codec error mid-bundle propagates."""
     count, total = 0, 0
     if kind == "tar":
+        zst = f.read(4) == b"\x28\xb5\x2f\xfd"
+        f.seek(0)
+        pipe = _ZstdTarPipe(f) if zst and zstd_available() else f
         try:
-            tf = tarfile.open(fileobj=io.BytesIO(data))
-        except tarfile.TarError:
+            tf = tarfile.open(fileobj=pipe, mode="r|*")
+        except (tarfile.TarError, OSError, ValueError):
             return
         with tf:
             for m in tf:
@@ -377,14 +387,14 @@ def iter_archive_members(
                 if count >= max_members or total + m.size > max_total_bytes:
                     yield None, None
                     return
-                f = tf.extractfile(m)
-                if f is None:
+                member = tf.extractfile(m)
+                if member is None:
                     continue
                 count, total = count + 1, total + m.size
-                yield m.name, f.read()
+                yield m.name, member.read()
     elif kind == "zip":
         try:
-            zf = zipfile.ZipFile(io.BytesIO(data))
+            zf = zipfile.ZipFile(f)
         except zipfile.BadZipFile:
             return
         with zf:
@@ -406,7 +416,7 @@ def iter_archive_members(
         import py7zr
 
         try:
-            sz = py7zr.SevenZipFile(io.BytesIO(data))
+            sz = py7zr.SevenZipFile(f)
         except Exception:
             return
         with sz:
@@ -432,257 +442,124 @@ def iter_archive_members(
                 yield None, None
 
 
+def _member_rows(f, kind, max_members, max_total_bytes):
+    """(member, kind, text) per member of a tar/zip/7z bundle, each
+    member's bytes routed back through :func:`extract_auto`; [] when
+    the bundle cannot be read to its end."""
+    rows = []
+    try:
+        for name, blob in iter_archive_members(
+            f, kind, max_members, max_total_bytes
+        ):
+            if name is None:
+                rows.append((None, "archive_truncated", None))
+                break
+            rows.append((name,) + extract_auto(blob))
+    except (tarfile.TarError, zipfile.BadZipFile) + DECODE_ERRORS:
+        return []
+    return rows
+
+
+def auto_rows(
+    f,
+    max_members: int = MAX_ARCHIVE_MEMBERS,
+    max_total_bytes: int = MAX_ARCHIVE_BYTES,
+) -> list[tuple[str | None, str, str | None]]:
+    """(member, kind, text) rows for one blob open as seekable binary
+    file ``f`` — the bundle-aware front door. Non-archive blobs yield one
+    row with member=None; tar / generic-zip bundles (incl. .tar.gz/.tgz/
+    .tar.xz, streamed member at a time without peeling the whole blob)
+    yield one row PER MEMBER, each member's bytes routed back through
+    :func:`extract_auto` (a PDF inside a zip extracts as a PDF). One
+    nesting level: an archive INSIDE an archive surfaces as its own
+    ('tar'/'zip', None) row rather than recursing — crawl dumps nest
+    compression around bundles, not bundles in bundles, and a fixed
+    depth is the zip-bomb-safe posture. A valve-clipped archive ends
+    with one ('archive_truncated', None) sentinel row; an empty or
+    unreadable one surfaces as one (kind, NULL) row — the quarantine
+    posture, never a silent drop."""
+    head = f.read(4096)
+    f.seek(0)
+    # archive and compression magic all sit in the head, so this sniff
+    # agrees with a whole-blob sniff on every kind branched on below
+    kind = sniff_format(head)
+    peelable = _peelable_kinds()
+    if kind == "tar" or kind in peelable:
+        rows = _member_rows(f, "tar", max_members, max_total_bytes)
+        if rows or kind == "tar":
+            return rows or [(None, "tar", None)]
+        # compressed, but not a readable tar: peel whole and dispatch
+        f.seek(0)
+        try:
+            data = _peel(kind, f.read())
+        except DECODE_ERRORS:
+            return [(None, "binary", None)]
+        if sniff_format(data) in peelable:
+            return [(None, "binary", None)]
+        return auto_rows(io.BytesIO(data), max_members, max_total_bytes)
+    if kind == "zip":
+        from kusto_pre_forge_spark.sources.epub import is_epub
+
+        # DOCX and EPUB are DOCUMENTS, not bundles — route whole-blob
+        if is_epub(head):
+            return [(None,) + extract_auto(f.read())]
+        try:
+            with zipfile.ZipFile(f) as zf:
+                docx = "word/document.xml" in set(zf.namelist())
+        except zipfile.BadZipFile:
+            return [(None, "binary", None)]
+        f.seek(0)
+        if docx:
+            return [(None,) + extract_auto(f.read())]
+    if kind == "zip" or (kind == "7z" and py7zr_available()):
+        return _member_rows(f, kind, max_members, max_total_bytes) or [
+            (None, kind, None)
+        ]
+    return [(None,) + extract_auto(f.read())]
+
+
 def extract_auto_rows(
     content: bytes,
     max_members: int = MAX_ARCHIVE_MEMBERS,
     max_total_bytes: int = MAX_ARCHIVE_BYTES,
 ) -> list[tuple[str | None, str, str | None]]:
-    """(member, kind, text) rows for one blob — the bundle-aware front
-    door. Non-archive blobs yield one row with member=None; tar /
-    generic-zip bundles (incl. .tar.gz/.tgz/.tar.xz — the compression
-    peels first) yield one row PER MEMBER, each member's bytes routed
-    back through :func:`extract_auto` (a PDF inside a zip extracts as a
-    PDF). One nesting level: an archive INSIDE an archive surfaces as
-    its own ('tar'/'zip', None) row rather than recursing — crawl dumps
-    nest compression around bundles, not bundles in bundles, and a
-    fixed depth is the zip-bomb-safe posture. A valve-clipped archive
-    ends with one ('archive_truncated', None) sentinel row."""
-    kind = sniff_format(content)
-    data = bytes(content)
-    peelable = _peelable_kinds()
-    if kind in peelable:
-        try:
-            data = _DECOMPRESS[kind](data)
-        except (OSError, EOFError, zlib.error, lzma.LZMAError, ValueError):
-            return [(None, "binary", None)]
-        inner = sniff_format(data)
-        kind = inner if inner not in peelable else "binary"
-    if kind == "zip":
-        from kusto_pre_forge_spark.sources.epub import is_epub
-
-        # DOCX and EPUB are DOCUMENTS, not bundles — route whole-blob
-        if is_epub(data):
-            return [(None,) + extract_auto(data)]
-        try:
-            with zipfile.ZipFile(io.BytesIO(data)) as zf:
-                if "word/document.xml" in set(zf.namelist()):
-                    return [(None,) + extract_auto(data)]
-        except zipfile.BadZipFile:
-            return [(None, "binary", None)]
-    if kind in ("tar", "zip") or (kind == "7z" and py7zr_available()):
-        rows: list[tuple[str | None, str, str | None]] = []
-        for name, blob in iter_archive_members(
-            data, kind, max_members, max_total_bytes
-        ):
-            if name is None:
-                rows.append((None, "archive_truncated", None))
-                break
-            mk, mt = extract_auto(blob)
-            rows.append((name, mk, mt))
-        # empty or unparseable archive: surface the blob as one
-        # (kind, NULL) row — the quarantine posture, never a silent drop
-        return rows or [(None, kind, None)]
-    return [(None,) + extract_auto(data)]
+    """:func:`auto_rows` over one blob's bytes — unit-testable without
+    Spark."""
+    return auto_rows(io.BytesIO(bytes(content)), max_members, max_total_bytes)
 
 
-def extract_text_blobs(blobs: DataFrame) -> DataFrame:
-    """(path, content) rows → (kind, text, _kpf_source): the mixed-dump
-    front door. One Arrow map stage; chain ``textprep.html_extract`` /
+def extract_text_blobs(
+    blobs: DataFrame,
+    max_members: int = MAX_ARCHIVE_MEMBERS,
+    max_total_bytes: int = MAX_ARCHIVE_BYTES,
+) -> DataFrame:
+    """Blob rows (``blob.read_blobs``, or any binaryFile frame) →
+    (kind, text, _kpf_source): the mixed-dump front door, one
+    ``blob.map_blobs`` stage; chain ``textprep.html_extract`` /
     ``markdown_extract`` on the tagged html/text rows Spark-side.
     Archive bundles (tar/tar.gz/tar.xz/generic zip) expand to one row
     per member with ``_kpf_source = "<blob>!<member>"`` — the bang
     convention Hadoop archive URIs use."""
-    import pandas as pd
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for member, kind, text in extract_auto_rows(content):
-                    src = p if member is None else f"{p}!{member}"
-                    rows.append(
-                        {"kind": kind, "text": text, "_kpf_source": src}
-                    )
-            cols = [c.split()[0] for c in AUTOEXTRACT_DDL.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(path, f):
+        for member, kind, text in auto_rows(f, max_members, max_total_bytes):
+            src = path if member is None else f"{path}!{member}"
+            yield {"kind": kind, "text": text, "_kpf_source": src}
 
-    return blobs.select("path", "content").mapInPandas(
-        batches, AUTOEXTRACT_DDL
-    )
+    return map_blobs(blobs, rows, AUTOEXTRACT_DDL)
 
 
-def read_text_auto(spark: SparkSession, path: str) -> DataFrame:
-    """Point the engine at a mixed directory/glob; get one typed text
-    frame back, format-sniffed per blob."""
-    bf = spark.read.format("binaryFile").load(path)
-    return extract_text_blobs(bf)
-
-
-def iter_tar_members_from(
-    path: str,
-    max_members: int = MAX_ARCHIVE_MEMBERS,
-    max_total_bytes: int = MAX_ARCHIVE_BYTES,
-):
-    """Tar members streamed INCREMENTALLY from a path — ``tarfile``'s
-    ``r|*`` pipe mode reads sequentially (gzip/bz2/xz transparently;
-    zstd via :class:`_ZstdTarPipe` where the wheel is present — no
-    stdlib codec on 3.11), holding ONE member in memory at a time, so
-    a 100 GB crawl bundle never materializes. Same yield contract as
-    :func:`iter_archive_members` incl. the (None, None) valve
-    sentinel."""
-    count, total = 0, 0
-    fh = None
-    try:
-        with open(path, "rb") as probe:
-            zst = probe.read(4) == b"\x28\xb5\x2f\xfd"
-        if zst and zstd_available():
-            fh = open(path, "rb")
-            tf = tarfile.open(fileobj=_ZstdTarPipe(fh), mode="r|")
-        else:
-            tf = tarfile.open(path, mode="r|*")
-    except (tarfile.TarError, OSError, ValueError):
-        if fh is not None:
-            fh.close()
-        return
-    try:
-        with tf:
-            for m in tf:
-                if not m.isfile():
-                    continue
-                if count >= max_members or total + m.size > max_total_bytes:
-                    yield None, None
-                    return
-                f = tf.extractfile(m)
-                if f is None:
-                    continue
-                count, total = count + 1, total + m.size
-                yield m.name, f.read()
-    finally:
-        # mid-stream corruption propagates (ValueError from the zstd
-        # pipe, TarError from tarfile) so the caller's quarantine /
-        # in-memory-fallback catch keeps its semantics; the outer file
-        # handle must close on every exit
-        if fh is not None:
-            fh.close()
-
-
-def read_text_auto_stream(
+def read_text_auto(
     spark: SparkSession,
     path: str,
     max_members: int = MAX_ARCHIVE_MEMBERS,
     max_total_bytes: int = MAX_ARCHIVE_BYTES,
 ) -> DataFrame:
-    """The mixed-dump front door PAST the 2 GiB ``binaryFile`` ceiling:
-    paths distribute (exact one-file-per-task slicing), each blob opens
-    inside the worker, and archives iterate member-at-a-time — tar
-    (+tar.gz/.bz2/.xz, and .tar.zst where the zstandard wheel is
-    present) through ``tarfile``'s streaming pipe mode (one member
-    resident at a time), ZIP through the path-seekable
-    ``zipfile`` (central directory + one member at a time; a zip's
-    directory lives at the tail, so true forward streaming is not a
-    ZIP-format possibility). Non-archive blobs fall back to the
-    in-memory dispatcher on worker-side bytes (the
-    ``read_blobs_via_paths`` contract — Python's heap has no
-    Int.MaxValue array limit). Output schema and member rows are
-    IDENTICAL to :func:`read_text_auto` (pinned in tests); bare remote
-    schemes refuse with the mount workaround named."""
-    import pandas as pd
-
-    from kusto_pre_forge_spark.sources.blob import (
-        exact_path_slices,
-        worker_local_path,
+    """Point the engine at a mixed directory/glob; get one typed text
+    frame back, format-sniffed per blob. Blobs past the 2 GiB
+    binaryFile ceiling open inside the workers (``blob.read_blobs``),
+    and their tar bundles stream member at a time, with the same
+    rows."""
+    return extract_text_blobs(
+        read_blobs(spark, path), max_members, max_total_bytes
     )
-
-    paths = exact_path_slices(spark, path, max_files_per_task=1)
-
-    def batches(it):
-        for pdf in it:
-            for p in pdf["path"]:
-                raw = worker_local_path(p)
-                rows = []
-                with open(raw, "rb") as f:
-                    head = f.read(512)
-                if head.startswith(b"PK\x03\x04"):
-                    from kusto_pre_forge_spark.sources.epub import is_epub
-
-                    with zipfile.ZipFile(raw) as zf:
-                        if is_epub(head) or "word/document.xml" in set(
-                            zf.namelist()
-                        ):
-                            with open(raw, "rb") as f:
-                                data = f.read()
-                            for member, kind, text in extract_auto_rows(
-                                data, max_members, max_total_bytes
-                            ):
-                                rows.append((member, kind, text))
-                        else:
-                            count, total = 0, 0
-                            for info in zf.infolist():
-                                if info.is_dir():
-                                    continue
-                                if (
-                                    count >= max_members
-                                    or total + info.file_size > max_total_bytes
-                                ):
-                                    rows.append(
-                                        (None, "archive_truncated", None)
-                                    )
-                                    break
-                                count += 1
-                                total += info.file_size
-                                kind, text = extract_auto(zf.read(info))
-                                rows.append((info.filename, kind, text))
-                            if not rows:
-                                rows.append((None, "zip", None))
-                else:
-                    streamed = False
-                    # tar magic at 257, or a compressed stream that MAY
-                    # be a tar — try pipe mode, fall back whole-file
-                    # (.tar.zst joins when the zstandard wheel is there)
-                    if (
-                        head[257:262] == b"ustar"
-                        or head[:2] == b"\x1f\x8b"
-                        or head[:3] == b"BZh"
-                        or head.startswith(b"\xfd7zXZ\x00")
-                        or (
-                            head[:4] == b"\x28\xb5\x2f\xfd"
-                            and zstd_available()
-                        )
-                    ):
-                        try:
-                            count = 0
-                            rows = []
-                            for member, blob in iter_tar_members_from(
-                                raw, max_members, max_total_bytes
-                            ):
-                                if member is None:
-                                    rows.append(
-                                        (None, "archive_truncated", None)
-                                    )
-                                    break
-                                kind, text = extract_auto(blob)
-                                rows.append((member, kind, text))
-                                count += 1
-                            streamed = bool(rows)
-                        except (tarfile.TarError, ValueError, EOFError):
-                            streamed = False
-                    if not streamed:
-                        rows = []
-                        with open(raw, "rb") as f:
-                            data = f.read()
-                        for member, kind, text in extract_auto_rows(
-                            data, max_members, max_total_bytes
-                        ):
-                            rows.append((member, kind, text))
-                out = [
-                    {
-                        "kind": kind,
-                        "text": text,
-                        "_kpf_source": p if member is None else f"{p}!{member}",
-                    }
-                    for member, kind, text in rows
-                ]
-                cols = [c.split()[0] for c in AUTOEXTRACT_DDL.split(", ")]
-                yield pd.DataFrame(out, columns=cols)
-
-    return paths.mapInPandas(batches, AUTOEXTRACT_DDL)

@@ -11,9 +11,9 @@ a metadata map carrying ``avro.schema`` JSON + ``avro.codec``, a 16-byte
 sync marker, then blocks of (record count, byte size, possibly
 deflate-compressed data, sync marker).
 
-Spark-first layout: files parallelize through the built-in ``binaryFile``
-source (one task per blob — the reference's unit of work is also the whole
-blob), each file's records decode in Arrow batches via ``mapInPandas``,
+Spark-first layout: files parallelize through ``blob.read_blobs`` (one
+task per blob — the reference's unit of work is also the whole blob), each
+file's records decode in Arrow batches through ``blob.map_blobs``,
 and the schema comes from ONE bounded driver-side head read of the first
 file — the same metadata-sniff shape as parquet footers and the W3C
 ``#Fields`` directive.
@@ -33,7 +33,8 @@ import struct
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from kusto_pre_forge_spark.sources.blob import map_blobs, read_blobs
 
 MAGIC = b"Obj\x01"
 
@@ -241,24 +242,22 @@ def read_avro(spark: SparkSession, path: str, sample_file: str | None = None) ->
     plan = _field_plan(schema)
     ddl = ", ".join(f"`{n}` {t}" for n, _, t, _ in plan) + ", _kpf_source string"
 
-    def batches(it):
-        for pdf in it:
-            for p, content in zip(pdf["path"], pdf["content"]):
-                recs = list(iter_ocf_records(bytes(content)))
-                cols = {n: [r[n] for r in recs] for n, _, _, _ in plan}
-                out = pd.DataFrame(cols, columns=[n for n, _, _, _ in plan])
-                for n, _, _, post in plan:
-                    if post == "timestamp-millis":
-                        out[n] = pd.to_datetime(out[n], unit="ms")
-                    elif post == "timestamp-micros":
-                        out[n] = pd.to_datetime(out[n], unit="us")
-                    elif post == "date":
-                        out[n] = pd.to_datetime(out[n], unit="D").dt.date
-                out["_kpf_source"] = p
-                yield out
+    def finish(out):
+        for n, _, _, post in plan:
+            if post == "timestamp-millis":
+                out[n] = pd.to_datetime(out[n], unit="ms")
+            elif post == "timestamp-micros":
+                out[n] = pd.to_datetime(out[n], unit="us")
+            elif post == "date":
+                out[n] = pd.to_datetime(out[n], unit="D").dt.date
+        return out
 
-    bf = spark.read.format("binaryFile").load(path).select("path", "content")
-    return bf.mapInPandas(batches, ddl)
+    return map_blobs(
+        read_blobs(spark, path),
+        lambda _path, f: iter_ocf_records(f.read()),
+        ddl,
+        finish=finish,
+    )
 
 
 # --------------------------------------------------- fixture-forging writer

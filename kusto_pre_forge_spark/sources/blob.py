@@ -9,9 +9,14 @@ Re-expresses the reference's source layer Spark-first:
 - ``DownloadBlobTransform`` / ``GunzipContentTransform`` — 16-way concurrent
   download into a bounded buffer, whole-buffer gunzip with ISIZE preallocation
   (ref: Transforms/DownloadBlobTransform.cs:8-107, GunzipContentTransform.cs:6-77)
-  → nothing to write: Spark's reader + Hadoop codecs stream and decompress,
-  sized by ``spark.sql.files.maxPartitionBytes``, with none of the reference's
-  4 GiB ISIZE limitation (SURVEY §4.3 #4).
+  → for line/row formats nothing to write: Spark's reader + Hadoop codecs
+  stream and decompress, sized by ``spark.sql.files.maxPartitionBytes``,
+  with none of the reference's 4 GiB ISIZE limitation (SURVEY §4.3 #4).
+  Whole-blob document formats go through ONE reader, whatever the payload:
+  ``read_blobs`` (one listing; the 2 GiB binaryFile decision made from the
+  listed lengths), ``map_blobs`` (one Arrow map handing each format's row
+  function a binary file object) and ``open_decompressed`` (one
+  decompress-by-magic opener).
 - ``TextSource`` (dormant split path) → ``spark.read.text``.
 
 Scale note: a 100 TB prefix listing is driver-side metadata only; the read
@@ -20,6 +25,10 @@ DataFrame push into the scan (parquet) or prune columns (csv).
 """
 
 from __future__ import annotations
+
+import io
+import lzma
+import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,38 +74,195 @@ def list_source(
     return sorted(out)
 
 
+# Spark's binaryFile source materializes each file as ONE byte array whose
+# length must fit a JVM array (Int.MaxValue): the per-file ceiling above
+# which read_blobs opens files inside the workers instead. Module constant
+# so tests can force either side.
+BINARYFILE_MAX_BYTES = 2_147_483_647
+
+# What a corrupt compressed stream or container raises while a parser
+# reads it: the exceptions map_blobs quarantines a blob on.
+DECODE_ERRORS = (OSError, EOFError, ValueError, zlib.error, lzma.LZMAError)
+
+_GZIP, _BZ2, _XZ, _7Z = b"\x1f\x8b", b"BZh", b"\xfd7zXZ\x00", b"7z\xbc\xaf\x27\x1c"
+
+
+def read_blobs(spark: SparkSession, path: list[str] | str) -> DataFrame:
+    """Blob rows for a directory/glob (or a list of them) — the one entry
+    point of every document source (ref: DownloadBlobTransform.cs:8-107).
+
+    The path is listed once, by ``binaryFile``'s own file index (built at
+    load, no job), and the listed lengths decide the read: when every file
+    fits ``BINARYFILE_MAX_BYTES`` the ``binaryFile`` frame itself
+    (``path``, ``content``, …; one task per blob); otherwise a one-column
+    ``path`` frame in EXACT one-file-per-task slices whose files
+    :func:`map_blobs` opens inside the workers. Exact slicing, not
+    hashing: hash-by-path can collide several huge files onto one task.
+    Paths keep the binaryFile spelling (``file:/x``), so rows are
+    identical on both sides."""
+    bf = spark.read.format("binaryFile").load(path)
+    files = []
+    listed = (
+        bf._jdf.queryExecution().analyzed().relation().location().allFiles().iterator()
+    )
+    while listed.hasNext():
+        st = listed.next()
+        files.append((st.getPath().toString(), st.getLen()))
+    if all(n <= BINARYFILE_MAX_BYTES for _, n in files):
+        return bf
+    paths = sorted(p for p, _ in files)
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(
+            [(p,) for p in paths], min(max(1, len(paths)), 10_000)
+        ),
+        "path string",
+    )
+
+
+def worker_local_path(path: str) -> str:
+    """Strip the file: scheme and refuse bare remote schemes — the guard
+    of the worker-side side of :func:`read_blobs`."""
+    raw = path
+    if raw.startswith("file://"):
+        raw = raw[7:]
+    elif raw.startswith("file:"):
+        raw = raw[5:]
+    if "://" in raw:
+        scheme = raw.split("://", 1)[0]
+        raise NotImplementedError(
+            f"worker-side reads open files with the worker's own "
+            f"filesystem and cannot address the '{scheme}://' scheme; "
+            "mount the store (fuse/NFS) or keep files under the 2 GiB "
+            "binaryFile ceiling"
+        )
+    return raw
+
+
+def open_decompressed(f):
+    """The decompress-by-magic opener (ref: GunzipContentTransform.cs:6-77):
+    ``f``, a seekable binary file, as a file object of its decompressed
+    bytes. gzip (concatenated members — the Common Crawl one-member-per-
+    record layout — included), bz2 (``BZh`` + a level digit) and xz
+    decompress incrementally; a 7z archive yields its first ``.xml``
+    member (Stack Exchange and Wikimedia ship one dump per archive; 7z's
+    solid blocks have no streaming entry), through the ``py7zr`` wheel
+    where it is importable. Anything else comes back as ``f`` itself.
+    Magic decides — crawl extensions lie."""
+    import bz2
+    import gzip
+
+    head = f.read(6)
+    f.seek(0)
+    if head[:2] == _GZIP:
+        return gzip.GzipFile(fileobj=f)
+    if head[:3] == _BZ2 and head[3:4].isdigit():
+        return bz2.BZ2File(f)
+    if head == _XZ:
+        return lzma.LZMAFile(f)
+    if head == _7Z:
+        try:
+            import py7zr
+        except ImportError:
+            raise NotImplementedError(
+                "no stdlib 7z codec exists; `pip install py7zr` on the "
+                "executors (the import-try hatch), or recompress to "
+                "bz2/gzip (e.g. `7z x` then `bzip2`)"
+            ) from None
+        with py7zr.SevenZipFile(f) as sz:
+            names = [
+                fi.filename
+                for fi in sz.list()
+                if not getattr(fi, "is_directory", False)
+                and fi.filename.lower().endswith(".xml")
+            ]
+            if not names:
+                raise ValueError("7z archive holds no .xml member")
+            sz.reset()
+            return io.BytesIO(sz.read(names[:1])[names[0]].read())
+    return f
+
+
+def map_blobs(blobs: DataFrame, rows, ddl: str, errors=(), finish=None) -> DataFrame:
+    """The one Arrow map of every document source. ``rows(path, f)``
+    yields the row dicts of one blob open as binary file ``f`` —
+    ``io.BytesIO`` over the ``content`` column of a ``binaryFile`` frame
+    (batch or streaming), or the file itself, opened inside the worker,
+    when ``blobs`` carries only ``path`` (:func:`read_blobs` above the
+    ceiling). Rows without their own ``_kpf_source`` get the blob path.
+
+    A blob whose rows raise one of ``errors`` quarantines as ZERO rows
+    on both sides — one corrupt archive must not fail the task, and
+    must not leave a partial prefix either. The in-memory side collects
+    a blob's rows before keeping them; the worker side first reads the
+    whole file through ``rows`` keeping nothing, then reads it again and
+    emits 1024-row frames, so memory stays one frame whatever the file
+    size. ``finish`` post-processes each pandas frame (type fixes)."""
+    import pandas as pd
+
+    cols = [c.split()[0].strip("`") for c in ddl.split(", ")]
+
+    def frame(out):
+        pdf = pd.DataFrame(out, columns=cols)
+        return finish(pdf) if finish else pdf
+
+    def blob_rows(p, f):
+        return ({"_kpf_source": p, **r} for r in rows(p, f))
+
+    def in_memory(it):
+        for pdf in it:
+            out = []
+            for p, content in zip(pdf["path"], pdf["content"]):
+                try:
+                    out.extend(list(blob_rows(p, io.BytesIO(bytes(content)))))
+                except errors:
+                    pass
+            yield frame(out)
+
+    def worker_open(it):
+        for pdf in it:
+            for p in pdf["path"]:
+                local = worker_local_path(p)
+                if errors:
+                    with open(local, "rb") as f:
+                        try:
+                            for _ in rows(p, f):
+                                pass
+                        except errors:
+                            continue
+                with open(local, "rb") as f:
+                    out = []
+                    for r in blob_rows(p, f):
+                        out.append(r)
+                        if len(out) == 1024:
+                            yield frame(out)
+                            out = []
+                    if out:
+                        yield frame(out)
+
+    if "content" in blobs.columns:
+        return blobs.select("path", "content").mapInPandas(in_memory, ddl)
+    return blobs.select("path").mapInPandas(worker_open, ddl)
+
+
 def _read_archive_lines(
     spark: SparkSession,
     paths: list[str] | str,
     decompress,
     drop_first_line: bool,
 ) -> DataFrame:
-    """(Text, _kpf_source) lines of each archive blob, ``decompress(bytes)
-    -> str`` applied per blob. Archives are not splittable, so the unit of
-    parallelism is the blob (one task each), exactly the reference's
-    per-blob model; the whole blob is decompressed in that task's memory,
-    bounded by ``spark.sql.files.maxPartitionBytes`` admission on the
-    binary read. ``drop_first_line`` peels a header at the source (lines
-    arrive in order inside the task, so no window is needed)."""
-    import pandas as pd
+    """(Text, _kpf_source) lines of each archive blob, ``decompress(f)
+    -> str`` applied per blob file. Archives are not splittable, so the
+    unit of parallelism is the blob (one task each), exactly the
+    reference's per-blob model. ``drop_first_line`` peels a header at the
+    source (lines arrive in order inside the task, so no window is
+    needed)."""
 
-    if isinstance(paths, str):
-        paths = [paths]
-    binary = spark.read.format("binaryFile").load(paths)
+    def lines(_path, f):
+        got = decompress(f).splitlines()
+        for line in got[1:] if drop_first_line else got:
+            yield {"Text": line}
 
-    def extract(it):
-        for pdf in it:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                lines = decompress(bytes(content)).splitlines()
-                if drop_first_line and lines:
-                    lines = lines[1:]
-                yield pd.DataFrame(
-                    {"Text": lines, "_kpf_source": [path] * len(lines)}
-                )
-
-    return binary.select("path", "content").mapInPandas(
-        extract, "Text string, _kpf_source string"
-    )
+    return map_blobs(read_blobs(spark, paths), lines, "Text string, _kpf_source string")
 
 
 def read_zip_lines(
@@ -110,11 +276,10 @@ def read_zip_lines(
     reads only ``Entries.First()``; same here.
     """
 
-    def first_entry(content: bytes) -> str:
-        import io
+    def first_entry(f) -> str:
         import zipfile
 
-        with zipfile.ZipFile(io.BytesIO(content)) as z:
+        with zipfile.ZipFile(f) as z:
             names = z.namelist()
             return z.read(names[0]).decode("utf-8") if names else ""
 
@@ -133,90 +298,10 @@ def read_xz_lines(
     concatenation (the xz analogue of gzip members) decompresses
     transparently; undecodable bytes become U+FFFD."""
 
-    def unxz(content: bytes) -> str:
-        import lzma
-
-        return lzma.decompress(content).decode("utf-8", "replace")
+    def unxz(f) -> str:
+        return lzma.LZMAFile(f).read().decode("utf-8", "replace")
 
     return _read_archive_lines(spark, paths, unxz, drop_first_line)
-
-
-def exact_path_slices(
-    spark: SparkSession, path: str, max_files_per_task: int = 1
-) -> DataFrame:
-    """A one-column ``path`` frame listing a directory/glob, partitioned
-    into EXACT contiguous slices of at most ``max_files_per_task`` paths
-    per task. Exact slicing, not hashing: hash-by-path can collide
-    several huge files onto one task while others stay empty (and a
-    plain round-robin repartition starts at a random offset per input
-    partition, so collisions survive it too). The listing is already
-    driver-resident (Spark's own InMemoryFileIndex materializes it;
-    ``inputFiles()`` just exposes that), so parallelize's contiguous
-    numSlices split costs nothing extra and guarantees at most
-    ceil(n/tasks) files per task. Paths are emitted in the binaryFile
-    column spelling (``file:/x``, not ``file:///x``) so rows are
-    drop-in identical to a binaryFile read."""
-    files = sorted(
-        "file:" + p[7:] if p.startswith("file:///") else p
-        for p in spark.read.format("binaryFile").load(path).inputFiles()
-    )
-    n = max(1, len(files) or 1)
-    tasks = min(max(1, -(-n // max_files_per_task)), 10_000)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in files], tasks),
-        "path string",
-    )
-
-
-def worker_local_path(path: str) -> str:
-    """Strip the file: scheme and refuse bare remote schemes — the
-    shared guard for worker-side ``open()`` readers (the
-    ``warc._open_for_records`` posture)."""
-    raw = path
-    if raw.startswith("file://"):
-        raw = raw[7:]
-    elif raw.startswith("file:"):
-        raw = raw[5:]
-    if "://" in raw:
-        scheme = raw.split("://", 1)[0]
-        raise NotImplementedError(
-            f"worker-side readers open files with the worker's own "
-            f"filesystem and cannot address the '{scheme}://' scheme; "
-            "mount the store (fuse/NFS) or use the binaryFile path for "
-            "files under 2 GiB"
-        )
-    return raw
-
-
-def read_blobs_via_paths(
-    spark: SparkSession, path: str, max_files_per_task: int = 1
-) -> DataFrame:
-    """(path, content) blob rows where the CONTENT is read inside the
-    worker with Python's ``open`` — the escape hatch from ``binaryFile``'s
-    JVM byte-array ceiling (Int.MaxValue per file) for whole-file
-    parsers that need the full blob (PDF's xref lives at the tail, a
-    ZIP's central directory likewise). The listing itself is
-    metadata-only (binaryFile prunes the content column when only
-    ``path`` is selected); paths then repartition so at most
-    ``max_files_per_task`` files materialize per task. Covers
-    filesystems the worker OS can address (local, NFS/fuse mounts); bare
-    remote schemes refuse with the mount workaround named.
-
-    Record-granular formats should prefer true incremental reading
-    (``warc.iter_warc_records_from``) — this helper trades the JVM cap
-    for Python-heap residency of one file at a time."""
-    import pandas as pd
-
-    paths = exact_path_slices(spark, path, max_files_per_task)
-
-    def batches(it):
-        for pdf in it:
-            for p in pdf["path"]:
-                with open(worker_local_path(p), "rb") as f:
-                    content = f.read()
-                yield pd.DataFrame({"path": [p], "content": [content]})
-
-    return paths.mapInPandas(batches, "path string, content binary")
 
 
 def read_landing(

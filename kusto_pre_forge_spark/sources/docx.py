@@ -17,7 +17,7 @@ training-corpus question is "what text does this file carry".
 Everything is stdlib (``zipfile`` + ``re``): the ZIP layer is the real
 container format, and the XML subset is scanned with a single alternation
 regex per paragraph — no XML library dependency, unit-testable without
-Spark. Spark-first layout matches the sibling readers: ``binaryFile`` one
+Spark. Spark-first layout matches the sibling readers: ``blob.read_blobs`` one
 task per blob, Arrow ``mapInPandas`` decode, a pure map stage at any
 corpus size; a fixture-forging writer emits spec-valid packages
 ([Content_Types].xml + _rels/.rels + document.xml) so tests and oracles
@@ -31,6 +31,8 @@ import re
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kusto_pre_forge_spark.sources.blob import map_blobs, read_blobs
 
 DOCX_DDL = "text string, n_paragraphs int, _kpf_source string"
 
@@ -100,38 +102,23 @@ def extract_docx_text(data: bytes) -> tuple[str, int]:
 
 
 def parse_docx_blobs(blobs: DataFrame) -> DataFrame:
-    """(path, content) blob rows → one row per document (DOCX_DDL).
-    Arrow-batched ``mapInPandas`` pure map stage, the sibling readers'
-    posture: ZIP inflate + XML scan happen in the task that read the
-    blob; nothing shuffles."""
-    import pandas as pd
+    """Blob rows (``blob.read_blobs``, or any binaryFile frame) → one
+    row per document (DOCX_DDL) — one ``blob.map_blobs`` stage: ZIP
+    inflate + XML scan happen in the task that read the blob; nothing
+    shuffles."""
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                text, n_par = extract_docx_text(content)
-                rows.append(
-                    {"text": text, "n_paragraphs": n_par, "_kpf_source": p}
-                )
-            cols = [c.split()[0] for c in DOCX_DDL.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(_path, f):
+        text, n_par = extract_docx_text(f.read())
+        yield {"text": text, "n_paragraphs": n_par}
 
-    return blobs.select("path", "content").mapInPandas(batches, DOCX_DDL)
+    return map_blobs(blobs, rows, DOCX_DDL)
 
 
-def read_docx(spark: SparkSession, path: str, stream: bool = False) -> DataFrame:
+def read_docx(spark: SparkSession, path: str) -> DataFrame:
     """Read a directory/glob of .docx packages as one typed row per
     document with ``_kpf_source`` lineage — composes with the same
-    downstream gates as ``html_extract`` / ``read_pdf`` output.
-    ``stream=True`` reads files worker-side past the binaryFile 2 GiB
-    cap (see ``blob.read_blobs_via_paths``); results are identical."""
-    if stream:
-        from kusto_pre_forge_spark.sources.blob import read_blobs_via_paths
-
-        return parse_docx_blobs(read_blobs_via_paths(spark, path))
-    bf = spark.read.format("binaryFile").load(path)
-    return parse_docx_blobs(bf)
+    downstream gates as ``html_extract`` / ``read_pdf`` output."""
+    return parse_docx_blobs(read_blobs(spark, path))
 
 
 # --------------------------------------------------- fixture-forging writer

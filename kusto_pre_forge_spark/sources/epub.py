@@ -17,7 +17,7 @@ posture): prose extraction is the Spark-side codegen chain
 Everything is stdlib (``zipfile`` + ``re``): the ZIP layer is the real
 container, and the two XML lookups (container rootfile, OPF
 manifest/spine) are scanned with alternation regexes — no XML library.
-Spark-first layout matches the sibling readers: ``binaryFile`` one task
+Spark-first layout matches the sibling readers: ``blob.read_blobs`` one task
 per blob, Arrow ``mapInPandas``, a pure map stage at any corpus size; a
 fixture-forging writer emits spec-valid books so tests and oracles drive
 the REAL parser.
@@ -31,6 +31,8 @@ import re
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kusto_pre_forge_spark.sources.blob import map_blobs, read_blobs
 
 EPUB_DDL = "chapter_no int, href string, html string, _kpf_source string"
 
@@ -119,37 +121,21 @@ def extract_epub_chapters(data: bytes) -> list[tuple[str, str]]:
 
 
 def parse_epub_blobs(blobs: DataFrame) -> DataFrame:
-    """(path, content) blob rows → one row per spine chapter (EPUB_DDL).
-    Arrow-batched ``mapInPandas``, pure map stage — the sibling-reader
-    posture; chain ``textprep.html_extract`` on ``html`` for prose."""
-    import pandas as pd
+    """Blob rows (``blob.read_blobs``, or any binaryFile frame) → one
+    row per spine chapter (EPUB_DDL) — one ``blob.map_blobs`` stage;
+    chain ``textprep.html_extract`` on ``html`` for prose."""
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for i, (href, html) in enumerate(
-                    extract_epub_chapters(content)
-                ):
-                    rows.append(
-                        {
-                            "chapter_no": i,
-                            "href": href,
-                            "html": html,
-                            "_kpf_source": p,
-                        }
-                    )
-            cols = [c.split()[0] for c in EPUB_DDL.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(_path, f):
+        for i, (href, html) in enumerate(extract_epub_chapters(f.read())):
+            yield {"chapter_no": i, "href": href, "html": html}
 
-    return blobs.select("path", "content").mapInPandas(batches, EPUB_DDL)
+    return map_blobs(blobs, rows, EPUB_DDL)
 
 
 def read_epub(spark: SparkSession, path: str) -> DataFrame:
     """Read an EPUB directory/glob as one typed row per spine chapter
     with ``_kpf_source`` lineage."""
-    bf = spark.read.format("binaryFile").load(path)
-    return parse_epub_blobs(bf)
+    return parse_epub_blobs(read_blobs(spark, path))
 
 
 # --------------------------------------------------- fixture-forging writer

@@ -12,7 +12,7 @@ filter their own cell type; ``to_script`` reassembles the classic
 "code cells joined, markdown as comments" script form.
 
 Spark-first: stdlib ``json`` inside an Arrow ``mapInPandas`` over
-``binaryFile`` blobs — a pure map stage (the sibling readers' posture);
+``blob.read_blobs`` blobs — a pure map stage (the sibling readers' posture);
 malformed JSON yields zero rows (crawl posture). Dependency-free
 fixture forge writes spec-shaped notebooks.
 """
@@ -23,6 +23,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from kusto_pre_forge_spark.sources.blob import map_blobs, read_blobs
 
 IPYNB_DDL = (
     "cell_idx int, cell_type string, source string, n_lines int, "
@@ -119,34 +121,18 @@ def to_script(cells: list[dict], comment_prefix: str = "# ") -> str:
 
 
 def parse_ipynb_blobs(blobs: DataFrame) -> DataFrame:
-    """(path, content) blob rows → one row per cell (IPYNB_DDL), in
-    notebook order. Arrow-batched pure map stage."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for cell in notebook_cells(content):
-                    cell["_kpf_source"] = p
-                    rows.append(cell)
-            cols = [c.split()[0] for c in IPYNB_DDL.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return blobs.select("path", "content").mapInPandas(batches, IPYNB_DDL)
+    """Blob rows (``blob.read_blobs``, or any binaryFile frame) → one
+    row per cell (IPYNB_DDL), in notebook order — one
+    ``blob.map_blobs`` stage."""
+    return map_blobs(
+        blobs, lambda _path, f: notebook_cells(f.read()), IPYNB_DDL
+    )
 
 
-def read_ipynb(spark: SparkSession, path: str, stream: bool = False) -> DataFrame:
+def read_ipynb(spark: SparkSession, path: str) -> DataFrame:
     """Read a directory/glob of notebooks as one typed row per cell with
-    ``_kpf_source`` lineage. ``stream=True`` reads files worker-side
-    past the binaryFile 2 GiB cap (see ``blob.read_blobs_via_paths``);
-    results are identical."""
-    if stream:
-        from kusto_pre_forge_spark.sources.blob import read_blobs_via_paths
-
-        return parse_ipynb_blobs(read_blobs_via_paths(spark, path))
-    bf = spark.read.format("binaryFile").load(path)
-    return parse_ipynb_blobs(bf)
+    ``_kpf_source`` lineage."""
+    return parse_ipynb_blobs(read_blobs(spark, path))
 
 
 def notebooks_to_scripts(cells: DataFrame) -> DataFrame:

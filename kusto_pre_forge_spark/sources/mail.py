@@ -18,7 +18,7 @@ RFC 5322 message syntax, RFC 2045–2047 MIME) via stdlib ``email`` and
   html-only mail falls back to the first text/html leaf, left raw for
   the shared ``textprep.html_extract`` chain).
 
-Spark-first layout matches the sibling readers: ``binaryFile`` one task
+Spark-first layout matches the sibling readers: ``blob.read_blobs`` one task
 per blob, Arrow ``mapInPandas``, pure map stage; a fixture-forging
 writer emits spec-valid mboxes so tests and oracles drive the REAL
 parser.
@@ -31,6 +31,8 @@ import email.header
 import email.message
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kusto_pre_forge_spark.sources.blob import map_blobs, read_blobs
 
 MAIL_DDL = (
     "msg_no int, subject string, from_addr string, date string, "
@@ -125,26 +127,16 @@ def parse_mbox_messages(data: bytes) -> list[dict]:
 
 
 def parse_mail_blobs(blobs: DataFrame) -> DataFrame:
-    """(path, content) blob rows → one row per message (MAIL_DDL) —
-    pure Arrow map stage, the sibling-reader posture."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for m in parse_mbox_messages(content):
-                    rows.append({**m, "_kpf_source": p})
-            cols = [c.split()[0] for c in MAIL_DDL.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return blobs.select("path", "content").mapInPandas(batches, MAIL_DDL)
+    """Blob rows (``blob.read_blobs``, or any binaryFile frame) → one
+    row per message (MAIL_DDL) — one ``blob.map_blobs`` stage."""
+    return map_blobs(
+        blobs, lambda _path, f: parse_mbox_messages(f.read()), MAIL_DDL
+    )
 
 
 def read_mbox(spark: SparkSession, path: str) -> DataFrame:
     """Read an mbox/eml directory/glob as one typed row per message."""
-    bf = spark.read.format("binaryFile").load(path)
-    return parse_mail_blobs(bf)
+    return parse_mail_blobs(read_blobs(spark, path))
 
 
 # --------------------------------------------------- fixture-forging writer

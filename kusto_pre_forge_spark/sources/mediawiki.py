@@ -9,18 +9,12 @@ document-input family (reference parity: the reference's format
 dispatch throws for anything beyond txt,
 code/KustoPreForgeLib/EtlRun.cs:87-89).
 
-Two read paths, the house convention:
-
-- :func:`read_mediawiki` — ``binaryFile`` + one Arrow map stage; bz2 /
-  gzip peel per blob (dumps ship compressed; magic decides, the
-  extension lies).
-- :func:`read_mediawiki_stream` — PAST the 2 GiB ``binaryFile``
-  ceiling: paths distribute one-per-task, each worker opens the file
-  through ``bz2.BZ2File`` / ``gzip.open`` and runs ``iterparse``
-  INCREMENTALLY, clearing each ``<page>`` element after it yields — a
-  20 GB enwiki dump holds ONE page in memory at a time. This is the
-  only correct posture for real dumps: enwiki exceeds the JVM byte[]
-  ceiling immediately.
+One read path: ``blob.read_blobs`` + one ``blob.map_blobs`` stage; the
+dump opens through ``blob.open_decompressed`` (bz2 / gzip / 7z by magic —
+the extension lies) and ``iterparse`` runs INCREMENTALLY, clearing each
+``<page>`` element after it yields — a 20 GB enwiki dump (past the 2 GiB
+``binaryFile`` ceiling, so its file opens inside the worker) holds ONE
+page in memory at a time.
 
 Rows are one per page: (page_no, title, ns, page_id, redirect, text).
 Full-history dumps carry many ``<revision>`` blocks per page — the
@@ -38,19 +32,25 @@ from __future__ import annotations
 import bz2
 import gzip
 import io
-import zlib
-from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kusto_pre_forge_spark.sources.blob import (
+    map_blobs,
+    open_decompressed,
+    read_blobs,
+)
+from kusto_pre_forge_spark.sources.xmlrows import (
+    XML_DECODE_ERRORS,
+    iter_elements,
+    local_tag,
+)
 
 MEDIAWIKI_DDL = (
     "page_no int, title string, ns int, page_id long, "
     "redirect string, text string, _kpf_source string"
 )
-
-_COLS = [c.split()[0] for c in MEDIAWIKI_DDL.split(", ")]
-
 
 def is_mediawiki(data: bytes) -> bool:
     """Head probe: a ``<mediawiki`` root element within the first
@@ -65,15 +65,10 @@ def is_mediawiki(data: bytes) -> bool:
     return head.startswith(b"<mediawiki")
 
 
-def _local(tag: str) -> str:
-    """Strip the `{namespace-uri}` prefix iterparse attaches."""
-    return tag.rsplit("}", 1)[-1]
-
-
 def _page_row(elem, page_no: int) -> dict:
     title, ns, page_id, redirect, text = None, None, None, None, None
     for child in elem:
-        t = _local(child.tag)
+        t = local_tag(child.tag)
         if t == "title":
             title = child.text or ""
         elif t == "ns":
@@ -91,7 +86,7 @@ def _page_row(elem, page_no: int) -> dict:
         elif t == "revision":
             # last revision wins (full-history dumps list oldest first)
             for rchild in child:
-                if _local(rchild.tag) == "text":
+                if local_tag(rchild.tag) == "text":
                     text = rchild.text or ""
     return {
         "page_no": page_no,
@@ -103,137 +98,49 @@ def _page_row(elem, page_no: int) -> dict:
     }
 
 
-def iter_mediawiki_pages(fileobj) -> "iter":
-    """Incremental page iterator over an (already-decompressed) XML
-    stream: yields one row dict per ``<page>``, clearing each element
-    after use so memory stays one-page-bounded regardless of dump
-    size — the standard iterparse idiom for multi-GB XML."""
-    page_no = 0
-    # grab the root once so cleared pages detach from it (otherwise the
-    # root accumulates every cleared-but-referenced child)
-    context = ET.iterparse(fileobj, events=("start", "end"))
-    root = None
-    for event, elem in context:
-        if event == "start":
-            if root is None:
-                root = elem
-            continue
-        if _local(elem.tag) == "page":
-            yield _page_row(elem, page_no)
-            page_no += 1
-            elem.clear()
-            if root is not None:
-                # drop the completed child from the root's child list
-                try:
-                    root.remove(elem)
-                except ValueError:
-                    pass
-
-
-def _peel(data: bytes) -> bytes:
-    """bz2 / gzip transparent decompression (dumps ship compressed;
-    magic decides). Raises on corrupt streams — the caller's
-    quarantine posture handles it."""
-    if data[:3] == b"BZh":
-        return bz2.decompress(data)
-    if data[:2] == b"\x1f\x8b":
-        return gzip.decompress(data)
-    return data
+def iter_mediawiki_pages(f):
+    """One row dict per ``<page>`` of a dump open as binary file ``f``
+    (plain / .bz2 / .gz / .7z — :func:`blob.open_decompressed` peels
+    it), one page resident at a time (``xmlrows.iter_elements``)."""
+    return (
+        _page_row(elem, page_no)
+        for page_no, elem in enumerate(
+            iter_elements(open_decompressed(f), "page")
+        )
+    )
 
 
 def parse_mediawiki_pages(data: bytes) -> list[dict]:
     """Pure function: dump bytes (plain / .bz2 / .gz) → page row
-    dicts. Unit-testable without Spark."""
+    dicts; a corrupt dump quarantines as []. Unit-testable without
+    Spark."""
     try:
-        payload = _peel(bytes(data))
-        return list(iter_mediawiki_pages(io.BytesIO(payload)))
-    except (OSError, EOFError, ValueError, zlib.error, ET.ParseError):
+        return list(iter_mediawiki_pages(io.BytesIO(bytes(data))))
+    except XML_DECODE_ERRORS:
         return []
 
 
 def parse_mediawiki_blobs(blobs: DataFrame) -> DataFrame:
-    """(path, content) blob rows → one row per page (MEDIAWIKI_DDL) —
-    pure Arrow map stage, the sibling-reader posture. Chain
-    ``textprep.wikitext_extract`` on ``text`` for prose."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for row in parse_mediawiki_pages(content):
-                    rows.append({**row, "_kpf_source": p})
-            yield pd.DataFrame(rows, columns=_COLS)
-
-    return blobs.select("path", "content").mapInPandas(
-        batches, MEDIAWIKI_DDL
+    """Blob rows (``blob.read_blobs``, or any binaryFile frame) → one
+    row per page (MEDIAWIKI_DDL) — one ``blob.map_blobs`` stage; a
+    corrupt dump yields zero rows on either side of the binaryFile
+    ceiling. Chain ``textprep.wikitext_extract`` on ``text`` for
+    prose."""
+    return map_blobs(
+        blobs,
+        lambda _path, f: iter_mediawiki_pages(f),
+        MEDIAWIKI_DDL,
+        XML_DECODE_ERRORS,
     )
 
 
 def read_mediawiki(spark: SparkSession, path: str) -> DataFrame:
     """Read a MediaWiki dump directory/glob (plain / .bz2 / .gz) as
-    one typed row per page. Blobs must fit the 2 GiB ``binaryFile``
-    ceiling — real enwiki dumps don't; use
-    :func:`read_mediawiki_stream` there."""
-    bf = spark.read.format("binaryFile").load(path)
-    return parse_mediawiki_blobs(bf)
-
-
-def read_mediawiki_stream(spark: SparkSession, path: str) -> DataFrame:
-    """MediaWiki dumps PAST the 2 GiB ceiling: paths distribute via
-    exact one-file-per-task slicing, each worker opens its file
-    through the matching decompressor (``bz2.BZ2File`` — bz2 is what
-    Wikimedia actually publishes — / ``gzip.open`` / plain) and
-    iterparse yields one page at a time; pages stream out in Arrow
-    batches without the dump ever materializing. Output is pinned
-    row-identical to :func:`read_mediawiki` in tests; bare remote
-    schemes refuse with the mount workaround named (the
-    ``worker_local_path`` contract)."""
-    import pandas as pd
-
-    from kusto_pre_forge_spark.sources.blob import (
-        exact_path_slices,
-        worker_local_path,
-    )
-
-    paths = exact_path_slices(spark, path, max_files_per_task=1)
-
-    def _open(raw):
-        with open(raw, "rb") as probe:
-            head = probe.read(3)
-        if head[:3] == b"BZh":
-            return bz2.BZ2File(raw, "rb")
-        if head[:2] == b"\x1f\x8b":
-            return gzip.open(raw, "rb")
-        return open(raw, "rb")
-
-    def batches(it):
-        for pdf in it:
-            for p in pdf["path"]:
-                raw = worker_local_path(p)
-                # Pass 1 — validate the WHOLE blob streaming (rows
-                # discarded, O(1) memory): a corrupt dump must yield
-                # ZERO rows, identical to read_mediawiki's quarantine,
-                # never a partial prefix. Pass 2 then re-streams and
-                # emits; the 2x decompress buys the row-identical
-                # contract without buffering an unbounded dump.
-                try:
-                    with _open(raw) as f:
-                        for _ in iter_mediawiki_pages(f):
-                            pass
-                except (OSError, EOFError, ValueError, zlib.error, ET.ParseError):
-                    continue
-                rows: list[dict] = []
-                with _open(raw) as f:
-                    for row in iter_mediawiki_pages(f):
-                        rows.append({**row, "_kpf_source": p})
-                        if len(rows) >= 1024:
-                            yield pd.DataFrame(rows, columns=_COLS)
-                            rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=_COLS)
-
-    return paths.mapInPandas(batches, MEDIAWIKI_DDL)
+    one typed row per page. Dumps past the 2 GiB binaryFile ceiling —
+    enwiki exceeds it immediately — are opened inside the workers and
+    parsed one page at a time (``blob.read_blobs``), with the same
+    rows."""
+    return parse_mediawiki_blobs(read_blobs(spark, path))
 
 
 # --------------------------------------------------- fixture-forging writer

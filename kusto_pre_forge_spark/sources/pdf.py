@@ -34,8 +34,8 @@ Implemented purely from the public spec (ISO 32000-1 / PDF 1.7):
   byte-per-char (PDFDocEncoding approximated as latin-1).
 
 Spark-first layout (the ``sources/warc.py`` playbook): files parallelize
-through the built-in ``binaryFile`` source — one task per blob — and
-pages decode in Arrow batches via ``mapInPandas``; the plan is a pure
+through ``blob.read_blobs`` — one task per blob — and
+pages decode in Arrow batches via ``blob.map_blobs``; the plan is a pure
 map stage (scan + project, zero exchanges) at any corpus size. The
 parser is a pure function over bytes (``extract_pdf_pages``), so framing
 and text assembly are unit-testable without Spark, and a fixture-forging
@@ -50,6 +50,8 @@ import zlib
 from functools import lru_cache as _lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kusto_pre_forge_spark.sources.blob import map_blobs, read_blobs
 
 PDF_DDL = (
     "page_no int, page_text string, n_pages int, n_chars int, "
@@ -1905,53 +1907,36 @@ def _page_font_cmaps(objects: dict, page: dict, errors: str) -> dict:
 
 
 def parse_pdf_blobs(blobs: DataFrame, errors: str = "skip") -> DataFrame:
-    """(path, content) blob rows → one row per page (PDF_DDL columns).
+    """Blob rows (``blob.read_blobs``, or any binaryFile frame) → one
+    row per page (PDF_DDL columns).
 
-    Arrow-batched ``mapInPandas``, pure map stage: each blob's pages
-    never leave the task that read it — scan + project at any corpus
-    size, the ``parse_warc_blobs`` posture."""
-    import pandas as pd
+    One ``blob.map_blobs`` stage: each blob's pages never leave the task
+    that read it — scan + project at any corpus size, the
+    ``parse_warc_blobs`` posture."""
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                infos = extract_pdf_page_infos(content, errors=errors)
-                for i, info in enumerate(infos):
-                    rows.append(
-                        {
-                            "page_no": i,
-                            "page_text": info["text"],
-                            "n_pages": len(infos),
-                            "n_chars": len(info["text"]),
-                            "has_images": info["has_images"],
-                            "_kpf_source": p,
-                        }
-                    )
-            cols = [c.split()[0] for c in PDF_DDL.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(_path, f):
+        infos = extract_pdf_page_infos(f.read(), errors=errors)
+        for i, info in enumerate(infos):
+            yield {
+                "page_no": i,
+                "page_text": info["text"],
+                "n_pages": len(infos),
+                "n_chars": len(info["text"]),
+                "has_images": info["has_images"],
+            }
 
-    return blobs.select("path", "content").mapInPandas(batches, PDF_DDL)
+    return map_blobs(blobs, rows, PDF_DDL)
 
 
-def read_pdf(
-    spark: SparkSession, path: str, errors: str = "skip", stream: bool = False
-) -> DataFrame:
+def read_pdf(spark: SparkSession, path: str, errors: str = "skip") -> DataFrame:
     """Read a PDF directory/glob as one typed row per page with
     ``_kpf_source`` lineage — compose with the ``textstats`` quality
-    gates downstream exactly like ``html_extract`` output.
-
-    ``stream=True`` reads each file inside the worker via
-    ``blob.read_blobs_via_paths`` — past ``binaryFile``'s JVM 2 GiB
-    per-file cap (the xref tail means a PDF must be whole-file in
+    gates downstream exactly like ``html_extract`` output. Files past
+    binaryFile's JVM 2 GiB cap are read inside the workers
+    (``blob.read_blobs``; the xref tail means a PDF is whole-file in
     memory either way, but Python's heap has no Int.MaxValue array
-    limit). Results are identical."""
-    if stream:
-        from kusto_pre_forge_spark.sources.blob import read_blobs_via_paths
-
-        return parse_pdf_blobs(read_blobs_via_paths(spark, path), errors=errors)
-    bf = spark.read.format("binaryFile").load(path)
-    return parse_pdf_blobs(bf, errors=errors)
+    limit), with the same rows."""
+    return parse_pdf_blobs(read_blobs(spark, path), errors=errors)
 
 
 def extract_pdf_images(data: bytes, errors: str = "skip") -> list[dict]:

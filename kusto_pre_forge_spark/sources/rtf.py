@@ -19,7 +19,7 @@ must not be scanned for braces); literal ``\\\\ \\{ \\}``.
 Reference parity: the reference's format dispatch throws for anything
 beyond txt (code/KustoPreForgeLib/EtlRun.cs:87-89); this continues the
 document-input family. Stdlib-only; same Spark layout as the sibling
-readers (binaryFile → Arrow map stage, one task per blob).
+readers (blob.read_blobs → Arrow map stage, one task per blob).
 """
 
 from __future__ import annotations
@@ -27,6 +27,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kusto_pre_forge_spark.sources.blob import map_blobs, read_blobs
 
 RTF_DDL = "text string, n_groups int, _kpf_source string"
 
@@ -170,29 +172,19 @@ def extract_rtf_text(data: bytes) -> tuple[str, int]:
 
 
 def parse_rtf_blobs(blobs: DataFrame) -> DataFrame:
-    """(path, content) blob rows → (text, n_groups, _kpf_source) —
-    pure Arrow map stage, the sibling-reader posture."""
-    import pandas as pd
+    """Blob rows (``blob.read_blobs``, or any binaryFile frame) →
+    (text, n_groups, _kpf_source) — one ``blob.map_blobs`` stage."""
 
-    cols = [c.split()[0] for c in RTF_DDL.split(", ")]
+    def rows(_path, f):
+        text, n_groups = extract_rtf_text(f.read())
+        yield {"text": text, "n_groups": n_groups}
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                text, n_groups = extract_rtf_text(content)
-                rows.append(
-                    {"text": text, "n_groups": n_groups, "_kpf_source": p}
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return blobs.select("path", "content").mapInPandas(batches, RTF_DDL)
+    return map_blobs(blobs, rows, RTF_DDL)
 
 
 def read_rtf(spark: SparkSession, path: str) -> DataFrame:
     """Read an RTF directory/glob as one typed row per document."""
-    bf = spark.read.format("binaryFile").load(path)
-    return parse_rtf_blobs(bf)
+    return parse_rtf_blobs(read_blobs(spark, path))
 
 
 # --------------------------------------------------- fixture-forging writer

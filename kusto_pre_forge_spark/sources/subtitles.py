@@ -19,7 +19,7 @@ breaks are content). Millisecond arithmetic is integer — start/end are
 DOUBLE seconds with exact .001 steps, replayable by any engine.
 
 Stdlib-only (``re``), pure functions + the sibling readers' Spark
-layout (binaryFile → Arrow mapInPandas, one task per blob); fixture
+layout (blob.read_blobs → blob.map_blobs, one task per blob); fixture
 forges emit spec-valid files for both dialects.
 """
 
@@ -28,6 +28,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kusto_pre_forge_spark.sources.blob import map_blobs, read_blobs
 
 SUBTITLE_DDL = (
     "cue_no int, start_s double, end_s double, text string, "
@@ -98,30 +100,18 @@ def parse_subtitles(data: bytes) -> list[dict]:
 
 
 def parse_subtitle_blobs(blobs: DataFrame) -> DataFrame:
-    """(path, content) blob rows → one row per cue (SUBTITLE_DDL) —
-    pure Arrow map stage, the sibling-reader posture. Compose with
-    ``operators/temporal.py`` on (start_s, end_s) or the text gates on
-    ``text``."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for cue in parse_subtitles(content):
-                    rows.append({**cue, "_kpf_source": p})
-            cols = [c.split()[0] for c in SUBTITLE_DDL.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return blobs.select("path", "content").mapInPandas(
-        batches, SUBTITLE_DDL
+    """Blob rows (``blob.read_blobs``, or any binaryFile frame) → one
+    row per cue (SUBTITLE_DDL) — one ``blob.map_blobs`` stage. Compose
+    with ``operators/temporal.py`` on (start_s, end_s) or the text gates
+    on ``text``."""
+    return map_blobs(
+        blobs, lambda _path, f: parse_subtitles(f.read()), SUBTITLE_DDL
     )
 
 
 def read_subtitles(spark: SparkSession, path: str) -> DataFrame:
     """Read an SRT/VTT directory/glob as one typed row per cue."""
-    bf = spark.read.format("binaryFile").load(path)
-    return parse_subtitle_blobs(bf)
+    return parse_subtitle_blobs(read_blobs(spark, path))
 
 
 # --------------------------------------------------- fixture-forging writer

@@ -11,26 +11,31 @@ blank line, ``Content-Length`` octets of block, and a two-CRLF terminator.
 ``response`` records carry an HTTP/1.x message as their block; the payload
 is the entity body (de-chunked when ``Transfer-Encoding: chunked``).
 
-Spark-first layout (the ``sources/avro.py`` playbook): files parallelize
-through the built-in ``binaryFile`` source — one task per blob, which is
-also Common Crawl's unit of distribution (~1 GB segments) — and records
-decode in Arrow batches via ``mapInPandas``. ``.gz`` members handle the
-Common Crawl convention of one gzip MEMBER per record: ``gzip.decompress``
-consumes concatenated members, so whole-file and per-record compression
-both just work.
+Spark-first layout: blobs come from ``blob.read_blobs`` — one task per
+blob, which is also Common Crawl's unit of distribution (~1 GB segments)
+— and records decode in Arrow batches through ``blob.map_blobs``.
+``blob.open_decompressed`` peels ``.gz`` incrementally, including the
+Common Crawl convention of one gzip MEMBER per record, so whole-file and
+per-record compression both just work.
 
-The parser is intentionally a pure function over bytes
-(``iter_warc_records``), so the record framing is unit-testable without
-Spark and reusable by the streaming landing path.
+The parser (:func:`iter_warc_records_from`) reads a file object one
+record at a time, so the record framing is unit-testable without Spark
+and the same on both sides of the binaryFile ceiling.
 """
 
 from __future__ import annotations
 
 import gzip
-import zlib
 import io
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kusto_pre_forge_spark.sources.blob import (
+    DECODE_ERRORS,
+    map_blobs,
+    open_decompressed,
+    read_blobs,
+)
 
 WARC_DDL = (
     "warc_type string, record_id string, warc_date timestamp, "
@@ -89,53 +94,14 @@ def parse_http_response(block: bytes):
     return status, headers, body
 
 
-def iter_warc_records(raw: bytes):
-    """Yield (headers: dict[lower str, str], block: bytes) per WARC
-    record. Framing is Content-Length-driven (the spec's contract);
-    stray bytes between records (padding, truncated tails) are skipped
-    by scanning to the next ``WARC/`` version line."""
-    n = len(raw)
-    pos = 0
-    while pos < n:
-        nxt = raw.find(b"WARC/", pos)
-        if nxt < 0:
-            return
-        head_end = raw.find(b"\r\n\r\n", nxt)
-        if head_end < 0:
-            return
-        lines = raw[nxt:head_end].split(b"\r\n")
-        if not lines[0].startswith(b"WARC/"):
-            pos = nxt + 5
-            continue
-        headers: dict[str, str] = {}
-        for ln in lines[1:]:
-            name, sep, value = ln.partition(b":")
-            if sep:
-                headers[name.strip().lower().decode("latin-1")] = (
-                    value.strip().decode("utf-8", "replace")
-                )
-        try:
-            length = int(headers.get("content-length", ""))
-        except ValueError:
-            pos = head_end + 4
-            continue
-        block_start = head_end + 4
-        block = raw[block_start : block_start + length]
-        if len(block) < length:
-            return  # truncated tail — surface what framed completely
-        yield headers, block
-        pos = block_start + length
-
-
 def iter_warc_records_from(fileobj, chunk_size: int = 1 << 20):
-    """Streaming twin of :func:`iter_warc_records`: yield (headers,
-    block) from a FILE OBJECT, reading ``chunk_size`` bytes at a time
-    and never holding more than one record (+ one chunk) in memory —
-    the path that lifts ``binaryFile``'s 2 GiB-per-blob ceiling and its
-    whole-blob materialization. Framing, header parsing, and
-    stray-byte skipping are IDENTICAL to the in-memory iterator (same
-    parsing decisions byte for byte), so the two paths are bit-exact on
-    the same input; the equivalence is pinned by tests."""
+    """Yield (headers: dict[lower str, str], block: bytes) per WARC
+    record of a FILE OBJECT, reading ``chunk_size`` bytes at a time and
+    never holding more than one record (+ one chunk) in memory. Framing
+    is Content-Length-driven (the spec's contract); stray bytes between
+    records (padding, truncated tails) are skipped by scanning to the
+    next ``WARC/`` version line, and a truncated tail surfaces what
+    framed completely."""
     buf = bytearray()
     eof = False
 
@@ -194,18 +160,9 @@ def iter_warc_records_from(fileobj, chunk_size: int = 1 << 20):
         yield headers, block
 
 
-def _maybe_gunzip(content: bytes) -> bytes:
-    """Transparent for plain bytes; decompresses gzip, INCLUDING the
-    Common Crawl one-member-per-record concatenation."""
-    if content[:2] == b"\x1f\x8b":
-        return gzip.decompress(content)
-    return content
-
-
-def _record_row(path: str, headers: dict, block: bytes, want) -> dict | None:
-    """(headers, block) → one WARC_DDL row dict, or None when filtered.
-    Shared by the in-memory, path-streaming, and streaming-landing paths
-    so every reader builds IDENTICAL rows."""
+def _record_row(headers: dict, block: bytes, want) -> dict | None:
+    """(headers, block) → one WARC_DDL row dict (lineage aside), or None
+    when filtered."""
     wtype = headers.get("warc-type", "")
     if want is not None and wtype.lower() not in want:
         return None
@@ -222,168 +179,77 @@ def _record_row(path: str, headers: dict, block: bytes, want) -> dict | None:
         "http_content_type": http_headers.get("content-type"),
         "payload": payload,
         "payload_text": payload.decode("utf-8", "replace"),
-        "_kpf_source": path,
     }
 
 
-def records_to_rows(path: str, content: bytes, record_types):
-    """One WARC blob → list of row dicts (the WARC_DDL columns). A blob
-    whose gzip framing is corrupt quarantines as zero rows — one bad
-    archive must not fail the task holding ten thousand good ones (the
-    reject-stream posture; truncated TAILS already surface what framed
-    completely)."""
+def warc_rows(f, record_types=("response",)):
+    """Row dicts of one WARC blob open as binary file ``f`` (plain or
+    compressed — :func:`blob.open_decompressed` peels it), one record
+    resident at a time. ``record_types=None`` keeps every record."""
     want = {t.lower() for t in record_types} if record_types else None
-    try:
-        raw = _maybe_gunzip(bytes(content))
-    except (OSError, EOFError, zlib.error):
-        return []
-    rows = []
-    for headers, block in iter_warc_records(raw):
-        row = _record_row(path, headers, block, want)
+    for headers, block in iter_warc_records_from(open_decompressed(f)):
+        row = _record_row(headers, block, want)
         if row is not None:
-            rows.append(row)
-    return rows
+            yield row
+
+
+def records_to_rows(path: str, content: bytes, record_types):
+    """One WARC blob's bytes → list of row dicts (the WARC_DDL columns).
+    A blob whose compression framing is corrupt quarantines as zero rows
+    — one bad archive must not fail the task holding ten thousand good
+    ones (truncated TAILS still surface what framed completely)."""
+    try:
+        return [
+            {**row, "_kpf_source": path}
+            for row in warc_rows(io.BytesIO(bytes(content)), record_types)
+        ]
+    except DECODE_ERRORS:
+        return []
+
+
+def _warc_dates(pdf):
+    import pandas as pd
+
+    pdf["warc_date"] = pd.to_datetime(
+        pdf["warc_date"], format="ISO8601", errors="coerce", utc=True
+    ).dt.tz_localize(None)
+    return pdf
 
 
 def parse_warc_blobs(
     blobs: DataFrame, record_types=("response",)
 ) -> DataFrame:
-    """(path, content) blob rows → one typed row per WARC record.
+    """Blob rows (``blob.read_blobs``, or any binaryFile frame) → one
+    typed row per WARC record.
 
-    Arrow-batched ``mapInPandas``, pure map stage: each blob's records
-    never leave the task that read it — the plan is scan + project at
-    any corpus size, and filtering to ``record_types`` (default:
-    ``response`` only, the records a text pipeline wants) happens before
-    any bytes are materialized into rows. ``record_types=None`` keeps
-    everything (warcinfo/request/metadata included)."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            out = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                out.extend(records_to_rows(p, content, record_types))
-            cols = [c.split()[0] for c in WARC_DDL.split(", ")]
-            res = pd.DataFrame(out, columns=cols)
-            res["warc_date"] = pd.to_datetime(
-                res["warc_date"], format="ISO8601", errors="coerce", utc=True
-            ).dt.tz_localize(None)
-            yield res
-
-    return blobs.select("path", "content").mapInPandas(batches, WARC_DDL)
-
-
-# Spark's binaryFile source materializes each file as ONE byte array whose
-# length must fit a JVM array (Int.MaxValue) — the in-memory path's hard
-# per-blob ceiling. Module constant so tests can exercise the guard.
-BINARYFILE_MAX_BYTES = 2_147_483_647
-
-
-def _open_for_records(path: str):
-    """Open a worker-local path for incremental record reading. Strips
-    the ``file:`` scheme Spark's listers emit; ``.gz`` wraps in
-    GzipFile (multi-member concatenation — the Common Crawl layout —
-    decompresses transparently and incrementally).
-
-    Stream mode reads through Python's ``open`` inside the worker, so it
-    covers filesystems the worker OS can address (local disks, NFS/
-    fuse-mounted object stores — the common >2 GiB-archive deployments).
-    A bare remote scheme (s3://, abfss://, hdfs://) has no Python-side
-    client here; refuse with the workaround named rather than surfacing
-    a bewildering FileNotFoundError from ``open``."""
-    p = path
-    if p.startswith("file://"):
-        p = p[7:]
-    elif p.startswith("file:"):
-        p = p[5:]
-    scheme = p.split("://", 1)[0] if "://" in p else ""
-    if scheme:
-        raise NotImplementedError(
-            f"read_warc(stream=True) opens files with the worker's own "
-            f"filesystem and cannot address the '{scheme}://' scheme "
-            "directly; mount the store (fuse/NFS) or, for files under "
-            "the 2 GiB binaryFile ceiling, use stream=False"
-        )
-    f = open(p, "rb")
-    if p.endswith(".gz"):
-        return gzip.GzipFile(fileobj=f)
-    return f
-
-
-def stream_warc_paths(
-    paths: DataFrame, record_types=("response",)
-) -> DataFrame:
-    """(path) rows → one typed row per WARC record, opening each file
-    INSIDE the worker and iterating records incrementally
-    (:func:`iter_warc_records_from`) — never materializing a whole blob.
-    This is the >2 GiB-archive path: memory per task is one record plus
-    one read chunk, regardless of file size. Rows are bit-identical to
-    :func:`parse_warc_blobs` on the same files (shared ``_record_row``
-    builder + framing-equivalent iterators; pinned by tests)."""
-    import pandas as pd
-
-    want = {t.lower() for t in record_types} if record_types else None
-    cols = [c.split()[0] for c in WARC_DDL.split(", ")]
-
-    def batches(it):
-        for pdf in it:
-            out = []
-            for p in pdf["path"]:
-                with _open_for_records(p) as f:
-                    for headers, block in iter_warc_records_from(f):
-                        row = _record_row(p, headers, block, want)
-                        if row is not None:
-                            out.append(row)
-            res = pd.DataFrame(out, columns=cols)
-            res["warc_date"] = pd.to_datetime(
-                res["warc_date"], format="ISO8601", errors="coerce", utc=True
-            ).dt.tz_localize(None)
-            yield res
-
-    return paths.select("path").mapInPandas(batches, WARC_DDL)
+    Arrow-batched pure map stage (``blob.map_blobs``): each blob's
+    records never leave the task that read it — the plan is scan +
+    project at any corpus size, and filtering to ``record_types``
+    (default: ``response`` only, the records a text pipeline wants)
+    happens before any bytes are materialized into rows.
+    ``record_types=None`` keeps everything (warcinfo/request/metadata
+    included). A blob whose compression framing is corrupt yields zero
+    rows on either side of the binaryFile ceiling."""
+    return map_blobs(
+        blobs,
+        lambda _path, f: warc_rows(f, record_types),
+        WARC_DDL,
+        DECODE_ERRORS,
+        _warc_dates,
+    )
 
 
 def read_warc(
-    spark: SparkSession,
-    path: str,
-    record_types=("response",),
-    stream: bool = False,
+    spark: SparkSession, path: str, record_types=("response",)
 ) -> DataFrame:
     """Read a WARC directory/glob (``.warc`` / ``.warc.gz``) as a typed
     DataFrame with ``_kpf_source`` lineage — the crawl→text pipeline's
     first reader; compose with ``textprep.html_extract`` on
-    ``payload_text`` for main-content extraction.
-
-    ``stream=False`` (default) rides ``binaryFile`` — one task per blob,
-    the Common Crawl ~1 GiB distribution unit — and materializes each
-    blob once per task. That source hard-caps a file at
-    ``BINARYFILE_MAX_BYTES`` (a JVM byte-array limit); oversized files
-    raise a clear ValueError here, at the engine surface, instead of a
-    Spark-internal error mid-job. ``stream=True`` distributes PATHS and
-    opens each file inside the worker, iterating records incrementally —
-    no per-file size ceiling and no whole-blob memory spike; results are
-    bit-identical. The listing itself is metadata-only either way
-    (``binaryFile`` prunes the content column when only path/length are
-    selected)."""
-    bf = spark.read.format("binaryFile").load(path)
-    if stream:
-        n = max(1, len(bf.select("path").inputFiles()) or 1)
-        # one file per task (records decode where the file is opened)
-        return stream_warc_paths(
-            bf.select("path").repartition(min(n, 10_000), "path"),
-            record_types,
-        )
-    over = (
-        bf.selectExpr("max(length) AS m").first().m or 0
-    )  # metadata-only: binaryFile prunes content for status-level columns
-    if over > BINARYFILE_MAX_BYTES:
-        raise ValueError(
-            f"read_warc: an input file is {over} bytes, past the "
-            f"binaryFile per-blob ceiling ({BINARYFILE_MAX_BYTES}); "
-            "pass stream=True to read it incrementally (path-streaming "
-            "mode has no per-file limit)"
-        )
-    return parse_warc_blobs(bf, record_types)
+    ``payload_text`` for main-content extraction. One task per blob (the
+    Common Crawl ~1 GiB distribution unit); files past the binaryFile
+    ceiling are read inside the workers (``blob.read_blobs``) with the
+    same rows."""
+    return parse_warc_blobs(read_blobs(spark, path), record_types)
 
 
 # --------------------------------------------------- fixture-forging writer

@@ -21,16 +21,15 @@ Reference parity: the reference's format dispatch throws for anything
 beyond txt (code/KustoPreForgeLib/EtlRun.cs:87-89); this continues the
 document-input family from public formats.
 
-Two read paths, the house convention:
-
-- :func:`read_xml_rows` — ``binaryFile`` + one Arrow map stage, bz2 /
-  gzip peel by magic.
-- :func:`read_xml_rows_stream` — PAST the 2 GiB ceiling (stackoverflow
-  Posts.xml is ~100 GB uncompressed): worker-side incremental
-  iterparse, one row element resident at a time, Arrow batches out.
+One read path: ``blob.read_blobs`` + one ``blob.map_blobs`` stage; the
+dump opens through ``blob.open_decompressed`` (bz2 / gzip by magic) and
+``iterparse`` yields one row element at a time, so a file past the 2 GiB
+``binaryFile`` ceiling (stackoverflow Posts.xml is ~100 GB uncompressed)
+streams from inside the worker.
 
 Stack Exchange publishes ``.7z`` archives — no stdlib 7z codec exists,
-so those refuse loudly with the recompression workaround named (the
+so those extract through the ``py7zr`` wheel where it is importable and
+otherwise refuse loudly with the recompression workaround named (the
 import-try escape-hatch posture).
 """
 
@@ -39,11 +38,17 @@ from __future__ import annotations
 import bz2
 import gzip
 import io
-import zlib
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import quoteattr
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kusto_pre_forge_spark.sources.blob import (
+    DECODE_ERRORS,
+    map_blobs,
+    open_decompressed,
+    read_blobs,
+)
 
 
 def _ddl(attrs: list[str]) -> str:
@@ -51,105 +56,73 @@ def _ddl(attrs: list[str]) -> str:
     return f"row_no long, {cols}, _kpf_source string"
 
 
-def _local(tag: str) -> str:
+# What a corrupt XML dump raises while it is read: the blob-level decode
+# errors plus the parser's own.
+XML_DECODE_ERRORS = DECODE_ERRORS + (ET.ParseError,)
+
+
+def local_tag(tag: str) -> str:
+    """Strip the `{namespace-uri}` prefix iterparse attaches."""
     return tag.rsplit("}", 1)[-1]
 
 
-def iter_xml_rows(fileobj, row_tag: str = "row"):
-    """Incremental iterator over an element-per-row XML stream: yields
-    one ``{attribute: value}`` dict per ``<row .../>``, clearing each
-    element after use so memory stays one-row-bounded regardless of
-    file size (the iterparse idiom shared with sources/mediawiki.py)."""
-    context = ET.iterparse(fileobj, events=("start", "end"))
+def iter_elements(fileobj, tag: str):
+    """Yield each completed ``tag`` element (namespace ignored) of an XML
+    stream, clearing and detaching it after use so memory stays
+    one-element-bounded regardless of file size — the standard iterparse
+    idiom for multi-GB XML, shared with sources/mediawiki.py. The root is
+    grabbed once so cleared elements detach from it (otherwise it
+    accumulates every cleared-but-referenced child)."""
     root = None
-    for event, elem in context:
+    for event, elem in ET.iterparse(fileobj, events=("start", "end")):
         if event == "start":
             if root is None:
                 root = elem
             continue
-        if _local(elem.tag) == row_tag:
-            yield dict(elem.attrib)
+        if local_tag(elem.tag) == tag:
+            yield elem
             elem.clear()
-            if root is not None:
-                try:
-                    root.remove(elem)
-                except ValueError:
-                    pass
+            try:
+                root.remove(elem)
+            except ValueError:
+                pass
 
 
-def _peel(data: bytes) -> bytes:
-    if data[:3] == b"BZh":
-        return bz2.decompress(data)
-    if data[:2] == b"\x1f\x8b":
-        return gzip.decompress(data)
-    if data[:6] == b"7z\xbc\xaf\x27\x1c":
-        from kusto_pre_forge_spark.sources.autoextract import (
-            py7zr_available,
-        )
-
-        if py7zr_available():
-            # Stack Exchange .7z archives hold ONE xml dump each
-            # (Posts.7z → Posts.xml): extract the first .xml member
-            import py7zr
-
-            with py7zr.SevenZipFile(io.BytesIO(bytes(data))) as sz:
-                names = [
-                    fi.filename
-                    for fi in sz.list()
-                    if not getattr(fi, "is_directory", False)
-                    and fi.filename.lower().endswith(".xml")
-                ]
-                sz.reset()
-                if names:
-                    got = sz.read(names[:1])
-                    return got[names[0]].read()
-            raise ValueError("7z archive holds no .xml member")
-        raise NotImplementedError(
-            "Stack Exchange ships .7z archives and no stdlib 7z codec "
-            "exists; `pip install py7zr` on the executors (the "
-            "import-try hatch), or recompress to bz2/gzip "
-            "(e.g. `7z x` then `bzip2`)"
-        )
-    return data
+def iter_xml_rows(f, attrs: list[str], row_tag: str = "row"):
+    """Row dicts (``row_no`` + the requested attributes, missing → None)
+    of an element-per-row dump open as binary file ``f`` (plain / .bz2 /
+    .gz / .7z — :func:`blob.open_decompressed` peels it), one row
+    element resident at a time."""
+    elems = iter_elements(open_decompressed(f), row_tag)
+    for i, elem in enumerate(elems):
+        yield {"row_no": i, **{a: elem.attrib.get(a) for a in attrs}}
 
 
 def parse_xml_rows(
     data: bytes, attrs: list[str], row_tag: str = "row"
 ) -> list[dict]:
-    """Pure function: dump bytes (plain / .bz2 / .gz) → row dicts with
-    ``row_no`` + the requested attributes (missing → None)."""
+    """Pure function: dump bytes → row dicts; a corrupt dump
+    quarantines as []."""
     try:
-        payload = _peel(bytes(data))
-        out = []
-        for i, attrib in enumerate(iter_xml_rows(io.BytesIO(payload), row_tag)):
-            row = {"row_no": i}
-            for a in attrs:
-                row[a] = attrib.get(a)
-            out.append(row)
-        return out
-    except (OSError, EOFError, ValueError, zlib.error, ET.ParseError):
+        return list(iter_xml_rows(io.BytesIO(bytes(data)), attrs, row_tag))
+    except XML_DECODE_ERRORS:
         return []
 
 
 def parse_xml_row_blobs(
     blobs: DataFrame, attrs: list[str], row_tag: str = "row"
 ) -> DataFrame:
-    """(path, content) blob rows → one row per ``<row>`` element —
-    pure Arrow map stage, the sibling-reader posture."""
-    import pandas as pd
-
+    """Blob rows (``blob.read_blobs``, or any binaryFile frame) → one
+    row per ``<row>`` element — one ``blob.map_blobs`` stage. A dump that
+    fails to parse ANYWHERE yields zero rows on either side of the
+    binaryFile ceiling, never a partial prefix."""
     attrs = list(attrs)
-    cols = ["row_no", *attrs, "_kpf_source"]
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for row in parse_xml_rows(content, attrs, row_tag):
-                    rows.append({**row, "_kpf_source": p})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return blobs.select("path", "content").mapInPandas(batches, _ddl(attrs))
+    return map_blobs(
+        blobs,
+        lambda _path, f: iter_xml_rows(f, attrs, row_tag),
+        _ddl(attrs),
+        XML_DECODE_ERRORS,
+    )
 
 
 def read_xml_rows(
@@ -158,83 +131,12 @@ def read_xml_rows(
     attrs: list[str],
     row_tag: str = "row",
 ) -> DataFrame:
-    """Read an attribute-row XML directory/glob (plain / .bz2 / .gz) as
-    one typed row per element. Blobs must fit the 2 GiB ``binaryFile``
-    ceiling — stackoverflow's Posts.xml doesn't; use
-    :func:`read_xml_rows_stream` there."""
-    bf = spark.read.format("binaryFile").load(path)
-    return parse_xml_row_blobs(bf, attrs, row_tag)
-
-
-def read_xml_rows_stream(
-    spark: SparkSession,
-    path: str,
-    attrs: list[str],
-    row_tag: str = "row",
-) -> DataFrame:
-    """Attribute-row XML PAST the 2 GiB ceiling: paths distribute via
-    exact one-file-per-task slicing, each worker opens its file through
-    the matching decompressor and iterparse yields one row at a time in
-    Arrow batches. Pinned row-identical to :func:`read_xml_rows`; bare
-    remote schemes refuse with the mount workaround named."""
-    import pandas as pd
-
-    from kusto_pre_forge_spark.sources.blob import (
-        exact_path_slices,
-        worker_local_path,
-    )
-
-    attrs = list(attrs)
-    cols = ["row_no", *attrs, "_kpf_source"]
-    paths = exact_path_slices(spark, path, max_files_per_task=1)
-
-    def batches(it):
-        for pdf in it:
-            for p in pdf["path"]:
-                raw = worker_local_path(p)
-                with open(raw, "rb") as probe:
-                    head = probe.read(6)
-                if head[:6] == b"7z\xbc\xaf\x27\x1c":
-                    from kusto_pre_forge_spark.sources.autoextract import (
-                        py7zr_available,
-                    )
-
-                    if not py7zr_available():
-                        raise NotImplementedError(
-                            "no stdlib 7z codec; `pip install py7zr` on "
-                            "the executors (the import-try hatch), or "
-                            "recompress to bz2/gzip"
-                        )
-                    # whole-archive read: SE dumps are one xml per .7z,
-                    # and 7z's solid compression has no streaming entry
-                    with open(raw, "rb") as f7:
-                        opener = io.BytesIO(_peel(f7.read()))
-                elif head[:3] == b"BZh":
-                    opener = bz2.BZ2File(raw, "rb")
-                elif head[:2] == b"\x1f\x8b":
-                    opener = gzip.open(raw, "rb")
-                else:
-                    opener = open(raw, "rb")
-                rows: list[dict] = []
-                try:
-                    with opener as f:
-                        for i, attrib in enumerate(
-                            iter_xml_rows(f, row_tag)
-                        ):
-                            row = {"row_no": i}
-                            for a in attrs:
-                                row[a] = attrib.get(a)
-                            row["_kpf_source"] = p
-                            rows.append(row)
-                            if len(rows) >= 1024:
-                                yield pd.DataFrame(rows, columns=cols)
-                                rows = []
-                except (OSError, EOFError, ValueError, zlib.error, ET.ParseError):
-                    rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return paths.mapInPandas(batches, _ddl(attrs))
+    """Read an attribute-row XML directory/glob (plain / .bz2 / .gz /
+    .7z) as one typed row per element. Dumps past the 2 GiB binaryFile
+    ceiling (stackoverflow's Posts.xml is ~100 GB uncompressed) are
+    opened inside the workers (``blob.read_blobs``) with the same
+    rows."""
+    return parse_xml_row_blobs(read_blobs(spark, path), attrs, row_tag)
 
 
 # --------------------------------------------------- fixture-forging writer

@@ -218,8 +218,6 @@ class StreamingEtl:
         """
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            if not batch_df.head(1):
-                return
             with_pid = prepartition(batch_df.drop("_kpf_source"), policy).withColumn(
                 "_kpf_batch", F.lit(batch_id)
             )
@@ -276,8 +274,6 @@ class StreamingEtl:
         manifest = IngestManifest(self.spark, manifest_path)
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            if not batch_df.head(1):
-                return
             from kusto_pre_forge_spark.sinks.manifest import ingest_idempotent
 
             sharded = batch_df.withColumn("_kpf_shard_id", F.lit("00000")).withColumn(

@@ -3,6 +3,8 @@ mixed-dump front door: magic bytes decide, extensions lie."""
 
 import gzip
 
+import pytest
+
 from kusto_pre_forge_spark.sources import autoextract as A
 from kusto_pre_forge_spark.sources import docx as D
 from kusto_pre_forge_spark.sources import ipynb as N
@@ -275,12 +277,15 @@ def test_archive_streaming_landing(spark, tmp_path):
     assert got == [("m1", "alpha"), ("m2", "beta")]
 
 
-def test_read_text_auto_stream_identical_to_inmemory(spark, tmp_path):
-    """The >2 GiB path: read_text_auto_stream (worker-side open, tar
-    members streamed one-at-a-time via tarfile pipe mode, zip via the
-    path-seekable reader) must return EXACTLY the in-memory front
-    door's rows on a mixed dir of tar.gz + zip + pdf + text blobs."""
+def test_read_text_auto_identical_across_ceiling(spark, tmp_path, monkeypatch):
+    """The >2 GiB path: above the ceiling (forced by patching it to 0)
+    read_text_auto opens each blob inside the worker — tar members
+    streamed one at a time via tarfile pipe mode, zip via the seekable
+    reader — and must return EXACTLY the binaryFile side's rows on a
+    mixed dir of tar.gz + zip + pdf + text blobs."""
     import gzip as _gz
+
+    from kusto_pre_forge_spark.sources import blob
 
     (tmp_path / "bundle.tgz").write_bytes(
         _gz.compress(
@@ -303,20 +308,22 @@ def test_read_text_auto_stream_identical_to_inmemory(spark, tmp_path):
         )
 
     mem = rows(A.read_text_auto(spark, str(tmp_path / "*")))
-    st = rows(A.read_text_auto_stream(spark, str(tmp_path / "*")))
+    monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", 0)
+    st = rows(A.read_text_auto(spark, str(tmp_path / "*")))
     assert st == mem and len(mem) == 7
     assert ("bundle.tgz!b.pdf", "pdf", "pdf body") in mem
 
-    import pytest as _pytest
 
-    with _pytest.raises(Exception, match="scheme"):
-        A.read_text_auto_stream(spark, "s3://bucket/x").collect()
+@pytest.mark.parametrize("ceiling", [None, 0])
+def test_tar_valves_match_inmemory(spark, tmp_path, monkeypatch, ceiling):
+    """Valve sentinel parity between the Spark read (both sides of the
+    binaryFile ceiling) and the pure front door."""
+    from kusto_pre_forge_spark.sources import blob
 
-
-def test_stream_tar_valves_match_inmemory(spark, tmp_path):
-    """Valve sentinel parity between the streamed and in-memory paths."""
-    blob = _tar_bytes([(f"m{i}.txt", b"data") for i in range(5)])
-    (tmp_path / "big.tar").write_bytes(blob)
+    blob_bytes = _tar_bytes([(f"m{i}.txt", b"data") for i in range(5)])
+    (tmp_path / "big.tar").write_bytes(blob_bytes)
+    if ceiling is not None:
+        monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", ceiling)
     got = sorted(
         (
             r._kpf_source.split("!")[-1]
@@ -324,13 +331,13 @@ def test_stream_tar_valves_match_inmemory(spark, tmp_path):
             else r._kpf_source.rsplit("/", 1)[-1],
             r.kind,
         )
-        for r in A.read_text_auto_stream(
+        for r in A.read_text_auto(
             spark, str(tmp_path / "big.tar"), max_members=2
         ).collect()
     )
     want = sorted(
         (m if m else "big.tar", k)
-        for m, k, _ in A.extract_auto_rows(blob, max_members=2)
+        for m, k, _ in A.extract_auto_rows(blob_bytes, max_members=2)
     )
     assert got == want
     assert ("big.tar", "archive_truncated") in got
@@ -445,7 +452,7 @@ def _forge_tar(members: dict[str, bytes]) -> bytes:
 def test_tar_zst_member_streaming_routing(monkeypatch, tmp_path):
     """The .tar.zst member-streaming ROUTE, pinned without the wheel: a
     stub ``zstandard`` whose stream_reader is a passthrough past the
-    4-byte magic stands in for the codec, and iter_tar_members_from
+    4-byte magic stands in for the codec, and iter_archive_members
     yields the tar's members one at a time through the pipe."""
     import sys
     import types
@@ -483,7 +490,8 @@ def test_tar_zst_member_streaming_routing(monkeypatch, tmp_path):
     fake.ZstdError = type("ZstdError", (Exception,), {})
     monkeypatch.setitem(sys.modules, "zstandard", fake)
 
-    got = list(A.iter_tar_members_from(str(p)))
+    with open(p, "rb") as f:
+        got = list(A.iter_archive_members(f, "tar"))
     assert got == [("a.txt", b"alpha"), ("b/b.txt", b"beta " * 10)]
     # a corrupt pipe (reader raising the codec error) quarantines as
     # ValueError through _ZstdTarPipe, not a third-party type
@@ -505,10 +513,10 @@ def test_tar_zst_member_streaming_routing(monkeypatch, tmp_path):
 
 
 def test_tar_zst_stream_equals_in_memory_when_wheel_present(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """Env-gated: where the real zstandard wheel is importable, a
-    forged .tar.zst streams through read_text_auto_stream with rows
+    forged .tar.zst read above the binaryFile ceiling streams with rows
     IDENTICAL to the in-memory front door on the same bytes."""
     import pytest as _pt
 
@@ -522,9 +530,12 @@ def test_tar_zst_stream_equals_in_memory_when_wheel_present(
     blob = zstandard.ZstdCompressor().compress(tar)
     p = tmp_path / "bundle.tar.zst"
     p.write_bytes(blob)
+    from kusto_pre_forge_spark.sources import blob as B
+
+    monkeypatch.setattr(B, "BINARYFILE_MAX_BYTES", 0)
     streamed = sorted(
         (r._kpf_source.split("!")[-1], r.kind, r.text)
-        for r in A.read_text_auto_stream(spark, str(p)).collect()
+        for r in A.read_text_auto(spark, str(p)).collect()
     )
     in_mem = sorted(
         (m, k, t) for m, k, t in A.extract_auto_rows(blob)

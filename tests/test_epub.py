@@ -42,8 +42,9 @@ def test_epub_repair_posture_and_negatives():
     assert not E.is_epub(buf2.getvalue())
 
 
-def test_epub_spark_layer_and_front_door(spark, tmp_path):
+def test_epub_spark_layer_and_front_door(spark, tmp_path, monkeypatch):
     from kusto_pre_forge_spark.sources import autoextract as A
+    from kusto_pre_forge_spark.sources import blob
 
     (tmp_path / "book.bin").write_bytes(E.epub_bytes(["c1", "c2"]))
     rows = sorted(
@@ -56,12 +57,13 @@ def test_epub_spark_layer_and_front_door(spark, tmp_path):
     assert kind == "epub" and "c1" in text and "\x0c" in text
     rows = A.extract_auto_rows(E.epub_bytes(["c1"]))
     assert len(rows) == 1 and rows[0][0] is None and rows[0][1] == "epub"
-    # streamed path agrees
-    got = {
-        (r.kind, r.text)
-        for r in A.read_text_auto_stream(spark, str(tmp_path / "*.bin")).collect()
-    }
+    # the worker-side read (above the binaryFile ceiling) agrees
     mem = {
+        (r.kind, r.text)
+        for r in A.read_text_auto(spark, str(tmp_path / "*.bin")).collect()
+    }
+    monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", 0)
+    got = {
         (r.kind, r.text)
         for r in A.read_text_auto(spark, str(tmp_path / "*.bin")).collect()
     }

@@ -1,8 +1,8 @@
 """MediaWiki dump source + wikitext extraction.
 
 Covers the pure parser (namespace-qualified tags, last-revision-wins,
-redirect attributes, compression peel), the Spark batch/stream read
-paths (pinned row-identical), front-door routing (incl. bz2 peeling of
+redirect attributes, compression peel), the Spark read on both sides
+of the binaryFile ceiling (pinned row-identical), front-door routing (incl. bz2 peeling of
 arbitrary text), and WIKITEXT_RULES unit vectors.
 """
 
@@ -12,6 +12,7 @@ import gzip
 import pytest
 
 from kusto_pre_forge_spark.sources import autoextract as A
+from kusto_pre_forge_spark.sources import blob
 from kusto_pre_forge_spark.sources import mediawiki as MW
 
 
@@ -58,14 +59,15 @@ def test_is_mediawiki_probe():
     assert MW.is_mediawiki(b"\xef\xbb\xbf<?xml version=\"1.0\"?>\n<mediawiki>")
 
 
-def test_batch_and_stream_reads_identical(spark, tmp_path):
+def test_reads_identical_across_ceiling(spark, tmp_path, monkeypatch):
     d = tmp_path / "wiki"
     d.mkdir()
     (d / "a.xml").write_bytes(_dump())
     (d / "b.xml.bz2").write_bytes(_dump(compress="bz2"))
     (d / "c.xml.gz").write_bytes(_dump(compress="gzip"))
     batch = MW.read_mediawiki(spark, str(d)).toPandas()
-    stream = MW.read_mediawiki_stream(spark, str(d)).toPandas()
+    monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", 0)
+    stream = MW.read_mediawiki(spark, str(d)).toPandas()
     key = ["_kpf_source", "page_no"]
     b = batch.sort_values(key).reset_index(drop=True)
     s = stream.sort_values(key).reset_index(drop=True)
@@ -73,9 +75,9 @@ def test_batch_and_stream_reads_identical(spark, tmp_path):
     assert b.equals(s)
 
 
-def test_stream_refuses_remote_scheme(spark):
-    with pytest.raises(Exception, match="scheme"):
-        MW.read_mediawiki_stream(spark, "s3://bucket/wiki").collect()
+def test_worker_side_read_refuses_remote_scheme():
+    with pytest.raises(NotImplementedError, match="scheme"):
+        blob.worker_local_path("s3://bucket/wiki/a.xml.bz2")
 
 
 def test_front_door_routes_mediawiki():
@@ -189,10 +191,12 @@ def test_wikitext_rules_duckdb_parity():
         assert duck == py.strip(), src
 
 
-def test_stream_quarantines_whole_corrupt_blob(spark, tmp_path):
+def test_worker_side_quarantines_whole_corrupt_blob(
+    spark, tmp_path, monkeypatch
+):
     # A dump that decompresses fine for >1024 pages, then hits a parse
-    # error, must yield ZERO rows (read_mediawiki's quarantine), never
-    # a partial prefix — the row-identical contract between the paths.
+    # error, must yield ZERO rows on both sides of the binaryFile
+    # ceiling, never a partial prefix.
     d = tmp_path / "wikicorrupt"
     d.mkdir()
     pages = [
@@ -205,8 +209,9 @@ def test_stream_quarantines_whole_corrupt_blob(spark, tmp_path):
     corrupt = good[:cut] + b"<page><title>broken"
     (d / "bad.xml").write_bytes(corrupt)
     (d / "ok.xml").write_bytes(MW.mediawiki_bytes(pages[:3]))
-    stream = MW.read_mediawiki_stream(spark, str(d)).toPandas()
     batch = MW.read_mediawiki(spark, str(d)).toPandas()
+    monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", 0)
+    stream = MW.read_mediawiki(spark, str(d)).toPandas()
     assert set(stream["_kpf_source"].unique()) == {
         p for p in batch["_kpf_source"].unique()
     }

@@ -438,65 +438,55 @@ def test_read_xz_lines_and_landing(spark, tmp_path):
     assert got == [(1, "aa"), (2, "bb")]
 
 
-def test_read_blobs_via_paths_identical_to_binaryfile(spark, tmp_path):
-    """The worker-side blob reader (the JVM-2 GiB-cap escape hatch) must
-    deliver the same (path, content) rows as binaryFile, and the typed
-    readers built on it must return identical results (the remote-scheme
-    refusal shares its guard shape with warc._open_for_records, tested
-    there)."""
+def test_read_blobs_identical_across_ceiling(spark, tmp_path, monkeypatch):
+    """Above the binaryFile ceiling (forced by patching it to 0),
+    read_blobs hands map_blobs paths whose files open inside the
+    workers; the typed readers built on it must return identical
+    results on both sides."""
+    from kusto_pre_forge_spark.sources import blob
     from kusto_pre_forge_spark.sources import docx as D
     from kusto_pre_forge_spark.sources import pdf as P
-    from kusto_pre_forge_spark.sources.blob import read_blobs_via_paths
 
     (tmp_path / "a.pdf").write_bytes(P.pdf_bytes(["page one", "page two"]))
     (tmp_path / "b.docx").write_bytes(D.docx_bytes("docx text\nsecond"))
 
-    bf = {
-        r.path: bytes(r.content)
-        for r in spark.read.format("binaryFile")
-        .load(str(tmp_path / "*"))
-        .collect()
-    }
-    ws = {
-        r.path: bytes(r.content)
-        for r in read_blobs_via_paths(spark, str(tmp_path / "*")).collect()
-    }
-    assert bf == ws and len(bf) == 2
+    def pages():
+        return sorted(
+            (r.page_no, r.page_text)
+            for r in P.read_pdf(spark, str(tmp_path / "*.pdf")).collect()
+        )
 
-    mem = sorted(
-        (r.page_no, r.page_text)
-        for r in P.read_pdf(spark, str(tmp_path / "*.pdf")).collect()
+    mem = pages()
+    below = blob.read_blobs(spark, str(tmp_path / "*"))
+    assert "content" in below.columns
+    monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", 0)
+    above = blob.read_blobs(spark, str(tmp_path / "*"))
+    assert above.columns == ["path"]
+    # the same listing, in the binaryFile path spelling, on both sides
+    assert sorted(r.path for r in above.collect()) == sorted(
+        r.path for r in below.select("path").collect()
     )
-    st = sorted(
-        (r.page_no, r.page_text)
-        for r in P.read_pdf(spark, str(tmp_path / "*.pdf"), stream=True).collect()
-    )
-    assert mem == st == [(0, "page one"), (1, "page two")]
+    assert pages() == mem == [(0, "page one"), (1, "page two")]
     assert (
-        D.read_docx(spark, str(tmp_path / "*.docx"), stream=True)
-        .first()
-        .text
+        D.read_docx(spark, str(tmp_path / "*.docx")).first().text
         == "docx text\nsecond"
     )
 
-    # remote-scheme refusal: the same guard shape as warc._open_for_records
-    # (tested there); here just pin that a file: URI strips cleanly, which
-    # is what every row above already exercised end-to-end.
 
-
-def test_read_blobs_via_paths_balanced_one_file_per_task(spark, tmp_path):
-    """max_files_per_task=1 must GUARANTEE at most one file per task:
-    the listing round-robins (no hash column) so collisions cannot
-    co-locate several huge files on one task (round-11 ADVICE)."""
+def test_read_blobs_above_ceiling_one_file_per_task(spark, tmp_path, monkeypatch):
+    """Above the ceiling read_blobs must GUARANTEE at most one file per
+    task: the listing slices exactly (no hash column) so collisions
+    cannot co-locate several huge files on one task."""
     from pyspark.sql import functions as F
 
-    from kusto_pre_forge_spark.sources.blob import read_blobs_via_paths
+    from kusto_pre_forge_spark.sources import blob
 
     d = tmp_path / "many"
     d.mkdir()
     for i in range(12):
         (d / f"f{i:02d}.bin").write_bytes(b"x" * (i + 1))
-    out = read_blobs_via_paths(spark, str(d / "*"), max_files_per_task=1)
+    monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", 6)
+    out = blob.read_blobs(spark, str(d / "*"))
     per_task = (
         out.groupBy(F.spark_partition_id().alias("pid"))
         .count()
@@ -504,3 +494,70 @@ def test_read_blobs_via_paths_balanced_one_file_per_task(spark, tmp_path):
     )
     assert sum(r["count"] for r in per_task) == 12
     assert max(r["count"] for r in per_task) == 1
+
+
+def _single_path_fixtures():
+    """(name, file name, forged bytes, reader(spark, glob)) for the
+    formats that only ever had a binaryFile path."""
+    from kusto_pre_forge_spark.sources import epub as E
+    from kusto_pre_forge_spark.sources import ipynb as N
+    from kusto_pre_forge_spark.sources import mail as M
+    from kusto_pre_forge_spark.sources import rtf as R
+    from kusto_pre_forge_spark.sources import subtitles as S
+    from kusto_pre_forge_spark.sources.avro import read_avro, write_avro_ocf
+
+    schema = {
+        "type": "record",
+        "name": "ev",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "name", "type": ["null", "string"]},
+            {"name": "ts", "type": {"type": "long",
+                                    "logicalType": "timestamp-millis"}},
+        ],
+    }
+    avro = write_avro_ocf(
+        schema,
+        [{"id": 1, "name": "a", "ts": 1714521600123},
+         {"id": 2, "name": None, "ts": 0}],
+    )
+    mbox = M.mbox_bytes(
+        [{"subject": f"s{i}", "from_addr": "a@b.c",
+          "date": "Thu, 1 Jan 1970 00:00:00 +0000", "body": f"body {i}"}
+         for i in range(2)]
+    )
+    return {
+        "epub": ("b.epub", E.epub_bytes(["c1", "c2"]), E.read_epub),
+        "mail": ("m.mbox", mbox, M.read_mbox),
+        "rtf": ("d.rtf", R.rtf_bytes("rtf text\nline two"), R.read_rtf),
+        "subtitles": (
+            "s.srt", S.srt_bytes([(0, 1500, "hello"), (2000, 3000, "bye")]),
+            S.read_subtitles,
+        ),
+        "avro": ("e.avro", avro, read_avro),
+        "ipynb": (
+            "n.ipynb", N.ipynb_bytes([("markdown", "# t"), ("code", "x = 1")]),
+            N.read_ipynb,
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "fmt", ["epub", "mail", "rtf", "subtitles", "avro", "ipynb"]
+)
+def test_reader_rows_identical_across_ceiling(spark, tmp_path, monkeypatch, fmt):
+    """Every document reader returns the same rows below the binaryFile
+    ceiling and above it (forced by patching it to 0), where
+    read_blobs hands map_blobs paths opened inside the workers."""
+    from kusto_pre_forge_spark.sources import blob
+
+    name, data, read = _single_path_fixtures()[fmt]
+    (tmp_path / name).write_bytes(data)
+    glob = str(tmp_path / name)
+
+    def rows():
+        return sorted(tuple(r) for r in read(spark, glob).collect())
+
+    below = rows()
+    monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", 0)
+    assert rows() == below and below

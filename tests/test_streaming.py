@@ -83,6 +83,42 @@ def test_streaming_prepartition_two_waves(spark, tmp_path, landing):
     assert bad.count() == 0
 
 
+def test_file_source_runs_no_empty_micro_batch(spark, tmp_path, landing):
+    """A stateless file-source query never hands foreachBatch an empty
+    micro-batch — idle processing-time triggers run no batch, and an
+    availableNow restart with nothing new runs none either — which is
+    why the StreamingEtl modes need no per-batch emptiness probe."""
+    import time
+
+    land, _ = landing
+    etl = StreamingEtl(
+        spark,
+        landing_dir=str(land) + "/*.csv",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        output_dir=str(tmp_path / "out"),
+        schema=SCHEMA,
+    )
+    counts = []
+
+    def record(batch_df, batch_id):
+        counts.append(batch_df.count())
+
+    (land / "wave0.csv.pending").rename(land / "wave0.csv")
+    q = etl.start(record, trigger_seconds=1)
+    try:
+        deadline = time.time() + 60
+        while len(counts) < 1 and time.time() < deadline:
+            time.sleep(0.2)
+        (land / "wave1.csv.pending").rename(land / "wave1.csv")
+        while len(counts) < 2 and time.time() < deadline:
+            time.sleep(0.2)
+        time.sleep(3)  # several idle triggers
+    finally:
+        q.stop()
+    _drain(etl.start(record, available_now=True))
+    assert len(counts) == 2 and all(n > 0 for n in counts), counts
+
+
 def test_streaming_idempotent_ingest_replay(spark, tmp_path, landing):
     land, orders = landing
     (land / "wave0.csv.pending").rename(land / "wave0.csv")

@@ -1,10 +1,18 @@
 """WARC source: record framing, gzip members, HTTP payload extraction."""
 
 import gzip
+import io
+
+import pytest
 
 from pyspark.sql import functions as F
 
+from kusto_pre_forge_spark.sources import blob
 from kusto_pre_forge_spark.sources import warc as W
+
+
+def _records(raw: bytes):
+    return list(W.iter_warc_records_from(io.BytesIO(raw)))
 
 
 def _fixture_records():
@@ -30,7 +38,7 @@ def _fixture_records():
 
 def test_iter_warc_records_framing():
     raw = W.write_warc(_fixture_records())
-    recs = list(W.iter_warc_records(raw))
+    recs = _records(raw)
     assert [h["warc-type"] for h, _ in recs] == [
         "warcinfo", "response", "response", "request",
     ]
@@ -44,11 +52,11 @@ def test_iter_warc_records_framing():
 def test_warc_stray_bytes_and_truncation():
     rs = _fixture_records()
     raw = b"JUNK" + rs[1] + b"garbage between" + rs[2]
-    got = list(W.iter_warc_records(raw))
+    got = _records(raw)
     assert len(got) == 2
     # truncated tail record is dropped, completed ones survive
     trunc = W.write_warc([rs[1]]) + rs[2][: len(rs[2]) // 2]
-    got2 = list(W.iter_warc_records(trunc))
+    got2 = _records(trunc)
     assert len(got2) == 1
 
 
@@ -156,26 +164,26 @@ def test_warc_streaming_landing(spark, tmp_path):
     assert all(r._kpf_source for r in rows)
 
 
-def test_iter_warc_records_from_matches_in_memory():
-    """The streaming iterator must make the SAME framing decisions as
-    the in-memory one — including stray padding between records and a
-    truncated tail — across chunk seams (tiny chunk_size stresses every
-    boundary)."""
-    import io
-
+def test_iter_warc_records_from_chunk_seams():
+    """The iterator must make the same framing decisions at every chunk
+    size — skipping stray padding between records and dropping a
+    truncated tail — as on the clean records alone (tiny chunk_size
+    stresses every boundary)."""
     rs = _fixture_records()
     raw = (
         b"JUNKPAD" + rs[0] + b"\x00\x00garbage" + rs[1] + rs[2][: len(rs[2]) // 2]
     )
-    want = list(W.iter_warc_records(raw))
+    want = _records(rs[0] + rs[1])
+    assert len(want) == 2
     for chunk in (1, 3, 7, 64, 1 << 20):
         got = list(W.iter_warc_records_from(io.BytesIO(raw), chunk_size=chunk))
         assert got == want, f"chunk_size={chunk}"
 
 
-def test_stream_warc_paths_bit_identical(spark, tmp_path):
-    """read_warc(stream=True) must return the same rows as the
-    binaryFile path on the same files — plain AND gzip-member."""
+def test_read_warc_rows_identical_across_ceiling(spark, tmp_path, monkeypatch):
+    """Above the binaryFile ceiling (forced by patching it to 0) the
+    worker-side read must return the same rows as the binaryFile path on
+    the same files — plain AND gzip-member."""
     rs = _fixture_records()
     (tmp_path / "a.warc").write_bytes(W.write_warc(rs))
     (tmp_path / "b.warc.gz").write_bytes(W.write_warc(rs, gzip_per_record=True))
@@ -185,15 +193,14 @@ def test_stream_warc_paths_bit_identical(spark, tmp_path):
         return (r._kpf_source, r.record_id, r.target_uri)
 
     mem = sorted(W.read_warc(spark, glob).collect(), key=key)
-    st = sorted(W.read_warc(spark, glob, stream=True).collect(), key=key)
+    monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", 0)
+    worker = W.read_warc(spark, glob)
+    st = sorted(worker.collect(), key=key)
     assert len(mem) == len(st) and len(mem) > 0
     for a, b in zip(mem, st):
         assert a.asDict() == b.asDict()
-    # the streaming plan stays a pure map stage over paths
-    plan = (
-        W.read_warc(spark, glob, stream=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    # the worker-side plan stays a pure map stage over paths
+    plan = worker._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan and "Window" not in plan
 
 
@@ -222,29 +229,54 @@ def test_stream_large_archive_bounded_memory(tmp_path):
     assert last == f"https://example.com/{n - 1}"
 
 
-def test_read_warc_size_guard_names_stream_flag(spark, tmp_path, monkeypatch):
-    """Past the binaryFile per-blob ceiling the engine must refuse with
-    an error naming stream=True — not die in a Spark-internal array
-    allocation mid-job."""
-    import pytest
-
+def test_read_warc_above_ceiling_same_rows(spark, tmp_path, monkeypatch):
+    """Past the binaryFile per-blob ceiling the reader switches to the
+    worker-side read instead of refusing: the same rows, no error."""
     (tmp_path / "a.warc").write_bytes(W.write_warc(_fixture_records()))
-    monkeypatch.setattr(W, "BINARYFILE_MAX_BYTES", 10)
-    with pytest.raises(ValueError, match="stream=True"):
-        W.read_warc(spark, str(tmp_path / "*.warc"))
-    # stream mode has no ceiling
-    assert W.read_warc(spark, str(tmp_path / "*.warc"), stream=True).count() > 0
+    glob = str(tmp_path / "*.warc")
+
+    def rows():
+        return sorted(
+            (r.asDict() for r in W.read_warc(spark, glob).collect()),
+            key=lambda r: r["record_id"],
+        )
+
+    below = rows()
+    monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", 10)
+    assert rows() == below and len(below) == 2
 
 
-def test_stream_open_refuses_remote_schemes():
-    """stream=True reads through the worker's own filesystem; a bare
-    remote scheme must refuse with the workaround named, not surface a
-    FileNotFoundError from open()."""
-    import pytest
-
+def test_worker_side_read_refuses_remote_schemes():
+    """The worker-side read opens files with the worker's own
+    filesystem; a bare remote scheme must refuse with the workaround
+    named, not surface a FileNotFoundError from open()."""
     with pytest.raises(NotImplementedError, match="s3"):
-        W._open_for_records("s3://bucket/archive.warc.gz")
-    # file: schemes strip fine (exercised end-to-end elsewhere)
+        blob.worker_local_path("s3://bucket/archive.warc.gz")
+    assert blob.worker_local_path("file:/x/a.warc") == "/x/a.warc"
+    assert blob.worker_local_path("file:///x/a.warc") == "/x/a.warc"
+
+
+@pytest.mark.parametrize("ceiling", [None, 0])
+def test_corrupt_gzip_member_quarantines_both_sides(
+    spark, tmp_path, monkeypatch, ceiling
+):
+    """Three records, one gzip member each, the last member's deflate
+    data corrupted: the blob yields zero rows — and the task does not
+    fail — below the ceiling and above it (worker-side read)."""
+    members = [
+        gzip.compress(r, compresslevel=1) for r in _fixture_records()[:3]
+    ]
+    last = bytearray(members[-1])
+    mid = len(last) // 2
+    last[mid : mid + 8] = b"\xff" * 8
+    (tmp_path / "bad.warc.gz").write_bytes(b"".join(members[:2]) + bytes(last))
+    assert W.records_to_rows("p", (tmp_path / "bad.warc.gz").read_bytes(), None) == []
+    (tmp_path / "ok.warc").write_bytes(W.write_warc(_fixture_records()))
+    if ceiling is not None:
+        monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", ceiling)
+    rows = W.read_warc(spark, str(tmp_path / "*.warc*"), record_types=None).collect()
+    assert len(rows) == 4
+    assert all(r._kpf_source.endswith("ok.warc") for r in rows)
 
 
 # --- WET / WAT sidecars -------------------------------------------------------

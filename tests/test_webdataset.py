@@ -27,10 +27,10 @@ def test_webdataset_roundtrip_and_determinism(spark, tmp_path):
     assert len(shards) == len(man)
     # dense shard numbering from 0
     assert sorted(r.shard_id for r in man) == list(range(len(man)))
-    # roundtrip through the archive front door (streamed tar reader)
+    # roundtrip through the archive front door (tar members streamed)
     back = {
         int(r._kpf_source.split("!")[-1].split(".")[0]): (r.text or "")
-        for r in A.read_text_auto_stream(spark, out + "/*.tar").collect()
+        for r in A.read_text_auto(spark, out + "/*.tar").collect()
     }
     assert back == {i: t for i, t in docs}
     # byte-identical re-run (zeroed tar metadata, atomic publish)
@@ -114,7 +114,7 @@ def test_streaming_webdataset_ingest(spark, tmp_path):
     assert len(shards) >= 2  # one dir per landing file
     back = {
         int(r._kpf_source.split("!")[-1].split(".")[0]): r.text
-        for r in A.read_text_auto_stream(spark, out + "/*/*.tar").collect()
+        for r in A.read_text_auto(spark, out + "/*/*.tar").collect()
     }
     assert back == {1: "alpha one", 2: "beta two", 3: "gamma three", 4: "delta four"}
     # replay wave 0 through the batch hook (any replay overwrites its
@@ -143,7 +143,7 @@ def test_streaming_webdataset_ingest(spark, tmp_path):
     # member set unchanged
     back2 = {
         int(r._kpf_source.split("!")[-1].split(".")[0]): r.text
-        for r in A.read_text_auto_stream(spark, out + "/*/*.tar").collect()
+        for r in A.read_text_auto(spark, out + "/*/*.tar").collect()
     }
     assert back2 == back
 

@@ -2,9 +2,11 @@
 
 import bz2
 import gzip
+import io
 
 import pytest
 
+from kusto_pre_forge_spark.sources import blob
 from kusto_pre_forge_spark.sources import xmlrows as XR
 
 
@@ -39,7 +41,7 @@ def test_compression_peel(comp):
 
 def test_7z_refuses_loudly():
     with pytest.raises(NotImplementedError, match="7z"):
-        XR._peel(b"7z\xbc\xaf\x27\x1c junk")
+        blob.open_decompressed(io.BytesIO(b"7z\xbc\xaf\x27\x1c junk"))
 
 
 def test_garbage_quarantines_empty():
@@ -53,14 +55,15 @@ def test_custom_row_tag():
     assert rows == [{"row_no": 0, "UserId": "5", "Name": "Teacher"}]
 
 
-def test_batch_and_stream_reads_identical(spark, tmp_path):
+def test_reads_identical_across_ceiling(spark, tmp_path, monkeypatch):
     d = tmp_path / "se"
     d.mkdir()
     (d / "Posts.xml").write_bytes(_dump())
     (d / "Posts2.xml.bz2").write_bytes(_dump(compress="bz2"))
     (d / "Posts3.xml.gz").write_bytes(_dump(compress="gzip"))
     batch = XR.read_xml_rows(spark, str(d), ATTRS).toPandas()
-    stream = XR.read_xml_rows_stream(spark, str(d), ATTRS).toPandas()
+    monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", 0)
+    stream = XR.read_xml_rows(spark, str(d), ATTRS).toPandas()
     key = ["_kpf_source", "row_no"]
     b = batch.sort_values(key).reset_index(drop=True)
     s = stream.sort_values(key).reset_index(drop=True)
@@ -68,9 +71,25 @@ def test_batch_and_stream_reads_identical(spark, tmp_path):
     assert b.equals(s)
 
 
-def test_stream_refuses_remote_scheme(spark):
-    with pytest.raises(Exception, match="scheme"):
-        XR.read_xml_rows_stream(spark, "s3://bucket/se", ATTRS).collect()
+def test_worker_side_read_refuses_remote_scheme():
+    with pytest.raises(NotImplementedError, match="scheme"):
+        blob.worker_local_path("s3://bucket/se/Posts.xml")
+
+
+@pytest.mark.parametrize("ceiling", [None, 0])
+def test_truncated_dump_yields_zero_rows_both_sides(
+    spark, tmp_path, monkeypatch, ceiling
+):
+    """A 3000-row dump cut before its closing tag fails to parse at its
+    end: zero rows below the binaryFile ceiling AND above it, where the
+    worker-side read must not emit the 1024-row frames it parsed before
+    the error."""
+    rows = [{"Id": i, "PostTypeId": 1, "Body": f"b{i}"} for i in range(3000)]
+    good = XR.xml_rows_bytes(rows)
+    (tmp_path / "trunc.xml").write_bytes(good[: good.rfind(b"</posts>") - 4])
+    if ceiling is not None:
+        monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", ceiling)
+    assert XR.read_xml_rows(spark, str(tmp_path), ATTRS).count() == 0
 
 
 def test_7z_hatch_extracts_inner_xml(monkeypatch):

@@ -42,7 +42,7 @@ AUDITED = [
     ("kql_basket", "per-column(-pair) aggregations only, rows never join rows"),
     ("corpus_shuffle", "distributed prefix sum: one range exchange over data; SinglePartition only above the per-partition count aggregate"),
     ("activity_engagement", "distinct (user, day) pairs reduced before the rolling-window expansion"),
-    ("dedup_embedding_clusters", "LSH candidate pairs feed CC; no all-pairs join, no whole-corpus window"),
+    ("dedup_embedding_clusters", "LSH candidate pairs are checkpointed while the frame is built; the plan left is one union-find map over them — zero exchanges, no all-pairs join, no whole-corpus window"),
     ("kql_partition_apply", "per-key apply stays one hash exchange on the partition key"),
     ("corpus_split", "zero exchanges — split assignment is a pure scan + projection"),
     ("corpus_pack", "keyed prefix sum: one bucket exchange over data; the within-bucket window stays bucket-partitioned, the one prefix window runs over the per-bucket subtotals"),
@@ -62,8 +62,8 @@ AUDITED = [
     ("skew_salted_agg", "two-phase aggregation: hot keys spread over salt buckets before the combine"),
     ("kql_graph_var", "union of independent hash-join chains, one per path length"),
     ("text_bpe", "one word-histogram collect trains every merge in the driver; apply is chained codegen regexps"),
-    ("dedup_clusters", "banded LSH pairs feed O(log n) CC rounds; pair input checkpointed once, docs never all-pair"),
-    ("dedup_cluster_sizes", "rides the same pair set as dedup_clusters; size histogram is one extra aggregate"),
+    ("dedup_clusters", "banded LSH pairs are checkpointed once while the frame is built; the plan left is one union-find map over them — zero exchanges, docs never all-pair"),
+    ("dedup_cluster_sizes", "rides the same checkpointed pair set as dedup_clusters; the size histogram is two aggregates over the union-find labels, no exchange"),
     ("kql_series_forecast", "per-series folds over packed arrays — one exchange to pack, no per-element shuffle"),
     ("pipeline_corpus_mix", "gate→cap→split→upsample composes map-side; only the per-source totals aggregate exchanges"),
     ("embedding_whiten", "moment arrays shuffle dim²-bounded aggregates; vectors never leave their partition"),
@@ -85,7 +85,7 @@ AUDITED = [
     ("pipeline_quality_route", "three quality gates CHAIN through carry_cols into ONE scan projection (r14) — zero joins"),
     ("layout_zorder", "Morton key is a flat codegen projection - zero exchanges"),
     ("text_ccnet_buckets", "vocabulary-sized LM count tables; the percent_rank window partitions by language, never SinglePartition over data"),
-    ("dedup_semantic", "cell assignment is a narrow vectorized pass; pairs are cell-scoped applyInPandas (one exchange on the cell key) behind the max_cell_size hot-cell valve; CC rounds stay key-partitioned"),
+    ("dedup_semantic", "cell assignment is a narrow vectorized pass, cached once; the max_cell_size hot-cell valve is one count aggregate broadcast as an anti-join; pairs are cell-scoped applyInPandas (one exchange on the cell key) whose labels broadcast back onto the cells"),
     ("text_unigram", "word-count scan + distinct-word Arrow tokenize joined back; no exploded-token shuffle beyond the histogram aggregate"),
     ("text_wordpiece", "same rank-dict shape as text_unigram: histogram aggregate + distinct-word tokenize, join back on the word key"),
     ("contamination_bloom", "Bloom bitset rides the corpus scan as a map-side getbit filter; the verify join receives only survivors"),
@@ -93,7 +93,7 @@ AUDITED = [
     ("corpus_dsir_sample", "gram explode folds ONCE to checkpointed (doc,bucket) counts; histograms B-bounded; log-ratio broadcast; top-k is TakeOrderedAndProject"),
     ("heavy_hitters_sketch", "sketch state is buckets x k regardless of cardinality; exact heavy set broadcast-joined for the invariant check"),
     ("graph_pagerank", "per-round: one hash join + map-side-combined sum by dst; driver traffic = two scalars per round"),
-    ("dedup_soft_weights", "CC labels over the pair set only; ONE doc-id join attaches weights (broadcast under AQE when the clustered fraction is small)"),
+    ("dedup_soft_weights", "union-find labels over the checkpointed pair set only; cluster sizes join back on the cluster id, then ONE doc-id join attaches weights (broadcast under AQE when the clustered fraction is small)"),
     ("multimodal_gif_dhash", "pure map stage: GIF animation compositing + dhash inside mapInPandas"),
     ("kql_find", "per-table predicate sits on each scan (pushdown applies per source); the union is plan-level only, zero exchanges"),
     ("q6_forecast_revenue", "every predicate pushed into the parquet scan; one map-side-combined aggregate, no join"),
@@ -180,7 +180,7 @@ AUDITED = [
     ("multimodal_image_dhash_webp", "VP8L decode + dHash are one Arrow map stage — no shuffle at any corpus size"),
     ("text_bpe_interchange", "exported/imported tokenizer encodes via one Arrow map; decode-roundtrip column rides the same stage"),
     ("text_fix_encoding", "mojibake forge + repair are one Arrow map stage — zero exchanges"),
-    ("kqltext_parse_kv", "per-key regexp_extracts fold into one codegen projection before the aggregate"),
+    ("kqltext_parse_kv", "per-key regexp_extracts fold into one codegen projection before the aggregate; the exchanges are the round-robin repartition, the aggregate and the final sort"),
     ("kqltext_top_nested", "each level aggregates map-side; rank windows run over the tiny PINNED aggregate (r14 — one fact pass), joined by broadcast"),
     ("multimodal_webp_dhash", "ANMF compositing + per-frame dHash are one Arrow map stage"),
     ("corpus_robots_gate", "rule table broadcasts; verdict is `max_by(allow, struct(specificity, allow))` over matched rows (map-side partial), rejoined by a plain url-keyed join — the verdict frame is corpus-derived so it is never broadcast; only matched rows + the rejoin shuffle"),
