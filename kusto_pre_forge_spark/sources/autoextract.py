@@ -273,7 +273,7 @@ def extract_auto(content: bytes) -> tuple[str, str | None]:
         inner = sniff_format(data)
         kind = inner if inner not in peelable else "binary"
     if kind == "tar":
-        return "tar", None  # bundles expand via extract_auto_rows
+        return "tar", None  # bundles expand via auto_rows
     if kind in ("parquet", "orc", "avro", "7z", "zstd", "webp", "avif",
                 "heic"):
         # tag-only: route to spark.read.parquet/orc / sources.avro /
@@ -353,12 +353,7 @@ def extract_auto(content: bytes) -> tuple[str, str | None]:
     return "binary", None
 
 
-def iter_archive_members(
-    f,
-    kind: str,
-    max_members: int = MAX_ARCHIVE_MEMBERS,
-    max_total_bytes: int = MAX_ARCHIVE_BYTES,
-):
+def iter_archive_members(f, kind: str):
     """Yield ``(member_name, member_bytes)`` for a tar/zip/7z bundle open
     as seekable binary file ``f``, then ``(None, None)`` once IF the
     valves clipped it (zip-bomb posture: fail open with a loud sentinel,
@@ -384,7 +379,10 @@ def iter_archive_members(
             for m in tf:
                 if not m.isfile():
                     continue
-                if count >= max_members or total + m.size > max_total_bytes:
+                if (
+                    count >= MAX_ARCHIVE_MEMBERS
+                    or total + m.size > MAX_ARCHIVE_BYTES
+                ):
                     yield None, None
                     return
                 member = tf.extractfile(m)
@@ -402,8 +400,8 @@ def iter_archive_members(
                 if info.is_dir():
                     continue
                 if (
-                    count >= max_members
-                    or total + info.file_size > max_total_bytes
+                    count >= MAX_ARCHIVE_MEMBERS
+                    or total + info.file_size > MAX_ARCHIVE_BYTES
                 ):
                     yield None, None
                     return
@@ -426,7 +424,10 @@ def iter_archive_members(
                 if getattr(fi, "is_directory", False):
                     continue
                 size = getattr(fi, "uncompressed", 0) or 0
-                if count >= max_members or total + size > max_total_bytes:
+                if (
+                    count >= MAX_ARCHIVE_MEMBERS
+                    or total + size > MAX_ARCHIVE_BYTES
+                ):
                     clipped = True
                     break
                 count, total = count + 1, total + size
@@ -442,29 +443,28 @@ def iter_archive_members(
                 yield None, None
 
 
-def _member_rows(f, kind, max_members, max_total_bytes):
+def _member_rows(f, kind):
     """(member, kind, text) per member of a tar/zip/7z bundle, each
     member's bytes routed back through :func:`extract_auto`; [] when
-    the bundle cannot be read to its end."""
+    the bundle cannot be read to its end. A member that fails to decode
+    quarantines as its own (member, 'binary', None) row; the other
+    members keep theirs."""
     rows = []
     try:
-        for name, blob in iter_archive_members(
-            f, kind, max_members, max_total_bytes
-        ):
+        for name, blob in iter_archive_members(f, kind):
             if name is None:
                 rows.append((None, "archive_truncated", None))
                 break
-            rows.append((name,) + extract_auto(blob))
+            try:
+                rows.append((name,) + extract_auto(blob))
+            except (zipfile.BadZipFile,) + DECODE_ERRORS:
+                rows.append((name, "binary", None))
     except (tarfile.TarError, zipfile.BadZipFile) + DECODE_ERRORS:
         return []
     return rows
 
 
-def auto_rows(
-    f,
-    max_members: int = MAX_ARCHIVE_MEMBERS,
-    max_total_bytes: int = MAX_ARCHIVE_BYTES,
-) -> list[tuple[str | None, str, str | None]]:
+def auto_rows(f) -> list[tuple[str | None, str, str | None]]:
     """(member, kind, text) rows for one blob open as seekable binary
     file ``f`` — the bundle-aware front door. Non-archive blobs yield one
     row with member=None; tar / generic-zip bundles (incl. .tar.gz/.tgz/
@@ -485,7 +485,7 @@ def auto_rows(
     kind = sniff_format(head)
     peelable = _peelable_kinds()
     if kind == "tar" or kind in peelable:
-        rows = _member_rows(f, "tar", max_members, max_total_bytes)
+        rows = _member_rows(f, "tar")
         if rows or kind == "tar":
             return rows or [(None, "tar", None)]
         # compressed, but not a readable tar: peel whole and dispatch
@@ -496,7 +496,7 @@ def auto_rows(
             return [(None, "binary", None)]
         if sniff_format(data) in peelable:
             return [(None, "binary", None)]
-        return auto_rows(io.BytesIO(data), max_members, max_total_bytes)
+        return auto_rows(io.BytesIO(data))
     if kind == "zip":
         from kusto_pre_forge_spark.sources.epub import is_epub
 
@@ -512,27 +512,11 @@ def auto_rows(
         if docx:
             return [(None,) + extract_auto(f.read())]
     if kind == "zip" or (kind == "7z" and py7zr_available()):
-        return _member_rows(f, kind, max_members, max_total_bytes) or [
-            (None, kind, None)
-        ]
+        return _member_rows(f, kind) or [(None, kind, None)]
     return [(None,) + extract_auto(f.read())]
 
 
-def extract_auto_rows(
-    content: bytes,
-    max_members: int = MAX_ARCHIVE_MEMBERS,
-    max_total_bytes: int = MAX_ARCHIVE_BYTES,
-) -> list[tuple[str | None, str, str | None]]:
-    """:func:`auto_rows` over one blob's bytes — unit-testable without
-    Spark."""
-    return auto_rows(io.BytesIO(bytes(content)), max_members, max_total_bytes)
-
-
-def extract_text_blobs(
-    blobs: DataFrame,
-    max_members: int = MAX_ARCHIVE_MEMBERS,
-    max_total_bytes: int = MAX_ARCHIVE_BYTES,
-) -> DataFrame:
+def extract_text_blobs(blobs: DataFrame) -> DataFrame:
     """Blob rows (``blob.read_blobs``, or any binaryFile frame) →
     (kind, text, _kpf_source): the mixed-dump front door, one
     ``blob.map_blobs`` stage; chain ``textprep.html_extract`` /
@@ -542,24 +526,17 @@ def extract_text_blobs(
     convention Hadoop archive URIs use."""
 
     def rows(path, f):
-        for member, kind, text in auto_rows(f, max_members, max_total_bytes):
+        for member, kind, text in auto_rows(f):
             src = path if member is None else f"{path}!{member}"
             yield {"kind": kind, "text": text, "_kpf_source": src}
 
     return map_blobs(blobs, rows, AUTOEXTRACT_DDL)
 
 
-def read_text_auto(
-    spark: SparkSession,
-    path: str,
-    max_members: int = MAX_ARCHIVE_MEMBERS,
-    max_total_bytes: int = MAX_ARCHIVE_BYTES,
-) -> DataFrame:
+def read_text_auto(spark: SparkSession, path: str) -> DataFrame:
     """Point the engine at a mixed directory/glob; get one typed text
     frame back, format-sniffed per blob. Blobs past the 2 GiB
     binaryFile ceiling open inside the workers (``blob.read_blobs``),
     and their tar bundles stream member at a time, with the same
     rows."""
-    return extract_text_blobs(
-        read_blobs(spark, path), max_members, max_total_bytes
-    )
+    return extract_text_blobs(read_blobs(spark, path))

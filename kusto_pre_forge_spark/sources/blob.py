@@ -13,10 +13,10 @@ Re-expresses the reference's source layer Spark-first:
   stream and decompress, sized by ``spark.sql.files.maxPartitionBytes``,
   with none of the reference's 4 GiB ISIZE limitation (SURVEY §4.3 #4).
   Whole-blob document formats go through ONE reader, whatever the payload:
-  ``read_blobs`` (one listing; the 2 GiB binaryFile decision made from the
-  listed lengths), ``map_blobs`` (one Arrow map handing each format's row
-  function a binary file object) and ``open_decompressed`` (one
-  decompress-by-magic opener).
+  ``read_blobs`` (one listing; the 2 GiB binaryFile decision made per
+  file from the listed lengths), ``map_blobs`` (one Arrow map handing
+  each format's row function a binary file object) and
+  ``open_decompressed`` (one decompress-by-magic opener).
 - ``TextSource`` (dormant split path) → ``spark.read.text``.
 
 Scale note: a 100 TB prefix listing is driver-side metadata only; the read
@@ -76,7 +76,7 @@ def list_source(
 
 # Spark's binaryFile source materializes each file as ONE byte array whose
 # length must fit a JVM array (Int.MaxValue): the per-file ceiling above
-# which read_blobs opens files inside the workers instead. Module constant
+# which read_blobs leaves a file to be opened inside the workers. Module constant
 # so tests can force either side.
 BINARYFILE_MAX_BYTES = 2_147_483_647
 
@@ -88,40 +88,46 @@ _GZIP, _BZ2, _XZ, _7Z = b"\x1f\x8b", b"BZh", b"\xfd7zXZ\x00", b"7z\xbc\xaf\x27\x
 
 
 def read_blobs(spark: SparkSession, path: list[str] | str) -> DataFrame:
-    """Blob rows for a directory/glob (or a list of them) — the one entry
-    point of every document source (ref: DownloadBlobTransform.cs:8-107).
+    """``(path, content, …)`` blob rows for a directory/glob (or a list
+    of them) — the one entry point of every document source (ref:
+    DownloadBlobTransform.cs:8-107).
 
-    The path is listed once, by ``binaryFile``'s own file index (built at
-    load, no job), and the listed lengths decide the read: when every file
-    fits ``BINARYFILE_MAX_BYTES`` the ``binaryFile`` frame itself
-    (``path``, ``content``, …; one task per blob); otherwise a one-column
-    ``path`` frame in EXACT one-file-per-task slices whose files
-    :func:`map_blobs` opens inside the workers. Exact slicing, not
+    The path is listed once, by ``binaryFile``'s own file index (built
+    at load, no job), and each listed length decides that file's read.
+    When every file fits ``BINARYFILE_MAX_BYTES`` this is the
+    ``binaryFile`` frame itself. Otherwise the files that fit still come
+    from ``binaryFile`` (the length filter is pushed into the scan, so a
+    larger file's bytes are never materialized), and each larger one
+    comes as a ``(path, NULL)`` row in an EXACT one-file-per-task slice,
+    which :func:`map_blobs` opens inside the worker. Exact slicing, not
     hashing: hash-by-path can collide several huge files onto one task.
-    Paths keep the binaryFile spelling (``file:/x``), so rows are
-    identical on both sides."""
+    Paths keep the binaryFile spelling (Hadoop ``Path.toString``,
+    ``file:/d/a b.warc``), so rows are identical on both sides."""
     bf = spark.read.format("binaryFile").load(path)
-    files = []
+    big = []
     listed = (
         bf._jdf.queryExecution().analyzed().relation().location().allFiles().iterator()
     )
     while listed.hasNext():
         st = listed.next()
-        files.append((st.getPath().toString(), st.getLen()))
-    if all(n <= BINARYFILE_MAX_BYTES for _, n in files):
+        if st.getLen() > BINARYFILE_MAX_BYTES:
+            big.append(st.getPath().toString())
+    if not big:
         return bf
-    paths = sorted(p for p, _ in files)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(p,) for p in paths], min(max(1, len(paths)), 10_000)
-        ),
-        "path string",
+    fits = bf.where(F.col("length") <= BINARYFILE_MAX_BYTES)
+    return fits.select("path", "content").unionByName(
+        spark.createDataFrame(
+            spark.sparkContext.parallelize(
+                [(p, None) for p in sorted(big)], min(len(big), 10_000)
+            ),
+            "path string, content binary",
+        )
     )
 
 
 def worker_local_path(path: str) -> str:
     """Strip the file: scheme and refuse bare remote schemes — the guard
-    of the worker-side side of :func:`read_blobs`."""
+    of every file :func:`map_blobs` opens inside a worker."""
     raw = path
     if raw.startswith("file://"):
         raw = raw[7:]
@@ -185,18 +191,19 @@ def open_decompressed(f):
 def map_blobs(blobs: DataFrame, rows, ddl: str, errors=(), finish=None) -> DataFrame:
     """The one Arrow map of every document source. ``rows(path, f)``
     yields the row dicts of one blob open as binary file ``f`` —
-    ``io.BytesIO`` over the ``content`` column of a ``binaryFile`` frame
-    (batch or streaming), or the file itself, opened inside the worker,
-    when ``blobs`` carries only ``path`` (:func:`read_blobs` above the
-    ceiling). Rows without their own ``_kpf_source`` get the blob path.
+    ``io.BytesIO`` over the blob's ``content`` (a ``binaryFile`` frame,
+    batch or streaming), or, where :func:`read_blobs` left ``content``
+    NULL (a file above the ceiling), the file itself, opened inside the
+    worker. Rows without their own ``_kpf_source`` get the blob path.
 
     A blob whose rows raise one of ``errors`` quarantines as ZERO rows
     on both sides — one corrupt archive must not fail the task, and
-    must not leave a partial prefix either. The in-memory side collects
-    a blob's rows before keeping them; the worker side first reads the
-    whole file through ``rows`` keeping nothing, then reads it again and
-    emits 1024-row frames, so memory stays one frame whatever the file
-    size. ``finish`` post-processes each pandas frame (type fixes)."""
+    must not leave a partial prefix either. An in-memory blob's rows are
+    collected before they are kept. A worker-opened file is first read
+    whole through ``rows`` keeping nothing, then read again and emitted
+    in 1024-row frames, so memory stays one frame whatever the file
+    size; with ``errors`` set, such a file is decompressed and parsed
+    twice. ``finish`` post-processes each pandas frame (type fixes)."""
     import pandas as pd
 
     cols = [c.split()[0].strip("`") for c in ddl.split(", ")]
@@ -208,40 +215,39 @@ def map_blobs(blobs: DataFrame, rows, ddl: str, errors=(), finish=None) -> DataF
     def blob_rows(p, f):
         return ({"_kpf_source": p, **r} for r in rows(p, f))
 
-    def in_memory(it):
+    def worker_open(p):
+        local = worker_local_path(p)
+        if errors:
+            with open(local, "rb") as f:
+                try:
+                    for _ in rows(p, f):
+                        pass
+                except errors:
+                    return
+        with open(local, "rb") as f:
+            out = []
+            for r in blob_rows(p, f):
+                out.append(r)
+                if len(out) == 1024:
+                    yield frame(out)
+                    out = []
+            if out:
+                yield frame(out)
+
+    def frames(it):
         for pdf in it:
             out = []
             for p, content in zip(pdf["path"], pdf["content"]):
+                if content is None:
+                    yield from worker_open(p)
+                    continue
                 try:
                     out.extend(list(blob_rows(p, io.BytesIO(bytes(content)))))
                 except errors:
                     pass
             yield frame(out)
 
-    def worker_open(it):
-        for pdf in it:
-            for p in pdf["path"]:
-                local = worker_local_path(p)
-                if errors:
-                    with open(local, "rb") as f:
-                        try:
-                            for _ in rows(p, f):
-                                pass
-                        except errors:
-                            continue
-                with open(local, "rb") as f:
-                    out = []
-                    for r in blob_rows(p, f):
-                        out.append(r)
-                        if len(out) == 1024:
-                            yield frame(out)
-                            out = []
-                    if out:
-                        yield frame(out)
-
-    if "content" in blobs.columns:
-        return blobs.select("path", "content").mapInPandas(in_memory, ddl)
-    return blobs.select("path").mapInPandas(worker_open, ddl)
+    return blobs.select("path", "content").mapInPandas(frames, ddl)
 
 
 def _read_archive_lines(

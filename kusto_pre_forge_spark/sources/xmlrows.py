@@ -37,7 +37,6 @@ from __future__ import annotations
 
 import bz2
 import gzip
-import io
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import quoteattr
 
@@ -96,17 +95,6 @@ def iter_xml_rows(f, attrs: list[str], row_tag: str = "row"):
     elems = iter_elements(open_decompressed(f), row_tag)
     for i, elem in enumerate(elems):
         yield {"row_no": i, **{a: elem.attrib.get(a) for a in attrs}}
-
-
-def parse_xml_rows(
-    data: bytes, attrs: list[str], row_tag: str = "row"
-) -> list[dict]:
-    """Pure function: dump bytes → row dicts; a corrupt dump
-    quarantines as []."""
-    try:
-        return list(iter_xml_rows(io.BytesIO(bytes(data)), attrs, row_tag))
-    except XML_DECODE_ERRORS:
-        return []
 
 
 def parse_xml_row_blobs(

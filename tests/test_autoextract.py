@@ -2,6 +2,7 @@
 mixed-dump front door: magic bytes decide, extensions lie."""
 
 import gzip
+import io
 
 import pytest
 
@@ -10,6 +11,11 @@ from kusto_pre_forge_spark.sources import docx as D
 from kusto_pre_forge_spark.sources import ipynb as N
 from kusto_pre_forge_spark.sources import pdf as P
 from kusto_pre_forge_spark.sources import warc as W
+
+
+def _auto_rows(blob):
+    """The bundle-aware front door over one blob's bytes."""
+    return A.auto_rows(io.BytesIO(blob))
 
 
 def test_dispatch_matrix():
@@ -193,28 +199,33 @@ def test_archive_bundles_expand_to_member_rows():
         lzma.compress(_tar_bytes(members)),
         _zip_bytes(members),
     ):
-        assert A.extract_auto_rows(blob) == want
+        assert _auto_rows(blob) == want
     # DOCX routes whole-blob, single row
-    assert A.extract_auto_rows(D.docx_bytes("dtext")) == [(None, "docx", "dtext")]
+    assert _auto_rows(D.docx_bytes("dtext")) == [(None, "docx", "dtext")]
     # nested bundle does NOT recurse — surfaces as its own (zip, None)
     nested = _tar_bytes([("inner.zip", _zip_bytes([("x.txt", b"deep")]))])
-    assert A.extract_auto_rows(nested) == [("inner.zip", "zip", None)]
+    assert _auto_rows(nested) == [("inner.zip", "zip", None)]
     # non-archives still yield exactly one member-None row
-    assert A.extract_auto_rows(b"plain") == [(None, "text", "plain")]
+    assert _auto_rows(b"plain") == [(None, "text", "plain")]
 
 
-def test_archive_valves_fail_open_with_sentinel():
+def test_archive_valves_fail_open_with_sentinel(monkeypatch):
     """Zip-bomb posture: past the member/byte caps the blob yields the
     members UP TO the cap plus one loud archive_truncated sentinel —
     never an error, never a silent total drop."""
     blob = _zip_bytes([(f"m{i}.txt", b"x") for i in range(6)])
-    rows = A.extract_auto_rows(blob, max_members=3)
+    with monkeypatch.context() as m:
+        m.setattr(A, "MAX_ARCHIVE_MEMBERS", 3)
+        rows = _auto_rows(blob)
     assert rows[:3] == [(f"m{i}.txt", "text", "x") for i in range(3)]
     assert rows[3] == (None, "archive_truncated", None) and len(rows) == 4
-    rows = A.extract_auto_rows(blob, max_total_bytes=2)
+    with monkeypatch.context() as m:
+        m.setattr(A, "MAX_ARCHIVE_BYTES", 2)
+        rows = _auto_rows(blob)
     assert rows[-1] == (None, "archive_truncated", None) and len(rows) == 3
     tar = _tar_bytes([(f"t{i}", b"yy") for i in range(4)])
-    rows = A.extract_auto_rows(tar, max_members=2)
+    monkeypatch.setattr(A, "MAX_ARCHIVE_MEMBERS", 2)
+    rows = _auto_rows(tar)
     assert len(rows) == 3 and rows[-1] == (None, "archive_truncated", None)
 
 
@@ -317,10 +328,13 @@ def test_read_text_auto_identical_across_ceiling(spark, tmp_path, monkeypatch):
 @pytest.mark.parametrize("ceiling", [None, 0])
 def test_tar_valves_match_inmemory(spark, tmp_path, monkeypatch, ceiling):
     """Valve sentinel parity between the Spark read (both sides of the
-    binaryFile ceiling) and the pure front door."""
+    binaryFile ceiling) and the pure front door, at the real member
+    valve: the workers read MAX_ARCHIVE_MEMBERS in their own processes,
+    so a driver-side patch of it would not reach them."""
     from kusto_pre_forge_spark.sources import blob
 
-    blob_bytes = _tar_bytes([(f"m{i}.txt", b"data") for i in range(5)])
+    n = A.MAX_ARCHIVE_MEMBERS + 2
+    blob_bytes = _tar_bytes([(f"m{i}.txt", b"data") for i in range(n)])
     (tmp_path / "big.tar").write_bytes(blob_bytes)
     if ceiling is not None:
         monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", ceiling)
@@ -331,16 +345,53 @@ def test_tar_valves_match_inmemory(spark, tmp_path, monkeypatch, ceiling):
             else r._kpf_source.rsplit("/", 1)[-1],
             r.kind,
         )
-        for r in A.read_text_auto(
-            spark, str(tmp_path / "big.tar"), max_members=2
-        ).collect()
+        for r in A.read_text_auto(spark, str(tmp_path / "big.tar")).collect()
     )
     want = sorted(
-        (m if m else "big.tar", k)
-        for m, k, _ in A.extract_auto_rows(blob_bytes, max_members=2)
+        (m if m else "big.tar", k) for m, k, _ in _auto_rows(blob_bytes)
+    )
+    assert got == want and len(got) == A.MAX_ARCHIVE_MEMBERS + 1
+    assert ("big.tar", "archive_truncated") in got
+
+
+def _corrupt_docx_bytes():
+    """A DOCX whose stored word/document.xml fails its CRC on read."""
+    import zipfile
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as z:
+        z.writestr("word/document.xml", "<w:p><w:t>hello</w:t></w:p>")
+    return buf.getvalue().replace(b"hello", b"jello", 1)
+
+
+@pytest.mark.parametrize("ceiling", [None, 0])
+def test_corrupt_member_keeps_bundle_rows(spark, tmp_path, monkeypatch, ceiling):
+    """A member that fails to decode quarantines as its own
+    (member, 'binary', None) row; the good members of the same bundle
+    keep theirs, on both sides of the binaryFile ceiling."""
+    import zipfile
+
+    from kusto_pre_forge_spark.sources import blob
+
+    bad = _corrupt_docx_bytes()
+    with pytest.raises(zipfile.BadZipFile):
+        A.extract_auto(bad)
+    members = [("a.txt", b"first"), ("b.docx", bad), ("c.txt", b"last")]
+    want = [
+        ("a.txt", "text", "first"),
+        ("b.docx", "binary", None),
+        ("c.txt", "text", "last"),
+    ]
+    for bundle in (_tar_bytes(members), gzip.compress(_tar_bytes(members))):
+        assert _auto_rows(bundle) == want
+    (tmp_path / "bundle.tar.gz").write_bytes(gzip.compress(_tar_bytes(members)))
+    if ceiling is not None:
+        monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", ceiling)
+    got = sorted(
+        (r._kpf_source.split("!")[-1], r.kind, r.text)
+        for r in A.read_text_auto(spark, str(tmp_path / "bundle.tar.gz")).collect()
     )
     assert got == want
-    assert ("big.tar", "archive_truncated") in got
 
 
 def test_mbox_sniff_two_signal():
@@ -391,9 +442,7 @@ def test_columnar_formats_tag_not_binary():
         kind, text = extract_auto(blob)
         assert text is None and kind not in ("binary", "text"), (blob, kind)
     # real columnar bytes still tag through the rows front door
-    from kusto_pre_forge_spark.sources.autoextract import extract_auto_rows
-
-    assert extract_auto_rows(b"PAR1 body") == [(None, "parquet", None)]
+    assert _auto_rows(b"PAR1 body") == [(None, "parquet", None)]
 
 
 def test_zstd_tags_not_binary():
@@ -432,7 +481,7 @@ def test_zstd_front_door_peel_when_wheel_present():
     kind, text = A.extract_auto(blob)
     assert kind == "text" and "dolma-style" in text
     # valve: a frame decompressing past MAX_ARCHIVE_BYTES quarantines
-    rows = A.extract_auto_rows(blob)
+    rows = _auto_rows(blob)
     assert rows == [(None, "text", inner.decode())]
 
 
@@ -538,7 +587,7 @@ def test_tar_zst_stream_equals_in_memory_when_wheel_present(
         for r in A.read_text_auto(spark, str(p)).collect()
     )
     in_mem = sorted(
-        (m, k, t) for m, k, t in A.extract_auto_rows(blob)
+        (m, k, t) for m, k, t in _auto_rows(blob)
     )
     assert [(m, k, t) for m, k, t in streamed] == in_mem
     assert len(streamed) == 2
@@ -570,10 +619,7 @@ def test_zstd_magic_prefix_fuzz_total():
     (tag-only)."""
     import random
 
-    from kusto_pre_forge_spark.sources.autoextract import (
-        extract_auto,
-        extract_auto_rows,
-    )
+    from kusto_pre_forge_spark.sources.autoextract import extract_auto
 
     rng = random.Random(0x5D)
     for n in (0, 1, 7, 64, 513):
@@ -582,7 +628,7 @@ def test_zstd_magic_prefix_fuzz_total():
         )
         kind, text = extract_auto(blob)
         assert kind in ("zstd", "binary")
-        rows = extract_auto_rows(blob)
+        rows = _auto_rows(blob)
         assert rows[0][1] in ("zstd", "binary")
 
 
@@ -608,7 +654,7 @@ def test_front_door_is_total_on_arbitrary_bytes():
     def arbitrary(blob):
         kind, _ = A.extract_auto(blob)
         assert isinstance(kind, str)
-        assert A.extract_auto_rows(blob)
+        assert _auto_rows(blob)
 
     arbitrary()
 
@@ -625,10 +671,13 @@ def test_front_door_is_total_on_arbitrary_bytes():
                 rng.randrange(256) for _ in range(rng.randrange(0, 300))
             )
             A.extract_auto(blob)
-            A.extract_auto_rows(blob)
+            _auto_rows(blob)
             W.records_to_rows("p", blob, ("response",))
             MW.parse_mediawiki_pages(blob)
-            XR.parse_xml_rows(blob, ["Id"])
+            try:
+                list(XR.iter_xml_rows(io.BytesIO(blob), ["Id"]))
+            except XR.XML_DECODE_ERRORS:
+                pass
 
 
 def _fake_py7zr(monkeypatch, members):
@@ -679,14 +728,15 @@ def test_7z_bundle_routes_through_py7zr_stub(monkeypatch):
     }
     _fake_py7zr(monkeypatch, members)
     blob = b"7z\xbc\xaf\x27\x1c" + b"\x00" * 32
-    rows = A.extract_auto_rows(blob)
+    rows = _auto_rows(blob)
     got = {m: (k, t) for m, k, t in rows}
     assert got["readme.txt"] == ("text", "hello from the archive")
     assert got["Posts.xml"][0] in ("text", "html")  # xml routes as text
     # valves: a member past the byte cap clips with the loud sentinel
     big = {"big.bin": b"x" * 10}
     _fake_py7zr(monkeypatch, big)
-    rows = A.extract_auto_rows(blob, max_total_bytes=5)
+    monkeypatch.setattr(A, "MAX_ARCHIVE_BYTES", 5)
+    rows = _auto_rows(blob)
     assert rows[-1][1] == "archive_truncated"
 
 
@@ -697,7 +747,7 @@ def test_7z_without_wheel_stays_tag_only():
         pytest.skip("py7zr present: tag-only path unreachable")
     blob = b"7z\xbc\xaf\x27\x1c" + b"\x00" * 32
     assert A.extract_auto(blob) == ("7z", None)
-    assert A.extract_auto_rows(blob) == [(None, "7z", None)]
+    assert _auto_rows(blob) == [(None, "7z", None)]
 
 
 def test_7z_real_wheel_roundtrip(tmp_path):
@@ -714,6 +764,6 @@ def test_7z_real_wheel_roundtrip(tmp_path):
     with py7zr.SevenZipFile(buf, "w") as z:
         z.writestr("a.txt", "alpha")
         z.writestr("b/Posts.xml", '<posts><row Id="7" /></posts>')
-    rows = A.extract_auto_rows(buf.getvalue())
+    rows = _auto_rows(buf.getvalue())
     got = {m: (k, t) for m, k, t in rows}
     assert got["a.txt"] == ("text", "alpha")

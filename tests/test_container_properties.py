@@ -148,7 +148,7 @@ def test_archive_member_roundtrip_property(members, form):
             blob = gzip.compress(blob)
         elif form == "tar.xz":
             blob = lzma.compress(blob)
-    rows = A.extract_auto_rows(blob)
+    rows = A.auto_rows(io.BytesIO(blob))
     # members whose CONTENT sniffs as a container kind still surface
     # under their member name; plain-text members roundtrip exactly
     assert [r[0] for r in rows] == [n for n, _ in members]
@@ -225,10 +225,12 @@ def test_mediawiki_roundtrip_property(texts):
 def test_xmlrows_roundtrip_property(values):
     """Attribute escape (quoteattr) → iterparse unescape must be the
     identity for arbitrary Unicode attribute values."""
+    import io
+
     from kusto_pre_forge_spark.sources import xmlrows as XR
 
     rows = [dict(Id=i, Val=v) for i, v in enumerate(values)]
-    got = XR.parse_xml_rows(XR.xml_rows_bytes(rows), ["Id", "Val"])
+    got = list(XR.iter_xml_rows(io.BytesIO(XR.xml_rows_bytes(rows)), ["Id", "Val"]))
     assert [r["Val"] for r in got] == [str(v) for v in values]
 
 

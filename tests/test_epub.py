@@ -1,6 +1,8 @@
 """EPUB source (sources/epub.py): OCF sniff, spine-order resolution,
 repair posture, the Spark layer, and front-door routing."""
 
+import io
+
 from kusto_pre_forge_spark.sources import epub as E
 
 
@@ -55,7 +57,7 @@ def test_epub_spark_layer_and_front_door(spark, tmp_path, monkeypatch):
     # front door: sniffed as a DOCUMENT (never member-expanded)
     kind, text = A.extract_auto(E.epub_bytes(["c1", "c2"]))
     assert kind == "epub" and "c1" in text and "\x0c" in text
-    rows = A.extract_auto_rows(E.epub_bytes(["c1"]))
+    rows = A.auto_rows(io.BytesIO(E.epub_bytes(["c1"])))
     assert len(rows) == 1 and rows[0][0] is None and rows[0][1] == "epub"
     # the worker-side read (above the binaryFile ceiling) agrees
     mem = {

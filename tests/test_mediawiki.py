@@ -111,7 +111,7 @@ def test_front_door_tar_bz2_members(tmp_path):
         info = tarfile.TarInfo("m.txt")
         info.size = len(data)
         tf.addfile(info, io.BytesIO(data))
-    rows = A.extract_auto_rows(buf.getvalue())
+    rows = A.auto_rows(io.BytesIO(buf.getvalue()))
     assert rows == [("m.txt", "text", "member text")]
 
 

@@ -442,31 +442,38 @@ def test_read_blobs_identical_across_ceiling(spark, tmp_path, monkeypatch):
     """Above the binaryFile ceiling (forced by patching it to 0),
     read_blobs hands map_blobs paths whose files open inside the
     workers; the typed readers built on it must return identical
-    results on both sides."""
+    results on both sides — lineage included, for a file name with a
+    space and a percent sign."""
     from kusto_pre_forge_spark.sources import blob
     from kusto_pre_forge_spark.sources import docx as D
     from kusto_pre_forge_spark.sources import pdf as P
 
     (tmp_path / "a.pdf").write_bytes(P.pdf_bytes(["page one", "page two"]))
+    (tmp_path / "c d%20.pdf").write_bytes(P.pdf_bytes(["spaced"]))
     (tmp_path / "b.docx").write_bytes(D.docx_bytes("docx text\nsecond"))
 
     def pages():
         return sorted(
-            (r.page_no, r.page_text)
+            (r._kpf_source.rsplit("/", 1)[-1], r.page_no, r.page_text)
             for r in P.read_pdf(spark, str(tmp_path / "*.pdf")).collect()
         )
 
     mem = pages()
     below = blob.read_blobs(spark, str(tmp_path / "*"))
-    assert "content" in below.columns
+    assert below.where("content IS NULL").count() == 0
     monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", 0)
     above = blob.read_blobs(spark, str(tmp_path / "*"))
-    assert above.columns == ["path"]
+    assert above.columns == ["path", "content"]
+    assert above.where("content IS NOT NULL").count() == 0
     # the same listing, in the binaryFile path spelling, on both sides
-    assert sorted(r.path for r in above.collect()) == sorted(
+    assert sorted(r.path for r in above.select("path").collect()) == sorted(
         r.path for r in below.select("path").collect()
     )
-    assert pages() == mem == [(0, "page one"), (1, "page two")]
+    assert pages() == mem == [
+        ("a.pdf", 0, "page one"),
+        ("a.pdf", 1, "page two"),
+        ("c d%20.pdf", 0, "spaced"),
+    ]
     assert (
         D.read_docx(spark, str(tmp_path / "*.docx")).first().text
         == "docx text\nsecond"
@@ -476,7 +483,10 @@ def test_read_blobs_identical_across_ceiling(spark, tmp_path, monkeypatch):
 def test_read_blobs_above_ceiling_one_file_per_task(spark, tmp_path, monkeypatch):
     """Above the ceiling read_blobs must GUARANTEE at most one file per
     task: the listing slices exactly (no hash column) so collisions
-    cannot co-locate several huge files on one task."""
+    cannot co-locate several huge files on one task. The files that fit
+    stay on binaryFile, which never reads a larger file's bytes: its
+    own length limit, set to the ceiling, would fail the job if it
+    did."""
     from pyspark.sql import functions as F
 
     from kusto_pre_forge_spark.sources import blob
@@ -488,12 +498,19 @@ def test_read_blobs_above_ceiling_one_file_per_task(spark, tmp_path, monkeypatch
     monkeypatch.setattr(blob, "BINARYFILE_MAX_BYTES", 6)
     out = blob.read_blobs(spark, str(d / "*"))
     per_task = (
-        out.groupBy(F.spark_partition_id().alias("pid"))
+        out.where(F.col("content").isNull())
+        .groupBy(F.spark_partition_id().alias("pid"))
         .count()
         .collect()
     )
-    assert sum(r["count"] for r in per_task) == 12
+    assert sum(r["count"] for r in per_task) == 6
     assert max(r["count"] for r in per_task) == 1
+    spark.conf.set("spark.sql.sources.binaryFile.maxLength", "6")
+    try:
+        fits = out.where(F.col("content").isNotNull()).collect()
+    finally:
+        spark.conf.unset("spark.sql.sources.binaryFile.maxLength")
+    assert sorted(len(r.content) for r in fits) == [1, 2, 3, 4, 5, 6]
 
 
 def _single_path_fixtures():

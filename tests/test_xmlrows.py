@@ -22,8 +22,12 @@ def _dump(**kw):
 ATTRS = ["Id", "PostTypeId", "ParentId", "Title", "Body", "Score"]
 
 
+def _rows(data, attrs, row_tag="row"):
+    return list(XR.iter_xml_rows(io.BytesIO(data), attrs, row_tag))
+
+
 def test_parse_rows_unescape_and_nulls():
-    rows = XR.parse_xml_rows(_dump(), ATTRS)
+    rows = _rows(_dump(), ATTRS)
     assert [r["row_no"] for r in rows] == [0, 1]
     # quoteattr escaping round-trips quotes, ampersands, angle brackets
     assert rows[0]["Title"] == 'Q "quoted" & <tagged>'
@@ -36,7 +40,7 @@ def test_parse_rows_unescape_and_nulls():
 
 @pytest.mark.parametrize("comp", [None, "bz2", "gzip"])
 def test_compression_peel(comp):
-    assert len(XR.parse_xml_rows(_dump(compress=comp), ATTRS)) == 2
+    assert len(_rows(_dump(compress=comp), ATTRS)) == 2
 
 
 def test_7z_refuses_loudly():
@@ -45,13 +49,16 @@ def test_7z_refuses_loudly():
 
 
 def test_garbage_quarantines_empty():
-    assert XR.parse_xml_rows(b"<posts><row unclosed", ATTRS) == []
-    assert XR.parse_xml_rows(b"BZh9 corrupt", ATTRS) == []
+    """Garbage raises only errors parse_xml_row_blobs quarantines on
+    (the Spark-level zero-row quarantine is pinned below)."""
+    for garbage in (b"<posts><row unclosed", b"BZh9 corrupt"):
+        with pytest.raises(XR.XML_DECODE_ERRORS):
+            _rows(garbage, ATTRS)
 
 
 def test_custom_row_tag():
     raw = b'<badges><badge UserId="5" Name="Teacher"/></badges>'
-    rows = XR.parse_xml_rows(raw, ["UserId", "Name"], row_tag="badge")
+    rows = _rows(raw, ["UserId", "Name"], row_tag="badge")
     assert rows == [{"row_no": 0, "UserId": "5", "Name": "Teacher"}]
 
 
@@ -130,5 +137,5 @@ def test_7z_hatch_extracts_inner_xml(monkeypatch):
     fake.SevenZipFile = _SZ
     monkeypatch.setitem(sys.modules, "py7zr", fake)
     blob = b"7z\xbc\xaf\x27\x1c" + b"\x00" * 16
-    rows = XR.parse_xml_rows(blob, ["Id", "PostTypeId"])
+    rows = _rows(blob, ["Id", "PostTypeId"])
     assert rows == [{"row_no": 0, "Id": "1", "PostTypeId": "1"}]
