@@ -17,11 +17,11 @@ Intended semantics (not the buggy byte layout — SURVEY §4.3 #1/#2/#3):
 dense per-partition concatenation of records, every input record present in
 exactly one partition, partition id = XOR-fold hash of the key field.
 
-Scale: the only wide exchange is the single hash repartition on ``pid`` —
-map-side the hash is computed inside WholeStageCodegen; AQE coalesces small
-partitions. ``max_partition_count`` ≤ 2048 (Kusto's cap) keeps output file
-counts bounded at 100 TB; per-pid output splits into multiple files sized by
-``spark.sql.files.maxRecordsPerFile`` if needed.
+Scale: the only wide exchange is :func:`scatter` on ``pid``, by column and
+without a count, so AQE coalesces it. ``max_partition_count`` ≤ 2048
+(Kusto's cap) keeps output file counts bounded at 100 TB; per-pid output
+splits into multiple files sized by ``spark.sql.files.maxRecordsPerFile``
+if needed.
 """
 
 from __future__ import annotations
@@ -67,6 +67,18 @@ def partition_samples(df_with_pid: DataFrame, policy: PartitionPolicy) -> DataFr
     )
 
 
+def scatter(with_pid: DataFrame, writers: int = 1) -> DataFrame:
+    """The reference's scatter: repartition by pid with no count, so AQE
+    sizes the write stage (it never coalesces a repartition with a count).
+    AQE merges whole reduce partitions and never splits one, so a pid
+    reaches one write task: one dense file per pid directory, or up to
+    ``writers`` when ``writers > 1`` salts the key."""
+    if writers == 1:
+        return with_pid.repartition(F.col(PID_COL))
+    salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(writers))
+    return with_pid.repartition(F.col(PID_COL), salt)
+
+
 @dataclass
 class PrePartitionResult:
     output_path: str
@@ -85,7 +97,6 @@ def run_prepartition(
     output_path: str | list[str],
     fmt: str = "parquet",
     compression: str | None = None,
-    writers_per_partition: int | None = None,
     perf_journal=None,
 ) -> PrePartitionResult:
     """Full pipeline: hash → scatter → partitioned write → manifest.
@@ -96,14 +107,10 @@ def run_prepartition(
     manifest (pid, sample, count) replaces the sink's journal counters.
     Flush-interval/micro-batch semantics live in ``streaming.ingest``.
 
-    ``writers_per_partition``: a policy with small ``max_partition_count``
-    (Kusto policies are often 8-256) would otherwise bound the write to N
-    reducers regardless of cluster size. Salting the exchange to
-    ``N × writers`` tasks keeps every executor writing (each pid directory
-    then holds ``writers`` dense files) — the analogue of the reference
-    sink's MAX_PARALLEL_WRITES=16 concurrent block writes per blob
-    (PartitionedContentSink.cs:136). Default: scale to the cluster,
-    ``max(1, defaultParallelism // N)``.
+    Few pids (Kusto policies are often 8-256) would bound the write to N
+    tasks on a large cluster, so each pid gets ``max(1, defaultParallelism
+    // N)`` salted writers — the analogue of the reference sink's
+    MAX_PARALLEL_WRITES=16 concurrent block writes (PartitionedContentSink.cs:136).
 
     ``output_path`` may be a LIST of staging roots — the reference's
     multi-staging-container spread (PartitionedContentSink.cs:54-65 assigns
@@ -116,17 +123,8 @@ def run_prepartition(
     """
     staging = [output_path] if isinstance(output_path, str) else list(output_path)
     with_pid = prepartition(df, policy)
-    n = policy.max_partition_count
-    writers = writers_per_partition or max(
-        1, df.sparkSession.sparkContext.defaultParallelism // n
-    )
-    if writers > 1:
-        salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(writers))
-        scattered = with_pid.repartition(n * writers, F.col(PID_COL), salt)
-    else:
-        # repartition by pid so each output partition is written densely by
-        # the tasks owning that pid — the shuffle is the reference's scatter.
-        scattered = with_pid.repartition(n, F.col(PID_COL))
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    scattered = scatter(with_pid, max(1, parallelism // policy.max_partition_count))
 
     if len(staging) == 1:
         writer = scattered.write.mode("overwrite").partitionBy(PID_COL)

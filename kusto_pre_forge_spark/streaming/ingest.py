@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kusto_pre_forge_spark.catalog import PartitionPolicy
-from kusto_pre_forge_spark.plans.prepartition import PID_COL, prepartition
+from kusto_pre_forge_spark.plans.prepartition import PID_COL, prepartition, scatter
 from kusto_pre_forge_spark.sinks.manifest import IngestManifest, replay_safe_writer
 from kusto_pre_forge_spark.sources.autoextract import extract_text_blobs
 from kusto_pre_forge_spark.sources.blob import CSV_DIALECT
@@ -214,7 +214,8 @@ class StreamingEtl:
         keyed by ``(pid, batch_id)`` under dynamic partition overwrite — a
         replayed batch replaces exactly its own partition directories
         instead of appending a second copy (effectively-once, ≡ the
-        ingest-by no-op in the batch sink, TextKustoSink.cs:50-51).
+        ingest-by no-op in the batch sink, TextKustoSink.cs:50-51), one
+        file each: the scatter is unsalted.
         """
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -222,9 +223,7 @@ class StreamingEtl:
                 "_kpf_batch", F.lit(batch_id)
             )
             replay_safe_writer(
-                with_pid.repartition(policy.max_partition_count, F.col(PID_COL)),
-                PID_COL,
-                "_kpf_batch",
+                scatter(with_pid), PID_COL, "_kpf_batch"
             ).parquet(self.output_dir)
 
         return self.start(process, trigger_seconds, available_now)

@@ -24,6 +24,12 @@ def orders(spark, sf_smoke):
     return spark.read.parquet(f"{sf_smoke}/orders.parquet")
 
 
+def _data_files(pid_dir):
+    import glob
+
+    return [f for f in glob.glob(f"{pid_dir}/*") if not f.endswith("_SUCCESS")]
+
+
 def test_purity_and_range(orders):
     df = prepartition(orders, POLICY)
     bad = df.filter(
@@ -60,26 +66,59 @@ def test_end_to_end_completeness(spark, orders, tmp_path):
     assert sum(m["record_count"] for m in res.manifest) == orders.count()
 
 
-def test_parallel_writers_complete_and_bounded(spark, sf_smoke, tmp_path):
-    """Salted scatter: same rows, same purity, ~writers files per pid."""
+def test_parallel_writers_complete_and_bounded(spark, orders, tmp_path):
+    """Salted scatter: same rows, same purity, ~writers files per pid.
+    One pid leaves the whole cluster as its writers
+    (``defaultParallelism // 1``), which salts the exchange."""
     import glob
 
-    from kusto_pre_forge_spark.functions.hashing import kusto_preforge_hash
-
-    orders = spark.read.parquet(f"{sf_smoke}/orders.parquet")
-    pol = PartitionPolicy("o_orderpriority", 4, 42)
+    pol = PartitionPolicy("o_orderpriority", 1, 42)
+    writers = spark.sparkContext.defaultParallelism
     out = str(tmp_path / "pp")
-    res = run_prepartition(orders, pol, out, writers_per_partition=4)
+    res = run_prepartition(orders, pol, out)
     back = spark.read.parquet(out)
     assert back.count() == orders.count()
-    bad = back.filter(
-        F.col(PID_COL) != kusto_preforge_hash("o_orderpriority", 4, 42)
-    )
+    bad = back.filter(F.col(PID_COL) != kusto_preforge_hash("o_orderpriority", 1, 42))
     assert bad.count() == 0
     for d in glob.glob(f"{out}/{PID_COL}=*"):
-        files = [f for f in glob.glob(f"{d}/*") if not f.endswith("_SUCCESS")]
-        assert 1 <= len(files) <= 4 + 1
+        assert 1 <= len(_data_files(d)) <= writers + 1
     assert sum(r["record_count"] for r in res.manifest) == orders.count()
+
+
+def test_scatter_sizes_itself(spark, orders, tmp_path):
+    """The scatter is a by-column exchange AQE coalesces: a tiny input
+    under 64 pids runs a write stage with fewer than 64 tasks."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("kpf-scatter-size", "run_prepartition 64 pids")
+    try:
+        run_prepartition(orders, PartitionPolicy("o_orderkey", 64, 42), str(tmp_path / "pp"))
+    finally:
+        sc.setJobGroup(None, None)
+    stages = [
+        tracker.getStageInfo(s)
+        for j in tracker.getJobIdsForGroup("kpf-scatter-size")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    tasks = [s.numTasks for s in stages if s is not None]
+    assert tasks and max(tasks) < 64, tasks
+
+
+@pytest.mark.parametrize(
+    "fmt,compression", [("csv", "gzip"), ("parquet", None)], ids=["csv-gzip", "parquet"]
+)
+def test_one_file_per_pid(spark, orders, tmp_path, fmt, compression):
+    """The unsalted scatter (N ≥ defaultParallelism) writes each pid
+    densely: one data file per ``_kpf_pid=*`` directory, one directory
+    per manifest pid."""
+    import glob
+
+    out = str(tmp_path / "pp")
+    res = run_prepartition(orders, PartitionPolicy("o_orderkey", 64, 42), out, fmt, compression)
+    dirs = glob.glob(f"{out}/{PID_COL}=*")
+    assert len(dirs) == len(res.manifest) > 1
+    for d in dirs:
+        assert len(_data_files(d)) == 1, d
 
 
 def test_round_robin_staging_dirs(spark, orders, tmp_path):

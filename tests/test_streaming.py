@@ -82,6 +82,15 @@ def test_streaming_prepartition_two_waves(spark, tmp_path, landing):
     bad = out.filter(F.col(PID_COL) != kusto_preforge_hash("o_orderpriority", 8, 42))
     assert bad.count() == 0
 
+    # each single-file batch writes one dense file per (pid, batch)
+    import glob
+
+    batch_dirs = glob.glob(str(tmp_path / "out" / f"{PID_COL}=*" / "_kpf_batch=*"))
+    assert {d.rsplit("=", 1)[1] for d in batch_dirs} == {"0", "1"}
+    for d in batch_dirs:
+        files = [f for f in glob.glob(f"{d}/*") if not f.endswith("_SUCCESS")]
+        assert len(files) == 1, d
+
 
 def test_file_source_runs_no_empty_micro_batch(spark, tmp_path, landing):
     """A stateless file-source query never hands foreachBatch an empty
