@@ -1077,10 +1077,12 @@ def _q_dedup_soft_weights(spark, sf):
 
 
 def _q_dedup_clusters(spark, sf):
-    """Pairs → duplicate clusters: connected components (alternating
-    large-star/small-star) over the minhash near-dup pairs, labeled with
-    each component's min doc_id — the keep/drop decision the pair
-    generators alone can't answer."""
+    """Pairs → duplicate clusters: connected components over the minhash
+    near-dup pairs, labeled with each component's min doc_id — the
+    keep/drop decision the pair generators alone can't answer. At every
+    test and bench size the labels come from connected_components' one
+    union-find task; its alternating large-star/small-star loop runs only
+    past 2M distinct edges."""
     d = load_table(spark, sf, "documents")
     pairs = dedup.minhash_lsh_pairs(
         d, "text", "doc_id", num_hashes=64, bands=16, shingle_n=5, threshold=0.9

@@ -27,6 +27,8 @@ threshold), not the signature bytes. Everything else stays in codegen.
 
 from __future__ import annotations
 
+import functools
+import operator
 import random
 
 import numpy as np
@@ -194,7 +196,14 @@ def _hot_buckets(
     the corpus and capping bounds every bucket's contribution to
     max_bucket_size²/2. (No broadcast hint on the consuming anti-join:
     the over-cap set is usually tiny but corpus-dependent — AQE picks
-    broadcast vs shuffle at runtime.)"""
+    broadcast vs shuffle at runtime.)
+
+    Callers: :func:`_bucket_pairs` (the (band, key) buckets of both
+    MinHash-LSH paths and the (chunk, value) buckets of
+    :func:`hamming_pairs` / :func:`simhash_pairs`), the stop-shingle
+    ``max_doc_freq`` of :func:`ngram_jaccard_pairs`, and the hot-cell
+    ``max_cell_size`` of :func:`semdedup` and
+    :func:`incremental_semdedup_accept`."""
     return (
         keyed.groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -222,9 +231,58 @@ def _apply_hot_bucket_valve(
     return keyed.join(hot, key_cols, "left_anti")
 
 
-def _mh_hot_buckets(banded: DataFrame, max_bucket_size: int) -> DataFrame:
-    """Over-cap (band, key) MinHash-LSH buckets — see :func:`_hot_buckets`."""
-    return _hot_buckets(banded, ["band", "key"], max_bucket_size)
+def _bucket_pairs(
+    keyed: DataFrame,
+    keys: list[str],
+    probe: DataFrame | None = None,
+    carry: dict[str, tuple[str, str]] | None = None,
+    max_bucket_size: int | None = None,
+    journal=None,
+    counter: str = "HotBucketsDropped",
+) -> DataFrame:
+    """The one candidate join of every banded near-dup finder: rows of
+    ``_id`` plus bucket columns ``keys`` pair up when they share a
+    bucket. Returns distinct ``(id_a < id_b[, carried columns])``.
+
+    Without ``probe``: a self-join of ``keyed`` on ``l._id < r._id``.
+    With ``probe``: ``probe × keyed`` on ``l._id != r._id``, each pair
+    canonicalized with ``least``/``greatest`` (a pair found from both
+    sides collapses in the de-duplication) — cost scales with ``probe``,
+    never with ``keyed`` against itself.
+
+    ``carry`` maps a column to the names of its two pair-side copies:
+    aligned with ``id_a``/``id_b`` in the self-join, the pair's
+    ``least``/``greatest`` in the probe join (fine for a symmetric
+    verifier such as Levenshtein).
+
+    ``max_bucket_size`` is the hot-bucket valve, journaled under
+    ``counter`` when ``journal`` is given; its drop set is counted over
+    ``keyed`` alone and removed from both sides.
+    """
+    if probe is not None and max_bucket_size is not None:
+        probe = probe.join(_hot_buckets(keyed, keys, max_bucket_size), keys, "left_anti")
+    keyed = _apply_hot_bucket_valve(keyed, keys, max_bucket_size, journal, counter)
+
+    on = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    if probe is None:
+        l, r = keyed.alias("l"), keyed.alias("r")
+        on.append(F.col("l._id") < F.col("r._id"))
+        lo, hi = (lambda c: F.col(f"l.{c}")), (lambda c: F.col(f"r.{c}"))
+    else:
+        l, r = probe.alias("l"), keyed.alias("r")
+        on.append(F.col("l._id") != F.col("r._id"))
+        lo, hi = (
+            (lambda c: F.least(f"l.{c}", f"r.{c}")),
+            (lambda c: F.greatest(f"l.{c}", f"r.{c}")),
+        )
+    cols = [lo("_id").alias("id_a"), hi("_id").alias("id_b")]
+    for c, (name_a, name_b) in (carry or {}).items():
+        cols += [lo(c).alias(name_a), hi(c).alias(name_b)]
+    return (
+        l.join(r, functools.reduce(operator.and_, on))
+        .select(*cols)
+        .dropDuplicates(["id_a", "id_b"])
+    )
 
 
 def _mh_sig_prefilter(
@@ -363,23 +421,10 @@ def minhash_lsh_pairs(
     # ~3 KB/doc and 512 B/doc.
     base = pin(_mh_signatures(df, text_col, id_col, num_hashes, shingle_n, seed), pin_mode)
 
-    banded = _mh_band_keys(base, bands, rows_per_band)
-    if max_bucket_size is not None:
-        banded = banded.join(
-            _mh_hot_buckets(banded, max_bucket_size), ["band", "key"], "left_anti"
-        )
-
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    cand = _bucket_pairs(
+        _mh_band_keys(base, bands, rows_per_band),
+        ["band", "key"],
+        max_bucket_size=max_bucket_size,
     )
 
     # Pinned: the prefiltered pair set is referenced twice by the verify
@@ -437,26 +482,8 @@ def minhash_lsh_pairs_incremental(
     )
     banded_new = _mh_band_keys(sig_new, bands, rows_per_band)
     banded_all = _mh_band_keys(sig_old, bands, rows_per_band).unionByName(banded_new)
-    if max_bucket_size is not None:
-        hot = _mh_hot_buckets(banded_all, max_bucket_size)
-        banded_new = banded_new.join(hot, ["band", "key"], "left_anti")
-        banded_all = banded_all.join(hot, ["band", "key"], "left_anti")
-
-    l, r = banded_new.alias("l"), banded_all.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l._id") != F.col("r._id")),
-        )
-        # canonicalize: a (new, new) pair appears from both sides of the
-        # join; least/greatest + dropDuplicates collapses it
-        .select(
-            F.least("l._id", "r._id").alias("id_a"),
-            F.greatest("l._id", "r._id").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    cand = _bucket_pairs(
+        banded_all, ["band", "key"], probe=banded_new, max_bucket_size=max_bucket_size
     )
     sigs = sig_old.unionByName(sig_new)
     surviving = pin(_mh_sig_prefilter(cand, sigs, num_hashes, threshold), pin_mode)
@@ -484,6 +511,52 @@ def _chunk_layout(n_bits: int, chunks: int) -> list[tuple[int, int]]:
         width = base if i < chunks - 1 else n_bits - base * (chunks - 1)
         layout.append((i * base, (1 << width) - 1))
     return layout
+
+
+def _hamming_pairs(
+    fp: DataFrame,
+    n_bits: int,
+    chunks: int,
+    max_hamming: int,
+    pin_mode: str,
+    max_bucket_size: int | None,
+    journal,
+    counter: str,
+    out_col: str,
+) -> DataFrame:
+    """The one pigeonhole-banded core of :func:`simhash_pairs` and
+    :func:`hamming_pairs` over an ``(_id, _fp)`` frame: the candidate
+    join is :func:`_bucket_pairs` on (chunk_index, chunk_value), exact
+    ``bit_count(xor)`` verifies into ``out_col``. ``fp`` feeds both join
+    sides, so it is pinned."""
+    if chunks <= max_hamming:
+        raise ValueError("need chunks > max_hamming for recall completeness")
+    fp = pin(fp, pin_mode)
+    chunk_structs = [
+        F.struct(
+            F.lit(i).alias("ci"),
+            F.shiftright(F.col("_fp"), shift).bitwiseAND(mask).alias("cv"),
+        )
+        for i, (shift, mask) in enumerate(_chunk_layout(n_bits, chunks))
+    ]
+    chunked = fp.select(
+        "_id", "_fp", F.explode(F.array(*chunk_structs)).alias("c")
+    ).select("_id", "_fp", "c.ci", "c.cv")
+    cand = _bucket_pairs(
+        chunked,
+        ["ci", "cv"],
+        carry={"_fp": ("fp_a", "fp_b")},
+        max_bucket_size=max_bucket_size,
+        journal=journal,
+        counter=counter,
+    )
+    return (
+        cand.withColumn(
+            out_col, F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("int")
+        )
+        .filter(F.col(out_col) <= max_hamming)
+        .select("id_a", "id_b", out_col)
+    )
 
 
 def token_hashes60(col: Column | str, token_split: str = r"\s+") -> Column:
@@ -535,7 +608,9 @@ def simhash_pairs(
     Pigeonhole banding (Manku et al., WWW'07): split the 60-bit fingerprint
     into ``chunks`` pieces; any pair within distance ``chunks - 1`` shares
     at least one exact chunk, so the join key is (chunk_index, chunk_value)
-    — never a cross join. Exact Hamming verify via bit_count(xor).
+    — never a cross join. Exact Hamming verify via bit_count(xor). Raises
+    ``ValueError`` unless ``chunks > max_hamming`` (below that the
+    pigeonhole guarantee fails and pairs would silently go missing).
 
     ``max_bucket_size`` is the hot-bucket valve (same pattern as
     ``minhash_lsh_pairs``): a degenerate fingerprint — e.g. the all-zero
@@ -546,46 +621,10 @@ def simhash_pairs(
     the drop count lands in ``journal`` when given. ``None`` = exact
     banding (the oracle-checked configuration).
     """
-    # fingerprints feed BOTH sides of the chunk self-join; without pinning,
-    # the md5-token transform recomputes per side (2 full scans). The frame
-    # is (id, 64-bit fp) — trivial to store, so pin it (lazy persist keeps
-    # lineage; see kusto_pre_forge_spark.pinning).
-    fp = pin(simhash_fingerprints(df, text_col, id_col), pin_mode)
-    chunk_structs = [
-        F.struct(
-            F.lit(i).alias("ci"),
-            F.shiftright(F.col("_fp"), shift).bitwiseAND(mask).alias("cv"),
-        )
-        for i, (shift, mask) in enumerate(_chunk_layout(60, chunks))
-    ]
-    chunked = fp.select(
-        "_id", "_fp", F.explode(F.array(*chunk_structs)).alias("c")
-    ).select("_id", "_fp", "c.ci", "c.cv")
-    chunked = _apply_hot_bucket_valve(
-        chunked, ["ci", "cv"], max_bucket_size, journal, "SimHashPairs.HotBucketsDropped"
-    )
-
-    l, r = chunked.alias("l"), chunked.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.ci") == F.col("r.ci"))
-            & (F.col("l.cv") == F.col("r.cv"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(
-            F.col("l._id").alias("id_a"),
-            F.col("r._id").alias("id_b"),
-            F.col("l._fp").alias("fp_a"),
-            F.col("r._fp").alias("fp_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        cand.withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    fp = simhash_fingerprints(df, text_col, id_col)
+    return _hamming_pairs(
+        fp, 60, chunks, max_hamming, pin_mode,
+        max_bucket_size, journal, "SimHashPairs.HotBucketsDropped", "hamming",
     )
 
 
@@ -633,15 +672,9 @@ def ngram_jaccard_pairs(
     )
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("n_sh"))
 
-    sh_join = sh
-    if max_doc_freq is not None:
-        hot = (
-            sh.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_doc_freq)
-            .select("s")
-        )
-        sh_join = sh.join(F.broadcast(hot), "s", "left_anti")
+    # shingles are distinct per doc, so a shingle's row count is its
+    # document frequency
+    sh_join = _apply_hot_bucket_valve(sh, ["s"], max_doc_freq)
 
     l, r = sh_join.alias("l"), sh_join.alias("r")
     shared = (
@@ -747,11 +780,13 @@ def embedding_dup_pairs(
 # 100 TB question is "which rows do I drop". Near-dup pairs are the edges
 # of a graph whose connected components are the duplicate clusters; the
 # standard resolution keeps one representative (min id) per component and
-# drops the rest. Components are computed with the alternating
-# large-star / small-star algorithm (Kiveris et al. 2014, "Connected
-# Components in MapReduce and Beyond"): O(log n) rounds, each round two
-# key-partitioned aggregations — no vertex ever sees more than its
-# neighborhood, so it scales to billions of edges where a naive
+# drops the rest. Up to _CC_SINGLE_TASK_EDGES distinct edges (every test
+# and benchmark size) the components come from ONE union-find task over
+# the checkpointed edge list. Past that bound they come from the
+# alternating large-star / small-star algorithm (Kiveris et al. 2014,
+# "Connected Components in MapReduce and Beyond"): O(log n) rounds, each
+# round two key-partitioned aggregations — no vertex ever sees more than
+# its neighborhood, so it scales to billions of edges where a naive
 # transitive-closure join blows up.
 
 
@@ -1180,23 +1215,9 @@ def edit_distance_pairs(
         "_id", "_t", "_w.si", "_w.la", "_w.sv"
     )
 
-    l, r = seg_side.alias("l"), win_side.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.si") == F.col("r.si"))
-            & (F.col("l.la") == F.col("r.la"))
-            & (F.col("l.sv") == F.col("r.sv"))
-            & (F.col("l._id") != F.col("r._id")),
-        )
-        # either role order finds the pair; canonicalize + dedupe
-        .select(
-            F.least("l._id", "r._id").alias("id_a"),
-            F.greatest("l._id", "r._id").alias("id_b"),
-            F.least("l._t", "r._t").alias("_t1"),
-            F.greatest("l._t", "r._t").alias("_t2"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    # either role order finds the pair: probe mode canonicalizes + dedupes
+    cand = _bucket_pairs(
+        win_side, ["si", "la", "sv"], probe=seg_side, carry={"_t": ("_t1", "_t2")}
     )
     return (
         cand.withColumn("distance", F.levenshtein("_t1", "_t2").cast("long"))
@@ -1460,50 +1481,10 @@ def hamming_pairs(
     arithmetic sign-extension never reaches a join key. Returns
     (id_a < id_b, distance).
     """
-    if chunks <= max_hamming:
-        raise ValueError("need chunks > max_hamming for recall completeness")
-    fp = pin(
-        df.select(
-            F.col(id_col).alias("_id"), F.col(fp_col).cast("long").alias("_fp")
-        ),
-        pin_mode,
-    )
-    chunk_structs = [
-        F.struct(
-            F.lit(i).alias("ci"),
-            F.shiftright(F.col("_fp"), shift).bitwiseAND(mask).alias("cv"),
-        )
-        for i, (shift, mask) in enumerate(_chunk_layout(n_bits, chunks))
-    ]
-    chunked = fp.select(
-        "_id", "_fp", F.explode(F.array(*chunk_structs)).alias("c")
-    ).select("_id", "_fp", "c.ci", "c.cv")
-    chunked = _apply_hot_bucket_valve(
-        chunked, ["ci", "cv"], max_bucket_size, journal, "HammingPairs.HotBucketsDropped"
-    )
-    l, r = chunked.alias("l"), chunked.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.ci") == F.col("r.ci"))
-            & (F.col("l.cv") == F.col("r.cv"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(
-            F.col("l._id").alias("id_a"),
-            F.col("r._id").alias("id_b"),
-            F.col("l._fp").alias("fp_a"),
-            F.col("r._fp").alias("fp_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        cand.withColumn(
-            "distance",
-            F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("int"),
-        )
-        .filter(F.col("distance") <= max_hamming)
-        .select("id_a", "id_b", "distance")
+    fp = df.select(F.col(id_col).alias("_id"), F.col(fp_col).cast("long").alias("_fp"))
+    return _hamming_pairs(
+        fp, n_bits, chunks, max_hamming, pin_mode,
+        max_bucket_size, journal, "HammingPairs.HotBucketsDropped", "distance",
     )
 
 
@@ -1767,7 +1748,8 @@ def semdedup(
     - within-cell pairs — one Arrow batch per cell (``applyInPandas``),
       pairwise cosine accumulated dimension-by-dimension (bit-exact with
       the SQL fold, see :func:`embedding_dup_pairs`);
-    - :func:`connected_components` — alternating-star, O(log n) rounds;
+    - components — a union-find over each cell's pairs in the same task
+      (pairs never cross cells);
     - survivor rule: ``min_id`` keeps the smallest id per group (the
       repo-wide convention, oracle-friendly); ``far_from_centroid``
       keeps the member FARTHEST from its cell centroid (the paper's §3
@@ -1946,29 +1928,37 @@ def hamming_candidate_recall(
         )
         share = eq if share is None else (share | eq)
     pairs = pin(pairs.withColumn("_cand", share))
-    agg = pairs.agg(
-        F.count(F.when(F.col("distance") <= max_hamming, 1))
-        .cast("long")
-        .alias("n_exact"),
-        F.count(F.when(F.col("_cand"), 1)).cast("long").alias("n_candidates"),
-        F.count(
-            F.when(F.col("_cand") & (F.col("distance") <= max_hamming), 1)
+    return _recall_row(
+        pairs.agg(
+            F.count(F.when(F.col("distance") <= max_hamming, 1)).alias("n_exact"),
+            F.count(F.when(F.col("_cand"), 1)).alias("n_candidates"),
+            F.count(
+                F.when(F.col("_cand") & (F.col("distance") <= max_hamming), 1)
+            ).alias("n_hits"),
         )
-        .cast("long")
-        .alias("n_hits"),
     )
-    return agg.select(
-        "n_exact",
-        "n_candidates",
-        "n_hits",
-        F.when(F.col("n_exact") == 0, F.lit(1.0))
-        .otherwise(F.round(F.col("n_hits") / F.col("n_exact").cast("double"), 6))
-        .alias("recall"),
-        F.when(F.col("n_candidates") == 0, F.lit(1.0))
-        .otherwise(
-            F.round(F.col("n_hits") / F.col("n_candidates").cast("double"), 6)
+
+
+_RECALL_COUNTS = ("n_exact", "n_candidates", "n_hits")
+
+
+def _recall_row(counts: DataFrame) -> DataFrame:
+    """The shared tail of both recall harnesses: a one-row frame of the
+    long ``(n_exact, n_candidates, n_hits)`` counts gains ``recall`` =
+    hits/exact (banding's miss rate) and ``candidate_efficiency`` =
+    hits/candidates (how much of the candidate join is wasted verify
+    work). Vacuous slices (no exact pair / no candidate) score 1.0:
+    nothing was missed / no verify work was wasted."""
+
+    def ratio(den: str) -> Column:
+        return F.when(F.col(den) == 0, F.lit(1.0)).otherwise(
+            F.round(F.col("n_hits") / F.col(den).cast("double"), 6)
         )
-        .alias("candidate_efficiency"),
+
+    return counts.select(
+        *_RECALL_COUNTS,
+        ratio("n_exact").alias("recall"),
+        ratio("n_candidates").alias("candidate_efficiency"),
     )
 
 
@@ -2007,44 +1997,12 @@ def lsh_candidate_recall(
     # both self-join sides read the band keys; unpinned, the shingle +
     # 64-hash signature pipeline would run once PER SIDE
     banded = pin(_mh_band_keys(base, bands, num_hashes // bands))
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .distinct()
-    )
+    cand = _bucket_pairs(banded, ["band", "key"])
     hits = exact.join(cand, ["id_a", "id_b"], "left_semi")
     n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
     n_hit = hits.agg(F.count(F.lit(1)).alias("n_hits"))
-    return (
-        n_exact.crossJoin(F.broadcast(n_cand))
-        .crossJoin(F.broadcast(n_hit))
-        .select(
-            F.col("n_exact").cast("long").alias("n_exact"),
-            F.col("n_candidates").cast("long").alias("n_candidates"),
-            F.col("n_hits").cast("long").alias("n_hits"),
-            # vacuous slices (no exact pair / no candidate) score 1.0:
-            # nothing was missed / no verify work was wasted
-            F.when(F.col("n_exact") == 0, F.lit(1.0))
-            .otherwise(
-                F.round(
-                    F.col("n_hits") / F.col("n_exact").cast("double"), 6
-                )
-            )
-            .alias("recall"),
-            F.when(F.col("n_candidates") == 0, F.lit(1.0))
-            .otherwise(
-                F.round(
-                    F.col("n_hits") / F.col("n_candidates").cast("double"),
-                    6,
-                )
-            )
-            .alias("candidate_efficiency"),
-        )
+    counts = n_exact.crossJoin(F.broadcast(n_cand)).crossJoin(F.broadcast(n_hit))
+    return _recall_row(
+        counts.select(*(F.col(c).cast("long").alias(c) for c in _RECALL_COUNTS))
     )

@@ -234,6 +234,42 @@ def test_minhash_hot_bucket_valve_drops_boilerplate_keeps_rare(spark):
     assert any(a < 60 and b < 60 for a, b in exact_pairs)
 
 
+def test_minhash_incremental_hot_bucket_valve_matches_batch(spark):
+    """max_bucket_size on the incremental path: the hot set is counted
+    over corpus ∪ new, so incremental(cap) equals batch(cap) restricted
+    to pairs that touch a new id — and the cap really drops pairs."""
+    boiler_text = "identical boilerplate legal disclaimer text repeated verbatim"
+    rare_text = " ".join(f"token{j}" for j in range(40))
+    rows = [(i, boiler_text) for i in range(60)]
+    rows += [(1000, rare_text), (1001, rare_text + " x")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    corpus = df.filter(F.col("doc_id") < 30)
+    new = df.filter(F.col("doc_id") >= 30)
+    kw = dict(num_hashes=64, bands=16, threshold=0.8)
+
+    def touching_new(pairs):
+        return {
+            (r.id_a, r.id_b): round(r.jaccard, 9)
+            for r in pairs.collect()
+            if r.id_a >= 30 or r.id_b >= 30
+        }
+
+    inc = {
+        (r.id_a, r.id_b): round(r.jaccard, 9)
+        for r in dedup.minhash_lsh_pairs_incremental(
+            corpus, new, "text", "doc_id", max_bucket_size=10, **kw
+        ).collect()
+    }
+    capped = touching_new(
+        dedup.minhash_lsh_pairs(df, "text", "doc_id", max_bucket_size=10, **kw)
+    )
+    uncapped = touching_new(dedup.minhash_lsh_pairs(df, "text", "doc_id", **kw))
+    assert inc == capped
+    assert (1000, 1001) in inc, "under-cap near-dup must survive"
+    assert len(inc) < len(uncapped), "the cap must drop boilerplate pairs"
+    assert not any(a < 60 and b < 60 for a, b in inc)
+
+
 @pytest.mark.parametrize("pin_mode", ["persist", "local_checkpoint", "none"])
 def test_minhash_pin_modes_agree(spark, docs_with_dups, pin_mode):
     """Every pin mode returns the same pair set (pinning is a
@@ -346,11 +382,20 @@ def test_hamming_pairs_generic(spark):
         for r in hamming_pairs(df, "fp", "doc_id", max_hamming=3).collect()
     }
     assert got == {(1, 2): 2, (3, 4): 1}, got
-    # chunks must exceed max_hamming (pigeonhole completeness)
-    import pytest as _pt
 
-    with _pt.raises(ValueError):
-        hamming_pairs(df, "fp", "doc_id", max_hamming=4, chunks=4)
+
+@pytest.mark.parametrize(
+    "finder, col",
+    [(dedup.hamming_pairs, "fp"), (dedup.simhash_pairs, "text")],
+    ids=["hamming_pairs", "simhash_pairs"],
+)
+def test_hamming_pairs_refuse_chunks_le_max_hamming(spark, finder, col):
+    """chunks must exceed max_hamming (pigeonhole completeness): both
+    finders share one banding core and refuse the incomplete setting
+    instead of silently returning a partial pair set."""
+    df = spark.createDataFrame([(1, -1, "a b c")], "doc_id long, fp long, text string")
+    with pytest.raises(ValueError, match="chunks > max_hamming"):
+        finder(df, col, "doc_id", max_hamming=4, chunks=4)
 
 
 def test_hamming_pairs_hot_bucket_valve(spark):
