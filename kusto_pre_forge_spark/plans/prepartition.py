@@ -33,9 +33,9 @@ from pyspark.sql import functions as F
 
 from kusto_pre_forge_spark.catalog import PartitionPolicy
 from kusto_pre_forge_spark.functions.hashing import kusto_preforge_hash
+from kusto_pre_forge_spark.sources.blob import SOURCE_COL  # noqa: F401  (re-export)
 
 PID_COL = "_kpf_pid"
-SOURCE_COL = "_kpf_source"
 
 
 def prepartition(df: DataFrame, policy: PartitionPolicy) -> DataFrame:

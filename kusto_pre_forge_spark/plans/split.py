@@ -36,10 +36,10 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kusto_pre_forge_spark.config import RunSettings
+from kusto_pre_forge_spark.config import DataFormat, RunSettings
 from kusto_pre_forge_spark.sinks.manifest import replay_safe_writer
+from kusto_pre_forge_spark.sources.blob import SOURCE_COL, load_landing
 
-SOURCE_COL = "_kpf_source"
 SHARD_COL = "_kpf_shard_id"
 LAST_SHARD_COL = "_kpf_last_shard"
 ORDER_COL = "_kpf_order"
@@ -49,6 +49,8 @@ BLOCK_COL = "_kpf_block_start"
 def read_lines(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     """Read newline-framed records with source lineage and in-file order.
 
+    The txt landing of :func:`~kusto_pre_forge_spark.sources.blob.load_landing`
+    (``Text`` + ``_kpf_source``) plus the order and block columns.
     ≡ TextSource + TextLineParsingSink framing (the reader already cuts at
     newlines and handles a trailing unterminated record — which the live
     reference parser drops, SURVEY §4.3 #3; intended semantics keep it).
@@ -56,12 +58,8 @@ def read_lines(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     file because splits are assigned in offset order, giving a stable
     record order per source.
     """
-    if isinstance(paths, str):
-        paths = [paths]
     return (
-        spark.read.text(paths)
-        .withColumnRenamed("value", "Text")
-        .withColumn(SOURCE_COL, F.input_file_name())
+        load_landing(spark.read, paths, DataFormat.TXT)
         .withColumn(ORDER_COL, F.monotonically_increasing_id())
         # real in-file byte offset of the enclosing split: the cross-split
         # ordering key for the distributed prefix sum. spark_partition_id

@@ -17,7 +17,8 @@ Re-expresses the reference's source layer Spark-first:
   file from the listed lengths), ``map_blobs`` (one Arrow map handing
   each format's row function a binary file object) and
   ``open_decompressed`` (one decompress-by-magic opener).
-- ``TextSource`` (dormant split path) → ``spark.read.text``.
+- ``TextSource`` (dormant split path) → ``load_landing``, the one format →
+  Spark source dispatch of ``read_landing``, ``StreamingEtl`` and Split.
 
 Scale note: a 100 TB prefix listing is driver-side metadata only; the read
 itself fans out one task per file split. Filters/projections on the returned
@@ -36,13 +37,26 @@ from pyspark.sql import types as T
 
 from kusto_pre_forge_spark.config import DataFormat, RunSettings
 
-_DELIMITERS = {DataFormat.CSV: ",", DataFormat.TSV: "\t", DataFormat.PSV: "|"}
+# Lineage: the landing file (or blob path) each row came from.
+SOURCE_COL = "_kpf_source"
 
 # RFC-4180, as the reference's parse state machine (CsvParseTransform.cs:64-82):
 # "" escapes a quote inside a quoted field, and a quoted field may hold
 # newlines. One dialect for the batch (read_landing) and streaming
 # (StreamingEtl) readers.
 CSV_DIALECT = {"quote": '"', "escape": '"', "multiLine": "true"}
+
+# Every landing format a Spark file source parses: DataFormat → (source,
+# options), read by load_landing alone — for bulk, streaming and Split.
+_SPARK_SOURCES = {
+    DataFormat.TXT: ("text", {}),
+    DataFormat.CSV: ("csv", {"sep": ",", **CSV_DIALECT}),
+    DataFormat.TSV: ("csv", {"sep": "\t", **CSV_DIALECT}),
+    DataFormat.PSV: ("csv", {"sep": "|", **CSV_DIALECT}),
+    DataFormat.JSON: ("json", {}),
+    DataFormat.PARQUET: ("parquet", {}),
+    DataFormat.ORC: ("orc", {}),
+}
 
 
 def list_source(
@@ -213,7 +227,7 @@ def map_blobs(blobs: DataFrame, rows, ddl: str, errors=(), finish=None) -> DataF
         return finish(pdf) if finish else pdf
 
     def blob_rows(p, f):
-        return ({"_kpf_source": p, **r} for r in rows(p, f))
+        return ({SOURCE_COL: p, **r} for r in rows(p, f))
 
     def worker_open(p):
         local = worker_local_path(p)
@@ -310,6 +324,39 @@ def read_xz_lines(
     return _read_archive_lines(spark, paths, unxz, drop_first_line)
 
 
+def load_landing(
+    reader, path, fmt: DataFormat, csv_headers=True, schema=None, corrupt_col=None
+) -> DataFrame:
+    """The one format → Spark source dispatch of a landing, for
+    ``spark.read`` and ``spark.readStream`` alike: the format's source
+    and options (csv/tsv/psv add ``header``), the corrupt-record capture
+    (csv/tsv/psv/json), the schema, then ``load``. Text lands as one
+    ``Text`` column whatever the table schema (templates/script.kql:2).
+    Rows carry ``SOURCE_COL``."""
+    if fmt not in _SPARK_SOURCES:
+        raise NotImplementedError(f"no Spark file source reads {fmt.value} landings")
+    source, options = _SPARK_SOURCES[fmt]
+    reader = reader.format(source).options(**options)
+    if source == "csv":
+        reader = reader.option("header", str(csv_headers).lower())
+    if corrupt_col is not None:
+        if source not in ("csv", "json"):
+            raise ValueError(f"corrupt_col is not supported for {fmt.value} input")
+        if schema is None:
+            raise ValueError("corrupt_col requires an explicit schema")
+        schema = T.StructType(
+            list(schema.fields) + [T.StructField(corrupt_col, T.StringType())]
+        )
+        reader = reader.options(
+            mode="PERMISSIVE", columnNameOfCorruptRecord=corrupt_col
+        )
+    if source == "text":
+        df = reader.load(path).withColumnRenamed("value", "Text")
+    else:
+        df = (reader.schema(schema) if schema is not None else reader).load(path)
+    return df.withColumn(SOURCE_COL, F.input_file_name())
+
+
 def read_landing(
     spark: SparkSession,
     paths: list[str] | str,
@@ -320,7 +367,10 @@ def read_landing(
     """Read input blobs into a DataFrame with lineage.
 
     Format dispatch mirrors EtlRun.cs:87-118 (txt/csv live; the reference
-    throws for other formats — we support them natively). Compression is
+    throws for other formats — we support them natively). Every format a
+    Spark file source parses goes through :func:`load_landing`, the same
+    dispatch ``StreamingEtl`` and Split read with; zip/xz archives, avro
+    and w3clogfile have their own readers here. Compression is
     transparent via file extension (Hadoop codecs), replacing
     GunzipContentTransform entirely.
 
@@ -332,7 +382,8 @@ def read_landing(
     on quarantine mode: malformed rows survive the read with their RAW
     text captured in that column instead of silently nulling
     (PERMISSIVE + columnNameOfCorruptRecord) — split them off with
-    :func:`split_corrupt`. The reference hard-fails the whole blob on a
+    :func:`split_corrupt`. Any other format, and zip/xz input, refuses
+    it with a ``ValueError``. The reference hard-fails the whole blob on a
     malformed record (single-pass state machine, CsvParseTransform.cs);
     production pre-forge wants the 99.99% good rows plus a reviewable
     reject stream, so quarantine is the engine's default recommendation.
@@ -343,17 +394,24 @@ def read_landing(
         paths = [paths]
     fmt = settings.fmt
     read_archive = {Compression.XZ: read_xz_lines, Compression.ZIP: read_zip_lines}
-    if settings.input_compression in read_archive:
+    read_lines = read_archive.get(settings.input_compression)
+    if read_lines is None and fmt in _SPARK_SOURCES:
+        return load_landing(
+            spark.read, paths, fmt, settings.csv_headers, schema, corrupt_col
+        )
+    codec = settings.input_compression.value.lower() if read_lines else None
+    if corrupt_col is not None:
+        raise ValueError(f"corrupt_col is not supported for {codec or fmt.value} input")
+    if read_lines:
         # gzip/zstd are transparent Hadoop codecs; zip (an archive) and xz
         # (no codec in stock Spark) need the archive readers. txt: lines
         # as-is. Delimited: parse the lines with from_csv against the
         # caller's schema (required — there is no sampling pass over
         # archive members).
-        codec = settings.input_compression.value.lower()
-        read_lines = read_archive[settings.input_compression]
         if fmt == DataFormat.TXT:
             return read_lines(spark, paths)
-        if fmt not in _DELIMITERS:
+        source, options = _SPARK_SOURCES.get(fmt, (None, None))
+        if source != "csv":
             raise NotImplementedError(f"{codec} input for format {fmt}")
         if schema is None:
             raise ValueError(f"{codec}-compressed delimited input requires a schema")
@@ -361,68 +419,22 @@ def read_landing(
         ddl = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
         )
-        parsed = F.from_csv(
-            F.col("Text"), F.lit(ddl), {"sep": _DELIMITERS[fmt], **CSV_DIALECT}
-        )
-        return lines.select(parsed.alias("_r"), "_kpf_source").select(
-            "_r.*", "_kpf_source"
-        )
-    if fmt == DataFormat.TXT:
-        # landing table shape: one Text:string column (templates/script.kql:2)
-        df = spark.read.text(paths).withColumnRenamed("value", "Text")
-    elif fmt in _DELIMITERS:
-        reader = spark.read.options(
-            sep=_DELIMITERS[fmt],
-            header=str(settings.csv_headers).lower(),
-            **CSV_DIALECT,
-        )
-        use_schema = schema
-        if corrupt_col is not None:
-            if schema is None:
-                raise ValueError("corrupt_col requires an explicit schema")
-            use_schema = T.StructType(
-                list(schema.fields) + [T.StructField(corrupt_col, T.StringType())]
-            )
-            reader = reader.options(
-                mode="PERMISSIVE", columnNameOfCorruptRecord=corrupt_col
-            )
-        df = (
-            reader.csv(paths, schema=use_schema)
-            if use_schema is not None
-            else reader.csv(paths)
-        )
-    elif fmt == DataFormat.JSON:
-        use_schema = schema
-        jreader = spark.read
-        if corrupt_col is not None:
-            if schema is None:
-                raise ValueError("corrupt_col requires an explicit schema")
-            use_schema = T.StructType(
-                list(schema.fields) + [T.StructField(corrupt_col, T.StringType())]
-            )
-            jreader = jreader.options(
-                mode="PERMISSIVE", columnNameOfCorruptRecord=corrupt_col
-            )
-        df = jreader.json(paths, schema=use_schema)
-    elif fmt == DataFormat.PARQUET:
-        df = spark.read.parquet(*paths)
-    elif fmt == DataFormat.ORC:
-        df = spark.read.orc(*paths)
-    elif fmt == DataFormat.AVRO:
+        parsed = F.from_csv(F.col("Text"), F.lit(ddl), options)
+        return lines.select(parsed.alias("_r"), SOURCE_COL).select("_r.*", SOURCE_COL)
+    if fmt == DataFormat.AVRO:
         from kusto_pre_forge_spark.sources.avro import read_avro
 
         # read_avro emits _kpf_source itself (binaryFile path column —
         # input_file_name() is empty under non-file-scan sources)
         return read_avro(spark, paths[0] if len(paths) == 1 else paths)
-    elif fmt == DataFormat.W3CLOGFILE:
+    if fmt == DataFormat.W3CLOGFILE:
         # read_w3c_log resolves dirs/globs/URIs to a sample file for the
         # #Fields sniff — the same shapes every other format accepts
         from kusto_pre_forge_spark.sources.w3clog import read_w3c_log
 
         df = read_w3c_log(spark, paths if len(paths) > 1 else paths[0])
-    else:  # pragma: no cover - enum is closed
-        raise NotImplementedError(f"format {fmt}")
-    return df.withColumn("_kpf_source", F.input_file_name())
+        return df.withColumn(SOURCE_COL, F.input_file_name())
+    raise NotImplementedError(f"format {fmt}")  # pragma: no cover - enum is closed
 
 
 def split_corrupt(

@@ -38,6 +38,13 @@ every other mode is a ``*_batch`` method bound with ``functools.partial``:
   deltas), ``ann_index_batch`` (IVF-PQ index), ``webdataset_ingest_batch``
   (tar shards).
 
+Landings: ``fmt`` names a ``DataFormat`` (``"text"`` for txt), read by
+``sources.blob.load_landing`` — the one format → Spark source dispatch that
+bulk ``read_landing`` and Split's ``read_lines`` also use, so a blob parses
+the same whether it arrives in bulk or streams in: csv/tsv/psv, text (one
+``Text`` column), json, parquet, orc. ``_BINARY_LANDINGS`` formats (warc,
+pdf, docx, auto) go through ``binaryFile`` and the batch parsers.
+
 Scale: each micro-batch is a normal batch plan over the newly arrived
 files; ``maxFilesPerTrigger`` bounds batch size (the reference's 100 MB
 memory budget analogue — backpressure by admission, EtlRun.cs:27).
@@ -52,10 +59,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kusto_pre_forge_spark.catalog import PartitionPolicy
+from kusto_pre_forge_spark.config import Compression, DataFormat, RunSettings
 from kusto_pre_forge_spark.plans.prepartition import PID_COL, prepartition, scatter
 from kusto_pre_forge_spark.sinks.manifest import IngestManifest, replay_safe_writer
 from kusto_pre_forge_spark.sources.autoextract import extract_text_blobs
-from kusto_pre_forge_spark.sources.blob import CSV_DIALECT
+from kusto_pre_forge_spark.sources.blob import SOURCE_COL, load_landing
 from kusto_pre_forge_spark.sources.docx import parse_docx_blobs
 from kusto_pre_forge_spark.sources.pdf import parse_pdf_blobs
 from kusto_pre_forge_spark.sources.warc import parse_warc_blobs
@@ -83,7 +91,7 @@ def _by_file(batch_df: DataFrame, id_col: str) -> DataFrame:
     file alone: a repacked replay (doc in two files, different file→batch
     packing) rewrites identical partition content and never
     double-counts."""
-    fkey = F.substring(F.md5(F.col("_kpf_source")), 1, 16)
+    fkey = F.substring(F.md5(F.col(SOURCE_COL)), 1, 16)
     return batch_df.withColumn("_kpf_file", fkey).dropDuplicates([id_col, "_kpf_file"])
 
 
@@ -122,8 +130,6 @@ class StreamingEtl:
         self.max_files_per_trigger = max_files_per_trigger
 
     def _source(self) -> DataFrame:
-        from pyspark.sql import types as T
-
         reader = self.spark.readStream
         if self.max_files_per_trigger:
             # admission control ≡ the reference's bounded memory budget
@@ -143,31 +149,11 @@ class StreamingEtl:
             )
             return parse(breader.load(self.landing_dir))
 
-        schema = self.schema
-        if self.fmt == "text":
-            # the text source has exactly one string column regardless of
-            # the table schema the ETL will parse downstream
-            schema = T.StructType([T.StructField("value", T.StringType())])
-        reader = reader.schema(schema)
-        if self.fmt == "csv":
-            reader = reader.options(header=str(self.csv_headers).lower(), **CSV_DIALECT)
-            df = reader.csv(self.landing_dir)
-        elif self.fmt == "text":
-            df = reader.text(self.landing_dir)
-        elif self.fmt == "json":
-            # JSON-lines landing blobs — same declared schema as batch
-            # read_landing (schema inference is disabled in streams)
-            df = reader.json(self.landing_dir)
-        elif self.fmt == "parquet":
-            df = reader.parquet(self.landing_dir)
-        elif self.fmt == "orc":
-            # ORC landing blobs — native Spark source, same declared
-            # schema contract as parquet (completes the batch
-            # read_landing format set on the streaming path)
-            df = reader.orc(self.landing_dir)
-        else:
-            raise NotImplementedError(f"streaming format {self.fmt}")
-        return df.withColumn("_kpf_source", F.input_file_name())
+        # "text" is the streaming spelling of DataFormat.TXT
+        fmt = DataFormat.TXT if self.fmt == "text" else DataFormat(self.fmt)
+        return load_landing(
+            reader, self.landing_dir, fmt, self.csv_headers, self.schema
+        )
 
     def start(
         self,
@@ -219,7 +205,7 @@ class StreamingEtl:
         """
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            with_pid = prepartition(batch_df.drop("_kpf_source"), policy).withColumn(
+            with_pid = prepartition(batch_df.drop(SOURCE_COL), policy).withColumn(
                 "_kpf_batch", F.lit(batch_id)
             )
             replay_safe_writer(
@@ -245,7 +231,6 @@ class StreamingEtl:
         ``replay_safe_writer``, so a replayed blob rewrites exactly its own
         shards (idempotent by construction, ≡ ingest-by tags).
         """
-        from kusto_pre_forge_spark.config import Compression, RunSettings
         from kusto_pre_forge_spark.plans.split import run_split
 
         settings = RunSettings(
@@ -254,7 +239,7 @@ class StreamingEtl:
         )
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            paths = [r[0] for r in batch_df.select("_kpf_source").distinct().collect()]
+            paths = [r[0] for r in batch_df.select(SOURCE_COL).distinct().collect()]
             if not paths:
                 return
             run_split(self.spark, paths, settings, self.output_dir, max_bytes_per_shard)
@@ -323,7 +308,7 @@ class StreamingEtl:
         a replayed batch replaces exactly its own partition. Returns the
         number of rows the batch's partition holds (0 for an empty
         batch)."""
-        batch = batch_df.drop("_kpf_source").dropDuplicates([id_col])
+        batch = batch_df.drop(SOURCE_COL).dropDuplicates([id_col])
         if not batch.head(1):
             return 0
         accepted = gate(batch).withColumn("_kpf_batch", F.lit(batch_id))

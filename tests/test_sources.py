@@ -370,6 +370,25 @@ def test_read_landing_quarantine_mode(spark, tmp_path):
         read_landing(
             spark, str(p), RunSettings(fmt=DataFormat.CSV), corrupt_col="_c"
         )
+    # formats with no corrupt-record capture refuse the column rather than
+    # return a frame without it
+    for fmt, codec, name in [
+        (DataFormat.TXT, Compression.NONE, "txt"),
+        (DataFormat.PARQUET, Compression.NONE, "parquet"),
+        (DataFormat.ORC, Compression.NONE, "orc"),
+        (DataFormat.AVRO, Compression.NONE, "avro"),
+        (DataFormat.W3CLOGFILE, Compression.NONE, "w3clogfile"),
+        (DataFormat.CSV, Compression.ZIP, "zip"),
+        (DataFormat.CSV, Compression.XZ, "xz"),
+    ]:
+        with _pt.raises(ValueError, match=f"not supported for {name} input"):
+            read_landing(
+                spark,
+                str(p),
+                RunSettings(fmt=fmt, input_compression=codec),
+                schema=schema,
+                corrupt_col="_c",
+            )
 
 
 def test_fixed_width_parse_and_file_read(spark, tmp_path):

@@ -238,35 +238,51 @@ def test_streaming_prepartition_replay_no_dup(spark, tmp_path, landing):
     assert n2 == n1, "replayed batch must not duplicate rows"
 
 
-def test_streaming_csv_quoted_newline_matches_read_landing(spark, tmp_path):
-    """A quoted field holding a newline is ONE record on the streaming
-    path, exactly as the batch reader parses it (one RFC-4180 dialect for
-    both readers)."""
+@pytest.mark.parametrize("fmt", ["csv", "tsv", "psv", "json", "parquet", "orc", "text"])
+def test_streaming_batches_match_read_landing(spark, tmp_path, fmt):
+    """A streamed landing lands the same columns and rows as the batch
+    reader on the same files (one format dispatch for both); a quoted CSV
+    field holding a newline is ONE record on both paths."""
     from kusto_pre_forge_spark.config import DataFormat, RunSettings
     from kusto_pre_forge_spark.sources.blob import read_landing
 
-    land = tmp_path / "quoted_landing"
-    land.mkdir()
-    (land / "blob.csv").write_text('k,v\n1,"line one\nline two"\n2,plain\n')
+    land = tmp_path / "landing"
     schema = T.StructType(
         [T.StructField("k", T.StringType()), T.StructField("v", T.StringType())]
     )
-    batch = read_landing(
-        spark, str(land / "blob.csv"), RunSettings(fmt=DataFormat.CSV), schema=schema
-    )
-    want = sorted(tuple(r) for r in batch.select("k", "v").collect())
-    assert want == [("1", "line one\nline two"), ("2", "plain")]
+    kv = [("1", "line one\nline two"), ("2", "plain")]
+    if fmt in ("json", "parquet", "orc"):
+        getattr(spark.createDataFrame(kv, schema).coalesce(1).write, fmt)(str(land))
+    else:
+        land.mkdir()
+        sep = {"tsv": "\t", "psv": "|"}.get(fmt, ",")
+        blob = 'k,v\n1,"line one\nline two"\n2,plain\n'.replace(",", sep)
+        (land / "blob.txt").write_text(blob)
+    settings = RunSettings(fmt=DataFormat.TXT if fmt == "text" else DataFormat(fmt))
+    batch = read_landing(spark, str(land), settings, schema=schema)
+    if fmt != "text":
+        assert sorted(tuple(r) for r in batch.select("k", "v").collect()) == kv
 
     etl = StreamingEtl(
         spark,
         landing_dir=str(land),
-        checkpoint_dir=str(tmp_path / "ckpt_quoted"),
-        output_dir=str(tmp_path / "out_quoted"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        output_dir=str(tmp_path / "unused"),
         schema=schema,
+        fmt=fmt,
     )
-    _drain(etl.start_prepartition(PartitionPolicy("k", 4, 42), available_now=True))
-    out = spark.read.parquet(str(tmp_path / "out_quoted"))
-    assert sorted(tuple(r) for r in out.select("k", "v").collect()) == want
+    out = str(tmp_path / "out")
+    _drain(
+        etl.start(
+            lambda df, _: df.write.mode("append").parquet(out), available_now=True
+        )
+    )
+    streamed = spark.read.parquet(out)
+    assert streamed.columns == batch.columns
+    cols = [c for c in batch.columns if c != "_kpf_source"]
+    assert sorted(tuple(r) for r in streamed.select(cols).collect()) == sorted(
+        tuple(r) for r in batch.select(cols).collect()
+    )
 
 
 DOC_SCHEMA = T.StructType(
@@ -409,8 +425,7 @@ def test_streaming_prepartition_parquet_landing(spark, sf_smoke, tmp_path):
 
 
 def test_streaming_prepartition_orc_landing(spark, sf_smoke, tmp_path):
-    """ORC landing blobs stream through the same plan — the last batch
-    read_landing format now accepted on the streaming path."""
+    """ORC landing blobs stream through the same plan."""
     orders = spark.read.parquet(f"{sf_smoke}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         F.col("o_orderdate").cast("timestamp").alias("o_orderdate"),
